@@ -1,9 +1,6 @@
 from batch_import_spark.operators.ids import stable_id, with_dense_id  # noqa: F401
 from batch_import_spark.operators.edges import normalize_edges  # noqa: F401
-from batch_import_spark.operators.linking import (  # noqa: F401
-    build_unique_alias_dict,
-    resolve_endpoints,
-)
+from batch_import_spark.operators.linking import build_unique_alias_dict  # noqa: F401
 from batch_import_spark.operators.canonicalize import connected_components  # noqa: F401
 from batch_import_spark.operators.asof import asof_join  # noqa: F401
 from batch_import_spark.operators.ranges import range_join  # noqa: F401

@@ -21,6 +21,8 @@ skew-join splitting covers the rest.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,14 +53,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_min.union(self_edge).where(F.col("u") != F.col("v")).distinct()
 
 
-def _driver_cc_edges(spark, e: DataFrame) -> DataFrame:
-    """Union-find over a collected (u, v) edge table; min-id election.
-    Same output contract as the distributed loop: one (node_id,
-    component_id) row per node appearing in the (self-loop-filtered)
-    edge set, component_id = the component's min node id."""
-    from pyspark.sql.types import StructField, StructType
+def min_id_components(edges: Iterable[tuple], nodes: Iterable = ()) -> dict:
+    """Driver-side union-find: map every node of ``edges`` (pairs) and
+    ``nodes`` to the min node of its connected component.
 
-    rows = e.collect()
+    Each union keeps the smaller root, so a root is always its
+    component's min and ``find`` IS the election — the same min-id
+    contract as the distributed large-star/small-star loop.
+    """
     parent: dict = {}
 
     def find(x):
@@ -69,23 +71,30 @@ def _driver_cc_edges(spark, e: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(r[0]), find(r[1])
+    for a, b in edges:
+        ra, rb = find(a), find(b)
         if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for n in parent:
-        root = find(n)
-        if root not in comp_min or n < comp_min[root]:
-            comp_min[root] = n
-    out = [(n, comp_min[find(n)]) for n in parent]
+            parent[max(ra, rb)] = min(ra, rb)
+    for n in nodes:
+        find(n)
+    return {n: find(n) for n in parent}
+
+
+def _driver_cc_edges(spark, e: DataFrame) -> DataFrame:
+    """``min_id_components`` over a collected (u, v) edge table. Same
+    output contract as the distributed loop: one (node_id,
+    component_id) row per node appearing in the (self-loop-filtered)
+    edge set, component_id = the component's min node id."""
+    from pyspark.sql.types import StructField, StructType
+
+    comp = min_id_components((r[0], r[1]) for r in e.collect())
     schema = StructType(
         [
             StructField("node_id", e.schema[0].dataType, True),
             StructField("component_id", e.schema[1].dataType, True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return spark.createDataFrame(list(comp.items()), schema)
 
 
 def connected_components(
@@ -234,38 +243,15 @@ def canonical_mapping(
 
 
 def _driver_union_find(pairs_df: DataFrame) -> DataFrame:
-    """Union-find over collected (node_id, key) pairs; min-id election."""
-    rows = pairs_df.collect()
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-
+    """``min_id_components`` over collected (node_id, key) pairs: nodes
+    sharing a key are joined through the key's first node."""
     first_by_key: dict = {}
-    nodes = set()
-    for r in rows:
-        node, key = r["node_id"], r["k"]
-        nodes.add(node)
-        if key in first_by_key:
-            union(first_by_key[key], node)
-        else:
-            first_by_key[key] = node
-    comp_min: dict = {}
-    for n in nodes:
-        root = find(n)
-        if root not in comp_min or n < comp_min[root]:
-            comp_min[root] = n
-    out = [(n, comp_min[find(n)]) for n in sorted(nodes)]
+    edges, nodes = [], []
+    for r in pairs_df.collect():
+        node = r["node_id"]
+        nodes.append(node)
+        edges.append((first_by_key.setdefault(r["k"], node), node))
+    comp = min_id_components(edges, nodes)
     return pairs_df.sparkSession.createDataFrame(
-        out, "node_id long, canonical_id long"
+        sorted(comp.items()), "node_id long, canonical_id long"
     )

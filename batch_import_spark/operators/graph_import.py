@@ -27,8 +27,9 @@ DataFrames produced by ``read_reference_csv``:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from batch_import_spark.operators.ids import with_dense_id
@@ -61,10 +62,9 @@ def import_nodes(ref: ReferenceCsv, id_offset: int = 0) -> ImportedNodes:
     if id_fields:
         df = df.withColumn("node_id", F.col(id_fields[0].col_name))
     else:
-        # dense insertion-order id across files in sequence
-        df = with_dense_id(df, ["file_seq", "line_no"], id_col="node_id")
-        if id_offset:
-            df = df.withColumn("node_id", F.col("node_id") + F.lit(id_offset))
+        # dense insertion-order id across files in sequence: the scan's
+        # own row number (read_reference_csv)
+        df = df.withColumn("node_id", F.col("row_no") + F.lit(id_offset))
 
     labels = (
         F.col(label_fields[0].col_name) if label_fields else F.lit(None).cast("array<string>")
@@ -76,27 +76,28 @@ def import_nodes(ref: ReferenceCsv, id_offset: int = 0) -> ImportedNodes:
         "file_seq",
         "line_no",
     )
-
-    index_parts = []
-    for h in ref.header:
-        if h.is_indexed and h.is_property:
-            # index.add skips null values (AbstractLineData.java:92-107)
-            index_parts.append(
-                df.where(F.col(h.col_name).isNotNull()).select(
-                    F.lit(h.index_name).alias("index_name"),
-                    F.lit(h.name).alias("key_prop"),
-                    F.col(h.col_name).cast("string").alias("key_value"),
-                    F.col("node_id").alias("node_id"),
-                )
-            )
-    spark = ref.df.sparkSession
-    if index_parts:
-        idx = index_parts[0]
-        for p in index_parts[1:]:
-            idx = idx.unionByName(p)
-    else:
-        idx = spark.createDataFrame([], INDEX_SCHEMA)
+    idx = _index_entries(
+        df, [h for h in ref.header if h.is_indexed and h.is_property], F.col("node_id"), INDEX_SCHEMA
+    )
     return ImportedNodes(nodes=nodes, index_entries=idx)
+
+
+def _index_entries(df: DataFrame, fields, entity_id: Column, schema: str) -> DataFrame:
+    """(index_name, key_prop, key_value, <entity id>) rows, one per
+    non-null cell of each indexed field — index.add skips null values
+    (AbstractLineData.java:92-107)."""
+    parts = [
+        df.where(F.col(h.col_name).isNotNull()).select(
+            F.lit(h.index_name).alias("index_name"),
+            F.lit(h.name).alias("key_prop"),
+            F.col(h.col_name).cast("string").alias("key_value"),
+            entity_id,
+        )
+        for h in fields
+    ]
+    if not parts:
+        return df.sparkSession.createDataFrame([], schema)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _resolve_endpoint(
@@ -186,23 +187,9 @@ def import_relationships(
     # AbstractLineData.getIndexData:92-106): every indexed property
     # column at offset>=3 with a non-null value adds
     # (index_name, key_prop, key_value) under the new rel id.
-    idx_fields = [h for h in prop_fields if h.is_indexed]
-    parts = []
-    for h in idx_fields:
-        parts.append(
-            edges.where(F.col(h.col_name).isNotNull()).select(
-                F.lit(h.index_name).alias("index_name"),
-                F.lit(h.name).alias("key_prop"),
-                F.col(h.col_name).cast("string").alias("key_value"),
-                F.col("rel_id").alias("rel_id"),
-            )
-        )
-    if parts:
-        rel_idx = parts[0]
-        for p in parts[1:]:
-            rel_idx = rel_idx.unionByName(p)
-    else:
-        rel_idx = ref.df.sparkSession.createDataFrame([], REL_INDEX_SCHEMA)
+    rel_idx = _index_entries(
+        edges, [h for h in prop_fields if h.is_indexed], F.col("rel_id"), REL_INDEX_SCHEMA
+    )
     return ImportedRelationships(edges=edges, index_entries=rel_idx, observation=obs)
 
 
@@ -210,20 +197,9 @@ def import_index(ref: ReferenceCsv) -> DataFrame:
     """Standalone index file → index entries (Importer.java:186-196)."""
     hdr = ref.header
     id_field = hdr[0]  # column 0 is the entity id (offset=1)
-    parts = []
-    for h in hdr[1:]:
-        if h.is_indexed:
-            parts.append(
-                ref.df.where(F.col(h.col_name).isNotNull()).select(
-                    F.lit(h.index_name).alias("index_name"),
-                    F.lit(h.name).alias("key_prop"),
-                    F.col(h.col_name).cast("string").alias("key_value"),
-                    F.col(id_field.col_name).cast("long").alias("node_id"),
-                )
-            )
-    if not parts:
-        return ref.df.sparkSession.createDataFrame([], INDEX_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _index_entries(
+        ref.df,
+        [h for h in hdr[1:] if h.is_indexed],
+        F.col(id_field.col_name).cast("long").alias("node_id"),
+        INDEX_SCHEMA,
+    )

@@ -8,22 +8,62 @@ strategies (SURVEY.md §1.3, §4):
   free, the default at scale;
 - ``with_dense_id``: dense 0-based IDs under a stable total order,
   without a single-partition global window: repartitionByRange on the
-  order key (ascending ranges land in ascending partition ids), local
-  row_number per partition, plus driver-side cumulative partition
-  offsets (one tiny count job). Used where reference-parity requires
-  true row numbers.
+  order key (ascending ranges land in ascending partition ids), sorted
+  within each partition, checkpointed, then numbered in place.
+
+Both dense paths share ``_number_pinned_rows``, which numbers rows in
+their physical order: partition index, then position in the partition.
+It needs PINNED partitions — an assignment of rows to partitions (and
+an order within each) that every execution of the plan reproduces. A
+file scan has it (splits are a pure function of file sizes and
+``maxPartitionBytes``, never sampled) and so does a checkpoint; a
+shuffle does not (AQE may coalesce, range bounds are sampled per run).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def stable_id(*cols: Column | str, seed: int = 0) -> Column:
     """Deterministic 64-bit ID from the canonical key columns."""
     return F.xxhash64(F.lit(seed), *[F.col(c) if isinstance(c, str) else c for c in cols])
+
+
+def _number_pinned_rows(
+    df: DataFrame, id_col: str, group_col: str | None = None, group_id_col: str | None = None
+) -> DataFrame:
+    """Dense 0-based ``id_col`` in physical order over a pinned ``df``.
+
+    With ``group_col`` — constant within each partition and contiguous
+    in partition order, e.g. the file index of a union of per-file
+    scans — ``group_id_col`` also numbers each group's rows from 0.
+
+    Plan shape: one count-per-partition job, then a narrow projection
+    — position in partition = ``monotonically_increasing_id() -
+    (spark_partition_id() << 33)`` — plus a broadcast join of one
+    offset row per partition. No Window, no shuffle of the rows.
+    """
+    keyed = df.withColumn("_pid", F.spark_partition_id()).withColumn(
+        "_pos", F.monotonically_increasing_id() - F.shiftleft(F.col("_pid").cast("long"), 33)
+    )
+    group = [group_col] if group_col else []
+    counts = keyed.groupBy("_pid", *group).count().collect()
+    offsets, acc, group_start = [], 0, {}
+    for row in sorted(counts, key=lambda r: r["_pid"]):
+        start = group_start.setdefault(row[group_col], acc) if group_col else 0
+        offsets.append((row["_pid"], acc, acc - start))
+        acc += row["count"]
+    odf = df.sparkSession.createDataFrame(
+        offsets or [(0, 0, 0)], "_pid int, _offset long, _group_offset long"
+    )
+    out = keyed.join(F.broadcast(odf), "_pid").withColumn(
+        id_col, F.col("_offset") + F.col("_pos")
+    )
+    if group_id_col:
+        out = out.withColumn(group_id_col, F.col("_group_offset") + F.col("_pos"))
+    return out.drop("_pid", "_pos", "_offset", "_group_offset")
 
 
 def with_dense_id(
@@ -34,41 +74,17 @@ def with_dense_id(
 ) -> DataFrame:
     """Dense 0-based IDs in ``order_cols`` order, scalably.
 
-    Plan shape: range shuffle → checkpoint (pins the sampled range
-    boundaries so the counts job and the row-number job can't diverge)
-    → per-partition window → broadcast join of ~num_partitions offsets.
-    No stage ever holds more than one partition's rows.
+    Plan shape: range shuffle → sort within partitions → eager
+    checkpoint, which pins the sampled range boundaries and the sorted
+    order so the count job and the numbering read the same rows in the
+    same places → ``_number_pinned_rows``. No stage ever holds more than
+    one partition's rows.
     """
     if num_partitions:
         ranged = df.repartitionByRange(num_partitions, *order_cols)
     else:
         ranged = df.repartitionByRange(*order_cols)
-    ranged = ranged.withColumn("_pid", F.spark_partition_id())
-    # Materialize the partitioning ONCE: repartitionByRange samples
-    # with a per-execution seed (and AQE may re-coalesce), so running
-    # the counts job and the row-number job from the same lazy plan can
-    # see DIFFERENT partition assignments → duplicate/skipped IDs.
-    # After this checkpoint both jobs read the identical partitioning.
-    ranged = ranged.localCheckpoint(eager=True)
-
-    # tiny: one row per partition
-    counts = (
-        ranged.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = {}, 0
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    spark = df.sparkSession
-    odf = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
-    )
-
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    out = (
-        ranged.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(odf), "_pid")
-        .withColumn(id_col, F.col("_offset") + F.col("_rn"))
-        .drop("_pid", "_rn", "_offset")
-    )
-    return out
+    # repartitionByRange samples with a per-execution seed (and AQE may
+    # re-coalesce), so the range shuffle must run exactly once.
+    ranged = ranged.sortWithinPartitions(*order_cols).localCheckpoint(eager=True)
+    return _number_pinned_rows(ranged, id_col)

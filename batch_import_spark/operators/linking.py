@@ -17,9 +17,7 @@ hash join on its own — no code change (MapDB cache analog, J2).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,48 +42,3 @@ def build_unique_alias_dict(
         .where(F.col("_n_ids") == 1)
         .drop("_n_ids")
     )
-
-
-@dataclass
-class ResolvedEdges:
-    edges: DataFrame  # resolved edges only
-    observation: Observation  # metrics: input/resolved/skipped counts
-
-
-def resolve_endpoints(
-    edges: DataFrame,
-    unique_dict: DataFrame,
-    src_key: str = "subj_surface",
-    dst_key: str = "obj_surface",
-    key_col: str = "key_value",
-    id_col: str = "entity_id",
-    broadcast_dict: bool = True,
-) -> ResolvedEdges:
-    """Resolve both edge endpoints through the unique-key dictionary.
-
-    Returns only fully-resolved edges plus an Observation whose metrics
-    (``n_input``, ``n_resolved``, ``n_skipped``) are collected when the
-    result is acted on — the Spark-native version of the reference's
-    skipped-relationship counter (G2).
-    """
-    d = unique_dict.select(key_col, id_col)
-    if broadcast_dict:
-        d = F.broadcast(d)
-    src_d = d.withColumnRenamed(key_col, src_key).withColumnRenamed(id_col, "subj_id")
-    dst_d = d.withColumnRenamed(key_col, dst_key).withColumnRenamed(id_col, "obj_id")
-
-    joined = edges.join(src_d, src_key, "left").join(dst_d, dst_key, "left")
-
-    obs = Observation("endpoint_resolution")
-    observed = joined.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_input"),
-        F.sum(
-            (F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()).cast("long")
-        ).alias("n_resolved"),
-        F.sum(
-            (F.col("subj_id").isNull() | F.col("obj_id").isNull()).cast("long")
-        ).alias("n_skipped"),
-    )
-    resolved = observed.where(F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull())
-    return ResolvedEdges(edges=resolved, observation=obs)

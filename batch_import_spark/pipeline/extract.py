@@ -43,23 +43,22 @@ MENTION_PATTERN_JAVA = rf"([A-Z]\w*) ({_PHRASE_ALT_JAVA}) ([A-Z]\w*)\."
 
 
 def extract_mentions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pure-pandas kernel: one batch of turns → mention rows."""
+    """Pure-pandas kernel: one batch of turns → mention rows. Every
+    input column but ``text`` rides along to each of its turn's
+    mentions (conv_id, turn_idx, and e.g. ts on the streaming path)."""
+    keep = [c for c in pdf.columns if c != "text"]
     hits = pdf["text"].str.extractall(MENTION_RE)
     if hits.empty:
-        return pd.DataFrame(
-            columns=["conv_id", "turn_idx", "subj_surface", "pred", "obj_surface"]
-        )
+        return pd.DataFrame(columns=[*keep, "subj_surface", "pred", "obj_surface"])
     idx = hits.index.get_level_values(0)
-    out = pd.DataFrame(
+    return pd.DataFrame(
         {
-            "conv_id": pdf["conv_id"].values[idx],
-            "turn_idx": pdf["turn_idx"].values[idx],
+            **{c: pdf[c].values[idx] for c in keep},
             "subj_surface": hits["subj"].values,
             "pred": hits["phrase"].map(PREDICATE_OF).values,
             "obj_surface": hits["obj"].values,
         }
     )
-    return out
 
 
 def extract_mentions(transcripts: DataFrame) -> DataFrame:

@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.canonicalize import canonical_mapping
+from batch_import_spark.operators.canonicalize import canonical_mapping, min_id_components
 from batch_import_spark.operators.ids import stable_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
 from batch_import_spark.pipeline.extract import extract_mentions
@@ -141,32 +141,10 @@ def prepare_link_dict(
             ents.setdefault(r["surface"], set()).add(r["entity_id"])
         unique = {s: next(iter(es)) for s, es in ents.items() if len(es) == 1}
 
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
         first_by_ent: dict = {}
-        for s, e in unique.items():
-            if e in first_by_ent:
-                ra, rb = find(first_by_ent[e]), find(s)
-                if ra != rb:
-                    parent[rb] = ra
-            else:
-                first_by_ent[e] = s
-        comp_members: dict = {}
-        for s in unique:
-            comp_members.setdefault(find(s), []).append(s)
-        canon = {}
-        for members in comp_members.values():
-            c = min(members)
-            for s in members:
-                canon[s] = c
+        canon = min_id_components(
+            ((first_by_ent.setdefault(e, s), s) for s, e in unique.items()), unique
+        )
         out = [(s, unique[s], canon[s]) for s in sorted(unique)]
         df = spark.createDataFrame(
             out, "surface string, entity_id long, canonical_surface string"
@@ -199,10 +177,6 @@ def prepare_link_dict(
             stable_id(F.col("canonical_surface")).alias("canonical_node_id"),
         )
     )
-
-
-# backwards-compatible name (the dictionary IS the canonicalization)
-canonicalize_surfaces = prepare_link_dict
 
 
 def link_and_canonicalize(

@@ -8,8 +8,9 @@ Spark's CSV reader:
   driver-side to local temp first — Spark's reader can't split or
   decompress zip;
 - S3: multi-file lists imported *in declared order* (Config.java:145-154)
-  — we read files separately and carry a file_seq so dense row-number
-  IDs can span files in sequence (readme.md:38);
+  — we read files separately, tag each with its file_seq, union the
+  scans and number the union once, so dense row-number IDs span files
+  in sequence (readme.md:38);
 - S4: first row is the schema: ``name[:type[:indexName]]``
   (AbstractLineData.java:39-58) — parsed driver-side from the first
   line, data read with an explicit all-string schema and header
@@ -28,6 +29,17 @@ line (AbstractLineData.java:70-73 ``processLine = parse() > 0`` +
 Importer.java:96 loop) — silent truncation, a data-loss hazard at
 100 TB. Tested in test_reference_semantics.py.
 
+Plan shape: one scan per file → union → ``_number_pinned_rows``
+(operators/ids.py): one count-per-partition job for the whole file
+list, then a narrow projection plus a broadcast of one offset row per
+partition. No Window and no shuffle of the rows. This depends on the
+scan's partitions being PINNED: a single-file CSV scan assigns
+partition indexes in file-offset order, keeps row order within each
+split, and derives its splits from (file size, maxPartitionBytes)
+alone — never sampled — and a union concatenates its children's
+partitions in declared order. So the count job and every later
+execution see the same rows in the same partitions.
+
 Scale note: a single .gz file is unsplittable; at 100 TB inputs arrive
 as many files so parallelism comes from the file list — same contract
 as the reference's comma-separated multi-file config.
@@ -40,12 +52,13 @@ import io
 import tempfile
 import zipfile
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
+from batch_import_spark.operators.ids import _number_pinned_rows
 from batch_import_spark.schema import HeaderField, assert_ansi, convert_column, parse_header
 
 
@@ -53,7 +66,7 @@ from batch_import_spark.schema import HeaderField, assert_ansi, convert_column, 
 class ReferenceCsv:
     """A typed, reference-semantics view of one or more CSV files."""
 
-    df: DataFrame  # typed columns, plus file_seq + line_no (0-based per file)
+    df: DataFrame  # typed columns, plus file_seq, line_no (0-based per file), row_no
     header: list[HeaderField]
 
 
@@ -117,10 +130,11 @@ def read_reference_csv(
 ) -> ReferenceCsv:
     """Read reference-format CSV file(s) into one typed DataFrame.
 
-    Columns are named per the header; extra trailing ``file_seq`` and
-    ``line_no`` columns give (file index in the declared list, 0-based
-    data row within the file) — together the stable total order that
-    reference row-number node IDs are defined over.
+    Columns are named per the header; extra trailing ``file_seq``,
+    ``line_no`` and ``row_no`` columns give the file index in the
+    declared list, the 0-based data row within the file, and the
+    0-based data row across all files in (file_seq, line_no) order —
+    the reference's row-number node ID (readme.md:38).
     """
     # fail-fast typed conversion needs ANSI casts on THIS path, not
     # just under pytest (readme.md:41-42: bad cells abort the import)
@@ -160,14 +174,13 @@ def read_reference_csv(
         # raw tokenizer path (Chunker): no quote handling at all
         reader_opts.update({"quote": "\u0000"})
 
-    parts = []
-    for seq, path in enumerate(paths):
-        fdf = spark.read.options(**reader_opts).schema(raw_schema).csv(path)
-        fdf = _with_line_no(fdf)
-        parts.append(fdf.withColumn("file_seq", F.lit(seq)))
-    raw = parts[0]
-    for p in parts[1:]:
-        raw = raw.unionByName(p)
+    scans = [
+        spark.read.options(**reader_opts).schema(raw_schema).csv(p).withColumn("file_seq", F.lit(i))
+        for i, p in enumerate(paths)
+    ]
+    raw = _number_pinned_rows(
+        reduce(DataFrame.unionByName, scans), "row_no", group_col="file_seq", group_id_col="line_no"
+    )
 
     typed = raw.select(
         *[
@@ -176,41 +189,6 @@ def read_reference_csv(
         ],
         "file_seq",
         "line_no",
+        "row_no",
     )
     return ReferenceCsv(df=typed, header=header)
-
-
-def _with_line_no(df: DataFrame) -> DataFrame:
-    """Attach a 0-based, file-order row number to a single-file scan —
-    entirely JVM-side (no RDD round-trip through Python).
-
-    A single-file CSV scan assigns partition indexes in file-offset
-    order and preserves row order within each split, and that
-    partitioning is a pure function of (file size, maxPartitionBytes)
-    — NOT sampled — so the per-partition count job and the row-number
-    job below are guaranteed to see the same assignment (unlike
-    repartitionByRange, which needs a checkpoint; see operators/ids.py).
-    ``monotonically_increasing_id`` is (partition_id << 33) + position,
-    i.e. deterministic in-partition file order here.
-
-    Plan shape: scan → tiny count-per-split job → per-partition window
-    (1:1 shuffle on _pid) + broadcast join of ~n_splits offsets. One
-    extra pass over the file, zero Python serialization.
-    """
-    pdf = df.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_mid", F.monotonically_increasing_id()
-    )
-    counts = pdf.groupBy("_pid").count().collect()
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    spark = df.sparkSession
-    odf = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
-    w = Window.partitionBy("_pid").orderBy("_mid")
-    return (
-        pdf.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(odf), "_pid")
-        .withColumn("line_no", (F.col("_offset") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_mid", "_rn", "_offset")
-    )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from batch_import_spark.pipeline.extract import extract_mentions_pdf
 from batch_import_spark.pipeline.kg import link_and_canonicalize, prepare_link_dict
 
 
@@ -44,7 +45,11 @@ def streaming_triples(
     ``window_duration=None`` gives a global running aggregation for
     complete-mode sinks (useful for bounded replays and tests).
     """
-    mentions = _extract_with_ts(stream)
+    mentions = stream.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
+        lambda batches: map(extract_mentions_pdf, batches),
+        schema="conv_id string, turn_idx int, ts timestamp, "
+        "subj_surface string, pred string, obj_surface string",
+    )
     resolved, _obs = link_and_canonicalize(mentions, link_dict)
     if window_duration is None:
         return resolved.groupBy("subj", "pred", "obj").agg(
@@ -67,43 +72,6 @@ def streaming_triples(
             "obj",
             "n_occurrences",
         )
-    )
-
-
-def _extract_with_ts(stream: DataFrame) -> DataFrame:
-    """ts-preserving variant of extract_mentions (same kernel logic)."""
-    import pandas as pd
-
-    from batch_import_spark.pipeline.extract import MENTION_RE
-    from batch_import_spark.sources.transcripts import PREDICATE_OF
-
-    schema = (
-        "conv_id string, turn_idx int, ts timestamp, "
-        "subj_surface string, pred string, obj_surface string"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            hits = pdf["text"].str.extractall(MENTION_RE)
-            if hits.empty:
-                yield pd.DataFrame(
-                    columns=["conv_id", "turn_idx", "ts", "subj_surface", "pred", "obj_surface"]
-                )
-                continue
-            idx = hits.index.get_level_values(0)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].values[idx],
-                    "turn_idx": pdf["turn_idx"].values[idx],
-                    "ts": pdf["ts"].values[idx],
-                    "subj_surface": hits["subj"].values,
-                    "pred": hits["phrase"].map(PREDICATE_OF).values,
-                    "obj_surface": hits["obj"].values,
-                }
-            )
-
-    return stream.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
-        run, schema=schema
     )
 
 

@@ -1,5 +1,7 @@
 """Fulltext-index analog (A8) + reference config parsing (G3)."""
 
+from pathlib import Path
+
 from batch_import_spark.config import load_config
 from batch_import_spark.operators.fulltext import build_fulltext_postings, fulltext_lookup
 
@@ -89,10 +91,9 @@ def test_index_value_keeps_uri_files():
 
 
 def test_config_parses_reference_sample(spark):
-    """ConfigTest.java:53-120 semantics on the reference's own
-    sample/batch.properties."""
-    with open("/root/reference/sample/batch.properties") as f:
-        text = f.read()
+    """ConfigTest.java:53-120 semantics on an in-repo equivalent of
+    the reference's sample/batch.properties."""
+    text = (Path(__file__).parent / "fixtures" / "reference_sample" / "batch.properties").read_text()
     cfg = load_config(
         text,
         graph_db="target/graph.db",

@@ -1,15 +1,21 @@
-"""End-to-end import of the reference repo's own sample/ CSV files.
+"""End-to-end import of an equivalent of the reference repo's sample/ files.
 
 The closest thing to the reference's integration test
 (ImporterIntegrationTest.java:23-49 runs generator → import →
-ConsistencyCheckTool); here the oracle is the known content of
-/root/reference/sample (readme.md:56-76).
+ConsistencyCheckTool); here the oracle is the known content of the
+reference's sample data (readme.md:56-76), kept in-repo under
+tests/fixtures/reference_sample/: four users across two node files and
+five index-resolved relationships whose header names
+``name:string:users`` twice. It also pins the cross-file dense ids of
+read_reference_csv's single numbering of the unioned scans.
 """
+
+from pathlib import Path
 
 from batch_import_spark.operators.graph_import import import_nodes, import_relationships
 from batch_import_spark.sources.csv_source import read_reference_csv
 
-SAMPLE = "/root/reference/sample"
+SAMPLE = Path(__file__).parent / "fixtures" / "reference_sample"
 
 
 def test_reference_sample_end_to_end(spark):

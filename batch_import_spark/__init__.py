@@ -8,7 +8,7 @@ loader) as an idiomatic, horizontally-scalable Spark pipeline:
         → extract   (vectorized pandas/Arrow UDF triple extraction)
         → link      (broadcast alias-dictionary equi-join, unique-key rule)
         → canonicalize (large-star/small-star connected components)
-        → materialize  (nodes/edges tables, salted repartition, AQE)
+        → materialize  (nodes/edges tables through one GraphSink writer, AQE)
 
 plus the reference's CSV node/relationship-file semantics (typed
 headers, label columns, index lookups, skip-unresolved-edge counting)

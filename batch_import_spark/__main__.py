@@ -5,7 +5,7 @@ Deployment shape named by the project contract: ship the package with
 
     spark-submit --py-files batch_import_spark.zip run_kg_job.py kg \
         --transcripts s3://…/transcripts --alias-dict s3://…/aliases \
-        --out kg_out --extraction expr [--salt-input] [--write-mode append]
+        --out kg_out --extraction expr [--write-mode append]
 
     … resume --transcripts … --alias-dict … --base-dir ckpt \
         [--n-buckets 4096] [--max-buckets N]
@@ -17,7 +17,9 @@ On a cluster the master/deploy-mode come from spark-submit and
 ``build_session`` just ``getOrCreate``s; locally it falls back to
 ``local[$SPARK_GRAFT_CPUS]``. ``--out`` is a directory (Parquet) or a
 ``catalog.db`` prefix (Iceberg, when the runtime is on the classpath) —
-see sinks.GraphSink. ``import-csv`` accepts the reference's own
+see sinks.GraphSink, the one writer of every job's tables (``resume``
+writes its per-bucket checkpoint through it too). ``import-csv``
+accepts the reference's own
 ``batch.properties`` keys (config.load_config; Config.java:36-100).
 """
 
@@ -27,47 +29,43 @@ import argparse
 import sys
 
 
-def _kg(args) -> int:
-    from pyspark.sql import functions as F
-
-    from batch_import_spark.pipeline.kg import prepare_link_dict, run_kg_pipeline
+def _kg_inputs(args, app_name: str):
+    """Session, transcripts and alias table shared by ``kg`` and ``resume``."""
     from batch_import_spark.session import build_session
-    from batch_import_spark.sinks import GraphSink
     from batch_import_spark.sources.transcripts import alias_dict_df, read_transcripts
 
-    spark = build_session(app_name="kg-construct")
+    spark = build_session(app_name=app_name)
     t = read_transcripts(spark, args.transcripts)
     if args.alias_dict == "builtin":
         aliases = alias_dict_df(spark)
     else:
         aliases = spark.read.parquet(args.alias_dict)
+    return spark, t, aliases
+
+
+def _kg(args) -> int:
+    from pyspark.sql import functions as F
+
+    from batch_import_spark.pipeline.kg import prepare_link_dict, run_kg_pipeline
+    from batch_import_spark.sinks import GraphSink
+
+    spark, t, aliases = _kg_inputs(args, "kg-construct")
     res = run_kg_pipeline(
-        t,
-        aliases,
-        link_dict=prepare_link_dict(aliases),
-        extraction=args.extraction,
-        salt_input=args.salt_input,
-        write_mode=args.write_mode,
+        t, aliases, link_dict=prepare_link_dict(aliases), extraction=args.extraction
     )
     sink = GraphSink(spark, args.out, fmt=args.format)
     sink.write_graph(res.nodes, res.edges, mode=args.write_mode)
-    n_edges = sink.read("edges").count()
-    n_occ = sink.read("edges").agg(F.sum("n_occurrences")).collect()[0][0]
+    n_edges, n_occ = sink.read("edges").agg(
+        F.count(F.lit(1)), F.sum("n_occurrences")
+    ).first()
     print(f"kg: wrote {n_edges} edges ({n_occ} triple occurrences) to {args.out}")
     return 0
 
 
 def _resume(args) -> int:
     from batch_import_spark.pipeline.checkpoint import KgCheckpointer
-    from batch_import_spark.session import build_session
-    from batch_import_spark.sources.transcripts import alias_dict_df, read_transcripts
 
-    spark = build_session(app_name="kg-resume")
-    t = read_transcripts(spark, args.transcripts)
-    if args.alias_dict == "builtin":
-        aliases = alias_dict_df(spark)
-    else:
-        aliases = spark.read.parquet(args.alias_dict)
+    spark, t, aliases = _kg_inputs(args, "kg-resume")
     ck = KgCheckpointer(spark, args.base_dir, n_buckets=args.n_buckets)
     stats = ck.resume(t, aliases, run_id=args.run_id, max_buckets=args.max_buckets)
     done = len(ck.done_buckets())
@@ -184,7 +182,6 @@ def main(argv: list[str] | None = None) -> int:
     kg.add_argument("--alias-dict", default="builtin", help="parquet dir or 'builtin'")
     kg.add_argument("--out", required=True, help="output dir or catalog.db prefix")
     kg.add_argument("--extraction", choices=["pandas", "expr"], default="pandas")
-    kg.add_argument("--salt-input", action="store_true")
     kg.add_argument("--write-mode", choices=["overwrite", "append"], default="overwrite")
     kg.add_argument("--format", choices=["auto", "parquet", "iceberg"], default="auto")
     kg.set_defaults(fn=_kg)

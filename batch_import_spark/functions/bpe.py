@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batch_import_spark.session import checkpoint_rotate, unpersist_ids
+
 #: symbol delimiter — 0x1f "unit separator", never present in text
 #: corpora this engine targets (control chars are stripped upstream).
 US = "\x1f"
@@ -290,18 +292,19 @@ def bpe_train(
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    wt = words.select(
-        "word", "n", wrap_chars(F.col("word")).alias("s")
-    ).localCheckpoint(eager=True)
+    spark = docs.sparkSession
+    wt, wt_ids = checkpoint_rotate(
+        spark, words.select("word", "n", wrap_chars(F.col("word")).alias("s")), set()
+    )
 
     if wt.count() <= driver_vocab_threshold:
         rows = wt.select("word", "n").collect()
+        unpersist_ids(spark, wt_ids)
         return _bpe_train_driver(
             [(r.word, int(r.n)) for r in rows], n_merges, min_pair_count
         )
 
     merges: list[tuple[str, str, int]] = []
-    prev = wt
     for step in range(n_merges):
         syms = symbols(F.col("s"))
         pairs = F.zip_with(
@@ -323,9 +326,8 @@ def bpe_train(
         merges.append((left, right, cnt))
         wt = wt.withColumn("s", merge_expr(F.col("s"), left, right))
         if (step + 1) % checkpoint_every == 0:
-            nxt = wt.localCheckpoint(eager=True)
-            prev.unpersist()
-            prev = wt = nxt
+            wt, wt_ids = checkpoint_rotate(spark, wt, wt_ids)
+    unpersist_ids(spark, wt_ids)
     return merges
 
 

@@ -26,6 +26,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from batch_import_spark.session import checkpoint_rotate, unpersist_ids
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors of u to min(Γ⁺(u))."""
@@ -122,14 +124,12 @@ def connected_components(
     (pytest-pinned on randomized graphs, test_round7_cc.py).
     """
     spark = edges.sparkSession
-    sc0 = spark.sparkContext
-    ids_before_input = set(sc0._jsc.getPersistentRDDs().keySet().toArray())
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src) != F.col(dst)
-    ).distinct()
-    e = e.localCheckpoint(eager=True)
-    input_ckpt_ids = (
-        set(sc0._jsc.getPersistentRDDs().keySet().toArray()) - ids_before_input
+    e, ckpt_ids = checkpoint_rotate(
+        spark,
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col(src) != F.col(dst))
+        .distinct(),
+        set(),
     )
 
     # size the iteration's shuffles to the graph, not the session: a
@@ -141,43 +141,23 @@ def connected_components(
         driver_threshold = DRIVER_CC_THRESHOLD
     if n_edges <= driver_threshold:
         out = _driver_cc_edges(spark, e)
-        jmap = sc0._jsc.getPersistentRDDs()
-        for rid in input_ckpt_ids:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
+        unpersist_ids(spark, ckpt_ids)
         return out
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     cc_parts = max(1, min(int(saved), n_edges // 1_000_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-    sc = spark.sparkContext
-
-    def _persistent_ids() -> set[int]:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    def _unpersist(ids: set[int]) -> None:
-        # free a superseded checkpoint's blocks — long CC loops (and
-        # long sessions running many CCs) otherwise accumulate
-        # MEMORY_AND_DISK blocks until GC pressure shows up as noise
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
 
     try:
         prev_sig = None
-        prev_ckpt_ids: set[int] = input_ckpt_ids
         for _ in range(max_iterations):
-            before = _persistent_ids()
-            e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-            new_ids = _persistent_ids() - before
+            # each round's checkpoint supersedes the previous one —
+            # long CC loops (and long sessions running many CCs)
+            # otherwise accumulate MEMORY_AND_DISK blocks
+            e, ckpt_ids = checkpoint_rotate(spark, _small_star(_large_star(e)), ckpt_ids)
             sig_row = e.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
             ).collect()[0]
-            # the new checkpoint is materialized → the previous one is
-            # no longer referenced by anything downstream
-            _unpersist(prev_ckpt_ids)
-            prev_ckpt_ids = new_ids
             sig = (sig_row["n"], sig_row["h"])
             if sig == prev_sig:
                 break

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from batch_import_spark.session import checkpoint_rotate, persistent_rdd_ids, unpersist_ids
+
 
 def undirected_edges(df: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Canonical undirected simple edge set: (u < v), self-loops
@@ -90,30 +92,6 @@ def triangle_counts(
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-def _checkpoint_rotate(spark, df: DataFrame, prev_ids: set) -> tuple[DataFrame, set]:
-    """localCheckpoint ``df`` eagerly and unpersist the blocks of the
-    previous iteration's checkpoint (same discipline as
-    canonicalize.connected_components — iterative loops otherwise
-    accumulate MEMORY_AND_DISK blocks for the whole run)."""
-    sc = spark.sparkContext
-
-    def _ids() -> set:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    before = _ids()
-    out = df.localCheckpoint(eager=True)
-    new_ids = _ids() - before
-    _unpersist_ids(spark, prev_ids)
-    return out, new_ids
-
-
-def _unpersist_ids(spark, ids: set) -> None:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-
-
 def pagerank(
     df: DataFrame,
     src: str = "src",
@@ -161,7 +139,7 @@ def pagerank(
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes, node_ids = _checkpoint_rotate(spark, nodes, set())
+    nodes, node_ids = checkpoint_rotate(spark, nodes, set())
     if reset_nodes is None:
         n = nodes.count()
         in_reset = F.lit(True)
@@ -169,7 +147,7 @@ def pagerank(
         n = len(set(reset_nodes))
         in_reset = F.col("node").isin(list(set(reset_nodes)))
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ed, ed_ids = _checkpoint_rotate(spark, e.join(outd, "src"), set())
+    ed, ed_ids = checkpoint_rotate(spark, e.join(outd, "src"), set())
 
     init = scale // n
     base = (15 * scale) // (100 * n)
@@ -187,10 +165,10 @@ def pagerank(
             "node",
             (base_col + F.coalesce(F.col("s"), F.lit(0))).cast("long").alias("rank"),
         )
-        ranks, prev_ids = _checkpoint_rotate(spark, ranks, prev_ids)
+        ranks, prev_ids = checkpoint_rotate(spark, ranks, prev_ids)
     # the final ranks checkpoint is materialized — the edge/node
     # checkpoints are no longer referenced by its lineage
-    _unpersist_ids(spark, ed_ids | node_ids)
+    unpersist_ids(spark, ed_ids | node_ids)
     return ranks.select("node", F.col("rank").alias("pagerank_scaled"))
 
 
@@ -223,12 +201,12 @@ def bfs_distances(
     if not directed:
         e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         e = e.distinct()
-    e, e_ids = _checkpoint_rotate(spark, e, set())
+    e, e_ids = checkpoint_rotate(spark, e, set())
 
     visited = sources.select("node").distinct().select(
         "node", F.lit(0).cast("int").alias("dist")
     )
-    visited, visited_ids = _checkpoint_rotate(spark, visited, set())
+    visited, visited_ids = checkpoint_rotate(spark, visited, set())
     # the initial frontier aliases the visited checkpoint: its blocks
     # are owned (and freed) through visited_ids, so frontier_ids is
     # empty until the first real frontier replaces it
@@ -241,18 +219,18 @@ def bfs_distances(
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).cast("int").alias("dist"))
         )
-        reached, r_ids = _checkpoint_rotate(spark, reached, set())
+        reached, r_ids = checkpoint_rotate(spark, reached, set())
         if reached.limit(1).count() == 0:
-            _unpersist_ids(spark, r_ids)
+            unpersist_ids(spark, r_ids)
             break
         # new visited materializes from the old visited + reached
         # checkpoints; after that the old visited and the old frontier
         # (last round's reached) are unreferenced
-        visited, visited_ids = _checkpoint_rotate(
+        visited, visited_ids = checkpoint_rotate(
             spark, visited.unionAll(reached), visited_ids | frontier_ids
         )
         frontier, frontier_ids = reached, r_ids
-    _unpersist_ids(spark, e_ids | frontier_ids)
+    unpersist_ids(spark, e_ids | frontier_ids)
     return visited
 
 
@@ -279,7 +257,7 @@ def kcore(
     # doubled edge list: degree(u) = row count with u first
     both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     spark = df.sparkSession
-    cur, prev_ids = _checkpoint_rotate(spark, both, set())
+    cur, prev_ids = checkpoint_rotate(spark, both, set())
     n_prev = cur.count()
     for _ in range(max_iterations):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -287,7 +265,7 @@ def kcore(
         nxt = cur.join(good, "u").join(
             good.select(F.col("u").alias("v")), "v"
         ).select("u", "v")
-        nxt, prev_ids = _checkpoint_rotate(spark, nxt, prev_ids)
+        nxt, prev_ids = checkpoint_rotate(spark, nxt, prev_ids)
         n_now = nxt.count()
         cur = nxt
         if n_now == n_prev:
@@ -328,11 +306,11 @@ def label_propagation(
     spark = df.sparkSession
     e = undirected_edges(df, src, dst)
     both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    both, e_ids = _checkpoint_rotate(spark, both, set())
+    both, e_ids = checkpoint_rotate(spark, both, set())
     labels = both.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    labels, prev_ids = _checkpoint_rotate(spark, labels, set())
+    labels, prev_ids = checkpoint_rotate(spark, labels, set())
     w = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
     )
@@ -348,8 +326,8 @@ def label_propagation(
             .where(F.col("_rn") == 1)
             .select("node", "label")
         )
-        labels, prev_ids = _checkpoint_rotate(spark, labels, prev_ids)
-    _unpersist_ids(spark, e_ids)
+        labels, prev_ids = checkpoint_rotate(spark, labels, prev_ids)
+    unpersist_ids(spark, e_ids)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -387,12 +365,12 @@ def pagerank_weighted(
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes, node_ids = _checkpoint_rotate(spark, nodes, set())
+    nodes, node_ids = checkpoint_rotate(spark, nodes, set())
     n = nodes.count()
     # "tw" not "W": Spark resolves identifiers case-insensitively by
     # default, so w/W in one schema is AMBIGUOUS_REFERENCE
     outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
-    ed, ed_ids = _checkpoint_rotate(spark, e.join(outw, "src"), set())
+    ed, ed_ids = checkpoint_rotate(spark, e.join(outw, "src"), set())
 
     init = scale // n
     base = (15 * scale) // (100 * n)
@@ -408,8 +386,8 @@ def pagerank_weighted(
             "node",
             (F.lit(base) + F.coalesce(F.col("s"), F.lit(0))).cast("long").alias("rank"),
         )
-        ranks, prev_ids = _checkpoint_rotate(spark, ranks, prev_ids)
-    _unpersist_ids(spark, ed_ids | node_ids)
+        ranks, prev_ids = checkpoint_rotate(spark, ranks, prev_ids)
+    unpersist_ids(spark, ed_ids | node_ids)
     return ranks.select("node", F.col("rank").alias("pagerank_scaled"))
 
 
@@ -545,6 +523,8 @@ def louvain_refine(
     # is a scalar — collected here and inlined as a literal instead of
     # a per-sub-step aggregate+broadcast (round 7; results unchanged,
     # the sub-step arithmetic is identical).
+    spark = df.sparkSession
+    before = persistent_rdd_ids(spark)
     both = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
@@ -553,17 +533,19 @@ def louvain_refine(
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
         .localCheckpoint(eager=False)
     )
+    invariant_ids = persistent_rdd_ids(spark) - before
     m_val = int(e.count())
     a = assign.select(F.col(node).alias("n"), F.col(community).alias("c"))
 
-    spark = df.sparkSession
     prev_ids: set = set()
     for _ in range(sweeps):
         for ci in range(colors):
             # tot and kuc are each read twice inside one sub-step
             # (current-community attributes + candidate scoring):
             # lazy checkpoints make the second reference a block read
-            # instead of a re-aggregation.
+            # instead of a re-aggregation. Their blocks are freed once
+            # the sub-step's assignment is checkpointed.
+            before = persistent_rdd_ids(spark)
             tot = (
                 a.join(deg, a["n"] == deg["u"])
                 .groupBy("c")
@@ -579,6 +561,7 @@ def louvain_refine(
                 .agg(F.count(F.lit(1)).cast("long").alias("k"))
                 .localCheckpoint(eager=False)
             )
+            step_ids = persistent_rdd_ids(spark) - before
             cur = (
                 a.select(F.col("n").alias("u"), F.col("c").alias("cu"))
                 .join(deg.select("u", F.col("d").alias("ku")), "u")
@@ -630,7 +613,9 @@ def louvain_refine(
                     F.coalesce("new_c", "cu").alias("c"),
                 )
             )
-            a, prev_ids = _checkpoint_rotate(spark, a, prev_ids)
+            a, prev_ids = checkpoint_rotate(spark, a, prev_ids)
+            unpersist_ids(spark, step_ids)
+    unpersist_ids(spark, invariant_ids)
     return a.select(F.col("n").alias(node), F.col("c").alias(community))
 
 

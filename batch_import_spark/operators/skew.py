@@ -9,8 +9,7 @@ big-skewed ⋈ small-ish shape:
 
 - LEFT (big, skewed) rows get a deterministic salt in [0, n_salts)
   hashed from the whole row — NO rand(), so retries and re-runs
-  produce identical placement (the same discipline as the KG
-  pipeline's salted repartition);
+  produce identical placement;
 - RIGHT rows are replicated once per salt (explode of a literal
   sequence — cost n_salts × |right|, which is why right should be the
   smaller side);

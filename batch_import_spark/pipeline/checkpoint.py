@@ -8,16 +8,18 @@ equivalent here (SURVEY.md §7 stage 5):
 - work unit = conversation bucket: ``pmod(xxhash64(conv_id), n_buckets)``
   — deterministic, parallelism-independent, and conversation-aligned so
   a bucket is self-contained for extraction;
-- edges are written partitioned by bucket with DYNAMIC partition
-  overwrite: re-running a bucket replaces exactly its partition, never
-  duplicating triples (A7 resumability; Iceberg's overwritePartitions
-  maps 1:1 when the sink is an Iceberg table);
+- every table goes through one writer, ``sinks.GraphSink`` over
+  ``base_dir`` (Parquet): edges by ``overwrite_partitions`` on the
+  bucket column — re-running a bucket replaces exactly its partition,
+  never duplicating triples (A7 resumability) — nodes by ``write``, the
+  manifest by ``write(mode="append")``;
 - a manifest table records, per completed bucket, lineage + counters
   (n_turns, n_mentions, n_linked, n_skipped, n_triples) — the G1/G2
   reporting surface;
 - ``resume()`` processes only buckets absent from the manifest: a
   bucket whose write crashed before its manifest append is simply
-  re-run and overwritten (idempotent).
+  re-run and overwritten (idempotent; pinned by a crash-injection
+  test). The input is read in its own splits, like the ``kg`` job's.
 
 Scale: n_buckets bounds the blast radius of a retry (100 TB / 4096
 buckets ≈ 25 GB per unit) while the inner job still parallelizes each
@@ -28,6 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,8 +39,8 @@ from batch_import_spark.pipeline.kg import (
     link_and_canonicalize,
     nodes_from_dict,
     prepare_link_dict,
-    salted_repartition,
 )
+from batch_import_spark.sinks import GraphSink
 
 MANIFEST_SCHEMA = (
     "bucket int, run_id string, n_turns long, n_mentions long, n_linked long, "
@@ -56,31 +59,23 @@ class KgCheckpointer:
     n_buckets: int = 64
 
     @property
-    def edges_dir(self) -> str:
-        return f"{self.base_dir}/edges"
-
-    @property
-    def nodes_dir(self) -> str:
-        return f"{self.base_dir}/nodes"
-
-    @property
-    def manifest_dir(self) -> str:
-        return f"{self.base_dir}/manifest"
+    def sink(self) -> GraphSink:
+        return GraphSink(self.spark, self.base_dir, fmt="parquet")
 
     def manifest(self) -> DataFrame:
         try:
-            return self.spark.read.parquet(self.manifest_dir)
-        except Exception:
+            return self.sink.read("manifest")
+        except AnalysisException:  # no bucket has completed yet
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def done_buckets(self) -> set[int]:
         return {r["bucket"] for r in self.manifest().select("bucket").distinct().collect()}
 
     def edges(self) -> DataFrame:
-        return self.spark.read.parquet(self.edges_dir)
+        return self.sink.read("edges")
 
     def nodes(self) -> DataFrame:
-        return self.spark.read.parquet(self.nodes_dir)
+        return self.sink.read("nodes")
 
     def triples(self) -> DataFrame:
         """Global (subj, pred, obj) set = distinct over bucket partitions."""
@@ -98,7 +93,7 @@ class KgCheckpointer:
         ``max_buckets`` limits how many pending buckets this call takes
         (simulates a partial run / crash window in tests).
         """
-        spark = self.spark
+        sink = self.sink
         done = self.done_buckets()
         pending_df = transcripts.select(
             _bucket("conv_id", self.n_buckets).alias("bucket")
@@ -114,8 +109,6 @@ class KgCheckpointer:
         t = transcripts.withColumn("bucket", _bucket("conv_id", self.n_buckets)).where(
             F.col("bucket").isin([int(b) for b in pending])
         )
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        t = salted_repartition(t, n_parts, "conv_id", "turn_idx")
 
         turn_counts = t.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_turns"))
 
@@ -136,15 +129,10 @@ class KgCheckpointer:
                 "bucket", "subj_id", "subj", "pred", "obj_id", "obj"
             ).agg(F.count(F.lit(1)).alias("n_occurrences"))
 
-            # idempotent per-bucket replacement; partitionOverwriteMode
-            # is set per-write (a session-level set would silently leak
-            # dynamic semantics into later unrelated overwrites)
-            edges.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("bucket").parquet(self.edges_dir)
-
+            # idempotent per-bucket replacement
+            sink.overwrite_partitions(edges, "edges")
             # nodes derive from the dictionary alone — bucket-independent
-            nodes_from_dict(link_dict).write.mode("overwrite").parquet(self.nodes_dir)
+            sink.write(nodes_from_dict(link_dict), "nodes")
 
             # lineage counters per bucket (exact aggregates, not observers —
             # observers double-count under resampling plans; see verify skill)
@@ -155,7 +143,7 @@ class KgCheckpointer:
                 F.count(F.lit(1)).alias("n_linked")
             )
             triple_counts = (
-                self.spark.read.parquet(self.edges_dir)
+                sink.read("edges")
                 .where(F.col("bucket").isin([int(b) for b in pending]))
                 .groupBy("bucket")
                 .agg(F.count(F.lit(1)).alias("n_triples"))
@@ -176,7 +164,7 @@ class KgCheckpointer:
                     F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
                 )
             )
-            manifest_rows.write.mode("append").parquet(self.manifest_dir)
+            sink.write(manifest_rows, "manifest", mode="append")
         finally:
             mentions.unpersist()
         return {"buckets_processed": len(pending)}

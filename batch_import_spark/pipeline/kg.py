@@ -4,20 +4,24 @@ The Spark-native replacement for the reference's import pipeline
 (Importer.doImport, Importer.java:225-241): where the reference
 streams CSV rows into Neo4j store files single-threaded, we run
 
-    transcripts ──salted repartition──▶ extract (pandas/Arrow UDF)
+    transcripts ──▶ extract (pandas/Arrow UDF)
         ──broadcast link-dict join──▶ linked + canonicalized mentions
         ──triple-grain agg──▶ edges; dictionary → nodes
+
+``run_kg_pipeline`` only builds the graph; ``sinks.GraphSink`` is the
+one writer of its tables (the ``kg`` job's write_graph and the
+``resume`` job's per-bucket checkpoint alike).
 
 Phase barriers mirror the reference (all nodes before rels,
 Importer.java:227-233): the link dictionary (unique-key filter +
 canonical-surface election) is materialized before the mention join.
 
 Scale design (100 TB / 1000 executors):
-- hot-conversation skew is defused BEFORE the Python-kernel stage by a
-  deterministic salted repartition on (conv_id, turn_idx) — no rand(),
-  reproducible at any parallelism;
+- extraction is a narrow map over the scan's own splits — no shuffle of
+  full-text rows before the Python kernel (a salted repartition was
+  measured 4× slower, BASELINE.md);
 - the link dictionary is vocabulary-bounded, not corpus-bounded: when
-  it fits the driver (≤ DICT_DRIVER_THRESHOLD entries) its unique-key filter AND
+  it fits the driver (≤ DRIVER_CC_THRESHOLD entries) its unique-key filter AND
   connected-components canonicalization run driver-side (union-find) —
   the CC analog of a broadcast join, saving ~10 s of iterative-shuffle
   latency per run; past the threshold both fall back to the
@@ -37,17 +41,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.canonicalize import canonical_mapping, min_id_components
+from batch_import_spark.operators.canonicalize import (
+    DRIVER_CC_THRESHOLD,
+    canonical_mapping,
+    min_id_components,
+)
 from batch_import_spark.operators.ids import stable_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
 from batch_import_spark.pipeline.extract import extract_mentions
-
-# Max dictionary entries fetched to the driver for the union-find fast
-# path. 500k (surface, id) string rows ≈ 25-75 MB on the driver heap —
-# comfortably below broadcast-size territory; beyond it the distributed
-# groupBy/CC path takes over with identical semantics.
-DICT_DRIVER_THRESHOLD = 500_000
-
 
 # observability for the broadcast-vs-shuffle dictionary decision:
 # filled by prepare_link_dict on every call (n_fetched, threshold, path)
@@ -67,8 +68,8 @@ class KgResult:
         """Merged pipeline counters (n_turns, n_mentions, n_linked, …).
 
         Observations fill on the first Spark action over the observed
-        plan. If the caller hasn't run one yet (e.g. no write path was
-        configured), first access runs a count over ``edges`` so the
+        plan (normally the caller's edges write). If the caller hasn't
+        run one yet, first access runs a count over ``edges`` so the
         counters are always available instead of silently ``{}``.
         """
         if not self._metrics and self._observations:
@@ -85,30 +86,8 @@ class KgResult:
         return self._metrics
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, *keys: str, salt_buckets: int | None = None
-) -> DataFrame:
-    """Deterministic skew-defusing repartition.
-
-    Salt = xxhash64 of ALL key columns (e.g. conv_id + turn_idx), so a
-    hot conv_id spreads across partitions while staying reproducible
-    (no rand()).
-
-    By default the repartition hashes the FULL 64-bit salt — hash
-    partitioning on a low-cardinality bucket column caps fill at the
-    bucket count (64 buckets would fill at most 64 of 1000 executors'
-    partitions, a silent parallelism ceiling at scale). Pass
-    ``salt_buckets`` only when a coarser co-grouping is wanted, and it
-    is floored at 4×num_partitions so it can never cap parallelism.
-    """
-    salt = F.xxhash64(*[F.col(k) for k in keys])
-    if salt_buckets is not None:
-        salt = F.pmod(salt, F.lit(max(salt_buckets, 4 * num_partitions)))
-    return df.repartition(num_partitions, salt)
-
-
 def prepare_link_dict(
-    alias_dict: DataFrame, driver_threshold: int = DICT_DRIVER_THRESHOLD
+    alias_dict: DataFrame, driver_threshold: int = DRIVER_CC_THRESHOLD
 ) -> DataFrame:
     """alias table → link dictionary
     (surface, entity_id, canonical_surface, canonical_node_id).
@@ -267,39 +246,20 @@ def merge_kg_edges(existing: DataFrame, delta: DataFrame) -> DataFrame:
 def run_kg_pipeline(
     transcripts: DataFrame,
     alias_dict: DataFrame,
-    num_partitions: int | None = None,
-    nodes_out: str | None = None,
-    edges_out: str | None = None,
     link_dict: DataFrame | None = None,
     extraction: str = "pandas",
-    salt_input: bool = False,
-    write_mode: str = "overwrite",
 ) -> KgResult:
-    """Run the full pipeline; optionally materialize Parquet tables.
+    """Build the graph: lazy ``nodes``/``edges`` frames plus counters.
 
-    Pass a pre-built ``link_dict`` (prepare_link_dict) to amortize
-    dictionary prep across repeated runs. ``extraction``: "pandas"
-    (Arrow-batched kernel, the general path) or "expr" (pure JVM
-    regexp expressions — identical output for regex-expressible
-    grammars, no Python workers).
+    Writing is the caller's step, through ``sinks.GraphSink`` (whose
+    first action over ``edges`` fills ``metrics``). Pass a pre-built
+    ``link_dict`` (prepare_link_dict) to amortize dictionary prep
+    across repeated runs. ``extraction``: "pandas" (Arrow-batched
+    kernel, the general path) or "expr" (pure JVM regexp expressions —
+    identical output for regex-expressible grammars, no Python workers).
     """
-    spark = transcripts.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # Salting (OFF by default — BENCH/BASELINE.md) re-spreads a
-    # conversation-clustered source (e.g. an Iceberg table partitioned
-    # by conv bucket with a hot conversation) before the extraction
-    # kernel. When the source's splits are already byte-even (plain
-    # file splits usually are), keep it off: extraction is a narrow
-    # map and the shuffle of full-text rows is pure bandwidth cost.
-    if salt_input:
-        t = salted_repartition(transcripts, num_partitions, "conv_id", "turn_idx")
-    else:
-        t = transcripts
-
     obs_turns = Observation()
-    t = t.observe(obs_turns, F.count(F.lit(1)).alias("n_turns"))
+    t = transcripts.observe(obs_turns, F.count(F.lit(1)).alias("n_turns"))
 
     if extraction == "expr":
         from batch_import_spark.pipeline.extract import extract_mentions_expr
@@ -317,24 +277,9 @@ def run_kg_pipeline(
         F.min(F.struct("conv_id", "turn_idx")).alias("first_seen"),
         F.max(F.struct("conv_id", "turn_idx")).alias("last_seen"),
     )
-    triples = edges.select("subj", "pred", "obj")
-    nodes = nodes_from_dict(link_dict)
-
-    # write_mode mirrors the reference's keep_db (Config.java:197-199):
-    # "overwrite" replaces the target store, "append" keeps it (A7);
-    # idempotent per-partition resume lives in pipeline/checkpoint.py
-    if nodes_out:
-        nodes.write.mode(write_mode).parquet(nodes_out)
-        nodes = spark.read.parquet(nodes_out)
-    if edges_out:
-        # this write is the action that fills both observations
-        edges.write.mode(write_mode).parquet(edges_out)
-        edges = spark.read.parquet(edges_out)
-        triples = edges.select("subj", "pred", "obj")
-
     return KgResult(
-        nodes=nodes,
+        nodes=nodes_from_dict(link_dict),
         edges=edges,
-        triples=triples,
+        triples=edges.select("subj", "pred", "obj"),
         _observations=(obs_turns, obs_link),
     )

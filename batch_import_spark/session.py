@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -71,3 +71,36 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of the RDDs persisted in the session's context. A
+    ``localCheckpoint`` registers its RDD here when it is called, eager
+    or lazy, so the ids a checkpoint owns are the difference of two
+    calls around it."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def unpersist_ids(spark: SparkSession, ids: set[int]) -> None:
+    """Free the blocks of the given persisted RDDs. This is the only way
+    to release a ``localCheckpoint``: ``DataFrame.unpersist()`` leaves
+    its RDD persisted (Spark 4.1), so iterative loops and stream folds
+    would otherwise hold every superseded checkpoint for the session's
+    lifetime."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in ids:
+        if jmap.containsKey(rid):
+            jmap.get(rid).unpersist(False)
+
+
+def checkpoint_rotate(
+    spark: SparkSession, df: DataFrame, prev_ids: set[int]
+) -> tuple[DataFrame, set[int]]:
+    """``localCheckpoint`` ``df`` eagerly, then free ``prev_ids`` (the
+    checkpoint it supersedes). Returns the checkpointed frame and the
+    ids that now own its blocks — the next rotation's ``prev_ids``."""
+    before = persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=True)
+    new_ids = persistent_rdd_ids(spark) - before
+    unpersist_ids(spark, prev_ids)
+    return out, new_ids

@@ -1,5 +1,13 @@
 """Graph materialization sinks — Iceberg first, Parquet fallback.
 
+``GraphSink`` is the one writer of every graph table: the ``kg`` and
+``import-csv`` jobs write through ``write``/``write_graph``, and the
+``resume`` job's per-bucket checkpoint (pipeline/checkpoint.py) writes
+its edges, nodes and manifest through ``overwrite_partitions``,
+``write`` and ``write(mode="append")`` — the analog of the reference
+sending every import, fresh or keep_db, through one BatchInserter
+(Importer.java:77-80,113-115).
+
 Reference mapping (SURVEY.md §2.5):
 
 - A1/A3 node/relationship create (Importer.java:96-104, :154) →
@@ -19,10 +27,11 @@ no Iceberg jar, so tests cover the Parquet path and skip the Iceberg
 path when the classes are absent; the Iceberg calls are the standard
 public DataFrameWriterV2 API and carry no sandbox-specific behavior.
 
-Scale notes: both paths write partitioned by the checkpoint bucket so
-a retry's blast radius is one bucket; Iceberg additionally gives
-snapshot isolation + time travel (the manifest table in
-pipeline/checkpoint.py remains the lineage/counter surface either way).
+Scale notes: ``overwrite_partitions`` writes partitioned by the
+checkpoint bucket so a retry's blast radius is one bucket; Iceberg
+additionally gives snapshot isolation + time travel (the manifest table
+in pipeline/checkpoint.py remains the lineage/counter surface either
+way).
 """
 
 from __future__ import annotations
@@ -68,21 +77,11 @@ class GraphSink:
 
     # --- writes ---------------------------------------------------------
 
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        mode: str = "overwrite",
-        partition_by: tuple[str, ...] = (),
-    ) -> None:
+    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
         """Full-table write. ``mode``: "overwrite" (replace, the
         reference's default destructive import) or "append" (keep_db)."""
         if self._use_iceberg():
             w = df.writeTo(self._ident(table)).using("iceberg")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
             if mode == "append":
                 try:
                     w.append()
@@ -91,10 +90,7 @@ class GraphSink:
             else:
                 w.createOrReplace()
             return
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._ident(table))
+        df.write.mode(mode).parquet(self._ident(table))
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ("bucket",)

@@ -46,13 +46,14 @@ def run_incremental_ann(
     `stream_ann_incremental` oracle).
     """
     from batch_import_spark.operators.similarity import ivf_pq_extend
+    from batch_import_spark.session import checkpoint_rotate
 
-    # `owned` tracks whether state["index"] was created inside this
-    # fold: the caller-supplied initial index must never be
-    # unpersisted here (it may be a persisted/checkpointed frame still
+    # `ids` are the blocks of the checkpoint this fold created last:
+    # the caller-supplied initial index owns none of them, so it is
+    # never freed here (it may be a persisted/checkpointed frame still
     # used elsewhere — dropping its cached blocks would be a hidden
     # side effect)
-    state: dict = {"index": index, "batches": 0, "owned": False}
+    state: dict = {"index": index, "ids": set(), "batches": 0}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from batch_import_spark.operators.similarity import pq_encode
@@ -67,14 +68,12 @@ def run_incremental_ann(
                 state["index"], batch_df, centroids, book, m_sub,
                 id_col=id_col, vec_col=vec_col,
             )
-        prev, prev_owned = state["index"], state["owned"]
         # eager checkpoint = the per-batch state commit; truncates
         # lineage so batch N+1 never re-encodes batch N (rotation
         # discipline shared with streaming/incremental.py)
-        state["index"] = merged.localCheckpoint(eager=True)
-        state["owned"] = True
-        if prev is not None and prev_owned:
-            prev.unpersist()
+        state["index"], state["ids"] = checkpoint_rotate(
+            batch_df.sparkSession, merged, state["ids"]
+        )
         state["batches"] += 1
 
     ckpt_dir = tempfile.mkdtemp(prefix="ann_incr_ckpt_")

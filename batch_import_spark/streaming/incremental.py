@@ -45,12 +45,13 @@ def run_incremental_kg(
         prepare_link_dict,
         run_kg_pipeline,
     )
+    from batch_import_spark.session import checkpoint_rotate
 
     import shutil
 
     if link_dict is None:
         link_dict = prepare_link_dict(alias_dict)
-    state: dict = {"edges": None, "batches": 0}
+    state: dict = {"edges": None, "ids": set(), "batches": 0}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         res = run_kg_pipeline(
@@ -61,11 +62,11 @@ def run_incremental_kg(
         # eager checkpoint = the per-batch state commit; truncates
         # lineage so batch N+1 never re-runs batch N's extraction.
         # The superseded checkpoint's blocks are released immediately
-        # (same rotation discipline as canonicalize/bpe_train) —
-        # without it a long stream grows storage memory linearly.
-        state["edges"] = merged.localCheckpoint(eager=True)
-        if prev is not None:
-            prev.unpersist()
+        # (session.checkpoint_rotate) — without it a long stream grows
+        # storage memory linearly.
+        state["edges"], state["ids"] = checkpoint_rotate(
+            batch_df.sparkSession, merged, state["ids"]
+        )
         state["batches"] += 1
 
     ckpt_dir = tempfile.mkdtemp(prefix="kg_incr_ckpt_")

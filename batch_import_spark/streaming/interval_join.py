@@ -17,8 +17,7 @@ not O(stream). No custom state code: declaring the interval condition
 lets the engine manage buffering, matching, and eviction.
 
 Scale shape: both streams shuffle on the join key (conv_id) only;
-skew follows the hot-conversation profile, same salting levers as the
-batch pipeline (pipeline/kg.py). At 10^12 turns the state size is
+skew follows the hot-conversation profile. At 10^12 turns the state size is
 bounded by (turn rate x max_lag), independent of history length.
 
 Reference analog: none — the reference is a batch CSV ingester

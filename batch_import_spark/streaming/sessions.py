@@ -11,7 +11,7 @@ summary row per closed session.
 Scale notes: state is one small fixed-size tuple per OPEN
 conversation — bounded by the number of conversations inside the
 watermark horizon, not the corpus. The grouping shuffle is on
-conv_id (the same key the batch pipeline salts); the kernel is
+conv_id; the kernel is
 Arrow-batched pandas, vectorized per micro-batch.
 
 The reference has no streaming surface (SURVEY.md §2.7); this exceeds

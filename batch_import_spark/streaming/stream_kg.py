@@ -10,14 +10,16 @@ This module runs the SAME extract→link→canonicalize stages over a
   semantics apply per batch);
 - triple aggregation is windowed on event time with a watermark for
   late turns;
-- the sink is ``foreachBatch`` → idempotent parquet append keyed by
-  (window, triple) — mirroring the checkpointer's bucket-overwrite
-  discipline — plus Spark's own streaming checkpoint for exactly-once
-  progress tracking (the streaming analog of the manifest, A6/A7).
+- the windowed-triples table is written by Spark's own parquet file
+  sink in append mode, with the streaming checkpoint for exactly-once
+  progress tracking (the streaming analog of the manifest, A6/A7). The
+  batch graph tables (nodes, edges, resume checkpoint) have one writer,
+  ``sinks.GraphSink``; continuous folds into them go through
+  streaming/incremental.py.
 
 Scale notes: state is bounded by (watermark horizon × triple
-vocabulary), not the corpus; hot conversations are defused by the same
-deterministic salting before the Python stage.
+vocabulary), not the corpus; extraction is a narrow map over each
+micro-batch, as in the batch pipeline.
 """
 
 from __future__ import annotations

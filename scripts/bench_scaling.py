@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 
 cores = int(sys.argv[1]); n_convs = int(sys.argv[2])
 mode = sys.argv[3] if len(sys.argv) > 3 else "pandas"
-kernel = mode.split("+")[0]
-salt = mode.endswith("+salt")
 spark = build_session(app_name=f"kg-scaling-{cores}", master=f"local[{cores}]",
                       shuffle_partitions=max(cores * 2, 8))
 spark.sparkContext.setLogLevel("ERROR")
@@ -39,7 +37,7 @@ link_dict = None
 times = []
 for i in range(3):
     t0 = time.time()
-    res = run_kg_pipeline(t, alias_dict_df(spark), extraction=kernel, salt_input=salt)
+    res = run_kg_pipeline(t, alias_dict_df(spark), extraction=mode)
     n_edges = res.edges.count()
     times.append(time.time() - t0)
 sec = min(times)
@@ -70,7 +68,7 @@ def run_at(cores: int, n_convs: int, mode: str = "pandas") -> dict:
 def main() -> int:
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 8000
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    modes = (sys.argv[3].split(",") if len(sys.argv) > 3 else ["pandas", "pandas+salt"])
+    modes = (sys.argv[3].split(",") if len(sys.argv) > 3 else ["pandas", "expr"])
     result = {"n_cores": n, "four_n_cores": 4 * n, "target": 0.8, "modes": {}}
     for mode in modes:
         r_n = run_at(n, n_convs, mode)

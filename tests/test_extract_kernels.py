@@ -30,5 +30,3 @@ def test_pipeline_equal_across_kernels_and_salt(spark):
 
     base = triples()
     assert triples(extraction="expr") == base
-    assert triples(salt_input=False) == base
-    assert triples(extraction="expr", salt_input=False) == base

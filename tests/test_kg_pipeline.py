@@ -13,11 +13,13 @@ from pyspark.sql import functions as F
 import pytest
 
 from batch_import_spark.pipeline.kg import run_kg_pipeline
+from batch_import_spark.sinks import GraphSink
 from batch_import_spark.sources.transcripts import (
     PREDICATE_OF,
     alias_dict_df,
     entity_catalog,
     generate_transcripts,
+    read_transcripts,
 )
 
 
@@ -85,13 +87,12 @@ def test_kg_pipeline_matches_python_oracle(spark, fixture_data, tmp_path):
     assert golden, "fixture must plant extractable triples"
     assert golden_skipped > 0, "fixture must plant unresolvable surfaces"
 
-    res = run_kg_pipeline(
-        fixture_data,
-        alias_dict_df(spark),
-        nodes_out=str(tmp_path / "nodes"),
-        edges_out=str(tmp_path / "edges"),
-    )
-    got = {(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()}
+    res = run_kg_pipeline(fixture_data, alias_dict_df(spark))
+    sink = GraphSink(spark, str(tmp_path / "kg"), fmt="parquet")
+    sink.write_graph(res.nodes, res.edges)  # fills the observations
+    got = {
+        (r["subj"], r["pred"], r["obj"]) for r in sink.read("edges").collect()
+    }
     # P/R both 1.0 at fixture scale (FIXTURES.md F6)
     assert got == golden
     assert res.metrics["n_skipped"] >= golden_skipped  # ambiguous also skipped
@@ -100,8 +101,8 @@ def test_kg_pipeline_matches_python_oracle(spark, fixture_data, tmp_path):
 
 
 def test_kg_pipeline_metrics_without_write(spark, fixture_data):
-    """.metrics must be populated even when no write path is configured
-    (round-2 verdict: a caller without edges_out silently got {})."""
+    """.metrics must be populated even before the caller runs an action
+    over the graph (round-2 verdict: such a caller silently got {})."""
     res = run_kg_pipeline(fixture_data, alias_dict_df(spark))
     m = res.metrics  # first access runs the backing action itself
     assert m["n_turns"] == fixture_data.count()
@@ -193,56 +194,77 @@ def test_incremental_merge_equals_full_rebuild(spark):
         full.agg(F.sum("n_occurrences")).collect()[0][0]
 
 
-def test_per_turn_text_equality_under_stable_ordering(spark):
-    """BASELINE input_hint's per-row invariant, pinned explicitly: the
-    pipeline's input handling (salted repartition on (conv_id,
-    turn_idx)) preserves per-turn text EXACTLY — same (conv_id,
-    turn_idx) -> text bijection as the source at any parallelism —
-    and sorting by the stable (conv_id, turn_idx) key recovers the
-    original per-conversation turn sequence."""
-    from batch_import_spark.pipeline.kg import salted_repartition
-    from batch_import_spark.sources.transcripts import generate_transcripts
+def _plan_children(plan) -> list:
+    """Children of an executed-plan node, seeing through adaptive
+    wrappers (the final plan of an AdaptiveSparkPlan, a query stage's
+    own plan)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [plan.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [plan.plan()]
+    children = plan.children()
+    return [children.apply(i) for i in range(children.size())]
 
-    t = generate_transcripts(spark, n_convs=50, median_turns=8, hot_factor=10)
-    src = {
-        (r.conv_id, r.turn_idx): r.text
-        for r in t.select("conv_id", "turn_idx", "text").collect()
-    }
-    for parts in (3, 17):
-        got = {
-            (r.conv_id, r.turn_idx): r.text
-            for r in salted_repartition(t, parts, "conv_id", "turn_idx")
-            .select("conv_id", "turn_idx", "text")
-            .collect()
-        }
-        assert got == src, f"text corrupted/lost at {parts} partitions"
-    # stable ordering: per-conversation sequences identical after the
-    # shuffle when sorted by the stable key
-    re_sorted = (
-        salted_repartition(t, 13, "conv_id", "turn_idx")
-        .groupBy("conv_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                "\x1f",
-            ).alias("seq")
+
+def test_kg_edges_plan_reads_the_scan_without_a_shuffle(spark, fixture_data, tmp_path):
+    """Extraction is a narrow map over the scan's own splits: in the
+    executed plan of ``run_kg_pipeline(...).edges`` no Exchange sits
+    between the file scan and the MapInPandas extraction kernel."""
+    path = str(tmp_path / "transcripts")
+    fixture_data.write.parquet(path)
+    edges = run_kg_pipeline(read_transcripts(spark, path), alias_dict_df(spark)).edges
+    edges.collect()  # settles the adaptive plan
+
+    def find(plan, suffix):
+        if plan.getClass().getSimpleName().endswith(suffix):
+            return plan
+        for child in _plan_children(plan):
+            if (hit := find(child, suffix)) is not None:
+                return hit
+        return None
+
+    kernel = find(edges._jdf.queryExecution().executedPlan(), "MapInPandasExec")
+    assert kernel is not None
+    below, node = [], kernel
+    while (children := _plan_children(node)):
+        assert len(children) == 1, [c.getClass().getSimpleName() for c in children]
+        node = children[0]
+        below.append(node.getClass().getSimpleName())
+    assert below[-1] == "FileSourceScanExec", below
+    assert not [n for n in below if "Exchange" in n or "QueryStage" in n], below
+
+
+def test_link_dict_distributed_path_equals_driver_path(spark):
+    """``prepare_link_dict``'s distributed path (unique-key groupBy +
+    distributed CC) equals the driver union-find row for row, on the
+    builtin dictionary plus an ambiguous surface, a three-surface chain
+    across two entity ids whose middle surface is ambiguous (it must not
+    bridge them), and three surfaces of one entity id."""
+    from batch_import_spark.pipeline.kg import LAST_DICT_STATS, prepare_link_dict
+
+    extra = [
+        ("Amb", 9001), ("Amb", 9002),
+        ("Zeta", 9101), ("Zed", 9101), ("Zed", 9102), ("Zx", 9102),
+        ("Yc", 9201), ("Ya", 9201), ("Yb", 9201),
+    ]
+    builtin = alias_dict_df(spark)
+    aliases = builtin.unionByName(
+        spark.createDataFrame(
+            [("surfaces", "surface", s, 1.0, "person", e) for s, e in extra],
+            builtin.schema,
         )
     )
-    orig = (
-        t.groupBy("conv_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                    lambda s: s["text"],
-                ),
-                "\x1f",
-            ).alias("seq")
-        )
-    )
-    a = {r.conv_id: r.seq for r in re_sorted.collect()}
-    b = {r.conv_id: r.seq for r in orig.collect()}
-    assert a == b
+    cols = ["surface", "entity_id", "canonical_surface", "canonical_node_id"]
+
+    driver = prepare_link_dict(aliases)
+    assert LAST_DICT_STATS["path"] == "driver"
+    driver_rows = sorted(tuple(r) for r in driver.select(cols).collect())
+    distributed = prepare_link_dict(aliases, driver_threshold=0)
+    assert LAST_DICT_STATS["path"] == "distributed"
+    assert sorted(tuple(r) for r in distributed.select(cols).collect()) == driver_rows
+
+    canon = {r[0]: r[2] for r in driver_rows}
+    assert "Amb" not in canon and "Zed" not in canon
+    assert canon["Zeta"] == "Zeta" and canon["Zx"] == "Zx"
+    assert canon["Ya"] == canon["Yb"] == canon["Yc"] == "Ya"

@@ -12,32 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-# --- VERDICT #3: salt must not cap parallelism --------------------------------
-
-
-def test_salted_repartition_fills_more_than_64_partitions(spark):
-    from batch_import_spark.pipeline.kg import salted_repartition
-    from batch_import_spark.sources.transcripts import generate_transcripts
-
-    t = generate_transcripts(spark, n_convs=300, median_turns=8, hot_factor=5)
-    salted = salted_repartition(t, 128, "conv_id", "turn_idx")
-    nonempty = salted.groupBy(F.spark_partition_id().alias("p")).count().count()
-    # full-hash salt fills (essentially) all partitions; the old 64-way
-    # pmod ceiling would cap this at <= 64
-    assert nonempty > 100, nonempty
-
-
-def test_salted_repartition_explicit_buckets_floored(spark):
-    from batch_import_spark.pipeline.kg import salted_repartition
-    from batch_import_spark.sources.transcripts import generate_transcripts
-
-    t = generate_transcripts(spark, n_convs=300, median_turns=8, hot_factor=5)
-    # a caller-supplied tiny bucket count is floored at 4x partitions
-    salted = salted_repartition(t, 32, "conv_id", "turn_idx", salt_buckets=8)
-    nonempty = salted.groupBy(F.spark_partition_id().alias("p")).count().count()
-    assert nonempty > 24, nonempty
-
-
 # --- VERDICT #4: no Python round-trips in the package hot paths ---------------
 
 

@@ -1214,6 +1214,7 @@ def _domain_filter(spark, sf):
     blocks the cdn subdomain), and the 20-per-domain cap all fire on
     real rows."""
     from batch_import_spark.operators.domains import domain_filter
+    from batch_import_spark.session import local_frame
 
     did = F.col("doc_id")
     url = F.concat(
@@ -1236,9 +1237,7 @@ def _domain_filter(spark, sf):
     d = _read_fanout(spark, f"{sf}/documents.parquet").select(
         "doc_id", url.alias("url")
     )
-    bl = spark.createDataFrame(
-        [(s,) for s in _DOMAIN_BLOCKLIST], "suffix: string"
-    )
+    bl = local_frame(spark, [(s,) for s in _DOMAIN_BLOCKLIST], "suffix: string")
     return domain_filter(d, bl, cap=20)
 
 
@@ -3644,6 +3643,7 @@ def _kg_bfs_hops(spark, sf):
     set through a recursive CTE."""
     from batch_import_spark.operators.graph_stats import bfs_distances
     from batch_import_spark.pipeline.kg import run_kg_pipeline
+    from batch_import_spark.session import local_frame
     from batch_import_spark.sources.transcripts import alias_dict_df
 
     t = _planted_transcripts_full(spark, sf)
@@ -3651,7 +3651,7 @@ def _kg_bfs_hops(spark, sf):
     g = edges.select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     ).localCheckpoint()
-    sources = g.sparkSession.createDataFrame([("P0",)], "node string")
+    sources = local_frame(g.sparkSession, [("P0",)], "node string")
     return bfs_distances(g, sources, directed=True, max_hops=10)
 
 

@@ -110,7 +110,7 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
         import_nodes,
         import_relationships,
     )
-    from batch_import_spark.session import build_session
+    from batch_import_spark.session import build_session, local_frame
     from batch_import_spark.sinks import GraphSink
     from batch_import_spark.sources.csv_source import read_reference_csv
 
@@ -125,7 +125,7 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
     # reintroduce exactly the paths toFiles dropped.
     nodes_files = to_files(",".join(cfg.nodes_files)) if cfg.nodes_files else []
     nodes = None
-    index_entries = spark.createDataFrame([], INDEX_SCHEMA)
+    index_entries = local_frame(spark, [], INDEX_SCHEMA)
     if nodes_files:
         nodes = import_nodes(
             read_reference_csv(
@@ -135,7 +135,7 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
         )
         index_entries = nodes.index_entries
         sink.write(nodes.nodes, "nodes", mode=mode)
-    rel_index_entries = spark.createDataFrame([], REL_INDEX_SCHEMA)
+    rel_index_entries = local_frame(spark, [], REL_INDEX_SCHEMA)
     for info in cfg.indexes.values():
         # standalone index files — only existing, readable ones import
         # (Importer.java:186-196 + IndexInfo.shouldImportFile); column 0

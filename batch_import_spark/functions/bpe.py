@@ -55,7 +55,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from batch_import_spark.session import checkpoint_rotate, unpersist_ids
+from batch_import_spark.session import checkpoint_rotate, local_frame, unpersist_ids
 
 #: symbol delimiter — 0x1f "unit separator", never present in text
 #: corpora this engine targets (control chars are stripped upstream).
@@ -411,7 +411,8 @@ def merges_to_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
     """Tokenizer artifact: the learned merge table as a DataFrame
     (persist with .write.parquet — the artifact a training pipeline
     ships alongside its data)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank: long, lhs: string, rhs: string, pair_count: long",
     )

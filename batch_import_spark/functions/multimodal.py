@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from batch_import_spark.session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -79,7 +81,7 @@ def synthesize_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
                 ("application/octet-stream", 32 + i % 64, 32 + (i * 7) % 64, 1000 + i),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_media(payload: bytes, kind: str, strict: bool = False) -> np.ndarray:
@@ -276,7 +278,7 @@ def synthesize_png_media(spark, n: int = 24) -> DataFrame:
         )
         px = ((x * 7 + y * 3 + c * 11 + i) % 256).astype(np.uint8)
         rows.append((i, bytearray(png_encode(px))))
-    return spark.createDataFrame(rows, PNG_MEDIA_SCHEMA)
+    return local_frame(spark, rows, PNG_MEDIA_SCHEMA)
 
 
 def synthesize_wav_media(spark, n: int = 24) -> DataFrame:
@@ -289,7 +291,7 @@ def synthesize_wav_media(spark, n: int = 24) -> DataFrame:
         j = np.arange(400 + 10 * i)
         s = ((j * 37 + i * 101) % 65536 - 32768).astype(np.int16)
         rows.append((i, bytearray(wav_encode(s, 8000 + i))))
-    return spark.createDataFrame(rows, PNG_MEDIA_SCHEMA)
+    return local_frame(spark, rows, PNG_MEDIA_SCHEMA)
 
 
 def synthesize_jpeg_media(spark, n: int = 24) -> DataFrame:
@@ -312,7 +314,7 @@ def synthesize_jpeg_media(spark, n: int = 24) -> DataFrame:
         rows.append(
             (i, bytearray(jpeg_encode(px3, "444" if i % 2 == 0 else "420")))
         )
-    return spark.createDataFrame(rows, PNG_MEDIA_SCHEMA)
+    return local_frame(spark, rows, PNG_MEDIA_SCHEMA)
 
 
 IMAGE_STATS_SCHEMA = (

@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batch_import_spark.session import local_frame
+
 SEP = "\x1e"  # piece separator inside a word's segmentation (chr 30)
 FRAC_BITS = 16
 MAX_WORD_LEN = 16
@@ -344,7 +346,7 @@ def segment_words(
             if carry_n
             else "word string, np int, cost long, path string"
         )
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     seg = words.withColumn(
         "s",
         viterbi_segment_expr(F.col("word"), costs, max_piece_len, max_word_len),

@@ -26,7 +26,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_import_spark.session import checkpoint_rotate, unpersist_ids
+from batch_import_spark.session import checkpoint_rotate, local_frame, unpersist_ids
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -96,7 +96,7 @@ def _driver_cc_edges(spark, e: DataFrame) -> DataFrame:
             StructField("component_id", e.schema[1].dataType, True),
         ]
     )
-    return spark.createDataFrame(list(comp.items()), schema)
+    return local_frame(spark, comp.items(), schema)
 
 
 def connected_components(
@@ -232,6 +232,6 @@ def _driver_union_find(pairs_df: DataFrame) -> DataFrame:
         nodes.append(node)
         edges.append((first_by_key.setdefault(r["k"], node), node))
     comp = min_id_components(edges, nodes)
-    return pairs_df.sparkSession.createDataFrame(
-        sorted(comp.items()), "node_id long, canonical_id long"
+    return local_frame(
+        pairs_df.sparkSession, sorted(comp.items()), "node_id long, canonical_id long"
     )

@@ -52,6 +52,7 @@ from pyspark.sql.window import Window
 from batch_import_spark.functions.unigram import ilog2_fp
 from batch_import_spark.operators.lm import _adjacent_pairs, _words
 from batch_import_spark.operators.sketches import portable_bucket, portable_hash60
+from batch_import_spark.session import local_frame
 
 N_BUCKETS = 128
 
@@ -142,9 +143,7 @@ def _bucket_log_probs(
     is the same bounded-driver-traffic discipline as the BPE/unigram
     vocab folds."""
     lp = _bucket_log_prob_map(feats, n_buckets, count_col)
-    return spark.createDataFrame(
-        sorted(lp.items()), "bucket int, lp_fp long"
-    )
+    return local_frame(spark, sorted(lp.items()), "bucket int, lp_fp long")
 
 
 def _bucket_log_prob_map(

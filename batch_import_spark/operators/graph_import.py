@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from batch_import_spark.operators.ids import with_dense_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
+from batch_import_spark.session import local_frame
 from batch_import_spark.sources.csv_source import ReferenceCsv
 
 INDEX_SCHEMA = "index_name string, key_prop string, key_value string, node_id long"
@@ -96,7 +97,7 @@ def _index_entries(df: DataFrame, fields, entity_id: Column, schema: str) -> Dat
         for h in fields
     ]
     if not parts:
-        return df.sparkSession.createDataFrame([], schema)
+        return local_frame(df.sparkSession, [], schema)
     return reduce(DataFrame.unionByName, parts)
 
 

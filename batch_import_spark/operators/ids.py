@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batch_import_spark.session import local_frame
+
 
 def stable_id(*cols: Column | str, seed: int = 0) -> Column:
     """Deterministic 64-bit ID from the canonical key columns."""
@@ -43,7 +45,9 @@ def _number_pinned_rows(
     Plan shape: one count-per-partition job, then a narrow projection
     — position in partition = ``monotonically_increasing_id() -
     (spark_partition_id() << 33)`` — plus a broadcast join of one
-    offset row per partition. No Window, no shuffle of the rows.
+    offset row per partition. No Window, no shuffle of the rows. The
+    offsets arrive as a LocalRelation (``session.local_frame``), so the
+    broadcast starts no Python worker.
     """
     keyed = df.withColumn("_pid", F.spark_partition_id()).withColumn(
         "_pos", F.monotonically_increasing_id() - F.shiftleft(F.col("_pid").cast("long"), 33)
@@ -55,8 +59,8 @@ def _number_pinned_rows(
         start = group_start.setdefault(row[group_col], acc) if group_col else 0
         offsets.append((row["_pid"], acc, acc - start))
         acc += row["count"]
-    odf = df.sparkSession.createDataFrame(
-        offsets or [(0, 0, 0)], "_pid int, _offset long, _group_offset long"
+    odf = local_frame(
+        df.sparkSession, offsets or [(0, 0, 0)], "_pid int, _offset long, _group_offset long"
     )
     out = keyed.join(F.broadcast(odf), "_pid").withColumn(
         id_col, F.col("_offset") + F.col("_pos")

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from batch_import_spark.session import local_frame
+
 
 def _seq_dot_matrix(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     """All pairwise dots of the rows of V (n x d) against the rows of
@@ -1146,8 +1148,8 @@ def ivf_pq_topk(
             probe_rows.append((r.query_id, cell, qdist))
     # integer query ids by contract (matches the corpus id space);
     # a string-keyed caller should map ids before/after
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, qdist array<array<long>>"
+    probes = local_frame(
+        spark, probe_rows, "query_id long, cell int, qdist array<array<long>>"
     )
     cand = assigned.join(F.broadcast(probes), "cell")
     adc = F.aggregate(

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from batch_import_spark.session import local_frame
+
 _HASH_SPACE = float(1 << 60)
 
 
@@ -496,7 +498,8 @@ def theta_set_ops(
     na, nb, n_union, n_inter = row["na"], row["nb"], row["nu"], row["ni"]
     spark = a.sparkSession
     scale = 1 << frac_bits
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(na), int(nb), int(n_union), int(n_inter),

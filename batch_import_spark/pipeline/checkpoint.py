@@ -40,6 +40,7 @@ from batch_import_spark.pipeline.kg import (
     nodes_from_dict,
     prepare_link_dict,
 )
+from batch_import_spark.session import local_frame
 from batch_import_spark.sinks import GraphSink
 
 MANIFEST_SCHEMA = (
@@ -66,7 +67,7 @@ class KgCheckpointer:
         try:
             return self.sink.read("manifest")
         except AnalysisException:  # no bucket has completed yet
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
 
     def done_buckets(self) -> set[int]:
         return {r["bucket"] for r in self.manifest().select("bucket").distinct().collect()}

@@ -49,6 +49,7 @@ from batch_import_spark.operators.canonicalize import (
 from batch_import_spark.operators.ids import stable_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
 from batch_import_spark.pipeline.extract import extract_mentions
+from batch_import_spark.session import local_frame
 
 # observability for the broadcast-vs-shuffle dictionary decision:
 # filled by prepare_link_dict on every call (n_fetched, threshold, path)
@@ -97,6 +98,12 @@ def prepare_link_dict(
     nor merges entities. Canonical surface = lexicographic min over
     the component of surfaces connected by shared entity ids; node id
     = xxhash64 of that surface (order-free, deterministic).
+
+    Driver path (at most ``driver_threshold`` distinct pairs): the
+    union-find runs on the fetched rows and the dictionary comes back
+    as a ``session.local_frame`` LocalRelation, so its broadcast and
+    the ``nodes_from_dict`` groupBy run in the JVM with no Python
+    worker.
     """
     spark = alias_dict.sparkSession
     raw = alias_dict.select(
@@ -125,8 +132,8 @@ def prepare_link_dict(
             ((first_by_ent.setdefault(e, s), s) for s, e in unique.items()), unique
         )
         out = [(s, unique[s], canon[s]) for s in sorted(unique)]
-        df = spark.createDataFrame(
-            out, "surface string, entity_id long, canonical_surface string"
+        df = local_frame(
+            spark, out, "surface string, entity_id long, canonical_surface string"
         )
         return df.withColumn(
             "canonical_node_id", stable_id(F.col("canonical_surface"))

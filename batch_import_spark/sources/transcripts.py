@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from batch_import_spark.session import local_frame
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -93,8 +95,8 @@ def entity_catalog() -> list[tuple[str, str, int]]:
 def alias_dict_df(spark: SparkSession) -> DataFrame:
     """The entity-linking dictionary (FIXTURES.md F4 shape)."""
     rows = [("surfaces", "surface", s, float(1.0), k, e) for (s, k, e) in entity_catalog()]
-    return spark.createDataFrame(
-        rows, "index_name string, key_prop string, key_value string, score double, kind string, entity_id long"
+    return local_frame(
+        spark, rows, "index_name string, key_prop string, key_value string, score double, kind string, entity_id long"
     )
 
 

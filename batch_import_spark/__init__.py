@@ -7,7 +7,7 @@ loader) as an idiomatic, horizontally-scalable Spark pipeline:
     transcripts (conv_id, turn_idx, role, text, tool, ts)
         → extract   (vectorized pandas/Arrow UDF triple extraction)
         → link      (broadcast alias-dictionary equi-join, unique-key rule)
-        → canonicalize (large-star/small-star connected components)
+        → canonicalize (canonical surface = per-entity min surface)
         → materialize  (nodes/edges tables through one GraphSink writer, AQE)
 
 plus the reference's CSV node/relationship-file semantics (typed

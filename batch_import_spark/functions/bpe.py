@@ -49,8 +49,6 @@ one definition on both sides.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -350,63 +348,6 @@ def _encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
     return syms
 
 
-def bpe_encode_batches(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    seg_col: str = "bpe_seg",
-    count_col: str = "n_bpe_tokens",
-) -> DataFrame:
-    """Arrow-batched apply path (mapInPandas) for merge lists too long
-    to inline as expressions. Memoizes per distinct word within each
-    batch — at web scale the Zipfian word distribution makes the cache
-    hit rate dominate, so cost is ~O(distinct words per batch).
-
-    Identical output to `encode_text` + `segment_expr` (pinned by
-    tests/test_bpe.py).
-    """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    rules = [(left, right) for left, right, *_ in merges]
-    # build a fresh StructType: StructType.add MUTATES the df's cached
-    # schema object, making the input plan appear to have the output
-    # columns (unresolved-column errors downstream)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(seg_col, StringType()), StructField(count_col, LongType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[str]] = {}
-
-        def encode(text: str | None) -> tuple[str | None, int | None]:
-            if text is None:
-                # match the expression path exactly: NULL text
-                # propagates to NULL seg / NULL count
-                return None, None
-            words = text.lower().strip().split()
-            segs: list[str] = []
-            n = 0
-            for w in words:
-                syms = cache.get(w)
-                if syms is None:
-                    syms = _encode_word(w, rules)
-                    cache[w] = syms
-                segs.append(SEP.join(syms))
-                n += len(syms)
-            return " ".join(segs), n
-
-        for pdf in batches:
-            enc = [encode(t) for t in pdf[text_col]]
-            pdf = pdf.copy()
-            pdf[seg_col] = [t[0] for t in enc]
-            # nullable Int64 keeps NULL counts NULL through Arrow
-            pdf[count_col] = pd.array([t[1] for t in enc], dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def merges_to_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
     """Tokenizer artifact: the learned merge table as a DataFrame
     (persist with .write.parquet — the artifact a training pipeline
@@ -416,16 +357,6 @@ def merges_to_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
         [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank: long, lhs: string, rhs: string, pair_count: long",
     )
-
-
-def merges_from_df(df: DataFrame) -> list[tuple[str, str, int]]:
-    """Load a merge table back into apply order. Rank order IS the
-    semantics (merges apply sequentially), so the sort is load-bearing.
-    Driver-side collect is bounded by n_merges (artifact-sized)."""
-    return [
-        (r["lhs"], r["rhs"], int(r["pair_count"]))
-        for r in df.orderBy("rank").collect()
-    ]
 
 
 def decode_segments(seg: Column | str) -> Column:

@@ -1,9 +1,9 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media travel as opaque ``binary`` columns with a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched kernels over ``mapInPandas``. PNG (8-bit), WAV (PCM16)
-and baseline JPEG decode is REAL — implemented from scratch on
+struct; decode and feature extraction run as Arrow-batched kernels
+over ``mapInPandas``. PNG (8-bit), WAV (PCM16) and baseline JPEG
+decode is REAL — implemented from scratch on
 stdlib zlib/wave/numpy (functions/codecs.py, codecs_jpeg.py),
 magic-byte sniffed, with integer pixel/sample statistics exact
 enough for closed-form cross-engine verification (JPEG via
@@ -29,7 +29,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from batch_import_spark.session import local_frame
@@ -163,96 +162,6 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "media_id long, kind string, out_w int, out_h int, channels int, "
-    "n_bytes_in int, resized binary"
-)
-
-
-def resize_media(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """Resize plan: Arrow-batched kernel producing fixed-size thumbnails.
-
-    PNG payloads get a REAL nearest-neighbor pixel resize (decode via
-    functions/codecs.py, grid-index) normalized to 3-channel RGB —
-    gray is expanded, alpha dropped — so every decoded thumbnail is
-    exactly ``out_h*out_w*3`` bytes regardless of the source's channel
-    count. Payloads in formats that need external codecs (and PNGs the
-    native decoder rejects) fall back to the deterministic
-    byte-subsample fake at 1 "channel" (``out_h*out_w`` bytes). The
-    ``channels`` output column records which, so downstream consumers
-    can derive the payload length as ``out_h*out_w*channels`` instead
-    of assuming one fixed size.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from batch_import_spark.functions.codecs import png_decode
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        size = out_w * out_h
-        for pdf in batches:
-            outs, sizes, chans = [], [], []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                sizes.append(len(b))
-                if b[:8] == b"\x89PNG\r\n\x1a\n":
-                    try:
-                        px = png_decode(b)
-                    except ValueError:
-                        px = None  # unsupported PNG flavor → fake path
-                    if px is not None:
-                        if px.shape[2] == 1:
-                            px = np.repeat(px, 3, axis=2)
-                        elif px.shape[2] == 4:
-                            px = px[:, :, :3]
-                        h, w, _ = px.shape
-                        yi = (np.arange(out_h) * h) // out_h
-                        xi = (np.arange(out_w) * w) // out_w
-                        outs.append(px[yi][:, xi].tobytes())
-                        chans.append(3)
-                        continue
-                chans.append(1)
-                if not b:
-                    outs.append(bytes(size))
-                    continue
-                arr = np.frombuffer(b, dtype=np.uint8)
-                idx = (np.arange(size) * len(arr)) // size
-                outs.append(arr[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "out_w": out_w,
-                    "out_h": out_h,
-                    "channels": chans,
-                    "n_bytes_in": sizes,
-                    "resized": outs,
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 500) -> DataFrame:
-    """Frame-sampling plan: one output row per sampled timestamp.
-
-    The decode is stubbed; the *plan* (explode of a timestamp grid,
-    payload passthrough, partition shape) is the real, tested part.
-    """
-    vids = media.where(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-        "payload",
-    )
 
 
 # --- real codecs (see functions/codecs.py, codecs_jpeg.py) ----------------

@@ -26,7 +26,12 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_import_spark.session import checkpoint_rotate, local_frame, unpersist_ids
+from batch_import_spark.session import (
+    DRIVER_CC_THRESHOLD,
+    checkpoint_rotate,
+    local_frame,
+    unpersist_ids,
+)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -116,12 +121,11 @@ def connected_components(
     Edge sets at or under ``driver_threshold`` (default
     DRIVER_CC_THRESHOLD; the count is already paid to size the
     iteration's shuffles) take a DRIVER-SIDE union-find — the CC
-    analog of a broadcast join, the same dispatch canonical_mapping
-    has always used for vocabulary-bounded inputs — skipping the
-    multi-round shuffle loop's scheduling floor entirely. Both paths
-    elect the min node id per component over the self-loop-filtered
-    distinct edge set: identical, deterministic results
-    (pytest-pinned on randomized graphs, test_round7_cc.py).
+    analog of a broadcast join — skipping the multi-round shuffle
+    loop's scheduling floor entirely. Both paths elect the min node id
+    per component over the self-loop-filtered distinct edge set:
+    identical, deterministic results (pytest-pinned on randomized
+    graphs, test_round7_cc.py).
     """
     spark = edges.sparkSession
     e, ckpt_ids = checkpoint_rotate(
@@ -175,63 +179,3 @@ def connected_components(
         "component_id", F.col("node_id")
     )
     return members.union(roots).distinct()
-
-
-# pairs that comfortably union-find in driver memory: 500k string/long
-# pairs ≈ tens of MB on the heap — conservative vs the broadcast-join
-# budget this path replaces
-DRIVER_CC_THRESHOLD = 500_000
-
-
-def canonical_mapping(
-    nodes_with_keys: DataFrame,
-    node_col: str,
-    key_col: str,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
-) -> DataFrame:
-    """CC over 'same key ⇒ same canonical node' equivalence.
-
-    Small inputs (e.g. an alias dictionary — vocabulary-bounded, not
-    corpus-bounded) take a DRIVER-SIDE union-find: the CC analog of a
-    broadcast join, skipping ~6 s of iterative-shuffle latency. Large
-    inputs run distributed large-star/small-star. Both elect the min
-    node id per component — identical, deterministic results.
-    """
-    pairs_df = nodes_with_keys.select(
-        F.col(node_col).alias("node_id"), F.col(key_col).alias("k")
-    ).distinct()
-    n_pairs = pairs_df.count()
-    if n_pairs <= driver_threshold:
-        return _driver_union_find(pairs_df)
-
-    mins = nodes_with_keys.groupBy(key_col).agg(F.min(node_col).alias("_min_node"))
-    star = (
-        nodes_with_keys.join(mins, key_col)
-        .select(F.col(node_col).alias("u"), F.col("_min_node").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    cc = connected_components(star)
-    all_nodes = nodes_with_keys.select(F.col(node_col).alias("node_id")).distinct()
-    return (
-        all_nodes.join(cc, "node_id", "left")
-        .select(
-            "node_id",
-            F.coalesce("component_id", "node_id").alias("canonical_id"),
-        )
-    )
-
-
-def _driver_union_find(pairs_df: DataFrame) -> DataFrame:
-    """``min_id_components`` over collected (node_id, key) pairs: nodes
-    sharing a key are joined through the key's first node."""
-    first_by_key: dict = {}
-    edges, nodes = [], []
-    for r in pairs_df.collect():
-        node = r["node_id"]
-        nodes.append(node)
-        edges.append((first_by_key.setdefault(r["k"], node), node))
-    comp = min_id_components(edges, nodes)
-    return local_frame(
-        pairs_df.sparkSession, sorted(comp.items()), "node_id long, canonical_id long"
-    )

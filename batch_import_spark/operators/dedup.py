@@ -120,22 +120,6 @@ def jaccard(a: Column, b: Column) -> Column:
 # --- MinHash + LSH -----------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 7) -> Column:
-    """MinHash signature: per hash function, min xxhash64(shingle, i).
-
-    Pure expressions — num_hashes passes over the shingle array per
-    row, all inside codegen.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(seed + i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def lsh_bands(signature: Column, num_bands: int = 16) -> Column:
     """Split a signature into bands → array of (band_idx, band_hash).
 
@@ -250,17 +234,21 @@ def minhash_near_duplicates(
         banded, _ = cap_hot_buckets(banded, ["band"], max_bucket_size, eager_stats=False)
     # pair generation WITHOUT a band self-join: group the (post-cap)
     # bucket members into one sorted list per band and emit each
-    # unordered pair once by position (j > i ⇒ id_a < id_b after
-    # sort_array). Bucket state is bounded by max_bucket_size, so the
-    # collect_list row is ≤ cap longs — the degenerate-bucket guard
-    # above still drops over-cap buckets before anything is gathered.
-    # Same pair set as the former join (a doc appears once per band),
-    # one aggregation instead of two join-side re-evaluations.
+    # unordered pair once by position (j > i ⇒ id_a ≤ id_b after
+    # sort_array). A repeated doc_id still sits once per band, since
+    # signatures are grouped by id; the id_a != id_b filter keeps the
+    # strict id_a < id_b contract from depending on that (an (x, x)
+    # pair would verify at 1.0). Bucket state is bounded by
+    # max_bucket_size, so the collect_list row is ≤ cap longs — the
+    # degenerate-bucket guard above still drops over-cap buckets before
+    # anything is gathered. Same pair set as the former join, one
+    # aggregation instead of two join-side re-evaluations.
     ids = F.sort_array(F.collect_list("id")).alias("ids")
     grouped = banded.groupBy("band").agg(ids).where(F.size("ids") > 1)
     cand = (
         grouped.select(F.posexplode("ids").alias("_i", "id_a"), "ids")
         .select("id_a", F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))).alias("id_b"))
+        .where(F.col("id_a") != F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     # exact verify: arrays are distinct per doc (word_shingles), so

@@ -10,12 +10,12 @@ statistic at floor((n+1)/2)), never interpolation, so any engine
 reproduces every byte and the classic |x - med| > k·MAD rule is pure
 BIGINT comparison.
 
-Plan shape: two rank-window passes over (group, value) — each a
-single shuffle on the group key with WindowGroupLimit-free full sort
-per group. Exact medians need the per-group sort by definition; at
-100 TB grain use the mergeable log-histogram quantile sketch
-(sketches.py quantile_sketch) and accept its 2^-s relative error —
-this operator is the exact-grain audit tool.
+Plan shape: one grouped Arrow kernel (applyInPandas) — a single
+shuffle on the group key, then a full numpy sort per group. Exact
+medians need the per-group sort by definition; at 100 TB grain use
+the mergeable log-histogram quantile sketch (sketches.py
+quantile_sketch) and accept its 2^-s relative error — this operator
+is the exact-grain audit tool.
 
 Reference analog: none (the reference has no aggregate functions at
 all) — brief-side data-quality surface.
@@ -25,22 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 MICRO = 1_000_000
-
-
-def _lower_median(df: DataFrame, group_cols: list[str], col: str, out: str) -> DataFrame:
-    """Exact lower median per group: the floor((n+1)/2)-th order
-    statistic (ties broken by value order — deterministic)."""
-    w = Window.partitionBy(*group_cols).orderBy(F.col(col).asc())
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-    counts = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("_n"))
-    return (
-        ranked.join(counts, group_cols)
-        .where(F.col("_rn") == F.floor((F.col("_n") + 1) / 2))
-        .select(*group_cols, F.col(col).alias(out))
-    )
 
 
 def mad_outlier_stats(

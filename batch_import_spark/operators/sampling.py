@@ -142,23 +142,6 @@ def stratified_sample_k(
     )
 
 
-def hash_split(
-    df: DataFrame,
-    key_cols: list[str],
-    test_mod: int = 10,
-    test_rem: int = 0,
-    flag_col: str = "is_test",
-) -> DataFrame:
-    """Deterministic, engine-portable train/test split: a row is test
-    iff portable_hash60(key) % test_mod == test_rem. Reproducible
-    forever (no RNG state), stable under re-partitioning, and any SQL
-    engine can recompute the assignment for audits."""
-    from batch_import_spark.operators.sketches import portable_hash60
-
-    h = portable_hash60(F.concat_ws("\x1e", *[F.col(c) for c in key_cols]))
-    return df.withColumn(flag_col, F.pmod(h, F.lit(test_mod)) == test_rem)
-
-
 def split_leakage_audit(
     df: DataFrame,
     fingerprint: Column,
@@ -168,7 +151,8 @@ def split_leakage_audit(
     max_group_size: int | None = 1000,
 ) -> DataFrame:
     """Find evaluation-set contamination: pairs of fingerprint-equal
-    documents that landed on OPPOSITE sides of the hash split (a test
+    documents that landed on OPPOSITE sides of the hash split — a doc
+    is test iff portable_hash60(id) % test_mod == test_rem (a test
     doc whose duplicate is in train inflates eval scores).
 
     Equi-join on the fingerprint with a per-group size cap

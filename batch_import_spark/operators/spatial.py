@@ -15,7 +15,7 @@ Lucene there. The Spark-native analog is a **grid-cell index**:
 This is the standard scale shape for point-in-box at 100 TB: no
 full-corpus scan per query, no Python, shuffle bounded by candidate
 cells. Distance (k-NN / radius) queries reduce to a bbox pre-filter
-plus an exact predicate on the survivors (the radius variant below).
+plus an exact predicate on the survivors.
 """
 
 from __future__ import annotations
@@ -93,27 +93,4 @@ def bbox_lookup(
             & (F.col("lon") <= lon_max)
         )
         .select("node_id", "lat", "lon")
-    )
-
-
-def radius_lookup(
-    index: DataFrame,
-    lat: float,
-    lon: float,
-    radius_deg: float,
-    cells_per_degree: int = 10,
-) -> DataFrame:
-    """Points within a Euclidean degree-space radius: bbox pre-filter
-    via the cell index, exact circle predicate on the survivors."""
-    box = bbox_lookup(
-        index,
-        lat - radius_deg,
-        lat + radius_deg,
-        lon - radius_deg,
-        lon + radius_deg,
-        cells_per_degree,
-    )
-    d2 = (F.col("lat") - lat) ** 2 + (F.col("lon") - lon) ** 2
-    return box.where(d2 <= radius_deg * radius_deg).select(
-        "node_id", "lat", "lon", F.sqrt(d2).alias("distance_deg")
     )

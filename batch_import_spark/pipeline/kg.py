@@ -15,17 +15,18 @@ one writer of its tables (the ``kg`` job's write_graph and the
 Phase barriers mirror the reference (all nodes before rels,
 Importer.java:227-233): the link dictionary (unique-key filter +
 canonical-surface election) is materialized before the mention join.
+After the unique-key filter every surface names one entity, so the
+canonical surface is a per-entity min.
 
 Scale design (100 TB / 1000 executors):
 - extraction is a narrow map over the scan's own splits — no shuffle of
   full-text rows before the Python kernel (a salted repartition was
   measured 4× slower, BASELINE.md);
 - the link dictionary is vocabulary-bounded, not corpus-bounded: when
-  it fits the driver (≤ DRIVER_CC_THRESHOLD entries) its unique-key filter AND
-  connected-components canonicalization run driver-side (union-find) —
-  the CC analog of a broadcast join, saving ~10 s of iterative-shuffle
-  latency per run; past the threshold both fall back to the
-  distributed groupBy/CC path with identical min-election semantics;
+  it fits the driver (≤ DRIVER_CC_THRESHOLD rows) its unique-key filter
+  and per-entity min run driver-side on one fetch — the analog of a
+  broadcast join; past the threshold the same rule runs as a groupBy
+  plus a window min;
 - one broadcast join per mention endpoint resolves surface →
   (canonical surface, canonical node id) in a single lookup — linking
   and canonicalization fused;
@@ -40,19 +41,16 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from batch_import_spark.operators.canonicalize import (
-    DRIVER_CC_THRESHOLD,
-    canonical_mapping,
-    min_id_components,
-)
 from batch_import_spark.operators.ids import stable_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
 from batch_import_spark.pipeline.extract import extract_mentions
-from batch_import_spark.session import local_frame
+from batch_import_spark.session import DRIVER_CC_THRESHOLD, local_frame
 
 # observability for the broadcast-vs-shuffle dictionary decision:
-# filled by prepare_link_dict on every call (n_fetched, threshold, path)
+# filled by prepare_link_dict on every call (path, driver_threshold,
+# n_fetched = non-NULL alias rows fetched, at most threshold + 1)
 LAST_DICT_STATS: dict = {}
 
 
@@ -93,75 +91,58 @@ def prepare_link_dict(
     """alias table → link dictionary
     (surface, entity_id, canonical_surface, canonical_node_id).
 
-    Reference semantics preserved: an ambiguous surface (getSingle≠1,
+    Reference semantics preserved: alias rows with a NULL surface or
+    entity id are dropped (index.add skips NULL values,
+    AbstractLineData.java:92-107); an ambiguous surface (getSingle≠1,
     LongIterableIndexHits.java:36-38) is EXCLUDED — it neither links
-    nor merges entities. Canonical surface = lexicographic min over
-    the component of surfaces connected by shared entity ids; node id
-    = xxhash64 of that surface (order-free, deterministic).
+    nor merges entities. After that unique-key filter every surface
+    names one entity, so the canonical surface is the lexicographic
+    min of its entity's surfaces; node id = xxhash64 of that surface
+    (order-free, deterministic).
 
-    Driver path (at most ``driver_threshold`` distinct pairs): the
-    union-find runs on the fetched rows and the dictionary comes back
-    as a ``session.local_frame`` LocalRelation, so its broadcast and
-    the ``nodes_from_dict`` groupBy run in the JVM with no Python
-    worker.
+    Both paths compute that one rule over the same non-NULL pairs.
+    Driver path (at most ``driver_threshold`` rows): plain dict
+    operations on the fetched rows, and the dictionary comes back as a
+    ``session.local_frame`` LocalRelation, so its broadcast and the
+    ``nodes_from_dict`` groupBy run in the JVM with no Python worker.
+    Distributed path: the unique-key groupBy plus a per-entity window
+    min.
     """
-    spark = alias_dict.sparkSession
-    raw = alias_dict.select(
+    pairs = alias_dict.select(
         F.col("key_value").alias("surface"), F.col("entity_id")
-    ).distinct()
+    ).where(F.col("surface").isNotNull() & F.col("entity_id").isNotNull())
 
-    # one job decides the path AND fetches the data: take(T+1) either
-    # proves the dict exceeds the driver threshold or returns it whole
-    rows = raw.take(driver_threshold + 1)
+    # one take decides the path AND fetches the data: T+1 rows either
+    # prove the dict exceeds the driver threshold or are the dict whole
+    rows = pairs.take(driver_threshold + 1)
+    on_driver = len(rows) <= driver_threshold
     LAST_DICT_STATS.clear()
     LAST_DICT_STATS.update(
         {
             "n_fetched": len(rows),
             "driver_threshold": driver_threshold,
-            "path": "driver" if len(rows) <= driver_threshold else "distributed",
+            "path": "driver" if on_driver else "distributed",
         }
     )
-    if len(rows) <= driver_threshold:
+    if on_driver:
         ents: dict = {}
-        for r in rows:
-            ents.setdefault(r["surface"], set()).add(r["entity_id"])
+        for surface, entity_id in rows:
+            ents.setdefault(surface, set()).add(entity_id)
         unique = {s: next(iter(es)) for s, es in ents.items() if len(es) == 1}
-
-        first_by_ent: dict = {}
-        canon = min_id_components(
-            ((first_by_ent.setdefault(e, s), s) for s, e in unique.items()), unique
+        canon: dict = {}
+        for s, e in unique.items():
+            canon[e] = min(canon.get(e, s), s)
+        link_dict = local_frame(
+            alias_dict.sparkSession,
+            [(s, unique[s], canon[unique[s]]) for s in sorted(unique)],
+            "surface string, entity_id long, canonical_surface string",
         )
-        out = [(s, unique[s], canon[s]) for s in sorted(unique)]
-        df = local_frame(
-            spark, out, "surface string, entity_id long, canonical_surface string"
+    else:
+        link_dict = build_unique_alias_dict(pairs, "surface", "entity_id").withColumn(
+            "canonical_surface", F.min("surface").over(Window.partitionBy("entity_id"))
         )
-        return df.withColumn(
-            "canonical_node_id", stable_id(F.col("canonical_surface"))
-        )
-
-    # distributed path: unique-key filter + CC, same semantics
-    uniq = build_unique_alias_dict(alias_dict, key_col="key_value", id_col="entity_id")
-    pairs = uniq.select(
-        F.col("key_value").alias("surface"),
-        F.col("entity_id"),
-        stable_id(F.col("key_value")).alias("surface_id"),
-    )
-    cc = canonical_mapping(pairs, node_col="surface_id", key_col="entity_id",
-                           driver_threshold=0)
-    with_comp = pairs.join(cc, pairs.surface_id == cc.node_id).select(
-        "surface", "entity_id", "canonical_id"
-    )
-    canon_surface = with_comp.groupBy("canonical_id").agg(
-        F.min("surface").alias("canonical_surface")
-    )
-    return (
-        with_comp.join(canon_surface, "canonical_id")
-        .select(
-            "surface",
-            "entity_id",
-            "canonical_surface",
-            stable_id(F.col("canonical_surface")).alias("canonical_node_id"),
-        )
+    return link_dict.withColumn(
+        "canonical_node_id", stable_id(F.col("canonical_surface"))
     )
 
 

@@ -22,6 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
 
+# rows a driver-side pass (union-find, link-dictionary build) may
+# collect: 500k string/long pairs ≈ tens of MB on the heap —
+# conservative vs the broadcast-join budget such a pass replaces
+DRIVER_CC_THRESHOLD = 500_000
 
 def build_session(
     app_name: str = "batch-import-spark",

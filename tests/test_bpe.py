@@ -1,5 +1,6 @@
 """BPE tokenizer: training argmax/tie-break, greedy merge semantics,
-expression path == Arrow kernel path, delimiter-ambiguity safety.
+expression path == Arrow kernel path (bpe_doc_stats), delimiter-ambiguity
+safety.
 
 Reference analog: none — the reference's only scalar functions are its
 CSV type casts (Type.java:5-182); BPE is a training-data-pipeline
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from batch_import_spark.functions.bpe import (
     _encode_word,
     apply_merges,
-    bpe_encode_batches,
+    bpe_doc_stats,
     bpe_train,
     encode_text,
     merge_expr,
@@ -22,6 +23,7 @@ from batch_import_spark.functions.bpe import (
     token_count_expr,
     wrap_chars,
 )
+from batch_import_spark.operators.sketches import portable_hash60
 
 
 def _reference_train(word_counts: dict[str, int], n_merges: int, min_count: int = 2):
@@ -148,19 +150,23 @@ def test_expr_path_equals_kernel_path(spark):
     merges = [(l, r) for l, r, _ in merges_full]
 
     enc = encode_text("text", merges)
+    seg = segment_expr(enc)
     expr_rows = {
-        r.id: (r.seg, r.n)
+        r.id: (r.seg, r.n, r.h)
         for r in df.select(
-            "id", segment_expr(enc).alias("seg"), token_count_expr(enc).alias("n")
+            "id",
+            seg.alias("seg"),
+            token_count_expr(enc).alias("n"),
+            portable_hash60(seg).alias("h"),
         ).collect()
     }
     kern_rows = {
-        r.id: (r.bpe_seg, r.n_bpe_tokens)
-        for r in bpe_encode_batches(df, merges, "text").collect()
+        r.id: (r.n_bpe_tokens, r.seg_hash)
+        for r in bpe_doc_stats(df, "text", merges, id_col="id").collect()
     }
-    assert expr_rows == kern_rows
-    assert expr_rows[0][1] > 0 and expr_rows[4] == ("", 0)
-    assert expr_rows[5] == (None, None)  # NULL text: both paths NULL
+    assert {i: (n, h) for i, (_, n, h) in expr_rows.items()} == kern_rows
+    assert expr_rows[0][1] > 0 and expr_rows[4][:2] == ("", 0)
+    assert expr_rows[5] == (None, None, None)  # NULL text: both paths NULL
 
 
 def test_encode_word_python_twin():
@@ -188,7 +194,6 @@ def test_merge_table_round_trip_and_lossless_decode(spark, tmp_path):
         bpe_train,
         decode_segments,
         encode_text,
-        merges_from_df,
         merges_to_df,
         segment_expr,
     )
@@ -198,7 +203,8 @@ def test_merge_table_round_trip_and_lossless_decode(spark, tmp_path):
     # artifact round-trip through parquet preserves apply order
     path = str(tmp_path / "merges.parquet")
     merges_to_df(spark, merges).write.parquet(path)
-    assert merges_from_df(spark.read.parquet(path)) == merges
+    back = spark.read.parquet(path).orderBy("rank").collect()
+    assert [(r.lhs, r.rhs, r.pair_count) for r in back] == merges
 
     # lossless decode: strip separators == normalized input — also for
     # text containing literal '|' (the separator-collision regression)

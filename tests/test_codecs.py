@@ -74,21 +74,3 @@ def test_decode_media_sniffs_real_formats():
 
     with pytest.raises(NotImplementedError):
         decode_media(b"\xff\xd8\xff jpeg-ish", "image", strict=True)
-
-
-def test_resize_media_real_png_path(spark):
-    """resize_media does a true nearest-neighbor pixel resize for PNG
-    payloads: a 2×2-blocked 8×8 image downsampled to 4×4 recovers the
-    block colors exactly."""
-    from batch_import_spark.functions.multimodal import resize_media
-
-    blocks = (np.arange(16).reshape(4, 4) * 16).astype(np.uint8)
-    px = np.repeat(np.repeat(blocks, 2, axis=0), 2, axis=1)
-    px3 = np.stack([px, px, px], axis=2)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(png_encode(px3)))],
-        "media_id long, kind string, payload binary",
-    )
-    row = resize_media(df, out_w=4, out_h=4).collect()[0]
-    got = np.frombuffer(bytes(row["resized"]), np.uint8).reshape(4, 4, 3)
-    assert np.array_equal(got[:, :, 0], blocks)

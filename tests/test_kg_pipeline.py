@@ -41,7 +41,10 @@ def _python_oracle_triples(rows):
         surf2ents.setdefault(s, set()).add(e)
     unique = {s: next(iter(es)) for s, es in surf2ents.items() if len(es) == 1}
 
-    # canonicalization: union-find over surfaces sharing an entity
+    # canonicalization: union-find over surfaces sharing an entity — an
+    # independent formulation on purpose: after the unique-key filter
+    # each component is one entity's surfaces, which the pipeline
+    # exploits as a per-entity min (prepare_link_dict)
     parent = {}
 
     def find(x):
@@ -237,16 +240,22 @@ def test_kg_edges_plan_reads_the_scan_without_a_shuffle(spark, fixture_data, tmp
 
 def test_link_dict_distributed_path_equals_driver_path(spark):
     """``prepare_link_dict``'s distributed path (unique-key groupBy +
-    distributed CC) equals the driver union-find row for row, on the
+    per-entity window min) equals the driver path row for row, on the
     builtin dictionary plus an ambiguous surface, a three-surface chain
     across two entity ids whose middle surface is ambiguous (it must not
-    bridge them), and three surfaces of one entity id."""
+    bridge them), three surfaces of one entity id, and NULLs: rows with
+    a NULL surface or entity id are dropped before the unique-key
+    filter, so two surfaces with NULL ids are not linked (nor merged),
+    and a NULL id next to a real one does not make a surface ambiguous."""
     from batch_import_spark.pipeline.kg import LAST_DICT_STATS, prepare_link_dict
 
     extra = [
         ("Amb", 9001), ("Amb", 9002),
         ("Zeta", 9101), ("Zed", 9101), ("Zed", 9102), ("Zx", 9102),
         ("Yc", 9201), ("Ya", 9201), ("Yb", 9201),
+        ("Na", None), ("Nb", None), ("Nc", 9301),
+        ("Ma", 9401), ("Ma", None), ("Mb", 9401),
+        (None, 9501),
     ]
     builtin = alias_dict_df(spark)
     aliases = builtin.unionByName(
@@ -268,3 +277,6 @@ def test_link_dict_distributed_path_equals_driver_path(spark):
     assert "Amb" not in canon and "Zed" not in canon
     assert canon["Zeta"] == "Zeta" and canon["Zx"] == "Zx"
     assert canon["Ya"] == canon["Yb"] == canon["Yc"] == "Ya"
+    assert "Na" not in canon and "Nb" not in canon and canon["Nc"] == "Nc"
+    assert canon["Ma"] == canon["Mb"] == "Ma"
+    assert None not in canon and 9501 not in {r[1] for r in driver_rows}

@@ -1,7 +1,8 @@
 """Round-7 pin: the collect_list + positional-explode candidate
 generator in minhash_near_duplicates emits EXACTLY the pair set of the
 round-6 band self-join formulation (which this test reconstructs
-verbatim), including under bucket caps and with degenerate docs."""
+verbatim), including under bucket caps, with degenerate docs and with
+repeated doc_ids (no (x, x) self-pairs)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -117,3 +118,18 @@ def test_pair_set_matches_without_cap(corpus):
     assert new_rows == _collect(old)
     # without the cap the hot cluster's pairs ARE present
     assert any(a >= 100 for a, b, j in new_rows)
+
+
+def test_repeated_doc_ids_yield_no_self_pairs(spark, corpus):
+    """Repeated doc_ids (an exact and a differing second text) give
+    the join formulation's pairs and no (x, x) self-pair, which would
+    verify at jaccard 1.0."""
+    base = "spark shuffles data between stages when a wide dependency appears"
+    dup = spark.createDataFrame(
+        [(3, base + " v1"), (10, base + " v0 extra"), (20, "tiny")], ["doc_id", "text"]
+    )
+    df = corpus.unionByName(dup)
+    new = minhash_near_duplicates(df, num_hashes=16, num_bands=8, threshold=0.8)
+    new_rows = _collect(new)
+    assert new_rows == _collect(_join_formulation(df, 16, 8, 0.8, 10_000))
+    assert new_rows and not [r for r in new_rows if r[0] == r[1]]

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.spatial import (
-    bbox_lookup,
-    build_spatial_index,
-    radius_lookup,
-)
+from batch_import_spark.operators.spatial import bbox_lookup, build_spatial_index
 
 
 def _points(spark):
@@ -44,14 +40,3 @@ def test_bbox_prunes_to_covering_cells(spark):
     out = bbox_lookup(idx, -1.0, 1.0, -1.0, 1.0, 10)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # covering cells broadcast, index probed
-
-
-def test_radius_lookup(spark):
-    pts = _points(spark)
-    idx = build_spatial_index(pts, cells_per_degree=10)
-    got = radius_lookup(idx, 0.0, 0.0, 0.2, 10).collect()
-    assert {r["node_id"] for r in got} == {1}  # (0.05,0.05) → d≈0.071
-    assert all(r["distance_deg"] <= 0.2 for r in got)
-    # corner of the bbox pre-filter but outside the circle
-    wider = radius_lookup(idx, 0.0, 0.0, 1.05, 10)
-    assert {r["node_id"] for r in wider.collect()} == {1, 3, 5}

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from batch_import_spark.functions.multimodal import (
     extract_features,
-    sample_video_frames,
     synthesize_media,
 )
 from batch_import_spark.functions.text import (
@@ -412,38 +411,10 @@ def test_multimodal_features_deterministic(spark):
     assert all(len(v[1]) == 16 for v in f1.values())
 
 
-def test_resize_media_shape_and_determinism(spark):
-    """resize_media: every row yields exactly out_w*out_h bytes,
-    deterministic strided subsample of the payload (first byte kept)."""
-    from batch_import_spark.functions.multimodal import resize_media
-
-    media = synthesize_media(spark, n=12)
-    rows = {r["media_id"]: r for r in resize_media(media, 8, 4).collect()}
-    assert len(rows) == 12
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    for mid, r in rows.items():
-        assert len(r["resized"]) == 32 and (r["out_w"], r["out_h"]) == (8, 4)
-        assert r["n_bytes_in"] == len(src[mid])
-        assert r["resized"][0] == src[mid][0]
-
-
 def test_multimodal_strict_raises(spark):
     media = synthesize_media(spark, n=3)
     with pytest.raises(Exception, match="NotImplementedError|no codec"):
         extract_features(media, strict=True).collect()
-
-
-def test_video_frame_sampling_plan(spark):
-    media = synthesize_media(spark, n=9)
-    frames = sample_video_frames(media, every_ms=400)
-    rows = frames.collect()
-    assert all(r["frame_ts_ms"] % 400 == 0 for r in rows)
-    # video items have duration ≥ 1000ms → at least 3 sampled frames each
-    per_id = {}
-    for r in rows:
-        per_id.setdefault(r["media_id"], 0)
-        per_id[r["media_id"]] += 1
-    assert all(n >= 3 for n in per_id.values())
 
 
 def _py_hll(values, groups=None):

@@ -163,7 +163,6 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
         )
         sink.write(rels.edges, "edges", mode=mode)
         rel_index_entries = rel_index_entries.unionByName(rels.index_entries)
-        sink.read("edges").count()
         print(f"import-csv: {rels.observation.get}")
     sink.write(rel_index_entries, "rel_index_entries", mode=mode)
     if nodes is not None:

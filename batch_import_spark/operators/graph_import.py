@@ -19,6 +19,18 @@ DataFrames produced by ``read_reference_csv``:
   (Importer.java:177-184); edges with any unresolved endpoint are
   skipped AND counted (Importer.java:149-152).
 
+  Plan shape: one unique-key table per (index_name, key_prop), so two
+  endpoints on one index probe one broadcast (the second join's is a
+  ReusedExchange) → the observed resolve, filtered to survivors and
+  sorted within partitions by (file_seq, line_no) → ONE eager
+  checkpoint, the only execution of the resolve and so the only fill of
+  the ``rel_import`` Observation → ``number_runs`` (operators/ids.py)
+  over (partition, file_seq) runs of that checkpoint, one count job.
+  No range shuffle. The input contract: each partition holds at most
+  one contiguous line range per file and those ranges do not overlap
+  across partitions — true of any ``read_reference_csv`` scan, checked
+  on every import (``ValueError`` otherwise).
+
 - ``import_index`` — Importer.importIndex (Importer.java:186-196):
   standalone index file, column 0 = entity id, remaining indexed
   columns add entries.
@@ -32,7 +44,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.ids import with_dense_id
+from batch_import_spark.operators.ids import number_runs
 from batch_import_spark.operators.linking import build_unique_alias_dict
 from batch_import_spark.session import local_frame
 from batch_import_spark.sources.csv_source import ReferenceCsv
@@ -80,7 +92,7 @@ def import_nodes(ref: ReferenceCsv, id_offset: int = 0) -> ImportedNodes:
     idx = _index_entries(
         df, [h for h in ref.header if h.is_indexed and h.is_property], F.col("node_id"), INDEX_SCHEMA
     )
-    return ImportedNodes(nodes=nodes, index_entries=idx)
+    return ImportedNodes(nodes=ref.fit(nodes), index_entries=ref.fit(idx))
 
 
 def _index_entries(df: DataFrame, fields, entity_id: Column, schema: str) -> DataFrame:
@@ -101,9 +113,7 @@ def _index_entries(df: DataFrame, fields, entity_id: Column, schema: str) -> Dat
     return reduce(DataFrame.unionByName, parts)
 
 
-def _resolve_endpoint(
-    df: DataFrame, field, index_entries: DataFrame, out_col: str
-) -> DataFrame:
+def _resolve_endpoint(df: DataFrame, field, luts: dict, out_col: str) -> DataFrame:
     """Resolve one endpoint column to a node id (or null)."""
     if field.is_id or not field.is_indexed:
         # the cell IS the node id: Long.parseLong. Reference precedence
@@ -112,14 +122,7 @@ def _resolve_endpoint(
         # endpoint parses as a long, it does NOT go through the index.
         return df.withColumn(out_col, F.col(field.col_name).cast("long"))
     # unique-key lookup: getSingle semantics — ambiguous keys yield null
-    lut = build_unique_alias_dict(
-        index_entries.where(
-            (F.col("index_name") == field.index_name)
-            & (F.col("key_prop") == field.name)
-        ),
-        key_col="key_value",
-        id_col="node_id",
-    ).select(
+    lut = luts[(field.index_name, field.name)].select(
         F.col("key_value").alias(f"_k_{out_col}"),
         F.col("node_id").alias(out_col),
     )
@@ -143,9 +146,20 @@ def import_relationships(
     # properties: beyond the fixed offset of 3 (Importer.java:139-140)
     prop_fields = [h for h in hdr if h.column >= 3 and h.is_property and h.col_name != type_col]
 
-    df = ref.df
-    df = _resolve_endpoint(df, start_f, index_entries, "src_id")
-    df = _resolve_endpoint(df, end_f, index_entries, "dst_id")
+    # one unique-key table per index, however many endpoints probe it
+    luts = {
+        (h.index_name, h.name): build_unique_alias_dict(
+            index_entries.where(
+                (F.col("index_name") == h.index_name) & (F.col("key_prop") == h.name)
+            ),
+            key_col="key_value",
+            id_col="node_id",
+        )
+        for h in (start_f, end_f)
+        if h.is_indexed and not h.is_id
+    }
+    df = _resolve_endpoint(ref.df, start_f, luts, "src_id")
+    df = _resolve_endpoint(df, end_f, luts, "dst_id")
 
     rel_type = (
         F.element_at(F.col(type_col), 1) if type_is_array else F.col(type_col).cast("string")
@@ -175,14 +189,28 @@ def import_relationships(
     # Rel ids: db.createRelationship returns the next sequential rel id
     # (Importer.java:154) — 0-based creation order over the SURVIVING
     # rows only (skipped rels never reach createRelationship, so they
-    # consume no id). Materialize once before the dense-id range
-    # shuffle: the range partitioner's sampling pass re-executes its
-    # child, which would double-count the Observation above.
-    kept = kept.localCheckpoint(eager=True)
-    edges = with_dense_id(kept, ["file_seq", "line_no"], id_col="rel_id").select(
+    # consume no id). The checkpoint is the one execution of the
+    # observed resolve; numbering reads it, never the resolve again.
+    # Output files are coalesced only after numbering: a coalesce before
+    # it may put two blocks of one file that are not adjacent into one
+    # partition, and that run would overlap another.
+    kept = kept.sortWithinPartitions("file_seq", "line_no").localCheckpoint(eager=True)
+    numbered, runs = number_runs(
+        kept,
         "rel_id",
-        *[c for c in kept.columns if c != "file_seq"],
+        run_cols=("file_seq",),
+        key=lambda run: (run["file_seq"], run["_lo"]),
+        aggs=[F.min("line_no").alias("_lo"), F.max("line_no").alias("_hi")],
     )
+    for a, b in zip(runs, runs[1:]):
+        if a["file_seq"] == b["file_seq"] and a["_hi"] >= b["_lo"]:
+            raise ValueError(
+                f"rel file {a['file_seq']}: lines {a['_lo']}..{a['_hi']} and "
+                f"{b['_lo']}..{b['_hi']} sit in different partitions; import_relationships "
+                "needs each partition to hold one contiguous line range per file "
+                "(a read_reference_csv scan, not a reshuffled one)"
+            )
+    edges = ref.fit(numbered.select("rel_id", *[c for c in kept.columns if c != "file_seq"]))
 
     # Inline relationship-index population (Importer.java:155-157 via
     # AbstractLineData.getIndexData:92-106): every indexed property
@@ -191,16 +219,18 @@ def import_relationships(
     rel_idx = _index_entries(
         edges, [h for h in prop_fields if h.is_indexed], F.col("rel_id"), REL_INDEX_SCHEMA
     )
-    return ImportedRelationships(edges=edges, index_entries=rel_idx, observation=obs)
+    return ImportedRelationships(edges=edges, index_entries=ref.fit(rel_idx), observation=obs)
 
 
 def import_index(ref: ReferenceCsv) -> DataFrame:
     """Standalone index file → index entries (Importer.java:186-196)."""
     hdr = ref.header
     id_field = hdr[0]  # column 0 is the entity id (offset=1)
-    return _index_entries(
-        ref.df,
-        [h for h in hdr[1:] if h.is_indexed],
-        F.col(id_field.col_name).cast("long").alias("node_id"),
-        INDEX_SCHEMA,
+    return ref.fit(
+        _index_entries(
+            ref.df,
+            [h for h in hdr[1:] if h.is_indexed],
+            F.col(id_field.col_name).cast("long").alias("node_id"),
+            INDEX_SCHEMA,
+        )
     )

@@ -11,19 +11,26 @@ strategies (SURVEY.md §1.3, §4):
   order key (ascending ranges land in ascending partition ids), sorted
   within each partition, checkpointed, then numbered in place.
 
-Both dense paths share ``_number_pinned_rows``, which numbers rows in
-their physical order: partition index, then position in the partition.
-It needs PINNED partitions — an assignment of rows to partitions (and
-an order within each) that every execution of the plan reproduces. A
-file scan has it (splits are a pure function of file sizes and
-``maxPartitionBytes``, never sampled) and so does a checkpoint; a
-shuffle does not (AQE may coalesce, range bounds are sampled per run).
+Every dense id in the package comes from ``number_runs``: the CSV
+scan's row and line numbers (sources/csv_source.py), the rel ids of
+``import_relationships`` and ``with_dense_id``. It numbers RUNS — the
+rows of one partition that share some key, e.g. one block of one file
+— in physical order, and puts the runs in an order the caller derives
+from one count job's per-run statistics. It needs PINNED partitions —
+an assignment of rows to partitions (and an order within each) that
+every execution of the plan reproduces. A file scan has it (splits are
+a pure function of file sizes and ``maxPartitionBytes``, never
+sampled) and so does a checkpoint; a shuffle does not (AQE may
+coalesce, range bounds are sampled per run).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from batch_import_spark.session import local_frame
 
@@ -33,41 +40,71 @@ def stable_id(*cols: Column | str, seed: int = 0) -> Column:
     return F.xxhash64(F.lit(seed), *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
-def _number_pinned_rows(
-    df: DataFrame, id_col: str, group_col: str | None = None, group_id_col: str | None = None
-) -> DataFrame:
-    """Dense 0-based ``id_col`` in physical order over a pinned ``df``.
+def number_runs(
+    df: DataFrame,
+    id_col: str,
+    run_cols: Sequence[str] = (),
+    key: Callable[[Row], tuple] = lambda run: (run["_pid"],),
+    aggs: Sequence[Column] = (),
+    group: tuple[str, str] | None = None,
+) -> tuple[DataFrame, list[Row]]:
+    """Dense 0-based ``id_col`` over a pinned ``df``, run by run.
 
-    With ``group_col`` — constant within each partition and contiguous
-    in partition order, e.g. the file index of a union of per-file
-    scans — ``group_id_col`` also numbers each group's rows from 0.
+    A run is the rows of one partition that share ``run_cols``. Its rows
+    are numbered in physical order, so they must sit contiguously in
+    the partition: a run of ``count`` rows whose positions span more
+    than ``count`` raises ``ValueError``. Runs are numbered in
+    ``key(run)`` order, where ``run`` is a Row of ``_pid``,
+    ``run_cols``, ``count``, ``_first``/``_last`` (positions) and
+    ``aggs``. With ``group=(group_col, group_id_col)``, ``key(run)[0]``
+    is the run's group (an int): it comes out as ``group_col``, and
+    ``group_id_col`` numbers each group's rows from 0.
 
-    Plan shape: one count-per-partition job, then a narrow projection
-    — position in partition = ``monotonically_increasing_id() -
-    (spark_partition_id() << 33)`` — plus a broadcast join of one
-    offset row per partition. No Window, no shuffle of the rows. The
-    offsets arrive as a LocalRelation (``session.local_frame``), so the
+    Plan shape: one count job (a per-run aggregate), then a narrow
+    projection — position in partition = ``monotonically_increasing_id()
+    - (spark_partition_id() << 33)`` — plus a broadcast join of one
+    offset row per run. No Window, no shuffle of the rows. The offsets
+    arrive as a LocalRelation (``session.local_frame``), so the
     broadcast starts no Python worker.
+
+    Returns the numbered frame and the runs in ``key`` order, for the
+    caller's own checks.
     """
     keyed = df.withColumn("_pid", F.spark_partition_id()).withColumn(
         "_pos", F.monotonically_increasing_id() - F.shiftleft(F.col("_pid").cast("long"), 33)
     )
-    group = [group_col] if group_col else []
-    counts = keyed.groupBy("_pid", *group).count().collect()
-    offsets, acc, group_start = [], 0, {}
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        start = group_start.setdefault(row[group_col], acc) if group_col else 0
-        offsets.append((row["_pid"], acc, acc - start))
-        acc += row["count"]
-    odf = local_frame(
-        df.sparkSession, offsets or [(0, 0, 0)], "_pid int, _offset long, _group_offset long"
+    runs = keyed.groupBy("_pid", *run_cols).agg(
+        F.count(F.lit(1)).alias("count"),
+        F.min("_pos").alias("_first"),
+        F.max("_pos").alias("_last"),
+        *aggs,
     )
-    out = keyed.join(F.broadcast(odf), "_pid").withColumn(
+    runs = sorted(runs.collect(), key=key)
+    offsets, acc, group_start = [], 0, {}
+    for run in runs:
+        if run["_last"] - run["_first"] + 1 != run["count"]:
+            raise ValueError(
+                f"run {[run[c] for c in run_cols]} of partition {run['_pid']} is not "
+                "contiguous: number_runs needs pinned partitions whose runs are contiguous"
+            )
+        row = (run["_pid"], *[run[c] for c in run_cols], acc - run["_first"])
+        if group:
+            g = key(run)[0]
+            row += (acc - group_start.setdefault(g, acc) - run["_first"], g)
+        offsets.append(row)
+        acc += run["count"]
+    fields = [T.StructField("_pid", T.IntegerType()), *[df.schema[c] for c in run_cols]]
+    fields.append(T.StructField("_offset", T.LongType()))
+    if group:
+        fields.append(T.StructField("_group_offset", T.LongType()))
+        fields.append(T.StructField(group[0], T.IntegerType()))
+    odf = local_frame(df.sparkSession, offsets, T.StructType(fields))
+    out = keyed.join(F.broadcast(odf), ["_pid", *run_cols]).withColumn(
         id_col, F.col("_offset") + F.col("_pos")
     )
-    if group_id_col:
-        out = out.withColumn(group_id_col, F.col("_group_offset") + F.col("_pos"))
-    return out.drop("_pid", "_pos", "_offset", "_group_offset")
+    if group:
+        out = out.withColumn(group[1], F.col("_group_offset") + F.col("_pos"))
+    return out.drop("_pid", "_pos", "_offset", "_group_offset"), runs
 
 
 def with_dense_id(
@@ -81,8 +118,8 @@ def with_dense_id(
     Plan shape: range shuffle → sort within partitions → eager
     checkpoint, which pins the sampled range boundaries and the sorted
     order so the count job and the numbering read the same rows in the
-    same places → ``_number_pinned_rows``. No stage ever holds more than
-    one partition's rows.
+    same places → ``number_runs`` with one run per partition. No stage
+    ever holds more than one partition's rows.
     """
     if num_partitions:
         ranged = df.repartitionByRange(num_partitions, *order_cols)
@@ -91,4 +128,4 @@ def with_dense_id(
     # repartitionByRange samples with a per-execution seed (and AQE may
     # re-coalesce), so the range shuffle must run exactly once.
     ranged = ranged.sortWithinPartitions(*order_cols).localCheckpoint(eager=True)
-    return _number_pinned_rows(ranged, id_col)
+    return number_runs(ranged, id_col)[0]

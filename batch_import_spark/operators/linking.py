@@ -31,14 +31,17 @@ def build_unique_alias_dict(
 
     A key mapping to >1 distinct entity id is AMBIGUOUS and removed —
     the reference's ``getSingle()`` yields null unless exactly one hit.
-    Duplicate rows for the same (key, id) are fine (count distinct ids).
+    Duplicate rows for the same (key, id) are fine, NULL ids are
+    ignored and an all-NULL key is dropped: the key survives iff
+    ``min(id) = max(id)``, one aggregate (a ``count_distinct`` would
+    plan a two-level aggregate with two shuffles).
     """
     extra = extra_cols or []
-    agg = [F.count_distinct(F.col(id_col)).alias("_n_ids"), F.min(id_col).alias(id_col)]
+    agg = [F.min(id_col).alias(id_col), F.max(id_col).alias("_max_id")]
     agg += [F.min(c).alias(c) for c in extra]
     return (
         alias_df.groupBy(key_col)
         .agg(*agg)
-        .where(F.col("_n_ids") == 1)
-        .drop("_n_ids")
+        .where(F.col(id_col) == F.col("_max_id"))
+        .drop("_max_id")
     )

@@ -14,8 +14,7 @@ Spark-first notes:
   how the reference anchors parsing on the in-band header: the
   vocabulary IS the schema;
 - extraction is a narrow map — no shuffle; partition sizing is
-  inherited from the scan, so upstream salting of hot conversations
-  (kg.py) is what keeps batches balanced.
+  inherited from the scan.
 """
 
 from __future__ import annotations

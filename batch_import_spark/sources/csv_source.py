@@ -8,9 +8,9 @@ Spark's CSV reader:
   driver-side to local temp first — Spark's reader can't split or
   decompress zip;
 - S3: multi-file lists imported *in declared order* (Config.java:145-154)
-  — we read files separately, tag each with its file_seq, union the
-  scans and number the union once, so dense row-number IDs span files
-  in sequence (readme.md:38);
+  — one scan reads the whole list, and each row's file comes back
+  from ``_metadata.file_path`` as its declared index ``file_seq``, so
+  dense row-number IDs span files in sequence (readme.md:38);
 - S4: first row is the schema: ``name[:type[:indexName]]``
   (AbstractLineData.java:39-58) — parsed driver-side from the first
   line, data read with an explicit all-string schema and header
@@ -29,16 +29,26 @@ line (AbstractLineData.java:70-73 ``processLine = parse() > 0`` +
 Importer.java:96 loop) — silent truncation, a data-loss hazard at
 100 TB. Tested in test_reference_semantics.py.
 
-Plan shape: one scan per file → union → ``_number_pinned_rows``
-(operators/ids.py): one count-per-partition job for the whole file
-list, then a narrow projection plus a broadcast of one offset row per
-partition. No Window and no shuffle of the rows. This depends on the
-scan's partitions being PINNED: a single-file CSV scan assigns
-partition indexes in file-offset order, keeps row order within each
-split, and derives its splits from (file size, maxPartitionBytes)
-alone — never sampled — and a union concatenates its children's
-partitions in declared order. So the count job and every later
-execution see the same rows in the same partitions.
+Plan shape: ONE scan of the whole file list → ``number_runs``
+(operators/ids.py) over (partition, ``_metadata.file_path``,
+``_metadata.file_block_start``) runs: one count job for the whole list,
+then a narrow projection plus a broadcast of one offset row per run,
+which also carries the run's ``file_seq``. No Window, no union and no
+shuffle of the rows. Spark packs a multi-file scan's splits by size,
+not in declared order, so a partition may hold the tail of one file and
+the whole of another; runs are therefore numbered in (file_seq, block
+start) order, not in partition order, and each run must be contiguous
+in its partition (checked). This depends on the scan's partitions
+being PINNED: splits and their packing are a pure function of the file
+listing and the session's file-split settings — never sampled — and a
+split's rows keep file order. So the count job and every later
+execution see the same rows in the same places.
+
+Output sizing: ``ReferenceCsv.files`` is ceil(scan file bytes /
+``spark.sql.files.maxPartitionBytes``), the bytes taken from the
+listing's own ``_metadata.file_size`` in the count job. The import
+operators coalesce each table they derive to that many partitions, so
+a small import writes one file per table however its scan was split.
 
 Scale note: a single .gz file is unsplittable; at 100 TB inputs arrive
 as many files so parallelism comes from the file list — same contract
@@ -49,16 +59,18 @@ from __future__ import annotations
 
 import gzip
 import io
+import math
+import os
 import tempfile
 import zipfile
 from dataclasses import dataclass
-from functools import reduce
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from batch_import_spark.operators.ids import _number_pinned_rows
+from batch_import_spark.operators.ids import number_runs
 from batch_import_spark.schema import HeaderField, assert_ansi, convert_column, parse_header
 
 
@@ -68,6 +80,11 @@ class ReferenceCsv:
 
     df: DataFrame  # typed columns, plus file_seq, line_no (0-based per file), row_no
     header: list[HeaderField]
+    files: int | None = None  # output files per derived import table (None: leave as is)
+
+    def fit(self, df: DataFrame) -> DataFrame:
+        """``df`` coalesced to ``files`` partitions, one output file each."""
+        return df.coalesce(self.files) if self.files else df
 
 
 def _read_first_line(path: str, encoding: str = "utf-8") -> str:
@@ -174,13 +191,34 @@ def read_reference_csv(
         # raw tokenizer path (Chunker): no quote handling at all
         reader_opts.update({"quote": "\u0000"})
 
-    scans = [
-        spark.read.options(**reader_opts).schema(raw_schema).csv(p).withColumn("file_seq", F.lit(i))
-        for i, p in enumerate(paths)
-    ]
-    raw = _number_pinned_rows(
-        reduce(DataFrame.unionByName, scans), "row_no", group_col="file_seq", group_id_col="line_no"
+    seq_of = {os.path.abspath(p): i for i, p in enumerate(paths)}
+    if len(seq_of) < len(paths):
+        raise ValueError(f"a file is declared twice in {paths!r}")
+
+    def run_key(run):
+        # _metadata.file_path is the listing's URL-encoded URI
+        # ("file:/a%20b.csv"): decode it to match a declared path
+        path = unquote(urlsplit(run["_path"]).path)
+        if path not in seq_of:
+            raise ValueError(f"scan read {run['_path']!r}, which is not in {paths!r}")
+        return seq_of[path], run["_block"]
+
+    scan = spark.read.options(**reader_opts).schema(raw_schema).csv(paths).select(
+        "*",
+        F.col("_metadata.file_path").alias("_path"),
+        F.col("_metadata.file_block_start").alias("_block"),
+        F.col("_metadata.file_size").alias("_size"),
     )
+    raw, runs = number_runs(
+        scan,
+        "row_no",
+        run_cols=("_path", "_block"),
+        key=run_key,
+        aggs=[F.max("_size").alias("_size")],
+        group=("file_seq", "line_no"),
+    )
+    scan_bytes = sum({run["_path"]: run["_size"] for run in runs}.values())
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
     typed = raw.select(
         *[
@@ -191,4 +229,4 @@ def read_reference_csv(
         "line_no",
         "row_no",
     )
-    return ReferenceCsv(df=typed, header=header)
+    return ReferenceCsv(df=typed, header=header, files=max(1, math.ceil(scan_bytes / max_bytes)))

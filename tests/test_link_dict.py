@@ -166,6 +166,29 @@ def _old_driver_union_find(pairs_df: DataFrame) -> DataFrame:
     )
 
 
+def _old_build_unique_alias_dict(
+    alias_df: DataFrame,
+    key_col: str = "key_value",
+    id_col: str = "entity_id",
+    extra_cols: list[str] | None = None,
+) -> DataFrame:
+    """Collapse an alias table to unique-key entries.
+
+    A key mapping to >1 distinct entity id is AMBIGUOUS and removed —
+    the reference's ``getSingle()`` yields null unless exactly one hit.
+    Duplicate rows for the same (key, id) are fine (count distinct ids).
+    """
+    extra = extra_cols or []
+    agg = [F.count_distinct(F.col(id_col)).alias("_n_ids"), F.min(id_col).alias(id_col)]
+    agg += [F.min(c).alias(c) for c in extra]
+    return (
+        alias_df.groupBy(key_col)
+        .agg(*agg)
+        .where(F.col("_n_ids") == 1)
+        .drop("_n_ids")
+    )
+
+
 # --- the pins ------------------------------------------------------------------
 
 ALIAS_SCHEMA = (
@@ -236,3 +259,28 @@ def test_driver_path_runs_no_spark_job(spark):
     assert kg.LAST_DICT_STATS["path"] == "driver"
     assert kg.LAST_DICT_STATS["n_fetched"] == alias_dict_df(spark).count()
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_unique_alias_dict_equals_count_distinct(spark, seed):
+    """``min(id) = max(id)`` keeps exactly the keys ``count_distinct(id)
+    = 1`` kept: duplicate rows, ambiguous keys, a key with ids {NULL, 5}
+    (kept), an all-NULL key (dropped) — in one aggregate."""
+    rnd = random.Random(seed)
+    rows = [(f"k{rnd.randint(0, 40)}", rnd.randint(0, 60), f"x{rnd.randint(0, 9)}") for _ in range(300)]
+    rows += rnd.choices(rows, k=100)  # duplicate rows
+    rows += [("half_null", None, "a"), ("half_null", 5, "b"), ("all_null", None, "c"), ("all_null", None, "d")]
+    rnd.shuffle(rows)
+    aliases = local_frame(spark, rows, "key_value string, entity_id long, extra string")
+    new = build_unique_alias_dict(aliases, extra_cols=["extra"])
+    old = _old_build_unique_alias_dict(aliases, extra_cols=["extra"])
+    got = sorted(tuple(r) for r in new.collect())
+    assert new.columns == old.columns
+    assert got == sorted(tuple(r) for r in old.collect())
+    keys = {r[0] for r in got}
+    assert ("half_null", 5, "a") in got and "all_null" not in keys
+    assert 0 < len(keys) < len({r[0] for r in rows}) - 1  # some keys are ambiguous
+    # one aggregate: a single shuffle, where count_distinct plans two
+    new.collect()
+    final = new._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning") == 1

@@ -26,6 +26,7 @@ accepts the reference's own
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -44,21 +45,21 @@ def _kg_inputs(args, app_name: str):
 
 
 def _kg(args) -> int:
-    from pyspark.sql import functions as F
-
-    from batch_import_spark.pipeline.kg import prepare_link_dict, run_kg_pipeline
+    from batch_import_spark.pipeline.kg import (
+        LAST_DICT_STATS,
+        prepare_link_dict,
+        run_kg_pipeline,
+    )
     from batch_import_spark.sinks import GraphSink
 
     spark, t, aliases = _kg_inputs(args, "kg-construct")
     res = run_kg_pipeline(
         t, aliases, link_dict=prepare_link_dict(aliases), extraction=args.extraction
     )
-    sink = GraphSink(spark, args.out, fmt=args.format)
-    sink.write_graph(res.nodes, res.edges, mode=args.write_mode)
-    n_edges, n_occ = sink.read("edges").agg(
-        F.count(F.lit(1)), F.sum("n_occurrences")
-    ).first()
-    print(f"kg: wrote {n_edges} edges ({n_occ} triple occurrences) to {args.out}")
+    GraphSink(spark, args.out, fmt=args.format).write_graph(
+        res.nodes, res.edges, mode=args.write_mode
+    )
+    print(json.dumps({"job": "kg", "out": args.out, **res.metrics, "link_dict": LAST_DICT_STATS}))
     return 0
 
 
@@ -68,8 +69,7 @@ def _resume(args) -> int:
     spark, t, aliases = _kg_inputs(args, "kg-resume")
     ck = KgCheckpointer(spark, args.base_dir, n_buckets=args.n_buckets)
     stats = ck.resume(t, aliases, run_id=args.run_id, max_buckets=args.max_buckets)
-    done = len(ck.done_buckets())
-    print(f"resume: {stats['buckets_processed']} buckets this run, {done}/{args.n_buckets} done")
+    print(json.dumps({"job": "resume", "base_dir": args.base_dir, **stats}))
     return 0
 
 

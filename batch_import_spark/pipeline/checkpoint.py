@@ -8,6 +8,11 @@ equivalent here (SURVEY.md §7 stage 5):
 - work unit = conversation bucket: ``pmod(xxhash64(conv_id), n_buckets)``
   — deterministic, parallelism-independent, and conversation-aligned so
   a bucket is self-contained for extraction;
+- the pending buckets are built by the ``kg`` job's own
+  ``run_kg_pipeline``, with the bucket as its ``by`` key: bucket edges
+  have the ``kg`` edges schema plus ``bucket``, and folding the bucket
+  partitions with ``merge_kg_edges`` (bucket dropped) gives the ``kg``
+  job's edges row for row;
 - every table goes through one writer, ``sinks.GraphSink`` over
   ``base_dir`` (Parquet): edges by ``overwrite_partitions`` on the
   bucket column — re-running a bucket replaces exactly its partition,
@@ -15,7 +20,11 @@ equivalent here (SURVEY.md §7 stage 5):
   manifest by ``write(mode="append")``;
 - a manifest table records, per completed bucket, lineage + counters
   (n_turns, n_mentions, n_linked, n_skipped, n_triples) — the G1/G2
-  reporting surface;
+  reporting surface. n_turns comes from the one aggregate that also
+  finds the pending buckets; n_mentions/n_linked from one aggregate
+  over the persisted link-flagged mentions the edges write also reads;
+  n_triples from the edges frame. Their sums over a call's buckets are
+  that build's Observations, which ``resume()`` returns;
 - ``resume()`` processes only buckets absent from the manifest: a
   bucket whose write crashed before its manifest append is simply
   re-run and overwritten (idempotent; pinned by a crash-injection
@@ -34,12 +43,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from batch_import_spark.pipeline.extract import extract_mentions
-from batch_import_spark.pipeline.kg import (
-    link_and_canonicalize,
-    nodes_from_dict,
-    prepare_link_dict,
-)
+from batch_import_spark.pipeline.kg import _linked, run_kg_pipeline
 from batch_import_spark.session import local_frame
 from batch_import_spark.sinks import GraphSink
 
@@ -49,15 +53,15 @@ MANIFEST_SCHEMA = (
 )
 
 
-def _bucket(col: str = "conv_id", n_buckets: int = 64):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-
-
 @dataclass
 class KgCheckpointer:
     spark: SparkSession
     base_dir: str
     n_buckets: int = 64
+
+    def __post_init__(self):
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be at least 1, got {self.n_buckets}")
 
     @property
     def sink(self) -> GraphSink:
@@ -70,7 +74,7 @@ class KgCheckpointer:
             return local_frame(self.spark, [], MANIFEST_SCHEMA)
 
     def done_buckets(self) -> set[int]:
-        return {r["bucket"] for r in self.manifest().select("bucket").distinct().collect()}
+        return {r["bucket"] for r in self.manifest().select("bucket").collect()}
 
     def edges(self) -> DataFrame:
         return self.sink.read("edges")
@@ -89,83 +93,52 @@ class KgCheckpointer:
         run_id: str = "run",
         max_buckets: int | None = None,
     ) -> dict:
-        """Process every bucket not yet in the manifest. Returns counters.
+        """Process every bucket not yet in the manifest. Returns the
+        buckets processed and done, and the build's counters.
 
         ``max_buckets`` limits how many pending buckets this call takes
         (simulates a partial run / crash window in tests).
         """
+        if max_buckets is not None and max_buckets < 0:
+            raise ValueError(f"max_buckets must be at least 0, got {max_buckets}")
         sink = self.sink
+        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
         done = self.done_buckets()
-        pending_df = transcripts.select(
-            _bucket("conv_id", self.n_buckets).alias("bucket")
-        ).distinct()
-        pending = sorted(
-            r["bucket"] for r in pending_df.collect() if r["bucket"] not in done
-        )
-        if max_buckets is not None:
-            pending = pending[:max_buckets]
+        n_turns = dict(transcripts.groupBy(bucket).count().collect())
+        pending = sorted(set(n_turns) - done)[:max_buckets]
         if not pending:
-            return {"buckets_processed": 0}
+            return {"buckets_processed": 0, "buckets_done": len(done)}
 
-        t = transcripts.withColumn("bucket", _bucket("conv_id", self.n_buckets)).where(
-            F.col("bucket").isin([int(b) for b in pending])
+        res = run_kg_pipeline(
+            transcripts.where(bucket.isin(pending)),
+            alias_dict,
+            by=(bucket.alias("bucket"),),
         )
-
-        turn_counts = t.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_turns"))
-
-        # persist the extraction output: it feeds the edges write AND
-        # two counter aggregations below — without the cache the
-        # mapInPandas extraction (the most expensive stage) re-runs
-        # once per consumer (3× per resume call)
-        mentions = (
-            extract_mentions(t.select("conv_id", "turn_idx", "text"))
-            .withColumn("bucket", _bucket("conv_id", self.n_buckets))
-            .persist()
-        )
+        # the edges write and the counter aggregate below both read the
+        # link-flagged mentions: without the cache the extraction (the
+        # most expensive stage) runs once per consumer
+        mentions = res.mentions.persist()
         try:
-            link_dict = prepare_link_dict(alias_dict)
-            resolved, _obs = link_and_canonicalize(mentions, link_dict)
-
-            edges = resolved.groupBy(
-                "bucket", "subj_id", "subj", "pred", "obj_id", "obj"
-            ).agg(F.count(F.lit(1)).alias("n_occurrences"))
-
             # idempotent per-bucket replacement
-            sink.overwrite_partitions(edges, "edges")
+            sink.overwrite_partitions(res.edges, "edges")
             # nodes derive from the dictionary alone — bucket-independent
-            sink.write(nodes_from_dict(link_dict), "nodes")
-
-            # lineage counters per bucket (exact aggregates, not observers —
-            # observers double-count under resampling plans; see verify skill)
-            mention_counts = mentions.groupBy("bucket").agg(
-                F.count(F.lit(1)).alias("n_mentions")
-            )
-            linked_counts = resolved.groupBy("bucket").agg(
-                F.count(F.lit(1)).alias("n_linked")
-            )
-            triple_counts = (
-                sink.read("edges")
-                .where(F.col("bucket").isin([int(b) for b in pending]))
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n_triples"))
-            )
-            manifest_rows = (
-                turn_counts.join(mention_counts, "bucket", "left")
-                .join(linked_counts, "bucket", "left")
-                .join(triple_counts, "bucket", "left")
-                .select(
-                    "bucket",
-                    F.lit(run_id).alias("run_id"),
-                    "n_turns",
-                    F.coalesce("n_mentions", F.lit(0)).alias("n_mentions"),
-                    F.coalesce("n_linked", F.lit(0)).alias("n_linked"),
-                    (
-                        F.coalesce("n_mentions", F.lit(0)) - F.coalesce("n_linked", F.lit(0))
-                    ).alias("n_skipped"),
-                    F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-                )
-            )
-            sink.write(manifest_rows, "manifest", mode="append")
+            sink.write(res.nodes, "nodes")
+            counts = {
+                b: (n, k)
+                for b, n, k in mentions.groupBy(bucket)
+                .agg(F.count(F.lit(1)), F.sum(_linked().cast("long")))
+                .collect()
+            }
+            triples = dict(res.edges.groupBy("bucket").count().collect())
+            rows = []
+            for b in pending:
+                n, k = counts.get(b, (0, 0))
+                rows.append((b, run_id, n_turns[b], n, k, n - k, triples.get(b, 0)))
+            sink.write(local_frame(self.spark, rows, MANIFEST_SCHEMA), "manifest", mode="append")
         finally:
             mentions.unpersist()
-        return {"buckets_processed": len(pending)}
+        return {
+            "buckets_processed": len(pending),
+            "buckets_done": len(done) + len(pending),
+            **res.metrics,
+        }

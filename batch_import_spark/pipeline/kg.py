@@ -10,7 +10,10 @@ streams CSV rows into Neo4j store files single-threaded, we run
 
 ``run_kg_pipeline`` only builds the graph; ``sinks.GraphSink`` is the
 one writer of its tables (the ``kg`` job's write_graph and the
-``resume`` job's per-bucket checkpoint alike).
+``resume`` job's per-bucket checkpoint alike). Both jobs build through
+it: ``resume`` passes its conversation bucket as ``by``, a grouping
+key in front of the triple grain, so a bucket's edges have the ``kg``
+schema plus ``bucket`` and fold back with ``merge_kg_edges``.
 
 Phase barriers mirror the reference (all nodes before rels,
 Importer.java:227-233): the link dictionary (unique-key filter +
@@ -57,8 +60,9 @@ LAST_DICT_STATS: dict = {}
 @dataclass
 class KgResult:
     nodes: DataFrame  # node_id, name, surfaces array<string>, entity_id
-    edges: DataFrame  # subj_id, subj, pred, obj_id, obj, n_occurrences, provenance
+    edges: DataFrame  # [by…,] subj_id, subj, pred, obj_id, obj, n_occurrences, first/last_seen
     triples: DataFrame  # (subj, pred, obj) canonical surface strings (P/R surface)
+    mentions: DataFrame  # every mention; subj_id/obj_id NULL when unresolved
     _observations: tuple = ()  # pipeline Observations backing .metrics
     _metrics: dict = field(default_factory=dict)
 
@@ -146,15 +150,17 @@ def prepare_link_dict(
     )
 
 
-def link_and_canonicalize(
-    mentions: DataFrame, link_dict: DataFrame
-) -> tuple[DataFrame, Observation]:
-    """Resolve both mention endpoints through the broadcast dictionary.
+def _linked():
+    return F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
 
-    One broadcast left-join per endpoint yields (canonical surface,
-    canonical node id) directly; unresolved/ambiguous mentions are
-    dropped AND counted (P7: Importer.java:149-152).
-    """
+
+def _flag_links(
+    mentions: DataFrame, link_dict: DataFrame
+) -> tuple[DataFrame, Observation | None]:
+    """Every mention with both endpoints looked up in the broadcast
+    dictionary: one left-join per endpoint yields (canonical surface,
+    canonical node id) directly, NULL for an unresolved or ambiguous
+    surface. Counted by an Observation on batch frames."""
     d = F.broadcast(
         link_dict.select("surface", "canonical_surface", "canonical_node_id")
     )
@@ -174,25 +180,25 @@ def link_and_canonicalize(
     if joined.isStreaming:
         # Observation doesn't support streams — per-microbatch metrics
         # come from StreamingQueryProgress instead
-        resolved = joined.where(
-            F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
-        )
-        return resolved, None
+        return joined, None
     obs = Observation()
     observed = joined.observe(
         obs,
         F.count(F.lit(1)).alias("n_mentions"),
-        F.sum((F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()).cast("long")).alias(
-            "n_linked"
-        ),
-        F.sum((F.col("subj_id").isNull() | F.col("obj_id").isNull()).cast("long")).alias(
-            "n_skipped"
-        ),
+        F.sum(_linked().cast("long")).alias("n_linked"),
+        F.sum((~_linked()).cast("long")).alias("n_skipped"),
     )
-    resolved = observed.where(
-        F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
-    )
-    return resolved, obs
+    return observed, obs
+
+
+def link_and_canonicalize(
+    mentions: DataFrame, link_dict: DataFrame
+) -> tuple[DataFrame, Observation]:
+    """Resolve both mention endpoints through the broadcast dictionary;
+    unresolved/ambiguous mentions are dropped AND counted (P7:
+    Importer.java:149-152)."""
+    flagged, obs = _flag_links(mentions, link_dict)
+    return flagged.where(_linked()), obs
 
 
 def nodes_from_dict(link_dict: DataFrame) -> DataFrame:
@@ -220,14 +226,18 @@ def merge_kg_edges(existing: DataFrame, delta: DataFrame) -> DataFrame:
     alias table, and a changed dictionary is a re-canonicalization,
     the same event it is for the reference's index rebuild.)
     """
-    return (
-        existing.unionByName(delta)
-        .groupBy("subj_id", "subj", "pred", "obj_id", "obj")
-        .agg(
-            F.sum("n_occurrences").alias("n_occurrences"),
-            F.min("first_seen").alias("first_seen"),
-            F.max("last_seen").alias("last_seen"),
-        )
+    return _triple_grain(
+        existing.unionByName(delta), F.sum("n_occurrences"), "first_seen", "last_seen"
+    )
+
+
+def _triple_grain(rows: DataFrame, n_occurrences, first_seen, last_seen, by=()) -> DataFrame:
+    """The edge grain, shared by the build and the merge: one row per
+    ``by`` key and (subj, pred, obj) triple."""
+    return rows.groupBy(*by, "subj_id", "subj", "pred", "obj_id", "obj").agg(
+        n_occurrences.alias("n_occurrences"),
+        F.min(first_seen).alias("first_seen"),
+        F.max(last_seen).alias("last_seen"),
     )
 
 
@@ -236,6 +246,7 @@ def run_kg_pipeline(
     alias_dict: DataFrame,
     link_dict: DataFrame | None = None,
     extraction: str = "pandas",
+    by: tuple = (),
 ) -> KgResult:
     """Build the graph: lazy ``nodes``/``edges`` frames plus counters.
 
@@ -245,6 +256,11 @@ def run_kg_pipeline(
     across repeated runs. ``extraction``: "pandas" (Arrow-batched
     kernel, the general path) or "expr" (pure JVM regexp expressions —
     identical output for regex-expressible grammars, no Python workers).
+    ``by``: grouping expressions over mention rows (conv_id, turn_idx,
+    surfaces), put in front of the triple grain — the ``resume`` job
+    passes its conversation bucket, so each bucket's edges fold into
+    the ``kg`` job's by ``merge_kg_edges``. With ``by=()`` the plan is
+    the ``kg`` job's.
     """
     obs_turns = Observation()
     t = transcripts.observe(obs_turns, F.count(F.lit(1)).alias("n_turns"))
@@ -257,17 +273,15 @@ def run_kg_pipeline(
         mentions = extract_mentions(t)
     if link_dict is None:
         link_dict = prepare_link_dict(alias_dict)
-    resolved, obs_link = link_and_canonicalize(mentions, link_dict)
+    flagged, obs_link = _flag_links(mentions, link_dict)
 
     # triple grain: map-side partial agg keeps the shuffle tiny
-    edges = resolved.groupBy("subj_id", "subj", "pred", "obj_id", "obj").agg(
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.min(F.struct("conv_id", "turn_idx")).alias("first_seen"),
-        F.max(F.struct("conv_id", "turn_idx")).alias("last_seen"),
-    )
+    seen = F.struct("conv_id", "turn_idx")
+    edges = _triple_grain(flagged.where(_linked()), F.count(F.lit(1)), seen, seen, by)
     return KgResult(
         nodes=nodes_from_dict(link_dict),
         edges=edges,
         triples=edges.select("subj", "pred", "obj"),
+        mentions=flagged,
         _observations=(obs_turns, obs_link),
     )

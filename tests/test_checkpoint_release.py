@@ -91,3 +91,45 @@ def test_louvain_refine_keeps_only_the_result(spark):
     assert len(own) == 1
     assert persistent_rdd_ids(spark) == before | own
     assert {r.node: r.community for r in refined.collect()}[2] == 0
+
+
+def test_resume_frees_its_mention_cache(spark, tmp_path, monkeypatch):
+    """A ``resume`` call persists its link-flagged mentions for the
+    edges write and the counter aggregate, and frees them on return —
+    also when the call dies before its manifest append."""
+    import pytest
+
+    from batch_import_spark.pipeline.checkpoint import KgCheckpointer
+    from batch_import_spark.sinks import GraphSink
+    from batch_import_spark.sources.transcripts import alias_dict_df, generate_transcripts
+
+    t = generate_transcripts(spark, n_convs=16, median_turns=4, hot_factor=2)
+    t = t.localCheckpoint(eager=True)
+    aliases = alias_dict_df(spark)
+    ck = KgCheckpointer(spark, str(tmp_path / "ck"), n_buckets=8)
+
+    before = persistent_rdd_ids(spark)
+    during = []
+    overwrite, write = GraphSink.overwrite_partitions, GraphSink.write
+
+    def record(self, df, table, **kw):
+        overwrite(self, df, table, **kw)
+        during.append(persistent_rdd_ids(spark))
+
+    monkeypatch.setattr(GraphSink, "overwrite_partitions", record)
+    assert ck.resume(t, aliases, max_buckets=3)["buckets_processed"] == 3
+    # the cache was there while the call ran, and nothing it added stays
+    # (a subset check: the context cleaner may free unrelated RDDs)
+    assert during[-1] - before
+    assert persistent_rdd_ids(spark) <= before
+
+    def crash_on_manifest(self, df, table, mode="overwrite"):
+        if table == "manifest":
+            raise RuntimeError("injected crash before the manifest append")
+        write(self, df, table, mode=mode)
+
+    monkeypatch.setattr(GraphSink, "write", crash_on_manifest)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ck.resume(t, aliases)
+    assert len(during) == 2 and during[-1] - before
+    assert persistent_rdd_ids(spark) <= before

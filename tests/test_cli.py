@@ -95,3 +95,37 @@ def test_resume_cli(spark, tmp_path):
     assert rc == 0
     manifest = spark.read.parquet(f"{base}/manifest")
     assert manifest.select("bucket").distinct().count() >= 3
+
+
+def test_cli_jobs_print_their_run_record(spark, tmp_path, capsys):
+    """``kg`` and ``resume`` each print one JSON record built from the
+    run's own counters, with nothing read back: the printed ``n_linked``
+    is the written edges' occurrences."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from batch_import_spark.sources.transcripts import generate_transcripts
+
+    tdir = tmp_path / "transcripts"
+    generate_transcripts(spark, n_convs=12, median_turns=4, hot_factor=2).write.parquet(
+        str(tdir)
+    )
+    capsys.readouterr()
+    out = tmp_path / "kg"
+    assert main(["kg", "--transcripts", str(tdir), "--out", str(out)]) == 0
+    kg = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    n_occ = spark.read.parquet(f"{out}/edges").agg(F.sum("n_occurrences")).first()[0]
+    assert kg["n_linked"] == n_occ > 0
+    assert kg["n_mentions"] == kg["n_linked"] + kg["n_skipped"]
+    assert kg["link_dict"]["path"] == "driver"
+
+    base = str(tmp_path / "ckpt")
+    argv = ["resume", "--transcripts", str(tdir), "--base-dir", base, "--n-buckets", "8"]
+    assert main([*argv, "--max-buckets", "3"]) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert main(argv) == 0
+    second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (first["buckets_processed"], first["buckets_done"]) == (3, 3)
+    assert second["buckets_done"] == 3 + second["buckets_processed"]
+    assert first["n_linked"] + second["n_linked"] == n_occ

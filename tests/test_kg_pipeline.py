@@ -280,3 +280,98 @@ def test_link_dict_distributed_path_equals_driver_path(spark):
     assert "Na" not in canon and "Nb" not in canon and canon["Nc"] == "Nc"
     assert canon["Ma"] == canon["Mb"] == "Ma"
     assert None not in canon and 9501 not in {r[1] for r in driver_rows}
+
+
+def _parent_edges(transcripts, alias_dict, Observation):
+    """``run_kg_pipeline(...).edges`` before the ``by`` keyword, verbatim
+    (its ``link_and_canonicalize`` inlined), with the Observation class
+    passed in."""
+    from batch_import_spark.pipeline.extract import extract_mentions
+    from batch_import_spark.pipeline.kg import prepare_link_dict
+
+    obs_turns = Observation()
+    t = transcripts.observe(obs_turns, F.count(F.lit(1)).alias("n_turns"))
+    mentions = extract_mentions(t)
+    link_dict = prepare_link_dict(alias_dict)
+
+    d = F.broadcast(
+        link_dict.select("surface", "canonical_surface", "canonical_node_id")
+    )
+    subj_d = d.select(
+        F.col("surface").alias("subj_surface"),
+        F.col("canonical_surface").alias("subj"),
+        F.col("canonical_node_id").alias("subj_id"),
+    )
+    obj_d = d.select(
+        F.col("surface").alias("obj_surface"),
+        F.col("canonical_surface").alias("obj"),
+        F.col("canonical_node_id").alias("obj_id"),
+    )
+    joined = mentions.join(subj_d, "subj_surface", "left").join(
+        obj_d, "obj_surface", "left"
+    )
+    obs = Observation()
+    observed = joined.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_mentions"),
+        F.sum((F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()).cast("long")).alias(
+            "n_linked"
+        ),
+        F.sum((F.col("subj_id").isNull() | F.col("obj_id").isNull()).cast("long")).alias(
+            "n_skipped"
+        ),
+    )
+    resolved = observed.where(
+        F.col("subj_id").isNotNull() & F.col("obj_id").isNotNull()
+    )
+    return resolved.groupBy("subj_id", "subj", "pred", "obj_id", "obj").agg(
+        F.count(F.lit(1)).alias("n_occurrences"),
+        F.min(F.struct("conv_id", "turn_idx")).alias("first_seen"),
+        F.max(F.struct("conv_id", "turn_idx")).alias("last_seen"),
+    )
+
+
+def test_kg_edges_plan_is_unchanged_without_by(spark, fixture_data, monkeypatch):
+    """With ``by=()`` the ``kg`` job's optimized edges plan is the same
+    result as the formulation before ``by`` existed. Observations get
+    fixed names: a fresh one is a fresh UUID, so no two builds would
+    ever compare equal otherwise."""
+    import itertools
+
+    from pyspark.sql import Observation
+
+    import batch_import_spark.pipeline.kg as kg
+
+    def named():
+        n = itertools.count()
+        return lambda: Observation(f"obs{next(n)}")
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan()
+
+    alias = alias_dict_df(spark)
+    old = plan(_parent_edges(fixture_data, alias, named()))
+    monkeypatch.setattr(kg, "Observation", named())
+    assert old.sameResult(plan(run_kg_pipeline(fixture_data, alias).edges))
+    monkeypatch.setattr(kg, "Observation", named())
+    by_bucket = run_kg_pipeline(fixture_data, alias, by=(F.lit(0).alias("bucket"),))
+    assert not old.sameResult(plan(by_bucket.edges))
+
+
+def test_pipeline_has_one_triple_grain_group_by():
+    """The ``kg`` build, the ``resume`` buckets and ``merge_kg_edges``
+    share one triple-grain aggregate; ``resume`` has no extraction or
+    linking of its own."""
+    from pathlib import Path
+
+    pipeline = Path(__file__).resolve().parents[1] / "batch_import_spark" / "pipeline"
+    grains = [
+        (p.name, keys)
+        for p in sorted(pipeline.glob("*.py"))
+        for keys in re.findall(r"\.groupBy\(([^)]*)\)", p.read_text())
+        if '"subj_id"' in keys
+    ]
+    assert len(grains) == 1, grains
+    checkpoint = (pipeline / "checkpoint.py").read_text()
+    assert "extract_mentions" not in checkpoint
+    assert "link_and_canonicalize" not in checkpoint

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from batch_import_spark.operators.sampling import _keyed_hash
+from batch_import_spark.session import fan_out
 
 
 def token_count(text_col: Column | str) -> Column:
@@ -305,13 +306,9 @@ def _cdc_rows(
     d = df.select(F.col(id_col).alias("_id"), norm.alias("_t"))
     if min_len > 0:
         d = d.where(F.length("_t") >= min_len)
-    # the normalized-doc table is narrow; fan it out to the session's
-    # parallelism when the source collapses to a few scan partitions
-    # (small parquet inputs) so the kernel uses every core
-    sess = df.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target)
+    # the normalized-doc table is narrow; fan it out so the kernel uses
+    # every core when the source is a few scan partitions
+    d = fan_out(d)
 
     id_field = df.schema[id_col].dataType
     fields = [

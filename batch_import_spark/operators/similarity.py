@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from batch_import_spark.session import local_frame
+from batch_import_spark.session import fan_out, local_frame
 
 
 def _seq_dot_matrix(V: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -47,16 +47,6 @@ def _seq_dot_matrix(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     for d in range(V.shape[1]):
         out += np.outer(V[:, d], C[:, d])
     return out
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session parallelism when the
-    source collapses to fewer scan partitions (small local inputs) —
-    Arrow kernels otherwise run on 1-2 tasks. No-op for wide inputs."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _assign_cells_arrow(
@@ -757,7 +747,7 @@ def _pq_residuals(
             T.StructField("rq", T.ArrayType(T.LongType())),
         ]
     )
-    base = _fan_out(
+    base = fan_out(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     )
 
@@ -974,7 +964,7 @@ def _pq_encode_arrow(
             T.StructField("codes", T.ArrayType(T.IntegerType())),
         ]
     )
-    base = _fan_out(
+    base = fan_out(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     )
 

@@ -118,6 +118,19 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to the session parallelism when ``df``
+    has fewer partitions, else ``df`` unchanged. A small parquet file is
+    one scan partition however it is split, so every narrow stage over
+    it (an Arrow kernel, a partial aggregate) would run one task; the
+    shuffle moves the file's bytes once. Row order never feeds a result
+    of its callers."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Ids of the RDDs persisted in the session's context. A
     ``localCheckpoint`` registers its RDD here when it is called, eager

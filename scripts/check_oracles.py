@@ -83,10 +83,6 @@ def main(sf_dir: str, only: set[str] | None = None) -> int:
     for name, fn in qs.items():
         try:
             df = fn(spark, sf_dir)
-            if name not in oracles:
-                n = df.count()
-                print(f"ROWS-ONLY {name}: {n} rows")
-                continue
             res = con.execute(oracles[name])
             duck_rows = res.fetchall()
             duck_cols = [d[0] for d in res.description]

@@ -299,7 +299,7 @@ def test_louvain_beats_lp_baseline_on_actual_kg(spark):
     """Round-4 VERDICT item 7 done-criterion: modularity of the
     refined communities >= the label-propagation baseline on the
     planted KG."""
-    import __spark_entry__ as entry
+    from batch_import_spark.queries import kg as entry
     from batch_import_spark.operators.graph_stats import (
         label_propagation,
         louvain_refine,

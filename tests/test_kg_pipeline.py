@@ -169,20 +169,20 @@ def test_incremental_merge_equals_full_rebuild(spark):
     )
     from batch_import_spark.sources.transcripts import alias_dict_df
 
-    import __spark_entry__ as entry
+    from batch_import_spark.queries import kg
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ld = prepare_link_dict(alias_dict_df(spark))
     full = run_kg_pipeline(
-        entry._plant_from_docs(docs).drop("ts"), alias_dict_df(spark), link_dict=ld
+        kg._plant_from_docs(docs).drop("ts"), alias_dict_df(spark), link_dict=ld
     ).edges
     e1 = run_kg_pipeline(
-        entry._plant_from_docs(docs.where("doc_id % 2 = 0")).drop("ts"),
+        kg._plant_from_docs(docs.where("doc_id % 2 = 0")).drop("ts"),
         alias_dict_df(spark),
         link_dict=ld,
     ).edges
     e2 = run_kg_pipeline(
-        entry._plant_from_docs(docs.where("doc_id % 2 = 1")).drop("ts"),
+        kg._plant_from_docs(docs.where("doc_id % 2 = 1")).drop("ts"),
         alias_dict_df(spark),
         link_dict=ld,
     ).edges

@@ -83,10 +83,10 @@ def test_winnowing_matches_python_reference(spark):
 
 
 def test_negative_samples_protocol(spark):
-    import __spark_entry__ as entry
+    from batch_import_spark.queries import kg
 
     sf = "/root/testdata/sf0.001"
-    neg = entry._kg_negative_samples(spark, sf)
+    neg = kg._kg_negative_samples(spark, sf)
     rows = neg.collect()
     assert rows and all(r.k in (0, 1) for r in rows)
     # filtered protocol: no emitted negative is a true triple
@@ -96,13 +96,13 @@ def test_negative_samples_protocol(spark):
     triples = {
         (r.subj, r.pred, r.obj)
         for r in run_kg_pipeline(
-            entry._planted_transcripts_full(spark, sf).drop("ts"),
+            kg._planted_transcripts_full(spark, sf).drop("ts"),
             alias_dict_df(spark),
         ).edges.select("subj", "pred", "obj").collect()
     }
     assert all((r.subj, r.pred, r.neg_obj) not in triples for r in rows)
     # deterministic: second run identical
-    again = {(r.subj, r.pred, r.neg_obj, r.k) for r in entry._kg_negative_samples(spark, sf).collect()}
+    again = {(r.subj, r.pred, r.neg_obj, r.k) for r in kg._kg_negative_samples(spark, sf).collect()}
     assert again == {(r.subj, r.pred, r.neg_obj, r.k) for r in rows}
 
 

@@ -49,7 +49,7 @@ def test_round5_query_plan_shapes(spark):
     assert "CartesianProduct" not in p and "NestedLoop" not in p
 
     # pii redaction is a pure codegen regex chain: no KEYED shuffle.
-    # Round 7 allows the single round-robin scan fan-out (_read_fanout)
+    # Round 7 allows the single round-robin scan fan-out (session.fan_out)
     # that parallelizes single-row-group local inputs.
     import re as _re
 

@@ -80,7 +80,7 @@ def test_unimax_zero_budget(spark):
 
 
 def test_tokenizer_fertility_entry(spark):
-    import __spark_entry__ as E
+    from batch_import_spark.queries import tokenizers as E
 
     rows = {
         r.family: r
@@ -100,7 +100,7 @@ def test_tokenizer_fertility_entry(spark):
 def test_stream_dsir_equals_batch_weights(spark):
     """Frozen-model streaming screen == batch dsir_weights, row for
     row (the stream_quality_screen parity discipline)."""
-    import __spark_entry__ as E
+    from batch_import_spark.queries import curation as E
     from batch_import_spark.operators.dsir import dsir_weights
 
     sf = "/root/testdata/sf0.001"
@@ -119,7 +119,7 @@ def test_stream_dsir_equals_batch_weights(spark):
 
 
 def test_kg_temporal_activity_invariants(spark):
-    import __spark_entry__ as E
+    from batch_import_spark.queries import kg as E
 
     rows = E._kg_temporal_activity(spark, "/root/testdata/sf0.001").collect()
     assert rows
@@ -158,7 +158,7 @@ def test_hard_negatives_cross_label_only(spark):
 
 
 def test_curriculum_order_stages_and_permutation(spark):
-    import __spark_entry__ as E
+    from batch_import_spark.queries import curation as E
 
     rows = E._curriculum_order(spark, "/root/testdata/sf0.001").collect()
     n = len(rows)
@@ -173,7 +173,7 @@ def test_curriculum_order_stages_and_permutation(spark):
 
 
 def test_pq_code_dedup_planted_twins(spark):
-    import __spark_entry__ as E
+    from batch_import_spark.queries import vectors as E
 
     groups = E._pq_code_dedup(spark, "/root/testdata/sf0.001").collect()
     assert groups  # planted copies guarantee non-vacuity
@@ -199,7 +199,7 @@ def test_zorder_key_interleave_and_quadrant_locality(spark):
     assert k[0].k == 13
     # entry-level property: a 6-bit z-prefix fixes the top 3 bits of
     # BOTH dimensions, so every bucket spans < 2^13 in x AND y
-    import __spark_entry__ as E
+    from batch_import_spark.queries import curation as E
 
     rows = E._zorder_layout(spark, "/root/testdata/sf0.001").collect()
     assert rows

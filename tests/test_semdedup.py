@@ -128,7 +128,7 @@ def test_planted_corpus_components_are_cliques(spark):
     duplicate-pair graph is a union of cliques (diameter <= 2): every
     planted triple {b, b+10000, b+20000} must be fully connected at
     the threshold and no cross-group pair may exist."""
-    import __spark_entry__ as entry
+    from batch_import_spark.queries import vectors as entry
     from batch_import_spark.operators.similarity import cosine
 
     corpus = entry._planted_embed_corpus(spark, "/root/testdata/sf0.001")

@@ -201,16 +201,16 @@ def test_incremental_stream_equals_full_build(spark):
     """Two micro-batches through the foreachBatch fold == one-shot
     batch build, full column equality (the continuous-ingest
     invariant)."""
-    import __spark_entry__ as entry
+    from batch_import_spark.queries import kg
     from pyspark.sql import functions as F
 
     from batch_import_spark.pipeline.kg import prepare_link_dict, run_kg_pipeline
     from batch_import_spark.sources.transcripts import alias_dict_df
 
     sf = "/root/testdata/sf0.001"
-    streamed = entry._stream_kg_incremental(spark, sf)
+    streamed = kg._stream_kg_incremental(spark, sf)
     full = run_kg_pipeline(
-        entry._planted_transcripts_full(spark, sf).drop("ts"),
+        kg._planted_transcripts_full(spark, sf).drop("ts"),
         alias_dict_df(spark),
         link_dict=prepare_link_dict(alias_dict_df(spark)),
     ).edges.select(

@@ -165,12 +165,12 @@ def test_entry_planted_compound_segments_multipiece(spark):
     """The planted compound word in the registry corpus actually
     exercises multi-piece Viterbi (the reason _unigram_docs plants
     it)."""
-    import __spark_entry__ as E
+    from batch_import_spark.queries import tokenizers
 
     sf = "/root/testdata/sf0.001"
-    seg = E._unigram_tokenize(spark, sf)
+    seg = tokenizers._unigram_tokenize(spark, sf)
     assert seg.count() > 0
-    costs = E._unigram_costs_for(spark, sf)
+    costs = tokenizers._unigram_costs_for(spark, sf)
     multi = [p for p in costs if len(p) > 1]
     assert multi, "pruned vocab has no multi-char pieces"
 

@@ -102,6 +102,13 @@ def _legacy(args) -> int:
 
 
 def _run_csv_import(cfg, out: str, fmt: str) -> int:
+    """Import the configured files and print one JSON record: the
+    written node count and, when rel files ran, the ``rel_import``
+    counters (n_input / n_resolved / n_skipped). Both come from
+    Observations on the writes; nothing is read back."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from batch_import_spark.config import to_files
     from batch_import_spark.operators.graph_import import (
         INDEX_SCHEMA,
@@ -124,7 +131,7 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
     # it does not fail. No fallback to the unfiltered list: that would
     # reintroduce exactly the paths toFiles dropped.
     nodes_files = to_files(",".join(cfg.nodes_files)) if cfg.nodes_files else []
-    nodes = None
+    record = {"job": "import-csv", "out": out, "n_nodes": 0}
     index_entries = local_frame(spark, [], INDEX_SCHEMA)
     if nodes_files:
         nodes = import_nodes(
@@ -134,7 +141,13 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
             )
         )
         index_entries = nodes.index_entries
-        sink.write(nodes.nodes, "nodes", mode=mode)
+        obs_nodes = Observation()
+        sink.write(
+            nodes.nodes.observe(obs_nodes, F.count(F.lit(1)).alias("n_nodes")),
+            "nodes",
+            mode=mode,
+        )
+        record.update(obs_nodes.get)
     rel_index_entries = local_frame(spark, [], REL_INDEX_SCHEMA)
     for info in cfg.indexes.values():
         # standalone index files — only existing, readable ones import
@@ -163,12 +176,9 @@ def _run_csv_import(cfg, out: str, fmt: str) -> int:
         )
         sink.write(rels.edges, "edges", mode=mode)
         rel_index_entries = rel_index_entries.unionByName(rels.index_entries)
-        print(f"import-csv: {rels.observation.get}")
+        record.update(rels.observation.get)
     sink.write(rel_index_entries, "rel_index_entries", mode=mode)
-    if nodes is not None:
-        print(f"import-csv: wrote {sink.read('nodes').count()} nodes to {out}")
-    else:
-        print(f"import-csv: no node files; wrote index/rel stages to {out}")
+    print(json.dumps(record))
     return 0
 
 

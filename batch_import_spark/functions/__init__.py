@@ -1,6 +1,5 @@
 from batch_import_spark.functions.text import (  # noqa: F401
     doc_fingerprint,
     language_id,
-    quality_features,
     token_count,
 )

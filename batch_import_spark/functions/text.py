@@ -9,7 +9,7 @@ are its type casts (Type.java:5-182).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # minimal per-language stopword profiles for the n-gram/stopword
@@ -55,37 +55,6 @@ def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
     n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(F.size(toks) > 0, n_sw / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach standard quality-scoring features.
-
-    length / token / punctuation / stopword signals à la C4/Gopher
-    quality filters — all codegen'd expressions.
-    """
-    return (
-        df.withColumn("n_chars_m", F.length(text_col))
-        .withColumn("n_tokens", token_count(text_col))
-        .withColumn(
-            "mean_token_len",
-            F.when(
-                token_count(text_col) > 0,
-                (F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))).cast("double")
-                / token_count(text_col),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("stopword_ratio_en", stopword_ratio(text_col, "en"))
-        .withColumn(
-            "quality_score",
-            F.round(
-                F.least(F.lit(1.0), F.col("n_tokens") / F.lit(100.0)) * 0.5
-                + (1.0 - F.least(F.lit(1.0), F.col("punct_ratio") * 5)) * 0.3
-                + F.least(F.lit(1.0), F.col("stopword_ratio_en") * 4) * 0.2,
-                4,
-            ),
-        )
-    )
 
 
 def language_id(col: Column | str) -> Column:

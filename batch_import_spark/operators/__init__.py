@@ -21,7 +21,6 @@ from batch_import_spark.operators.similarity import (  # noqa: F401
 from batch_import_spark.operators.buckets import cap_hot_buckets  # noqa: F401
 from batch_import_spark.operators.dedup import near_dup_resolution  # noqa: F401
 from batch_import_spark.operators.graph_stats import triangle_counts, undirected_edges  # noqa: F401
-from batch_import_spark.operators.bucketing import bucketed_join, write_bucketed  # noqa: F401
 from batch_import_spark.operators.sampling import (  # noqa: F401
     hash_sample,
     mixture_sample,
@@ -50,13 +49,9 @@ from batch_import_spark.operators.conversations import (  # noqa: F401
     sessionize,
     tool_transitions,
 )
-from batch_import_spark.operators.fuzzy import deletion_variants, fuzzy_join_ed1  # noqa: F401
+from batch_import_spark.operators.fuzzy import fuzzy_join_ed1  # noqa: F401
 from batch_import_spark.operators.sketches import hll_sketch  # noqa: F401
 from batch_import_spark.operators.graph_stats import pagerank_weighted  # noqa: F401
 from batch_import_spark.operators.skew import salted_join  # noqa: F401
 from batch_import_spark.operators.cooccur import cooccurrence_lift  # noqa: F401
-from batch_import_spark.operators.layout import (  # noqa: F401
-    read_time_range,
-    write_time_partitioned,
-)
 from batch_import_spark.operators.contamination import containment_pairs  # noqa: F401

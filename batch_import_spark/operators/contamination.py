@@ -28,8 +28,9 @@ def _ngrams_from_tokens(toks: Column, n: int) -> Column:
     """Array of space-joined word n-grams of a TOKEN-ARRAY column
     (empty when the document has fewer than n tokens).
 
-    Built from ``arrays_zip`` over n shifted slices (the word_shingles
-    discipline, dedup.py:62): each zipped element is O(1) to read. The
+    Built from ``arrays_zip`` over n shifted slices (the
+    dedup._shingles_from_tokens discipline): each zipped element is
+    O(1) to read. The
     previous per-index ``slice(toks, i, n)`` lambda re-evaluated the
     whole filter(split(...)) tokenization PER ELEMENT — O(len²)
     interpreted work per document (round-7 plan audit: the dominant

@@ -1,13 +1,13 @@
 """Deduplication operators for web-scale corpora.
 
-Five strategies, cheapest-first; all but SimHash are pure column
-expressions (JVM codegen, no Python):
+Five strategies, cheapest-first; all are pure column expressions (JVM
+codegen, no Python):
 
 - exact:     hash-groupBy on a normalized fingerprint;
 - minhash:   word-shingle MinHash signatures + LSH banding →
              candidate pairs → exact Jaccard verification;
-- simhash:   64-bit near-dup bit signature (vectorized pandas UDF —
-             per-bit weighted sums are numpy territory);
+- simhash:   60-bit near-dup bit signature (md5 token hashes, 60
+             per-bit weighted sums in one groupBy);
 - ngram_jaccard: exact n-gram Jaccard on candidate pairs;
 - embedding near-dup: cosine ≥ τ pairs via bucketed join
              (similarity.py provides the kernels).
@@ -21,11 +21,8 @@ FileIterator.java:88-98 made value-level).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -59,32 +56,15 @@ def duplicate_groups(
 # --- shingles / jaccard ------------------------------------------------------
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text (expression).
+def _shingles_from_tokens(toks: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a TOKEN-ARRAY column.
 
     Built from ``arrays_zip`` over shifted slices — each zipped element
     is O(1) to read. (A per-index ``element_at`` formulation is O(len)
     per access ⇒ O(len²) per document: measured 10+ s on 500 long docs
-    vs ~1 s for this one.)
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "), " ")
-    k = F.size(toks) - (n - 1)
-    shifted = [F.slice(toks, j + 1, k) for j in range(n)]
-    zipped = F.arrays_zip(*shifted)
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)])
-    )
-    return F.array_distinct(
-        F.when(k > 0, grams).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
-def _shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """word_shingles over an already-projected TOKEN-ARRAY column —
-    same construction, but ``toks`` must be a plain column reference
-    (this expression reads it n + 3 times; an inlined tokenization
-    would re-split the text per reference — round 7)."""
+    vs ~1 s for this one.) ``toks`` must be a plain column reference:
+    this expression reads it n + 3 times, and an inlined tokenization
+    would re-split the text per reference (round 7)."""
     k = F.size(toks) - (n - 1)
     shifted = [F.slice(toks, j + 1, k) for j in range(n)]
     zipped = F.arrays_zip(*shifted)
@@ -251,7 +231,7 @@ def minhash_near_duplicates(
         .where(F.col("id_a") != F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact verify: arrays are distinct per doc (word_shingles), so
+    # exact verify: arrays are distinct per doc (_shingles_from_tokens), so
     # |A∩B| = size(array_intersect) and |A∪B| = n_a + n_b - |A∩B|
     # merge-hint the corpus-side shingle table: the checkpointed RDD
     # scan has no honest size estimate, and Catalyst was choosing it as
@@ -316,49 +296,7 @@ def ngram_jaccard_pairs(
     )
 
 
-# --- SimHash -----------------------------------------------------------------
-
-
-def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    """64-bit SimHash over word tokens (vectorized pandas UDF).
-
-    Per-bit weighted majority over token hashes — genuinely bit-level
-    numpy work, the designated Python-kernel case (Arrow-batched, not
-    per-row).
-    """
-    @pandas_udf("long")
-    def _simhash(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            toks = t.lower().split()
-            if not toks:
-                continue
-            # deterministic 64-bit token hashes (FNV-1a, pure python int)
-            hs = np.fromiter(
-                (_fnv1a64(tok) for tok in toks), dtype=np.uint64, count=len(toks)
-            )
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int64)
-            weights = (2 * bits - 1).sum(axis=0)
-            sig = np.uint64(0)
-            for b in np.nonzero(weights > 0)[0]:
-                sig |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _simhash(F.col(text_col)))
-
-
-def _fnv1a64(s: str) -> int:
-    h = 0xCBF29CE484222325
-    for ch in s.encode("utf-8"):
-        h ^= ch
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-# --- expression-based SimHash (JVM codegen, oracle-reproducible) -------------
+# --- SimHash (JVM codegen, oracle-reproducible) ------------------------------
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit long
 
@@ -382,9 +320,9 @@ def simhash_expr(
     (map-side combinable; shuffle = 60 longs per doc) → signature
     assembly. The flat explode+groupBy formulation deliberately avoids
     60 nested array-lambda aggregates in one expression (JIT method-
-    limit blowups; see minhash note above). Tokenization matches the
-    pandas kernel: lowercase, whitespace split, empties dropped; docs
-    with no tokens get signature 0.
+    limit blowups; see minhash note above). Tokenization: lowercase,
+    whitespace split, empties dropped; docs with no tokens get
+    signature 0.
     """
     # explode the raw split array and drop empties with a codegen'd
     # row Filter instead of an interpreted array-lambda filter (same
@@ -440,7 +378,6 @@ def simhash_near_duplicates(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    kernel: str = "expr",
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
@@ -452,9 +389,8 @@ def simhash_near_duplicates(
     EXACT pair set (candidate generation is lossless), which is what
     the DuckDB oracle checks. Larger ``max_hamming`` ⇒ more, shorter
     blocks ⇒ bigger buckets and more shuffle — the scale knob.
-    ``kernel``: "expr" = 60-bit md5-based JVM expressions (default,
-    oracle-reproducible); "pandas" = 64-bit FNV-1a vectorized-numpy
-    kernel (the Python-kernel demonstration path). ``max_bucket_size``
+    Signatures are the 60-bit md5-based JVM expressions of
+    :func:`simhash_expr` (oracle-reproducible). ``max_bucket_size``
     is the degenerate-block guard (operators.buckets), ON by default
     (10k) — e.g. all empty docs share signature 0 and land in every
     block bucket together; over-cap blocks are dropped lazily in-plan
@@ -463,12 +399,7 @@ def simhash_near_duplicates(
     oracle posture); for counted/logged drops use
     operators.buckets.cap_hot_buckets with ``eager_stats=True``.
     """
-    if kernel == "expr":
-        sh = simhash_expr(df, text_col, id_col).select(F.col(id_col).alias("id"), "simhash")
-        sig_bits = SIMHASH_BITS
-    else:
-        sh = simhash(df, text_col).select(F.col(id_col).alias("id"), "simhash")
-        sig_bits = 64
+    sh = simhash_expr(df, text_col, id_col).select(F.col(id_col).alias("id"), "simhash")
     # materialize the signature table once: the block index feeds the
     # bucket-cap stats, the join's left side AND its right side —
     # without this each branch re-runs the full explode + 60-sum
@@ -476,9 +407,9 @@ def simhash_near_duplicates(
     # (id, long) — O(corpus doc count), trivially materializable.
     sh = sh.localCheckpoint(eager=False)
     n_blocks = max_hamming + 1
-    if n_blocks > sig_bits:
-        raise ValueError(f"max_hamming {max_hamming} too large for {sig_bits}-bit signature")
-    base, rem = divmod(sig_bits, n_blocks)
+    if n_blocks > SIMHASH_BITS:
+        raise ValueError(f"max_hamming {max_hamming} too large for {SIMHASH_BITS}-bit signature")
+    base, rem = divmod(SIMHASH_BITS, n_blocks)
     starts, s = [], 0
     for i in range(n_blocks):
         size = base + (1 if i < rem else 0)

@@ -50,9 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_import_spark.functions.unigram import ilog2_fp
-from batch_import_spark.operators.lm import _adjacent_pairs, _words
-from batch_import_spark.operators.sketches import portable_bucket, portable_hash60
-from batch_import_spark.session import local_frame
+from batch_import_spark.operators.sketches import portable_bucket
 
 N_BUCKETS = 128
 
@@ -124,46 +122,6 @@ def _hashed_gram_rows(
     )
 
 
-def _bucket_log_probs(
-    feats: DataFrame,
-    spark,
-    n_buckets: int,
-    count_col: str = "cnt",
-) -> DataFrame:
-    """(bucket, lp_fp): add-one-smoothed fixed-point log2 probability
-    per bucket over the FULL 0..B-1 grid (zero-count buckets get the
-    smoothed floor).
-
-    The bucket count table is n_buckets rows BY CONTRACT, so the log
-    runs driver-side on the collected counts (``ilog2_fp``, pinned
-    equal to its column twin in tests/test_unigram.py): the unrolled
-    integer-log COLUMN tree costs ~2 s of analysis/codegen per query
-    at any data size (measured at sf0.1), which dominated the whole
-    DSIR entry when paid four times. One n_buckets-row collect per LM
-    is the same bounded-driver-traffic discipline as the BPE/unigram
-    vocab folds."""
-    lp = _bucket_log_prob_map(feats, n_buckets, count_col)
-    return local_frame(spark, sorted(lp.items()), "bucket int, lp_fp long")
-
-
-def _bucket_log_prob_map(
-    feats: DataFrame, n_buckets: int, count_col: str = "cnt"
-) -> dict[int, int]:
-    """The driver-side core of ``_bucket_log_probs``: bucket →
-    add-one-smoothed fixed-point log2 probability."""
-    counts = {
-        int(r.bucket): int(r.c)
-        for r in feats.groupBy("bucket")
-        .agg(F.sum(count_col).cast("long").alias("c"))
-        .collect()
-    }
-    total = sum(counts.values()) + n_buckets
-    it = ilog2_fp(total)
-    return {
-        b: ilog2_fp(counts.get(b, 0) + 1) - it for b in range(n_buckets)
-    }
-
-
 def dsir_lambda_map(
     ff: DataFrame,
     n_buckets: int,
@@ -175,8 +133,9 @@ def dsir_lambda_map(
     a streaming screen or broadcast as a tiny table). Both corpora's
     bucket totals come from ONE map-side-combinable aggregation (the
     flag split is a conditional sum, not two scans); the smoothed
-    fixed-point logs are the same driver-side ilog2_fp as
-    :func:`_bucket_log_prob_map`."""
+    fixed-point logs are computed driver-side with ilog2_fp (pinned
+    equal to its column twin in tests/test_unigram.py) on the
+    n_buckets collected totals."""
     rows = (
         ff.groupBy("bucket")
         .agg(

@@ -23,23 +23,8 @@ The candidate verify is a scalar function on matched pairs only.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def deletion_variants(col: Column | str) -> Column:
-    """Array of the string itself plus every single-character
-    deletion (index 0 keeps s; index i ≥ 1 deletes character i)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(
-        F.sequence(F.lit(0), F.length(c), F.lit(1)),
-        lambda i: F.when(i == 0, c).otherwise(
-            F.concat(
-                c.substr(F.lit(1), i - 1),
-                c.substr(i + 1, F.length(c)),
-            )
-        ),
-    )
 
 
 def fuzzy_join_ed1(

@@ -1,57 +1,18 @@
-"""At-rest file layout for time-ranged access at 100 TB.
+"""At-rest file layout: a Z-order clustering key for data skipping.
 
-A transcript/event corpus is almost always queried by time window; a
-flat parquet pile makes every such query a full scan. Writing
-hive-partitioned by a date column turns time predicates into
-PARTITION PRUNING — the scan never opens non-matching directories,
-which at 10^12-turn scale is the difference between touching one day
-and touching three years.
-
-``write_time_partitioned`` also sorts within partitions by the given
-keys so per-file min/max column statistics stay tight (row-group skip
-pruning inside each day — the poor man's Z-order for one dimension).
-The reference has no storage layout layer at all (it streams into
-Neo4j's store files); this is the Spark-native equivalent concern.
+Per-file min/max column statistics prune a parquet scan only when the
+rows inside each file are close in the filtered column. Sorting by one
+column keeps one dimension tight; ``zorder_key`` interleaves two, so a
+sort or bucketing on it keeps files tight in BOTH (the layout behind
+Delta/Iceberg OPTIMIZE ZORDER). The reference has no storage layout
+layer at all (it streams into Neo4j's store files); this is the
+Spark-native equivalent concern.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    sort_cols: list[str] | None = None,
-    partition_col: str = "event_date",
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet hive-partitioned by the DATE of
-    ``ts_col``; optionally sort within each written partition so
-    min/max stats prune row groups on ``sort_cols`` predicates."""
-    out = df.withColumn(partition_col, F.to_date(F.col(ts_col)))
-    if sort_cols:
-        out = out.repartition(F.col(partition_col)).sortWithinPartitions(
-            *sort_cols
-        )
-    out.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def read_time_range(
-    spark: SparkSession,
-    path: str,
-    start_date: str,
-    end_date: str,
-    partition_col: str = "event_date",
-) -> DataFrame:
-    """Read only the partitions in [start_date, end_date] — the date
-    predicate lands in the scan's PartitionFilters (verify with
-    ``.explain``), so non-matching directories are never opened."""
-    return spark.read.parquet(path).where(
-        (F.col(partition_col) >= start_date) & (F.col(partition_col) <= end_date)
-    )
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:

@@ -5,8 +5,8 @@ Language Models: ... Gopher", §A1.1) removes documents dominated by
 repeated content: boilerplate lines, duplicated paragraphs, and
 over-represented n-grams. The reference has no notion of document
 quality (its scalar surface is CSV type casts, Type.java:5-182) —
-this completes the training-data quality stage next to
-functions/text.py quality_features and operators/lm.py scoring.
+this completes the training-data quality stage next to the
+text_quality query (queries/text.py) and operators/lm.py scoring.
 
 Per document, in exact integer ppm (floor division — bit-identical
 across engines, no float thresholds):

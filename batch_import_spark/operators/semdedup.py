@@ -54,7 +54,6 @@ from pyspark.sql import types as T
 
 from batch_import_spark.operators.similarity import (
     _assign_cells_arrow,
-    _nearest_cell,
     _seq_dot_matrix,
     ivf_seed_centroids,
 )
@@ -244,7 +243,6 @@ def semantic_dedup(
     max_cell: int = 2_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Per-document semantic-dedup verdict.
 
@@ -260,10 +258,9 @@ def semantic_dedup(
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).localCheckpoint(eager=False)
-    if centroids is None:
-        centroids = ivf_seed_centroids(base, n_cells, "id", "v")
+    centroids = ivf_seed_centroids(base, n_cells, "id", "v")
     # assignment + per-row norm in one Arrow kernel (bit-identical to
-    # the _nearest_cell/_dot expression path, whose interpreted
+    # the argmax-dot/_dot expression path, whose interpreted
     # higher-order lambdas cost ~5 s at 20k rows — round 7); the norm
     # is computed once per ROW here, not once per pair, with the same
     # IEEE steps the oracle takes

@@ -10,8 +10,7 @@ Three paths:
   exactly. The scale path: the join keys on (table, bucket) so only
   colliding vectors are compared.
 - ``ivf_ann_topk``  — inverted-file (IVF) coarse quantization:
-  deterministic seed centroids (optionally Lloyd-refined with
-  spherical k-means as DataFrame ops), argmax-dot cell assignment in
+  deterministic seed centroids, argmax-dot cell assignment in
   codegen, n_probe cell routing per query, exact re-rank. The other
   scale path: candidate count is ~N·n_probe/n_cells, and the
   inverted lists partition cleanly by cell for storage-side pruning.
@@ -52,9 +51,11 @@ def _seq_dot_matrix(V: np.ndarray, C: np.ndarray) -> np.ndarray:
 def _assign_cells_arrow(
     base: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """(id, v, cell, nrm) via one Arrow kernel — bit-identical to
-    ``withColumn("cell", _nearest_cell(...)).withColumn("nrm",
-    sqrt(dot(v, v)))`` (pinned by tests/test_round7_semdedup.py):
+    """(id, v, cell, nrm) via one Arrow kernel — bit-identical to the
+    argmax-dot expression path ``withColumn("cell", _nearest_cell(...))
+    .withColumn("nrm", sqrt(dot(v, v)))`` that
+    tests/test_round7_pq.py::_nearest_cell rebuilds (pinned by
+    tests/test_round7_semdedup.py):
 
     - per-cell scores accumulate over dimensions in ascending order
       (same IEEE sequence as the zip_with fold);
@@ -137,21 +138,6 @@ def l2_norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def unit(a: Column) -> Column:
-    """Scale to unit L2 norm (zero vectors pass through).
-
-    CAUTION — do not feed the result into further HOF lambdas in the
-    same plan: the optimizer collapses projections and inlines the
-    per-element norm recomputation into every lambda reference (a
-    measured 14× row-cost blowup in the IVF path). The similarity
-    operators therefore keep vectors RAW and use ``cosine()``
-    (dot / |a|·|b|) or scale-invariant argmax/sign tests instead;
-    ``unit`` remains for single-pass uses (e.g. centroid means).
-    """
-    n = l2_norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
 
 
 def cosine_topk(
@@ -320,29 +306,6 @@ def _cell_scores(vec_col: str, centroids: list[list[float]]) -> Column:
     )
 
 
-def _nearest_cell(vec_col: str, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid id by max dot product (ties → lowest cell id).
-
-    No join, no shuffle — one higher-order expression per row over
-    the constant centroid matrix (IVF keeps n_cells ≲ √N by design).
-    """
-    vec = F.col(vec_col)
-    best = F.array_max(
-        F.transform(
-            _cents_lit(centroids),
-            lambda cv, i: F.struct(
-                F.aggregate(
-                    F.zip_with(vec, cv, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
-                ).alias("score"),
-                (-i).alias("neg_cell"),
-            ),
-        )
-    )
-    return (-best["neg_cell"]).cast("int")
-
-
 def ivf_seed_centroids(
     corpus: DataFrame, n_cells: int, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> list[list[float]]:
@@ -368,59 +331,12 @@ def ivf_seed_centroids(
     return out
 
 
-def ivf_refine_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Spherical k-means Lloyd steps over the corpus (DataFrame ops).
-
-    Each step: argmax-dot assignment (codegen), element-wise mean per
-    cell (posexplode → groupBy(cell, pos) — one shuffle of N·dim
-    scalars, map-side combinable), renormalize driver-side. Only
-    n_cells × dim values ever reach the driver. Empty cells keep
-    their previous centroid.
-    """
-    import math as _math
-
-    # assignment runs on RAW vectors: centroids are unit, so argmax-dot
-    # is invariant to each row's positive norm — and keeping unit() out
-    # of the assignment lambda avoids the optimizer inlining a
-    # per-element norm recomputation (measured 14x row cost)
-    c = corpus.select(F.col(vec_col).alias("v"))
-    for _ in range(iters):
-        assigned = c.withColumn("cell", _nearest_cell("v", centroids))
-        comp = (
-            assigned.select("cell", F.posexplode(unit(F.col("v"))).alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("m"))
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in comp:
-            by_cell.setdefault(r.cell, {})[r.pos] = r.m
-        new = []
-        for i, old in enumerate(centroids):
-            if i not in by_cell:
-                new.append(old)
-                continue
-            m = [by_cell[i].get(p, 0.0) for p in range(len(old))]
-            n = _math.sqrt(sum(x * x for x in m)) or 1.0
-            new.append([x / n for x in m])
-        centroids = new
-    return centroids
-
-
 def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     n_cells: int = 16,
     n_probe: int = 4,
     k: int = 10,
-    refine_iters: int = 0,
-    centroids: list[list[float]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -443,14 +359,9 @@ def ivf_ann_topk(
     norm recomputation into every HOF lambda reference — a measured
     14× row-cost blowup.
     """
-    if centroids is None:
-        centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
-    if refine_iters:
-        centroids = ivf_refine_centroids(
-            corpus, centroids, refine_iters, id_col, vec_col
-        )
+    centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
     # corpus assignment via the Arrow kernel (bit-identical to the
-    # _nearest_cell expression; the kernel's per-row norm is the same
+    # argmax-dot expression path; the kernel's per-row norm is the same
     # sqrt(sequential sum of squares) l2_norm computes, so the
     # re-rank below reuses it instead of re-folding the corpus vector
     # twice per candidate pair)
@@ -578,130 +489,6 @@ def pq_codebook_from_corpus(
     return book
 
 
-def pq_refine_codebook(
-    rq_df: DataFrame,
-    book: list[list[list[int]]],
-    iters: int = 1,
-) -> list[list[list[int]]]:
-    """Lloyd refinement of the PQ codebook over the corpus residuals
-    (``rq_df`` must have an array<long> column ``rq``): assign every
-    residual sub-vector to its nearest codeword (argmin L2², ties →
-    lowest code — BIGINT exact), recompute each codeword as the
-    component-wise mean of its members. The mean uses
-    floor(double(sum) / count): both engines evaluate the identical
-    IEEE division (exact inputs, one rounding), so the refined book
-    is still closed-form replayable — plain BIGINT `div` would NOT be
-    (Spark truncates toward zero, DuckDB floors, and residual sums go
-    negative). Empty codes keep their codeword. Driver traffic per
-    iter: m_sub x k_codes x ds integers.
-
-    Round 7: the per-iteration assignment + component sums run in one
-    Arrow kernel emitting PARTIAL (m, code, pos, s, n) rows per batch
-    (≤ m_sub·k_codes·ds each — bounded), summed by one tiny JVM
-    aggregate; integer sums are order-independent, so the refined
-    book is bit-identical to the expression path (pinned by
-    tests/test_round7_pq.py)."""
-    import math as _math
-
-    m_sub = len(book)
-    ds = len(book[0][0])
-    schema = T.StructType(
-        [
-            T.StructField("m", T.IntegerType()),
-            T.StructField("code", T.IntegerType()),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    for _ in range(iters):
-        B = np.asarray(book, dtype=np.int64)
-
-        def partials(batches, B=B):
-            for pdf in batches:
-                acc_s = np.zeros((m_sub, B.shape[1], ds), dtype=np.int64)
-                acc_n = np.zeros((m_sub, B.shape[1], ds), dtype=np.int64)
-                slow = []
-                fast_rows = []
-                for rq in (_rq_norm(x) for x in pdf["rq"]):
-                    if (
-                        rq is not None
-                        and len(rq) == m_sub * ds
-                        and all(x is not None for x in rq)
-                    ):
-                        fast_rows.append(np.asarray(rq, dtype=np.int64))
-                    elif rq is not None:
-                        slow.append(rq)
-                if fast_rows:
-                    RQ = np.stack(fast_rows)
-                    for m in range(m_sub):
-                        sub = RQ[:, m * ds : (m + 1) * ds]
-                        diff = sub[:, None, :] - B[m][None, :, :]
-                        D = np.einsum("ijk,ijk->ij", diff, diff)
-                        codes = np.argmin(D, axis=1)
-                        np.add.at(acc_s[m], codes, sub)
-                        ones = np.ones((len(codes), ds), dtype=np.int64)
-                        np.add.at(acc_n[m], codes, ones)
-                for rq in slow:
-                    # malformed residuals replicate the expression
-                    # path: a subspace slice that is short or touches
-                    # a NULL assigns code 0 (all-NULL distances); the
-                    # component sums skip NULL values but count every
-                    # present position row
-                    L = len(rq)
-                    for m in range(m_sub):
-                        lo, hi = m * ds, (m + 1) * ds
-                        seg = rq[lo:min(hi, L)]
-                        if len(seg) < ds or any(x is None for x in seg):
-                            code = 0
-                        else:
-                            sv = np.asarray(seg, dtype=np.int64)
-                            D = ((sv[None, :] - B[m]) ** 2).sum(axis=1)
-                            code = int(np.argmin(D))
-                        for p, val in enumerate(seg):
-                            if val is not None:
-                                acc_s[m][code][p] += val
-                            acc_n[m][code][p] += 1
-                nz = np.nonzero(acc_n)
-                yield pd.DataFrame(
-                    {
-                        "m": nz[0].astype(np.int32),
-                        "code": nz[1].astype(np.int32),
-                        "pos": nz[2].astype(np.int32),
-                        "s": acc_s[nz],
-                        "n": acc_n[nz],
-                    }
-                )
-
-        comp = (
-            rq_df.select("rq")
-            .mapInPandas(partials, schema)
-            .groupBy("m", "code", "pos")
-            .agg(
-                F.sum("s").cast("long").alias("s"),
-                F.sum("n").cast("long").alias("n"),
-            )
-            .collect()
-        )
-        by_key: dict[tuple[int, int], dict[int, int]] = {}
-        for r in comp:
-            by_key.setdefault((r.m, r.code), {})[r.pos] = int(
-                _math.floor(float(r.s) / r.n)
-            )
-        new_book = []
-        for m in range(m_sub):
-            words = []
-            for j in range(len(book[m])):
-                got = by_key.get((m, j))
-                if got is None:
-                    words.append(book[m][j])
-                else:
-                    words.append([got.get(p, 0) for p in range(ds)])
-            new_book.append(words)
-        book = new_book
-    return book
-
-
 def _long_lit_2d(arr: list[list[int]]) -> Column:
     # ONE nested-list literal + one cast: building this element-wise
     # (F.lit + .cast per element) costs two py4j round-trips per
@@ -759,39 +546,6 @@ def _pq_residuals(
             )
 
     return base.mapInPandas(kernel, schema).localCheckpoint(eager=False)
-
-
-def _pq_assign_codes(
-    rq_df: DataFrame, book: list[list[list[int]]], m_sub: int
-) -> DataFrame:
-    """(vec_id, cell, codes): argmin-L2 codeword per subspace over a
-    FROZEN codebook (ties -> lowest code, BIGINT exact)."""
-    ds = len(book[0][0])
-    zero = F.lit(0).cast("long")
-    book_lit = _long_lit_3d(book)
-    return rq_df.withColumn(
-        "codes",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m_sub - 1)),
-            lambda m: F.array_min(
-                F.transform(
-                    F.get(book_lit, m),
-                    lambda cw, j: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                F.slice(F.col("rq"), m * ds + 1, ds),
-                                cw,
-                                lambda x, y: (x - y) * (x - y),
-                            ),
-                            zero,
-                            lambda acc, x: acc + x,
-                        ).alias("d"),
-                        j.alias("j"),
-                    ),
-                )
-            )["j"].cast("int"),
-        ),
-    ).select("vec_id", "cell", "codes")
 
 
 def _pq_cell_rq_rows(pdf, centroids_np, qcents_np, scale):
@@ -879,10 +633,11 @@ def _pq_assign_codes_arrow(
     rq_df: DataFrame, book: list[list[list[int]]], m_sub: int
 ) -> DataFrame:
     """(vec_id, cell, codes) from a residual table — the Arrow twin of
-    :func:`_pq_assign_codes` (argmin-L2² per subspace over the frozen
-    codebook, ties -> lowest code; all-int64, so exact in any
-    summation order; NULL-touching subspaces -> code 0, the
-    all-NULL-distance struct-min)."""
+    the expression-path code assignment that
+    tests/test_round7_pq.py::_expr_encode rebuilds (argmin-L2² per
+    subspace over the frozen codebook, ties -> lowest code; all-int64,
+    so exact in any summation order; NULL-touching subspaces -> code
+    0, the all-NULL-distance struct-min)."""
     B = np.asarray(book, dtype=np.int64)
     _, k_codes, ds = B.shape
     dim = m_sub * ds
@@ -940,14 +695,14 @@ def _pq_encode_arrow(
     vec_col: str,
 ) -> DataFrame:
     """(vec_id, cell, codes) in ONE Arrow kernel — bit-identical to
-    ``_pq_assign_codes(_pq_residuals(...))`` (pinned by
-    tests/test_round7_pq.py): the cell argmax accumulates dots over
-    dimensions in ascending order (the zip_with fold's IEEE
-    sequence; ties to the lowest cell), quantization replays
-    floor(x*scale) per element, and everything after quantization is
-    int64 (exact in any summation order). The interpreted
-    higher-order path costs ~1024 lambda evals per vector; this is
-    three vectorized numpy passes."""
+    the expression path (rebuilt and pinned by
+    tests/test_round7_pq.py::_expr_encode): the cell argmax
+    accumulates dots over dimensions in ascending order (the zip_with
+    fold's IEEE sequence; ties to the lowest cell), quantization
+    replays floor(x*scale) per element, and everything after
+    quantization is int64 (exact in any summation order). The
+    interpreted higher-order path costs ~1024 lambda evals per vector;
+    this is three vectorized numpy passes."""
     C = np.asarray(centroids, dtype=np.float64)
     qcents = np.asarray(
         [[math.floor(x * scale) for x in cv] for cv in centroids],
@@ -1056,8 +811,6 @@ def ivf_pq_topk(
     k_codes: int = 16,
     k: int = 10,
     scale: int = PQ_SCALE,
-    refine_iters: int = 1,
-    centroids: list[list[float]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -1086,8 +839,7 @@ def ivf_pq_topk(
     codes) — never the raw vectors, so the shuffle/broadcast payload
     drops by the same ~100x as the storage.
     """
-    if centroids is None:
-        centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
+    centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
     book = pq_codebook_from_corpus(
         corpus, centroids, m_sub, k_codes, id_col, vec_col, scale,
         skip=n_cells,
@@ -1096,8 +848,6 @@ def ivf_pq_topk(
     ds = dim // m_sub
     zero = F.lit(0).cast("long")
     rq_base = _pq_residuals(corpus, centroids, scale, id_col, vec_col)
-    if refine_iters:
-        book = pq_refine_codebook(rq_base.select("rq"), book, refine_iters)
     assigned = _pq_assign_codes_arrow(rq_base, book, m_sub)
     # Query side: queries are small by contract (the same broadcast
     # assumption every path in this module makes), so the classic ADC

@@ -48,8 +48,22 @@ from pyspark.sql.window import Window
 
 from batch_import_spark.operators.ids import stable_id
 from batch_import_spark.operators.linking import build_unique_alias_dict
-from batch_import_spark.pipeline.extract import extract_mentions
+from batch_import_spark.pipeline.extract import extract_mentions, extract_mentions_expr
 from batch_import_spark.session import DRIVER_CC_THRESHOLD, local_frame
+
+EXTRACTORS = {"pandas": extract_mentions, "expr": extract_mentions_expr}
+
+
+def extractor(extraction: str):
+    """The mention extractor named ``extraction``; an unknown name
+    raises before any Spark job (a typo must not fall back to a kernel
+    nobody asked for)."""
+    if extraction not in EXTRACTORS:
+        raise ValueError(
+            f"extraction must be one of {sorted(EXTRACTORS)}, got {extraction!r}"
+        )
+    return EXTRACTORS[extraction]
+
 
 # observability for the broadcast-vs-shuffle dictionary decision:
 # filled by prepare_link_dict on every call (path, driver_threshold,
@@ -255,22 +269,18 @@ def run_kg_pipeline(
     ``link_dict`` (prepare_link_dict) to amortize dictionary prep
     across repeated runs. ``extraction``: "pandas" (Arrow-batched
     kernel, the general path) or "expr" (pure JVM regexp expressions —
-    identical output for regex-expressible grammars, no Python workers).
+    identical output for regex-expressible grammars, no Python workers);
+    any other name raises ``ValueError`` before any Spark job.
     ``by``: grouping expressions over mention rows (conv_id, turn_idx,
     surfaces), put in front of the triple grain — the ``resume`` job
     passes its conversation bucket, so each bucket's edges fold into
     the ``kg`` job's by ``merge_kg_edges``. With ``by=()`` the plan is
     the ``kg`` job's.
     """
+    extract = extractor(extraction)
     obs_turns = Observation()
     t = transcripts.observe(obs_turns, F.count(F.lit(1)).alias("n_turns"))
-
-    if extraction == "expr":
-        from batch_import_spark.pipeline.extract import extract_mentions_expr
-
-        mentions = extract_mentions_expr(t)
-    else:
-        mentions = extract_mentions(t)
+    mentions = extract(t)
     if link_dict is None:
         link_dict = prepare_link_dict(alias_dict)
     flagged, obs_link = _flag_links(mentions, link_dict)

@@ -483,7 +483,7 @@ def _simhash_near_dups(spark, sf):
     # max_hamming=3 + 4-block pigeonhole index ⇒ the output is the
     # EXACT hamming≤3 pair set — the oracle recomputes the 60-bit
     # md5-based SimHash independently and brute-forces all pairs
-    return simhash_near_duplicates(d, max_hamming=3, kernel="expr").select(
+    return simhash_near_duplicates(d, max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 

@@ -376,7 +376,6 @@ def _ivf_pq(spark, sf):
     )
     return ivf_pq_topk(
         emb, q, n_cells=16, n_probe=4, m_sub=8, k_codes=16, k=5,
-        refine_iters=0,
     ).select("query_id", "vec_id", "rank", "adc_dist")
 
 
@@ -687,7 +686,6 @@ def _pq_recall_audit(spark, sf):
     exact = cosine_topk(emb, q, k=5).select("query_id", "vec_id")
     pq = ivf_pq_topk(
         emb, q, n_cells=16, n_probe=4, m_sub=8, k_codes=16, k=5,
-        refine_iters=0,
     ).select("query_id", "vec_id")
     hits = (
         pq.join(exact, ["query_id", "vec_id"], "left_semi")

@@ -39,6 +39,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+FORMATS = ("auto", "iceberg", "parquet")
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -57,12 +60,17 @@ class GraphSink:
     """Writes/reads the ``nodes`` and ``edges`` tables of one graph.
 
     ``base``: an Iceberg table prefix (``catalog.db``) or a filesystem
-    directory. ``fmt``: "auto" | "iceberg" | "parquet".
+    directory. ``fmt``: "auto" | "iceberg" | "parquet"; any other
+    value raises ``ValueError`` at construction.
     """
 
     spark: SparkSession
     base: str
     fmt: str = "auto"
+
+    def __post_init__(self):
+        if self.fmt not in FORMATS:
+            raise ValueError(f"fmt must be one of {FORMATS}, got {self.fmt!r}")
 
     def _use_iceberg(self) -> bool:
         if self.fmt == "iceberg":
@@ -81,14 +89,14 @@ class GraphSink:
         """Full-table write. ``mode``: "overwrite" (replace, the
         reference's default destructive import) or "append" (keep_db)."""
         if self._use_iceberg():
-            w = df.writeTo(self._ident(table)).using("iceberg")
-            if mode == "append":
-                try:
-                    w.append()
-                except Exception:
-                    w.create()  # first append creates the table
-            else:
+            ident = self._ident(table)
+            w = df.writeTo(ident).using("iceberg")
+            if mode != "append":
                 w.createOrReplace()
+            elif self.spark.catalog.tableExists(ident):
+                w.append()
+            else:
+                w.create()  # first append creates the table
             return
         df.write.mode(mode).parquet(self._ident(table))
 
@@ -98,13 +106,11 @@ class GraphSink:
         """Idempotently replace exactly the partitions present in ``df``
         (the A6 checkpoint-unit re-run contract)."""
         if self._use_iceberg():
-            try:
-                df.writeTo(self._ident(table)).overwritePartitions()
-            except Exception:
-                # table does not exist yet → create partitioned
-                from pyspark.sql import functions as F
-
-                df.writeTo(self._ident(table)).using("iceberg").partitionedBy(
+            ident = self._ident(table)
+            if self.spark.catalog.tableExists(ident):
+                df.writeTo(ident).overwritePartitions()
+            else:
+                df.writeTo(ident).using("iceberg").partitionedBy(
                     *[F.col(c) for c in partition_by]
                 ).create()
             return

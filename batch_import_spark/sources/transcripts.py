@@ -24,7 +24,8 @@ Planted structure for the KG pipeline:
   NOT contain → exercises skip-unresolved counting
   (Importer.java:149-152);
 - conversation 0 is "hot": ``hot_factor``× the median turn count →
-  exercises salted repartitioning.
+  exercises conversation skew (its turns spread over the scan's
+  splits for extraction, but all land in one resume bucket).
 """
 
 from __future__ import annotations

@@ -41,6 +41,7 @@ def run_incremental_kg(
     `stream_kg_incremental` oracle).
     """
     from batch_import_spark.pipeline.kg import (
+        extractor,
         merge_kg_edges,
         prepare_link_dict,
         run_kg_pipeline,
@@ -49,6 +50,7 @@ def run_incremental_kg(
 
     import shutil
 
+    extractor(extraction)  # an unknown name fails before the dictionary's jobs
     if link_dict is None:
         link_dict = prepare_link_dict(alias_dict)
     state: dict = {"edges": None, "ids": set(), "batches": 0}

@@ -9,13 +9,11 @@ This module runs the SAME extract→link→canonicalize stages over a
   reused verbatim (stateless per micro-batch, so exactly the batch
   semantics apply per batch);
 - triple aggregation is windowed on event time with a watermark for
-  late turns;
-- the windowed-triples table is written by Spark's own parquet file
-  sink in append mode, with the streaming checkpoint for exactly-once
-  progress tracking (the streaming analog of the manifest, A6/A7). The
-  batch graph tables (nodes, edges, resume checkpoint) have one writer,
-  ``sinks.GraphSink``; continuous folds into them go through
-  streaming/incremental.py.
+  late turns (or a global running count for complete-mode sinks);
+- the caller picks the sink: the ``stream_kg_windowed`` query drains a
+  bounded replay into a memory sink. The batch graph tables (nodes,
+  edges, resume checkpoint) have one writer, ``sinks.GraphSink``;
+  continuous folds into them go through streaming/incremental.py.
 
 Scale notes: state is bounded by (watermark horizon × triple
 vocabulary), not the corpus; extraction is a narrow map over each
@@ -26,10 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from batch_import_spark.pipeline.extract import extract_mentions_pdf
-from batch_import_spark.pipeline.kg import link_and_canonicalize, prepare_link_dict
+from batch_import_spark.pipeline.kg import link_and_canonicalize
 
 
 def streaming_triples(
@@ -73,53 +70,5 @@ def streaming_triples(
             "pred",
             "obj",
             "n_occurrences",
-        )
-    )
-
-
-def start_kg_stream(
-    stream: DataFrame,
-    alias_dict: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-    trigger_seconds: int = 10,
-) -> StreamingQuery:
-    """Start the streaming KG query writing windowed triples to parquet.
-
-    Exactly-once: Spark's streaming checkpoint tracks source offsets;
-    the parquet sink appends per-batch files atomically under the
-    checkpoint's batch id.
-    """
-    link_dict = prepare_link_dict(alias_dict)
-    triples = streaming_triples(stream, link_dict, window_duration, watermark)
-    return (
-        triples.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
-def streaming_turn_stats(
-    stream: DataFrame, watermark: str = "10 minutes", window_duration: str = "5 minutes"
-) -> DataFrame:
-    """Per-window turn/role counts — the G1 throughput report as a
-    streaming aggregation."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "role")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "role",
-            "n_turns",
-            "n_convs",
         )
     )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from batch_import_spark.__main__ import main
 
 
@@ -20,10 +22,17 @@ def test_import_csv_cli(spark, tmp_path, capsys):
         ]
     )
     assert rc == 0
-    assert spark.read.parquet(f"{out}/nodes").count() == 2
+    n_nodes = spark.read.parquet(f"{out}/nodes").count()
+    assert n_nodes == 2
     edges = spark.read.parquet(f"{out}/edges").collect()
     assert len(edges) == 1 and edges[0]["rel_type"] == "KNOWS"
-    assert "n_skipped" in capsys.readouterr().out
+    # one JSON record, like kg and resume, from the writes' own counters
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 1
+    record = json.loads(lines[0])
+    assert record["job"] == "import-csv" and record["out"] == str(out)
+    assert record["n_nodes"] == n_nodes
+    assert (record["n_input"], record["n_resolved"], record["n_skipped"]) == (1, 1, 0)
 
 
 def test_legacy_positional_cli(spark, tmp_path):
@@ -101,8 +110,6 @@ def test_cli_jobs_print_their_run_record(spark, tmp_path, capsys):
     """``kg`` and ``resume`` each print one JSON record built from the
     run's own counters, with nothing read back: the printed ``n_linked``
     is the written edges' occurrences."""
-    import json
-
     from pyspark.sql import functions as F
 
     from batch_import_spark.sources.transcripts import generate_transcripts

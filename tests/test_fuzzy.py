@@ -3,13 +3,7 @@
 import datetime
 
 from batch_import_spark.operators.conversations import sessionize
-from batch_import_spark.operators.fuzzy import deletion_variants, fuzzy_join_ed1
-
-
-def test_deletion_variants(spark):
-    df = spark.createDataFrame([("abc",)], "s string")
-    got = df.select(deletion_variants("s").alias("v")).collect()[0]["v"]
-    assert got == ["abc", "bc", "ac", "ab"]
+from batch_import_spark.operators.fuzzy import fuzzy_join_ed1
 
 
 def _brute_pairs(lefts, rights):

@@ -375,3 +375,21 @@ def test_pipeline_has_one_triple_grain_group_by():
     checkpoint = (pipeline / "checkpoint.py").read_text()
     assert "extract_mentions" not in checkpoint
     assert "link_and_canonicalize" not in checkpoint
+
+
+def test_unknown_extraction_fails_before_any_job(spark, fixture_data):
+    """A misspelled kernel name raises instead of running the pandas
+    kernel, in the batch build and in the incremental fold alike."""
+    from batch_import_spark.streaming.incremental import run_incremental_kg
+
+    alias = alias_dict_df(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("kg-extraction", "kg-extraction")
+    try:
+        with pytest.raises(ValueError, match="extraction must be one of"):
+            run_kg_pipeline(fixture_data, alias, extraction="Expr")
+        with pytest.raises(ValueError, match="extraction must be one of"):
+            run_incremental_kg(fixture_data, alias, extraction="pandsa")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("kg-extraction") == []

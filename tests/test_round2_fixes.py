@@ -140,7 +140,7 @@ def test_simhash_expr_near_dups_exact_pairs(spark):
     )
     sig = {r["doc_id"]: r["simhash"] for r in simhash_expr(docs).collect()}
     assert sig[3] == 0
-    pairs = simhash_near_duplicates(docs, max_hamming=3, kernel="expr").collect()
+    pairs = simhash_near_duplicates(docs, max_hamming=3).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     # brute-force ground truth from the signatures themselves
     expected = {

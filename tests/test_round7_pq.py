@@ -1,6 +1,5 @@
-"""Round-7 pin: the Arrow PQ kernels (residuals, code assignment,
-codebook refinement) must be bit-identical to the expression path
-they replaced — same cell argmax, same floor-quantization, same
+"""Round-7 pin: the Arrow PQ kernels (residuals, code assignment)
+must be bit-identical to the expression path they replaced — same cell argmax, same floor-quantization, same
 argmin tie-breaks, same NULL flow for malformed rows."""
 
 from __future__ import annotations
@@ -11,14 +10,13 @@ import random
 from pyspark.sql import functions as F
 
 from batch_import_spark.operators.similarity import (
+    _cents_lit,
     _long_lit_2d,
     _long_lit_3d,
-    _nearest_cell,
     _q_int,
     ivf_seed_centroids,
     pq_codebook_from_corpus,
     pq_encode,
-    pq_refine_codebook,
 )
 
 PQ_SCALE = 1000
@@ -34,6 +32,26 @@ def _corpus(spark, n=200, dim=16, seed=13):
     rows.append((9_002, [0.5] * (dim + 3)))  # long
     rows.append((9_003, [0.0] * dim))  # zero vector
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _nearest_cell(vec_col, centroids):
+    """The pre-round-7 expression cell assignment, verbatim: nearest
+    centroid by max dot product, ties to the lowest cell id."""
+    vec = F.col(vec_col)
+    best = F.array_max(
+        F.transform(
+            _cents_lit(centroids),
+            lambda cv, i: F.struct(
+                F.aggregate(
+                    F.zip_with(vec, cv, lambda x, y: x * y),
+                    F.lit(0.0),
+                    lambda a, v: a + v,
+                ).alias("score"),
+                (-i).alias("neg_cell"),
+            ),
+        )
+    )
+    return (-best["neg_cell"]).cast("int")
 
 
 def _expr_encode(df, centroids, book, m_sub, scale=PQ_SCALE):
@@ -96,67 +114,3 @@ def test_pq_encode_matches_expression_path(spark):
     assert set(got) == set(want)
     for k in want:
         assert got[k] == want[k], f"vec {k}: {got[k]} != {want[k]}"
-
-
-def test_pq_refine_matches_expression_path(spark):
-    df = _corpus(spark)
-    well = df.where(F.col("vec_id") < 9_000)
-    cents = ivf_seed_centroids(well, 8)
-    book = pq_codebook_from_corpus(well, cents, 4, 8, skip=8)
-    rq = _expr_encode(df, cents, book, 4).select("vec_id", "cell", "rq")
-    # expression-path refinement, verbatim (one iteration)
-    import math as _math
-
-    ds = len(book[0][0])
-    zero = F.lit(0).cast("long")
-    book_lit = _long_lit_3d(book)
-    sub = rq.select(
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("m"), F.col("rq")
-    ).select("m", F.slice(F.col("rq"), F.col("m") * ds + 1, ds).alias("sv"))
-    coded = sub.select(
-        "m",
-        "sv",
-        F.array_min(
-            F.transform(
-                F.get(book_lit, F.col("m")),
-                lambda cw, j: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("sv"), cw, lambda a, b: (a - b) * (a - b)
-                        ),
-                        zero,
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    j.alias("j"),
-                ),
-            )
-        )["j"].alias("code"),
-    )
-    comp = (
-        coded.select("m", "code", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "code", "pos")
-        .agg(
-            F.sum("val").cast("long").alias("s"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-        .collect()
-    )
-    by_key: dict = {}
-    for r in comp:
-        by_key.setdefault((r.m, r.code), {})[r.pos] = int(
-            _math.floor(float(r.s) / r.n)
-        )
-    want = []
-    for m in range(4):
-        words = []
-        for j in range(len(book[m])):
-            got_w = by_key.get((m, j))
-            words.append(
-                book[m][j]
-                if got_w is None
-                else [got_w.get(p, 0) for p in range(ds)]
-            )
-        want.append(words)
-
-    got = pq_refine_codebook(rq, book, iters=1)
-    assert got == want

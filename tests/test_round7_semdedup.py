@@ -32,10 +32,8 @@ def test_assignment_kernel_matches_expression_path(spark):
         _assign_cells_arrow,
         _dot,
     )
-    from batch_import_spark.operators.similarity import (
-        _nearest_cell,
-        ivf_seed_centroids,
-    )
+    from batch_import_spark.operators.similarity import ivf_seed_centroids
+    from test_round7_pq import _nearest_cell
 
     base = _corpus(spark).select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v")
@@ -64,10 +62,8 @@ def test_pair_kernel_matches_expression_path(spark):
         _cell_pairs_arrow,
         _dot,
     )
-    from batch_import_spark.operators.similarity import (
-        _nearest_cell,
-        ivf_seed_centroids,
-    )
+    from batch_import_spark.operators.similarity import ivf_seed_centroids
+    from test_round7_pq import _nearest_cell
 
     threshold = 0.95
     base = _corpus(spark).select(

@@ -52,7 +52,6 @@ def test_cluster_purity_on_clustered_data(spark):
     )
     got = ivf_pq_topk(
         corpus, q, n_cells=16, n_probe=4, m_sub=8, k_codes=16, k=5,
-        refine_iters=0,
     ).collect()
     assert len(got) == 25
     for r in got:
@@ -73,7 +72,6 @@ def test_recall_floor_on_random_fixture(spark):
     exact = cosine_topk(emb, q, k=5).collect()
     got = ivf_pq_topk(
         emb, q, n_cells=16, n_probe=4, m_sub=8, k_codes=16, k=5,
-        refine_iters=0,
     ).collect()
     assert _recall(exact, got, 5) >= 0.3
 
@@ -90,31 +88,13 @@ def test_adc_is_integer_and_deterministic(spark):
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    a = ivf_pq_topk(emb, q, n_cells=8, n_probe=3, m_sub=8, k_codes=8, k=5,
-                    refine_iters=0).collect()
-    b = ivf_pq_topk(emb, q, n_cells=8, n_probe=3, m_sub=8, k_codes=8, k=5,
-                    refine_iters=0).collect()
+    a = ivf_pq_topk(emb, q, n_cells=8, n_probe=3, m_sub=8, k_codes=8, k=5).collect()
+    b = ivf_pq_topk(emb, q, n_cells=8, n_probe=3, m_sub=8, k_codes=8, k=5).collect()
     key = lambda rows: sorted(
         (r.query_id, r.vec_id, r.rank, r.adc_dist) for r in rows
     )
     assert key(a) == key(b)
     assert all(isinstance(r.adc_dist, int) and r.adc_dist >= 0 for r in a)
-
-
-def test_refinement_does_not_break_and_stays_integer(spark):
-    """Lloyd codebook refinement keeps the BIGINT discipline and the
-    query path functional (recall on clustered data stays high)."""
-    corpus = _clustered_corpus(spark, n_clusters=10, per_cluster=8)
-    q = corpus.where(F.col("vec_id").isin([3, 43])).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = ivf_pq_topk(
-        corpus, q, n_cells=8, n_probe=4, m_sub=8, k_codes=8, k=5,
-        refine_iters=1,
-    ).collect()
-    assert len(got) == 10
-    assert all(r.vec_id % 10 == r.query_id % 10 for r in got)
-    assert all(r.adc_dist >= 0 for r in got)
 
 
 def test_codebook_raises_on_tiny_corpus(spark):

@@ -117,7 +117,6 @@ def parse_properties(text: str) -> dict[str, str]:
 
 def load_config(
     properties_text: str = "",
-    graph_db: str | None = None,
     nodes_files: str | None = None,
     rels_files: str | None = None,
     index_args: list[str] | None = None,
@@ -130,7 +129,7 @@ def load_config(
     """
     props = parse_properties(properties_text)
     cfg = ImportConfig(raw=props)
-    cfg.graph_db = graph_db or props.get("batch_import.graph_db")
+    cfg.graph_db = props.get("batch_import.graph_db")
     files = nodes_files or props.get("batch_import.nodes_files", "")
     cfg.nodes_files = [f for f in files.split(",") if f]
     files = rels_files or props.get("batch_import.rels_files", "")

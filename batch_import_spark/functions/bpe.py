@@ -33,7 +33,7 @@ table — O(vocab) rows, not O(corpus):
 
 The only driver traffic is one row per merge step; `localCheckpoint`
 rotation truncates lineage so the replace chain never exceeds
-`checkpoint_every` nested calls in a plan.  At 100 TB the corpus pass
+`CHECKPOINT_EVERY` nested calls in a plan.  At 100 TB the corpus pass
 is one shuffle and every subsequent step touches only the vocabulary
 (~10^7 rows at web scale); production runs with thousands of merges
 would batch top-k non-conflicting pairs per round — kept sequential
@@ -58,6 +58,12 @@ from batch_import_spark.session import checkpoint_rotate, local_frame, unpersist
 #: symbol delimiter — 0x1f "unit separator", never present in text
 #: corpora this engine targets (control chars are stripped upstream).
 US = "\x1f"
+
+#: the merge loop runs driver-side on a distinct-word table of at most
+#: this many rows (read at call time)
+DRIVER_VOCAB_THRESHOLD = 65536
+#: merge steps between two lineage-truncating checkpoints
+CHECKPOINT_EVERY = 8
 _US2 = US + US
 
 #: rendering separator between subwords in a segmentation string —
@@ -258,8 +264,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 32,
     min_pair_count: int = 2,
-    checkpoint_every: int = 8,
-    driver_vocab_threshold: int = 65536,
 ) -> list[tuple[str, str, int]]:
     """Learn `n_merges` BPE merges from a document corpus.
 
@@ -270,7 +274,7 @@ def bpe_train(
     signature); all counting is distributed and map-side combinable.
 
     When the distinct-word table fits under
-    ``driver_vocab_threshold`` rows, the merge loop runs driver-side
+    ``DRIVER_VOCAB_THRESHOLD`` rows, the merge loop runs driver-side
     on the collected (word, n) table instead — the threshold-gated
     pattern of canonicalize.py's union-find. The distributed loop
     pays ~n_merges sequential Spark jobs of pure scheduling latency
@@ -295,7 +299,7 @@ def bpe_train(
         spark, words.select("word", "n", wrap_chars(F.col("word")).alias("s")), set()
     )
 
-    if wt.count() <= driver_vocab_threshold:
+    if wt.count() <= DRIVER_VOCAB_THRESHOLD:
         rows = wt.select("word", "n").collect()
         unpersist_ids(spark, wt_ids)
         return _bpe_train_driver(
@@ -323,7 +327,7 @@ def bpe_train(
         left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((left, right, cnt))
         wt = wt.withColumn("s", merge_expr(F.col("s"), left, right))
-        if (step + 1) % checkpoint_every == 0:
+        if (step + 1) % CHECKPOINT_EVERY == 0:
             wt, wt_ids = checkpoint_rotate(spark, wt, wt_ids)
     unpersist_ids(spark, wt_ids)
     return merges

@@ -89,10 +89,10 @@ def _unfilter_row(ftype: int, row: np.ndarray, prev: np.ndarray, bpp: int) -> np
     return (out % 256).astype(np.uint8)
 
 
-def png_encode(pixels: np.ndarray, cycle_filters: bool = True) -> bytes:
+def png_encode(pixels: np.ndarray) -> bytes:
     """Encode an (H, W), (H, W, 3) or (H, W, 4) uint8 array as PNG.
-    ``cycle_filters`` rotates through all five row filters so decoders
-    get full-path coverage."""
+    Rows rotate through all five row filters so decoders get
+    full-path coverage."""
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         px = px[:, :, None]
@@ -103,7 +103,7 @@ def png_encode(pixels: np.ndarray, cycle_filters: bool = True) -> bytes:
     prev = np.zeros(w * ch, np.uint8)
     for y in range(h):
         row = px[y].reshape(-1)
-        f = (y % 5) if cycle_filters else 0
+        f = y % 5
         raw.append(f)
         raw.extend(_filter_row(f, row, prev, ch).tobytes())
         prev = row

@@ -213,15 +213,10 @@ def _seg(marker: int, body: bytes) -> bytes:
     return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
-def jpeg_encode(
-    pixels: np.ndarray,
-    subsampling: str = "444",
-    quant: np.ndarray | None = None,
-) -> bytes:
+def jpeg_encode(pixels: np.ndarray, subsampling: str = "444") -> bytes:
     """Encode an (H, W) grayscale or (H, W, 3) RGB uint8 array as a
-    baseline JFIF JPEG. ``quant`` is a flat-64 (natural order) table
-    applied to every component; the all-ones default makes
-    constant-block images round-trip exactly (module docstring).
+    baseline JFIF JPEG. Every component uses the all-ones quant table,
+    so constant-block images round-trip exactly (module docstring).
     ``subsampling``: "444" or "420" (color only)."""
     px = np.asarray(pixels, dtype=np.uint8)
     gray = px.ndim == 2
@@ -230,7 +225,7 @@ def jpeg_encode(
     if subsampling not in ("444", "420"):
         raise ValueError(f"unsupported subsampling {subsampling!r}")
     h, w = px.shape[:2]
-    q = np.ones(64, dtype=np.int64) if quant is None else np.asarray(quant, np.int64)
+    q = np.ones(64, dtype=np.int64)
     q2 = q.reshape(8, 8)
 
     if gray:

@@ -10,9 +10,8 @@ enough for closed-form cross-engine verification (JPEG via
 constant-block fixtures, which round-trip bit-exactly under all-ones
 quant tables). Formats that genuinely need external codec libraries
 (MP4/H.264, progressive JPEG, ...) keep the documented stub:
-``decode_media`` raises in strict mode or produces a deterministic
-fake so the Spark-side contract (schema, batching, partition sizing)
-stays exercised.
+``decode_media`` produces a deterministic fake so the Spark-side
+contract (schema, batching, partition sizing) stays exercised.
 
 Scale notes: binary payloads dominate partition size — callers should
 size ``spark.sql.files.maxPartitionBytes`` down (payload-aware) and
@@ -56,21 +55,14 @@ MEDIA_SCHEMA = T.StructType(
 FEATURE_SCHEMA = "media_id long, kind string, n_bytes int, sha256 string, feature array<float>"
 
 _FEATURE_DIM = 16
-_HAVE_CODECS = False  # flip when PIL/av are installed
-try:  # pragma: no cover - not present in this environment
-    import PIL.Image  # noqa: F401
-
-    _HAVE_CODECS = True
-except Exception:
-    pass
 
 
-def synthesize_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
+def synthesize_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table (fixture generator)."""
     kinds = ["image", "audio", "video"]
     rows = []
     for i in range(n):
-        h = hashlib.sha256(f"{seed}:{i}".encode()).digest()
+        h = hashlib.sha256(f"5:{i}".encode()).digest()
         kind = kinds[i % 3]
         rows.append(
             (
@@ -83,16 +75,15 @@ def synthesize_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
     return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
-def decode_media(payload: bytes, kind: str, strict: bool = False) -> np.ndarray:
+def decode_media(payload: bytes) -> np.ndarray:
     """Decode a media payload to a (N, channels) float array.
 
     REAL decode for PNG (stdlib zlib inflate + unfilter), WAV PCM16
     (stdlib wave) and baseline JPEG (from-scratch Huffman + dequant +
     IDCT, functions/codecs_jpeg.py) — sniffed by magic bytes, no
     PIL/ffmpeg needed. Remaining formats (MP4/H.264, progressive
-    JPEG, ...) need external codecs: strict=True raises (production
-    posture); otherwise a deterministic fake derived from the payload
-    bytes keeps downstream shape/typing exercised.
+    JPEG, ...) need external codecs: a deterministic fake derived from
+    the payload bytes keeps downstream shape/typing exercised.
     """
     import wave
 
@@ -116,7 +107,7 @@ def decode_media(payload: bytes, kind: str, strict: bool = False) -> np.ndarray:
             return px.reshape(-1, px.shape[2]).astype(np.float32)
         except (ValueError, IndexError, KeyError, struct.error):
             # in-format but unsupported payload (interlaced / paletted /
-            # 16-bit PNG) falls through to the strict-check / fake path,
+            # 16-bit PNG) falls through to the fake path,
             # same as formats with no native codec
             pass
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
@@ -125,11 +116,6 @@ def decode_media(payload: bytes, kind: str, strict: bool = False) -> np.ndarray:
             return (arr.astype(np.float32) / 32768.0).reshape(-1, arr.shape[1])
         except (ValueError, EOFError, wave.Error):
             pass  # non-PCM16 / truncated WAV → stub path
-    if strict and not _HAVE_CODECS:
-        raise NotImplementedError(
-            f"no codec available for kind={kind!r} payload; PNG/WAV/baseline-"
-            "JPEG decode natively, video and exotic stills need PIL/av"
-        )
     if not payload:
         return np.zeros(_FEATURE_DIM, dtype=np.float32)
     arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float32)
@@ -139,17 +125,17 @@ def decode_media(payload: bytes, kind: str, strict: bool = False) -> np.ndarray:
     return arr.reshape(-1, _FEATURE_DIM)
 
 
-def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media table → per-item feature vector (Arrow-batched kernel)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, shas, sizes = [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
+            for payload in pdf["payload"]:
                 b = bytes(payload) if payload is not None else b""
                 shas.append(hashlib.sha256(b).hexdigest())
                 sizes.append(len(b))
-                decoded = decode_media(b, kind, strict=strict)
+                decoded = decode_media(b)
                 feats.append(decoded.mean(axis=0).astype(np.float32).tolist())
             yield pd.DataFrame(
                 {

@@ -62,8 +62,8 @@ FRAC_BITS = 16
 MAX_WORD_LEN = 16
 
 
-def ilog2_fp(n: int, frac_bits: int = FRAC_BITS) -> int:
-    """Fixed-point floor(2^frac_bits · log2(n))-style integer log —
+def ilog2_fp(n: int) -> int:
+    """Fixed-point floor(2^FRAC_BITS · log2(n))-style integer log —
     the exact shift-and-square digit algorithm (see module doc).
     Deterministic and monotone in n; requires n ≥ 1."""
     if n < 1:
@@ -71,17 +71,17 @@ def ilog2_fp(n: int, frac_bits: int = FRAC_BITS) -> int:
     b = n.bit_length() - 1
     m = n << (30 - b) if b <= 30 else n >> (b - 30)
     frac = 0
-    for _ in range(frac_bits):
+    for _ in range(FRAC_BITS):
         m = (m * m) >> 30
         if m >= 1 << 31:
             frac = frac * 2 + 1
             m >>= 1
         else:
             frac = frac * 2
-    return (b << frac_bits) | frac
+    return (b << FRAC_BITS) | frac
 
 
-def ilog2_fp_col(n: Column, frac_bits: int = FRAC_BITS) -> Column:
+def ilog2_fp_col(n: Column) -> Column:
     """Column twin of ``ilog2_fp`` — the same integer steps as Spark
     expressions (shifts with literal amounts; the variable-amount
     mantissa scaling uses exact power-of-two double scaling, which is
@@ -120,7 +120,7 @@ def ilog2_fp_col(n: Column, frac_bits: int = FRAC_BITS) -> Column:
         )
     )
     folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(frac_bits)),
+        F.sequence(F.lit(1), F.lit(FRAC_BITS)),
         F.struct(m.alias("m"), F.lit(0).cast("long").alias("f")),
         lambda acc, _: F.struct(
             F.when(
@@ -141,7 +141,7 @@ def ilog2_fp_col(n: Column, frac_bits: int = FRAC_BITS) -> Column:
         ),
     )
     return (
-        b.cast("long") * F.lit(1 << frac_bits).cast("long") + folded["f"]
+        b.cast("long") * F.lit(1 << FRAC_BITS).cast("long") + folded["f"]
     ).cast("long")
 
 
@@ -308,7 +308,8 @@ def viterbi_segment_py(
 #: distinct-word tables under this size segment driver-side — the
 #: Viterbi expression fold costs seconds of analysis/codegen per
 #: query at ANY data size (the functions/bpe.py threshold-gate
-#: rationale); beyond it the expression fold runs distributed.
+#: rationale); beyond it the expression fold runs distributed. Read
+#: at call time.
 DRIVER_SEGMENT_THRESHOLD = 65536
 
 
@@ -317,10 +318,9 @@ def segment_words(
     costs: dict[str, int],
     max_piece_len: int = 8,
     max_word_len: int = MAX_WORD_LEN,
-    driver_threshold: int = DRIVER_SEGMENT_THRESHOLD,
 ) -> DataFrame:
     """(word, np, cost, path): Viterbi-segment every row of a
-    distinct-word table. Under ``driver_threshold`` rows the DP runs
+    distinct-word table. Under ``DRIVER_SEGMENT_THRESHOLD`` rows the DP runs
     driver-side on the collected words (``viterbi_segment_py``,
     byte-identical, vocab-bounded traffic — the bpe_train gate
     pattern); above it, as the expression fold."""
@@ -329,8 +329,8 @@ def segment_words(
     # ONE pass decides the gate and fetches the data: limit(T+1)
     # returns the whole table iff it has <= T rows (a separate
     # count() + collect() would run the upstream distinct twice)
-    head = words.limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
+    head = words.limit(DRIVER_SEGMENT_THRESHOLD + 1).collect()
+    if len(head) <= DRIVER_SEGMENT_THRESHOLD:
         rows = []
         for r in head:
             cost, np, path = viterbi_segment_py(
@@ -488,8 +488,6 @@ def train_unigram(
 def unigram_tokenize(
     docs: DataFrame,
     final_costs: dict[str, int],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_piece_len: int = 8,
     max_word_len: int = MAX_WORD_LEN,
 ) -> DataFrame:
@@ -502,10 +500,10 @@ def unigram_tokenize(
     from batch_import_spark.operators.sketches import portable_hash60
 
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda w: w != F.lit(""),
     )
-    docw = docs.select(F.col(id_col), F.posexplode(toks).alias("pos", "word"))
+    docw = docs.select("doc_id", F.posexplode(toks).alias("pos", "word"))
     segmap = segment_words(
         docw.select("word").distinct(), final_costs, max_piece_len,
         max_word_len,
@@ -517,7 +515,7 @@ def unigram_tokenize(
     )
     joined = docw.join(F.broadcast(segmap), "word")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.sum("np").cast("long").alias("n_unigram_tokens"),
             F.sum("cost").cast("long").alias("ll_cost_fp"),
@@ -530,7 +528,7 @@ def unigram_tokenize(
             ).alias("_segdoc"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_unigram_tokens",
             "ll_cost_fp",
             portable_hash60(F.col("_segdoc")).alias("seg_hash"),

@@ -8,7 +8,7 @@ functions) — training-data surface the brief requires.
 
 Determinism contract (both engines replay it bit-for-bit):
 - Vocabulary: every substring of every corpus word up to
-  ``max_piece_len`` chars is a candidate, typed 'init' (starts at
+  ``MAX_PIECE_LEN`` chars is a candidate, typed 'init' (starts at
   the word's first char) or 'cont' (anywhere else — rendered with
   the '##' prefix); weight = Σ word-count over every occurrence.
   The kept vocab is ALL single-char pieces (coverage: any corpus
@@ -40,11 +40,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SEP = "\x1e"  # piece separator inside a word's segmentation (chr 30)
+MAX_PIECE_LEN = 8
 
 
-def _words_with_counts(docs: DataFrame, text_col: str) -> DataFrame:
+def _words_with_counts(docs: DataFrame) -> DataFrame:
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda w: w != F.lit(""),
     )
     return (
@@ -54,18 +55,13 @@ def _words_with_counts(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def wordpiece_vocab(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_piece_len: int = 8,
-    n_multi: int = 200,
-) -> DataFrame:
+def wordpiece_vocab(docs: DataFrame, n_multi: int = 200) -> DataFrame:
     """Learn the vocabulary (see module doc).
 
     Output: (kind, piece, weight, is_char, kept_rank) — kept_rank is
     the multi-char selection rank (NULL for the always-kept chars).
     """
-    w = _words_with_counts(docs, text_col)
+    w = _words_with_counts(docs)
     grid = F.flatten(
         F.transform(
             F.sequence(F.lit(1), F.length("word")),
@@ -73,7 +69,7 @@ def wordpiece_vocab(
                 F.sequence(
                     F.lit(1),
                     F.least(
-                        F.lit(max_piece_len), F.length("word") - i + 1
+                        F.lit(MAX_PIECE_LEN), F.length("word") - i + 1
                     ),
                 ),
                 lambda l: F.struct(
@@ -130,9 +126,7 @@ def collect_vocab(vocab: DataFrame) -> tuple[list[str], list[str]]:
     return init, cont
 
 
-def segment_word_expr(
-    word: Column, init: list[str], cont: list[str], max_piece_len: int = 8
-) -> Column:
+def segment_word_expr(word: Column, init: list[str], cont: list[str]) -> Column:
     """struct(seg string, np int): greedy longest-match segmentation
     of one word as a pure expression fold (no UDF). ``seg`` joins
     pieces with SEP, continuations '##'-prefixed; unknown positions
@@ -145,7 +139,7 @@ def segment_word_expr(
         active = (pos <= F.length(word)) & ~acc["unk"]
         vocab_lit = F.when(pos == 1, init_lit).otherwise(cont_lit)
         lens = F.filter(
-            F.sequence(F.lit(1), F.lit(max_piece_len)),
+            F.sequence(F.lit(1), F.lit(MAX_PIECE_LEN)),
             lambda l: (pos + l - 1 <= F.length(word))
             & F.array_contains(vocab_lit, word.substr(pos, l)),
         )
@@ -190,14 +184,7 @@ def segment_word_expr(
     return F.struct(folded["seg"].alias("seg"), folded["np"].alias("np"))
 
 
-def wordpiece_tokenize(
-    docs: DataFrame,
-    init: list[str],
-    cont: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_piece_len: int = 8,
-) -> DataFrame:
+def wordpiece_tokenize(docs: DataFrame, init: list[str], cont: list[str]) -> DataFrame:
     """Per-doc WordPiece token count + 60-bit segmentation hash
     (mirror of bpe_tokenize's output shape). Docs with no words are
     dropped (oracle row-set parity — the blank-doc lesson).
@@ -209,21 +196,21 @@ def wordpiece_tokenize(
     from batch_import_spark.operators.sketches import portable_hash60
 
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda w: w != F.lit(""),
     )
-    docw = docs.select(F.col(id_col), F.posexplode(toks).alias("pos", "word"))
+    docw = docs.select("doc_id", F.posexplode(toks).alias("pos", "word"))
     segmap = (
         docw.select("word")
         .distinct()
         .withColumn(
-            "s", segment_word_expr(F.col("word"), init, cont, max_piece_len)
+            "s", segment_word_expr(F.col("word"), init, cont)
         )
         .select("word", F.col("s.seg").alias("seg"), F.col("s.np").alias("np"))
     )
     joined = docw.join(F.broadcast(segmap), "word")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.sum("np").cast("long").alias("n_wp_tokens"),
             F.array_join(
@@ -235,7 +222,7 @@ def wordpiece_tokenize(
             ).alias("_segdoc"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_wp_tokens",
             portable_hash60(F.col("_segdoc")).alias("seg_hash"),
         )

@@ -32,42 +32,39 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     by: list[str],
+    value_cols: list[str],
+    right_order: str,
     ts: str = "ts",
-    value_cols: list[str] | None = None,
-    right_order: str | None = None,
 ) -> DataFrame:
     """Backward as-of join: left rows + latest right ``value_cols``
     with right.ts ≤ left.ts per ``by`` group (left rows with no prior
     right row keep NULLs — LEFT ASOF semantics).
 
     ``right_order`` breaks ties among right rows sharing a timestamp
-    deterministically (highest wins); required if such ties can occur.
-    ``value_cols`` should be non-null in ``right`` — each column's
-    running `last` is independent, so nulls inside a matched right row
-    would backfill from an older row for that column only.
+    deterministically (highest wins). ``value_cols`` should be non-null
+    in ``right`` — each column's running `last` is independent, so
+    nulls inside a matched right row would backfill from an older row
+    for that column only.
     """
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in set(by) | {ts}]
     shared = set(by) | {ts}
     left_only = [c for c in left.columns if c not in shared]
 
     clash = sorted(set(left_only) & set(value_cols))
     if clash:
         raise ValueError(
-            f"asof_join: columns {clash} exist on both sides; rename them "
-            "or pass value_cols= with unambiguous right-side names"
+            f"asof_join: columns {clash} exist on both sides; rename them"
         )
     # tie-break among right rows at equal ts by the RAW right_order
     # column (any orderable type — casting to long breaks string keys
     # under ANSI); highest sorts last, so the running last() wins
-    rord_type = right.schema[right_order].dataType if right_order else None
+    rord_type = right.schema[right_order].dataType
 
     l_tagged = left.select(
         *by,
         ts,
         *left_only,
         F.lit(1).alias("_side"),
-        (F.lit(None).cast(rord_type) if rord_type else F.lit(0)).alias("_rord"),
+        F.lit(None).cast(rord_type).alias("_rord"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in value_cols],
     )
     r_tagged = right.select(
@@ -75,7 +72,7 @@ def asof_join(
         ts,
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_only],
         F.lit(0).alias("_side"),
-        (F.col(right_order) if right_order else F.lit(0)).alias("_rord"),
+        F.col(right_order).alias("_rord"),
         *value_cols,
     )
     w = (

@@ -15,86 +15,30 @@ member rows) → filter to the hot buckets (by definition few: at most
 frame. No window function, so the degenerate bucket's members are
 never gathered into one task even to be counted.
 
-"No silent caps", two postures:
-
-- ``eager_stats=True`` (the default of this function): aggregate the
-  drop stats up front (one tiny 1-row job), log them at WARNING, and
-  return them. The extra job re-evaluates ``df``'s lineage once — at
-  scale that is a second pass over the signature computation, the
-  price of exact drop counts.
-- ``eager_stats=False`` (what the near-dup operators use for their
-  *default-on* caps): build the anti-join lazily into the caller's
-  plan — no driver job, no lineage recompute beyond the in-plan
-  count branch — and return ``stats=None``. Drop counts are then the
-  caller's responsibility (count before/after, or re-run with
-  ``eager_stats=True`` when auditing); the operators document this.
+The cap is a lazy in-plan guard: no driver job, no lineage
+recompute beyond the in-plan count branch. Drop counts are the
+caller's to take (count before/after); the operators document this.
 """
 
 from __future__ import annotations
 
-import logging
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-log = logging.getLogger(__name__)
+#: buckets with more member rows than this are dropped (read at call
+#: time)
+MAX_BUCKET_SIZE = 10_000
 
 
-@dataclass
-class BucketCapStats:
-    n_buckets_dropped: int
-    n_rows_dropped: int
-    max_bucket_size: int  # the cap that was applied
-    largest_dropped: int  # size of the biggest offending bucket (0 if none)
+def cap_hot_buckets(df: DataFrame, bucket_cols: list[str]) -> DataFrame:
+    """Drop every bucket with more than ``MAX_BUCKET_SIZE`` member rows.
 
-
-def cap_hot_buckets(
-    df: DataFrame,
-    bucket_cols: list[str],
-    max_bucket_size: int,
-    eager_stats: bool = True,
-) -> tuple[DataFrame, BucketCapStats | None]:
-    """Drop every bucket with more than ``max_bucket_size`` member rows.
-
-    Returns the filtered frame plus the drop stats (also logged), or
-    ``stats=None`` with ``eager_stats=False`` (lazy in-plan guard, no
-    driver job — see module docstring). Intended to sit directly above
-    a bucket self-join: a dropped bucket of size m removes m·(m-1)/2
-    candidate pairs — callers trade that (documented, counted) recall
-    loss for a bounded join.
+    Intended to sit directly above a bucket self-join: a dropped
+    bucket of size m removes m·(m-1)/2 candidate pairs — callers trade
+    that (documented) recall loss for a bounded join.
     """
     counts = df.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_n"))
-    hot = counts.where(F.col("_n") > max_bucket_size)
-    if not eager_stats:
-        # hot side is tiny by construction (≤ n_rows / cap buckets):
-        # broadcast anti-join folds into the caller's single action.
-        return (
-            df.join(F.broadcast(hot.select(*bucket_cols)), bucket_cols, "left_anti"),
-            None,
-        )
-    row = hot.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.coalesce(F.sum("_n"), F.lit(0)).alias("nr"),
-        F.coalesce(F.max("_n"), F.lit(0)).alias("mx"),
-    ).collect()[0]
-    stats = BucketCapStats(
-        n_buckets_dropped=int(row["nb"]),
-        n_rows_dropped=int(row["nr"]),
-        max_bucket_size=max_bucket_size,
-        largest_dropped=int(row["mx"]),
-    )
-    if stats.n_buckets_dropped:
-        log.warning(
-            "cap_hot_buckets: dropped %d bucket(s) over cap %d "
-            "(%d member rows; largest bucket %d) on key %s",
-            stats.n_buckets_dropped,
-            max_bucket_size,
-            stats.n_rows_dropped,
-            stats.largest_dropped,
-            bucket_cols,
-        )
-        df = df.join(
-            F.broadcast(hot.select(*bucket_cols)), bucket_cols, "left_anti"
-        )
-    return df, stats
+    hot = counts.where(F.col("_n") > MAX_BUCKET_SIZE)
+    # hot side is tiny by construction (≤ n_rows / cap buckets):
+    # broadcast anti-join folds into the caller's single action.
+    return df.join(F.broadcast(hot.select(*bucket_cols)), bucket_cols, "left_anti")

@@ -33,6 +33,8 @@ from batch_import_spark.session import (
     unpersist_ids,
 )
 
+_MAX_ITERATIONS = 50
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors of u to min(Γ⁺(u))."""
@@ -60,9 +62,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_min.union(self_edge).where(F.col("u") != F.col("v")).distinct()
 
 
-def min_id_components(edges: Iterable[tuple], nodes: Iterable = ()) -> dict:
-    """Driver-side union-find: map every node of ``edges`` (pairs) and
-    ``nodes`` to the min node of its connected component.
+def min_id_components(edges: Iterable[tuple]) -> dict:
+    """Driver-side union-find: map every node of ``edges`` (pairs) to
+    the min node of its connected component.
 
     Each union keeps the smaller root, so a root is always its
     component's min and ``find`` IS the election — the same min-id
@@ -82,8 +84,6 @@ def min_id_components(edges: Iterable[tuple], nodes: Iterable = ()) -> dict:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    for n in nodes:
-        find(n)
     return {n: find(n) for n in parent}
 
 
@@ -108,8 +108,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "u",
     dst: str = "v",
-    max_iterations: int = 50,
-    driver_threshold: int | None = None,
 ) -> DataFrame:
     """Return (node_id, component_id) with component_id = min id.
 
@@ -118,9 +116,9 @@ def connected_components(
     Convergence: edge multiset fingerprint (count + hash-sum) stable
     across a large+small round.
 
-    Edge sets at or under ``driver_threshold`` (default
-    DRIVER_CC_THRESHOLD; the count is already paid to size the
-    iteration's shuffles) take a DRIVER-SIDE union-find — the CC
+    Edge sets at or under ``DRIVER_CC_THRESHOLD`` (read at call time;
+    the count is already paid to size the iteration's shuffles) take a
+    DRIVER-SIDE union-find — the CC
     analog of a broadcast join — skipping the multi-round shuffle
     loop's scheduling floor entirely. Both paths elect the min node id
     per component over the self-loop-filtered distinct edge set:
@@ -141,9 +139,7 @@ def connected_components(
     # couple of 1-partition rounds; a billion-edge graph keeps the
     # session's width. ~1M edges per partition.
     n_edges = e.count()
-    if driver_threshold is None:
-        driver_threshold = DRIVER_CC_THRESHOLD
-    if n_edges <= driver_threshold:
+    if n_edges <= DRIVER_CC_THRESHOLD:
         out = _driver_cc_edges(spark, e)
         unpersist_ids(spark, ckpt_ids)
         return out
@@ -153,7 +149,7 @@ def connected_components(
 
     try:
         prev_sig = None
-        for _ in range(max_iterations):
+        for _ in range(_MAX_ITERATIONS):
             # each round's checkpoint supersedes the previous one —
             # long CC loops (and long sessions running many CCs)
             # otherwise accumulate MEMORY_AND_DISK blocks
@@ -168,7 +164,7 @@ def connected_components(
             prev_sig = sig
         else:
             raise RuntimeError(
-                f"connected_components: no convergence in {max_iterations} iterations"
+                f"connected_components: no convergence in {_MAX_ITERATIONS} iterations"
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)

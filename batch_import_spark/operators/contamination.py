@@ -23,6 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+#: right-side n-grams in more than this many documents are boilerplate
+#: and join nothing in ``containment_pairs`` (read at call time)
+MAX_NGRAM_DF = 500
+
 
 def _ngrams_from_tokens(toks: Column, n: int) -> Column:
     """Array of space-joined word n-grams of a TOKEN-ARRAY column
@@ -50,10 +54,8 @@ def _ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def _ngram_arrays(
-    df: DataFrame, id_expr: Column, text_col: str, n: int, out: str = "_ngs"
-) -> DataFrame:
-    """(id, <out>=array_distinct(word n-grams)) with the tokenization
+def _ngram_arrays(df: DataFrame, id_expr: Column, text_col: str, n: int) -> DataFrame:
+    """(_id, _ngs=array_distinct(word n-grams)) with the tokenization
     STAGED through two projections (raw split, then endpoint trim) so
     each stage's multiply-referenced input is a materialized column,
     not an inlined expression re-evaluated per reference (3-7x,
@@ -63,7 +65,7 @@ def _ngram_arrays(
     raw = df.select(id_expr.alias("_id"), _split_raw(text_col).alias("_raw"))
     tok = raw.select("_id", _trim_empty_endpoints(F.col("_raw")).alias("_tk"))
     return tok.select(
-        "_id", F.array_distinct(_ngrams_from_tokens(F.col("_tk"), n)).alias(out)
+        "_id", F.array_distinct(_ngrams_from_tokens(F.col("_tk"), n)).alias("_ngs")
     )
 
 
@@ -71,9 +73,6 @@ def ngram_contamination(
     docs: DataFrame,
     probes: DataFrame,
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    probe_text_col: str | None = None,
 ) -> DataFrame:
     """Per-document benchmark overlap: returns
     (doc_id, n_hit, n_total, contam_ppm) for every document sharing at
@@ -99,14 +98,14 @@ def ngram_contamination(
     # per row (round-7 plan audit). The NULL rows outer-explode emits
     # for empty docs join nothing and are dropped by the n_hit > 0 /
     # null-join-key semantics.
-    doc_arr = _ngram_arrays(docs, F.col(id_col), text_col, n)
+    doc_arr = _ngram_arrays(docs, F.col("doc_id"), "text", n)
     doc_ngrams = doc_arr.select(
         F.col("_id").alias("doc_id"),
         F.size("_ngs").cast("long").alias("n_total"),
         F.explode_outer("_ngs").alias("ng"),
     )
     probe_ngrams = (
-        _ngram_arrays(probes, F.col(id_col), probe_text_col or text_col, n)
+        _ngram_arrays(probes, F.col("doc_id"), "text", n)
         .select(F.explode_outer("_ngs").alias("ng"))
         .where(F.col("ng").isNotNull())
         .distinct()
@@ -131,9 +130,6 @@ def containment_pairs(
     right: DataFrame,
     n: int = 8,
     min_ppm: int = 500_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_ngram_df: int | None = 10_000,
 ) -> DataFrame:
     """Quote detection: (left_id, right_id, n_shared, n_left,
     containment_ppm) for every pair where at least ``min_ppm``
@@ -145,9 +141,9 @@ def containment_pairs(
 
     Scale shape: candidate pairs come from an equi-join on the n-gram
     itself, so cost is Σ_g df_left(g)·df_right(g) — bounded by capping
-    ubiquitous n-grams at ``max_ngram_df`` occurrences on the right
+    ubiquitous n-grams at ``MAX_NGRAM_DF`` occurrences on the right
     (boilerplate n-grams carry no quote signal; the cap is the same
-    hot-key guard as the LSH bucket caps, and None disables it). The
+    hot-key guard as the LSH bucket caps). The
     count/total aggregation is map-side combinable; no text ever
     shuffles.
     """
@@ -161,18 +157,20 @@ def containment_pairs(
     # explode_outer for the same inferred-filter reason as
     # ngram_contamination above; the NULL-ngram rows form null-key
     # groups that match nothing in the inner n-gram join.
-    ln = _ngram_arrays(left, F.col(id_col), text_col, n).select(
+    ln = _ngram_arrays(left, F.col("doc_id"), "text", n).select(
         F.col("_id").alias("lid"),
         F.size("_ngs").cast("long").alias("n_left"),
         F.explode_outer("_ngs").alias("ng"),
     )
-    rn = _ngram_arrays(right, F.col(id_col), text_col, n).select(
+    rn = _ngram_arrays(right, F.col("doc_id"), "text", n).select(
         F.col("_id").alias("rid"),
         F.explode_outer("_ngs").alias("ng"),
     )
-    rg = rn.groupBy("ng").agg(F.collect_list("rid").alias("_rids"))
-    if max_ngram_df is not None:
-        rg = rg.where(F.size("_rids") <= max_ngram_df)
+    rg = (
+        rn.groupBy("ng")
+        .agg(F.collect_list("rid").alias("_rids"))
+        .where(F.size("_rids") <= MAX_NGRAM_DF)
+    )
 
     integral_ids = isinstance(ln.schema["lid"].dataType, LongType) and isinstance(
         rn.schema["rid"].dataType, LongType
@@ -196,7 +194,7 @@ def containment_pairs(
 
     # per-left-doc shared counts in ONE grouped Arrow kernel: the rid
     # lists of the left doc's n-grams concatenate into at most
-    # n_grams(left) x max_ngram_df ints (bounded group state), and
+    # n_grams(left) x MAX_NGRAM_DF ints (bounded group state), and
     # np.unique counts every candidate pair without materializing the
     # 10^7-row (lid, rid) pair explosion through a high-cardinality
     # hash aggregate (2x, round-7 measurement; all-integer math, so

@@ -22,12 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def tool_transitions(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    tool_col: str = "tool",
-) -> DataFrame:
+def tool_transitions(df: DataFrame) -> DataFrame:
     """Tool-call bigram counts: for each conversation's tool-bearing
     turns in order, count (prev_tool → tool) transitions across the
     whole corpus. Returns (prev_tool, tool, n_transitions).
@@ -36,11 +31,11 @@ def tool_transitions(
     user/assistant turns) — the standard agent-trace formulation.
     One window + one map-side-combinable groupBy."""
     t = (
-        df.where(F.col(tool_col).isNotNull())
+        df.where(F.col("tool").isNotNull())
         .select(
-            F.col(conv_col).alias("_c"),
-            F.col(order_col).alias("_o"),
-            F.col(tool_col).alias("tool"),
+            F.col("conv_id").alias("_c"),
+            F.col("turn_idx").alias("_o"),
+            "tool",
         )
         .withColumn("prev_tool", F.lag("tool").over(
             Window.partitionBy("_c").orderBy("_o")
@@ -53,16 +48,9 @@ def tool_transitions(
     )
 
 
-def assemble_context(
-    df: DataFrame,
-    k: int = 3,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def assemble_context(df: DataFrame, k: int = 3) -> DataFrame:
     """Attach each turn's preceding context: the previous ≤k turn
-    texts of the same conversation joined with ``sep`` (empty string
+    texts of the same conversation joined with newlines (empty string
     for a conversation's first turn). Adds a ``context`` column.
 
     The frame is ROWS BETWEEN k PRECEDING AND 1 PRECEDING under the
@@ -70,50 +58,37 @@ def assemble_context(
     conversation length, so a hot conversation costs O(k·turn) not
     O(turn²)."""
     w = (
-        Window.partitionBy(conv_col)
-        .orderBy(order_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(-k, -1)
     )
     return df.withColumn(
-        "context", F.array_join(F.collect_list(F.col(text_col)).over(w), sep)
+        "context", F.array_join(F.collect_list(F.col("text")).over(w), "\n")
     )
 
 
-def conversation_stats(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    role_col: str = "role",
-    tool_col: str = "tool",
-    text_col: str = "text",
-    ts_col: str = "ts",
-) -> DataFrame:
+def conversation_stats(df: DataFrame) -> DataFrame:
     """Per-conversation curation rollup: turn counts by role, tool
     calls, whitespace-token volume, span seconds. One
     map-side-combinable groupBy on conv_id. Returns
     (conv_id, n_turns, n_user, n_assistant, n_tool_calls, n_tokens,
     span_seconds)."""
     toks = F.size(
-        F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+        F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     )
-    return df.groupBy(F.col(conv_col).alias("conv_id")).agg(
+    return df.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
-        F.sum((F.col(role_col) == "user").cast("long")).alias("n_user"),
-        F.sum((F.col(role_col) == "assistant").cast("long")).alias("n_assistant"),
-        F.sum(F.col(tool_col).isNotNull().cast("long")).alias("n_tool_calls"),
+        F.sum((F.col("role") == "user").cast("long")).alias("n_user"),
+        F.sum((F.col("role") == "assistant").cast("long")).alias("n_assistant"),
+        F.sum(F.col("tool").isNotNull().cast("long")).alias("n_tool_calls"),
         F.sum(toks.cast("long")).alias("n_tokens"),
         (
-            F.max(F.col(ts_col)).cast("long") - F.min(F.col(ts_col)).cast("long")
+            F.max(F.col("ts")).cast("long") - F.min(F.col("ts")).cast("long")
         ).alias("span_seconds"),
     )
 
 
-def sessionize(
-    df: DataFrame,
-    gap_seconds: int = 1800,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-    order_col: str = "turn_idx",
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Batch gap-sessionization: split each conversation's turns into
     sessions wherever the inter-turn gap exceeds ``gap_seconds``, and
     roll each session up to
@@ -126,35 +101,27 @@ def sessionize(
     at-rest backfills where the streaming operator handles the live
     path.
     """
-    ts_sec = F.col(ts_col).cast("long")
-    w = Window.partitionBy(conv_col).orderBy(ts_sec, order_col)
+    ts_sec = F.col("ts").cast("long")
+    w = Window.partitionBy("conv_id").orderBy(ts_sec, "turn_idx")
     new_sess = F.when(
         F.lag(ts_sec).over(w).isNull()
         | ((ts_sec - F.lag(ts_sec).over(w)) > gap_seconds),
         F.lit(1),
     ).otherwise(F.lit(0))
-    run = Window.partitionBy(conv_col).orderBy(ts_sec, order_col).rowsBetween(
+    run = Window.partitionBy("conv_id").orderBy(ts_sec, "turn_idx").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     tagged = df.withColumn("_new", new_sess).withColumn(
         "session_idx", (F.sum("_new").over(run) - 1).cast("int")
     )
-    return tagged.groupBy(
-        F.col(conv_col).alias("conv_id"), "session_idx"
-    ).agg(
+    return tagged.groupBy("conv_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.min(ts_sec).alias("start_sec"),
         F.max(ts_sec).alias("end_sec"),
     )
 
 
-def mine_sft_pairs(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-) -> DataFrame:
+def mine_sft_pairs(df: DataFrame) -> DataFrame:
     """SFT (prompt, response) mining: pair every user turn with the
     NEXT assistant turn in its conversation, crossing intervening tool
     turns, provided no other user turn intervenes (the assistant is
@@ -176,23 +143,23 @@ def mine_sft_pairs(
     # the whole remaining frame per row — O(n²) per conversation
     # (measured superlinear at 7.5k-turn conversations, round 7). The
     # DESC (unboundedPreceding, -1) frame aggregates the identical row
-    # set (order_col is unique per conversation by contract — turn
+    # set (turn_idx is unique per conversation by contract — turn
     # indices) through the incremental O(n) running-frame path.
     w_rev = (
-        Window.partitionBy(conv_col)
-        .orderBy(F.col(order_col).desc())
+        Window.partitionBy("conv_id")
+        .orderBy(F.col("turn_idx").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    role = F.col(role_col)
+    role = F.col("role")
     aug = df.select(
-        conv_col,
-        order_col,
-        role_col,
-        text_col,
-        F.min(F.when(role == "assistant", F.col(order_col)))
+        "conv_id",
+        "turn_idx",
+        "role",
+        "text",
+        F.min(F.when(role == "assistant", F.col("turn_idx")))
         .over(w_rev)
         .alias("response_idx"),
-        F.min(F.when(role == "user", F.col(order_col)))
+        F.min(F.when(role == "user", F.col("turn_idx")))
         .over(w_rev)
         .alias("_next_user_idx"),
     )
@@ -205,28 +172,22 @@ def mine_sft_pairs(
         )
     )
     asst = df.where(role == "assistant").select(
-        conv_col,
-        F.col(order_col).alias("response_idx"),
-        F.col(text_col).alias("response"),
+        "conv_id",
+        F.col("turn_idx").alias("response_idx"),
+        F.col("text").alias("response"),
     )
-    return users.join(asst, [conv_col, "response_idx"]).select(
-        conv_col,
-        F.col(order_col).alias("prompt_idx"),
+    return users.join(asst, ["conv_id", "response_idx"]).select(
+        "conv_id",
+        F.col("turn_idx").alias("prompt_idx"),
         "response_idx",
-        F.col(text_col).alias("prompt"),
+        F.col("text").alias("prompt"),
         "response",
-        F.length(text_col).alias("prompt_chars"),
+        F.length("text").alias("prompt_chars"),
         F.length("response").alias("response_chars"),
     )
 
 
-def context_within_budget(
-    df: DataFrame,
-    budget: int,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-) -> DataFrame:
+def context_within_budget(df: DataFrame, budget: int) -> DataFrame:
     """Token-budgeted context sizing: for every turn, how many
     preceding turns (newest-first) fit inside a ``budget``-token
     context window, and how many tokens they hold — the dataloader
@@ -243,30 +204,30 @@ def context_within_budget(
     """
     tok = F.size(
         F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
             lambda t: t != F.lit(""),
         )
     ).cast("long")
     df = df.where(tok > 0)
     w_prefix = (
-        Window.partitionBy(conv_col)
-        .orderBy(order_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     with_prev = df.select(
-        conv_col,
-        order_col,
+        "conv_id",
+        "turn_idx",
         tok.alias("n_tok"),
         F.coalesce(F.sum(tok).over(w_prefix), F.lit(0)).alias("_sprev"),
     )
     w_range = (
-        Window.partitionBy(conv_col)
+        Window.partitionBy("conv_id")
         .orderBy(F.col("_sprev"))
         .rangeBetween(-budget, 0)
     )
     return with_prev.select(
-        conv_col,
-        order_col,
+        "conv_id",
+        "turn_idx",
         "n_tok",
         (F.count(F.lit(1)).over(w_range) - 1).cast("long").alias("n_ctx_turns"),
         (F.sum("n_tok").over(w_range) - F.col("n_tok")).cast("long").alias(

@@ -12,7 +12,7 @@ operator reports LIFT in scaled integer form instead:
 
 Scale shape: per-document distinct terms explode once; the pair
 generator is a within-document self-join on doc_id — quadratic in a
-document's DISTINCT-term count only, and the ``max_doc_terms`` guard
+document's DISTINCT-term count only, and the ``MAX_DOC_TERMS`` guard
 drops degenerate docs (the same hot-row discipline as the LSH bucket
 caps — "no silent caps": dropped docs are counted in the returned
 accumulator column via observe-free arithmetic, see n_docs_used).
@@ -25,28 +25,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: docs with more distinct terms are dropped before pair generation
+MAX_DOC_TERMS = 200
 
-def cooccurrence_lift(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_count: int = 2,
-    max_doc_terms: int = 200,
-) -> DataFrame:
+
+def cooccurrence_lift(docs: DataFrame, min_count: int = 2) -> DataFrame:
     """(term_a, term_b, n_ab, n_a, n_b, lift_ppm) for unordered token
     pairs co-occurring in ≥ ``min_count`` documents; term_a < term_b.
-    N is the number of documents that passed the ``max_doc_terms``
+    N is the number of documents that passed the ``MAX_DOC_TERMS``
     guard, so the probability space matches the pair universe."""
     toks = F.array_distinct(
-        F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+        F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     )
     # sorted distinct-token array per doc, materialized once: it feeds
     # the N count, the unary term counts AND the pair generator — the
     # round-6 shape re-ran the tokenization for each (4x) and built
     # pairs with a doc-keyed self-join of the exploded term table.
     per_doc = (
-        docs.select(F.col(id_col).alias("doc"), F.sort_array(toks).alias("ts"))
-        .where(F.size("ts").between(1, max_doc_terms))
+        docs.select(F.col("doc_id").alias("doc"), F.sort_array(toks).alias("ts"))
+        .where(F.size("ts").between(1, MAX_DOC_TERMS))
         .localCheckpoint(eager=False)
     )
     n_docs = per_doc.count()
@@ -54,7 +51,7 @@ def cooccurrence_lift(
     n_term = term.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     # unordered pairs by POSITION in the sorted array (j > i ⇒
     # term_a < term_b): the same pair multiset the self-join produced,
-    # without a join — per-doc fanout stays bounded by max_doc_terms²/2
+    # without a join — per-doc fanout stays bounded by MAX_DOC_TERMS²/2
     pairs = (
         per_doc.select(F.posexplode("ts").alias("_i", "term_a"), "ts")
         .select(

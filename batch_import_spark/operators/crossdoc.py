@@ -7,7 +7,7 @@ beats whole-document dedup. This pass implements that grain on top of
 the repo's content-defined chunking (packing.py cdc_chunks: Rabin-
 style cuts, so a shared span chunks identically in every document
 that contains it regardless of position): count each chunk
-fingerprint corpus-wide, flag chunks present in >= ``min_docs``
+fingerprint corpus-wide, flag chunks present in >= ``MIN_DOCS``
 distinct documents, and emit every document with its flagged spans
 cut out plus an exact integer removal metric.
 
@@ -35,7 +35,7 @@ seams (doc A's kept chunks k1,k2 merge into a string another doc
 already contains whole — why Lee et al. iterate their pass), and
 content-defined cuts near a seam can split kept chunks into small
 fragments that collide across documents. Both escapes are closed by
-one rule: chunks containing OR within ``gram`` chars of a sentinel
+one rule: chunks containing OR within ``GRAM`` chars of a sentinel
 are exempt from flagging. Away from sentinels the text is unchanged
 source content, so CDC boundaries are bit-stable and every flaggable
 pass-2 chunk is a pass-1 chunk — which pass 1 already proved
@@ -49,36 +49,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PPM = 1_000_000
+#: the CDC window and cut mask (packing.cdc_chunks' defaults)
+GRAM, MASK = 8, 32
+#: a chunk in at least this many documents is cut
+MIN_DOCS = 2
 
 
-def _chunks_with_text(
-    df: DataFrame, id_col: str, text_col: str, gram: int, mask: int
-) -> DataFrame:
+def _chunks_with_text(df: DataFrame) -> DataFrame:
     """cdc_chunks (packing.py:237) with the chunk substring and the
     sentinel-proximity flag carried — same cut rule, same
     normalization (shared Arrow kernel, packing._cdc_rows), so
     fingerprints agree with the chunk-inventory queries. The
-    sentinel-context margin is the chunk plus ``gram`` chars each
-    side — cut positions depend on windows reaching up to gram-1
+    sentinel-context margin is the chunk plus ``GRAM`` chars each
+    side — cut positions depend on windows reaching up to GRAM-1
     chars ahead, so this margin is exactly what makes chunk
     boundaries bit-stable away from removal seams (idempotence
     argument in the module doc)."""
     from batch_import_spark.operators.packing import _cdc_rows
 
     return _cdc_rows(
-        df, id_col, text_col, gram, mask, with_text=True, min_len=1
-    ).withColumnRenamed(id_col, "id")
+        df, "doc_id", "text", GRAM, MASK, with_text=True, min_len=1
+    ).withColumnRenamed("doc_id", "id")
 
 
-def remove_repeated_substrings(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gram: int = 8,
-    mask: int = 32,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Cut every CDC chunk whose fingerprint occurs in >= ``min_docs``
+def remove_repeated_substrings(df: DataFrame) -> DataFrame:
+    """Cut every CDC chunk whose fingerprint occurs in >= ``MIN_DOCS``
     distinct documents (see module doc).
 
     Output per (non-empty) document: ``n_chunks``, ``n_removed``,
@@ -90,9 +85,7 @@ def remove_repeated_substrings(
     # materialize the chunk table once: both the over-representation
     # count and the flag join consume it, and without materialization
     # each branch re-runs the whole CDC cut/fingerprint kernel
-    ch = _chunks_with_text(df, id_col, text_col, gram, mask).localCheckpoint(
-        eager=False
-    )
+    ch = _chunks_with_text(df).localCheckpoint(eager=False)
 
     # corpus-wide over-representation — scalars only in this shuffle.
     # Chunks containing or adjacent to a removal sentinel are exempt
@@ -104,7 +97,7 @@ def remove_repeated_substrings(
         .select("chunk_md5", "id")
         .groupBy("chunk_md5")
         .agg(F.count_distinct("id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= MIN_DOCS)
         .select("chunk_md5", F.lit(1).alias("_rep"))
     )
 
@@ -136,7 +129,7 @@ def remove_repeated_substrings(
         "",
     )
     return agg.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "n_chunks",
         "n_removed",
         F.expr(f"((_chars - _kept_chars) * {PPM}L) div _chars").alias(

@@ -24,31 +24,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batch_import_spark.operators.buckets import cap_hot_buckets
+
 
 # --- exact dedup -------------------------------------------------------------
 
 
-def exact_dedup(
-    df: DataFrame, fingerprint: Column, id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, fingerprint: Column) -> DataFrame:
     """Keep the min-id row per fingerprint group.
 
     Uses a groupBy-min semi-join (map-side combinable) rather than a
     global window — no single-partition stage at scale.
     """
     fp = df.withColumn("_fp", fingerprint)
-    winners = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    return fp.join(winners, ["_fp", id_col], "left_semi").drop("_fp")
+    winners = fp.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
+    return fp.join(winners, ["_fp", "doc_id"], "left_semi").drop("_fp")
 
 
-def duplicate_groups(
-    df: DataFrame, fingerprint: Column, id_col: str = "doc_id"
-) -> DataFrame:
+def duplicate_groups(df: DataFrame, fingerprint: Column) -> DataFrame:
     """(fingerprint, n_dups, keeper_id) for groups with >1 member."""
     return (
-        df.select(fingerprint.alias("fp"), F.col(id_col))
+        df.select(fingerprint.alias("fp"), F.col("doc_id"))
         .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keeper_id"))
+        .agg(F.count(F.lit(1)).alias("n_dups"), F.min("doc_id").alias("keeper_id"))
         .where(F.col("n_dups") > 1)
     )
 
@@ -133,13 +131,9 @@ def lsh_bands(signature: Column, num_bands: int = 16) -> Column:
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_words: int = 3,
     num_hashes: int = 64,
     num_bands: int = 16,
     threshold: float = 0.8,
-    max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) pairs with exact Jaccard ≥ threshold.
 
@@ -147,7 +141,7 @@ def minhash_near_duplicates(
     (bounded by the bucket cap) → positional pair explode → distinct
     candidate pairs → exact verification. The band aggregation and
     the pair explode move only scalar ids; per-band state is at most
-    ``max_bucket_size`` longs because over-cap bands are dropped by a
+    ``buckets.MAX_BUCKET_SIZE`` longs because over-cap bands are dropped by a
     broadcast anti-join BEFORE members are gathered — the giant-row /
     unbounded collect_set memory profile that kills 100 TB runs never
     forms. (This replaced the round-6 band self-join: the join's two
@@ -156,14 +150,10 @@ def minhash_near_duplicates(
     Results are exact w.r.t. the threshold (LSH affects recall only
     through banding parameters). ``threshold`` must be > 0 (the
     verify join drops zero-intersection candidates by construction).
-    ``max_bucket_size`` is the degenerate-band guard (see
-    operators.buckets) and is ON by default (10k): bands with more
-    members are dropped lazily in-plan before the quadratic
-    pair explode, so a naive caller is quadratic-safe. Pass ``None``
-    to opt out (lossless candidate generation, e.g. for exact
-    oracles — note the per-band list is then unbounded); for
-    counted/logged drops run operators.buckets.cap_hot_buckets
-    with ``eager_stats=True`` on the banded frame.
+    Bands are capped by the degenerate-bucket guard
+    (operators.buckets.cap_hot_buckets): bands with more members are
+    dropped lazily in-plan before the quadratic pair explode, so a
+    naive caller is quadratic-safe.
     """
     # round-7 shape: the shingle-ARRAY table is staged (tokenization
     # as its own projection — the inlined form re-tokenizes per
@@ -174,11 +164,11 @@ def minhash_near_duplicates(
     # joins against the 1-row-per-doc table instead of two
     # 1-row-per-shingle joins plus a pair aggregation.
     toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
+        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "
     )
     arr = (
-        df.select(F.col(id_col).alias("id"), toks.alias("_tk"))
-        .select("id", _shingles_from_tokens(F.col("_tk"), shingle_words).alias("sh"))
+        df.select(F.col("doc_id").alias("id"), toks.alias("_tk"))
+        .select("id", _shingles_from_tokens(F.col("_tk"), 3).alias("sh"))
         .localCheckpoint(eager=False)
     )
     # explode + groupBy-min formulation: one flat codegen stage with
@@ -207,11 +197,7 @@ def minhash_near_duplicates(
     # below otherwise each re-run the whole shingle-explode +
     # num_hashes-min signature aggregation (plan-audited: the sig
     # subtree appeared 4x in the round-6 self-join formulation).
-    banded = banded.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        from batch_import_spark.operators.buckets import cap_hot_buckets
-
-        banded, _ = cap_hot_buckets(banded, ["band"], max_bucket_size, eager_stats=False)
+    banded = cap_hot_buckets(banded.localCheckpoint(eager=False), ["band"])
     # pair generation WITHOUT a band self-join: group the (post-cap)
     # bucket members into one sorted list per band and emit each
     # unordered pair once by position (j > i ⇒ id_a ≤ id_b after
@@ -219,7 +205,7 @@ def minhash_near_duplicates(
     # signatures are grouped by id; the id_a != id_b filter keeps the
     # strict id_a < id_b contract from depending on that (an (x, x)
     # pair would verify at 1.0). Bucket state is bounded by
-    # max_bucket_size, so the collect_list row is ≤ cap longs — the
+    # MAX_BUCKET_SIZE, so the collect_list row is ≤ cap longs — the
     # degenerate-bucket guard above still drops over-cap buckets before
     # anything is gathered. Same pair set as the former join, one
     # aggregation instead of two join-side re-evaluations.
@@ -267,23 +253,19 @@ def minhash_near_duplicates(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram_chars: int = 5,
     threshold: float = 0.7,
-    block_on: Column | None = None,
 ) -> DataFrame:
     """Exact char-n-gram Jaccard over blocked candidate pairs.
 
-    ``block_on`` (default: length bucket) bounds the quadratic join —
+    The block (a 32-char length bucket) bounds the quadratic join —
     the scale-path is minhash_near_duplicates; this is the exact
     verifier for modest blocks.
     """
-    block = block_on if block_on is not None else (F.length(text_col) / 32).cast("int")
     base = df.select(
-        F.col(id_col).alias("id"),
-        block.alias("blk"),
-        char_ngrams(text_col, ngram_chars).alias("ng"),
+        F.col("doc_id").alias("id"),
+        (F.length("text") / 32).cast("int").alias("blk"),
+        char_ngrams("text", ngram_chars).alias("ng"),
     )
     left = base.select(F.col("blk"), F.col("id").alias("id_a"), F.col("ng").alias("ng_a"))
     right = base.select(F.col("blk"), F.col("id").alias("id_b"), F.col("ng").alias("ng_b"))
@@ -311,9 +293,7 @@ def md5_token_hash(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def simhash_expr(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", out_col: str = "simhash"
-) -> DataFrame:
+def simhash_expr(df: DataFrame) -> DataFrame:
     """60-bit SimHash over word tokens — pure JVM expressions.
 
     Shape: explode tokens → one groupBy with 60 per-bit weighted sums
@@ -330,8 +310,8 @@ def simhash_expr(
     # cost ~35x a codegen'd row predicate — measured round 7)
     exploded = (
         df.select(
-            F.col(id_col).alias("_sid"),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+            F.col("doc_id").alias("_sid"),
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("_tok"),
         )
         .where(F.col("_tok") != "")
     )
@@ -364,22 +344,16 @@ def simhash_expr(
                 for b in range(SIMHASH_BITS)
             ],
             F.lit(0).cast("long"),
-        ).alias(out_col),
+        ).alias("simhash"),
     )
     return (
-        df.select(F.col(id_col))
-        .join(sig, F.col(id_col) == F.col("_sid"), "left")
-        .select(id_col, F.coalesce(F.col(out_col), F.lit(0)).cast("long").alias(out_col))
+        df.select(F.col("doc_id"))
+        .join(sig, F.col("doc_id") == F.col("_sid"), "left")
+        .select("doc_id", F.coalesce(F.col("simhash"), F.lit(0)).cast("long").alias("simhash"))
     )
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
 
     Candidate generation: ``max_hamming + 1`` block keys (pigeonhole:
@@ -390,16 +364,14 @@ def simhash_near_duplicates(
     the DuckDB oracle checks. Larger ``max_hamming`` ⇒ more, shorter
     blocks ⇒ bigger buckets and more shuffle — the scale knob.
     Signatures are the 60-bit md5-based JVM expressions of
-    :func:`simhash_expr` (oracle-reproducible). ``max_bucket_size``
-    is the degenerate-block guard (operators.buckets), ON by default
-    (10k) — e.g. all empty docs share signature 0 and land in every
-    block bucket together; over-cap blocks are dropped lazily in-plan
-    before the self-join, at the documented cost of recall for their
-    members. Pass ``None`` to opt out (lossless — the exact-pair-set
-    oracle posture); for counted/logged drops use
-    operators.buckets.cap_hot_buckets with ``eager_stats=True``.
+    :func:`simhash_expr` (oracle-reproducible). Blocks are capped by
+    the degenerate-bucket guard (operators.buckets.cap_hot_buckets) —
+    e.g. all empty docs share signature 0 and land in every block
+    bucket together; over-cap blocks are dropped lazily in-plan before
+    the self-join, at the documented cost of recall for their
+    members.
     """
-    sh = simhash_expr(df, text_col, id_col).select(F.col(id_col).alias("id"), "simhash")
+    sh = simhash_expr(df).select(F.col("doc_id").alias("id"), "simhash")
     # materialize the signature table once: the block index feeds the
     # bucket-cap stats, the join's left side AND its right side —
     # without this each branch re-runs the full explode + 60-sum
@@ -432,10 +404,7 @@ def simhash_near_duplicates(
             )
         ).alias("blk"),
     )
-    if max_bucket_size is not None:
-        from batch_import_spark.operators.buckets import cap_hot_buckets
-
-        blocks, _ = cap_hot_buckets(blocks, ["blk"], max_bucket_size, eager_stats=False)
+    blocks = cap_hot_buckets(blocks, ["blk"])
     left = blocks.select("blk", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"))
     right = blocks.select("blk", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"))
     # verify BEFORE deduplicating: hamming is a pure function of the
@@ -454,9 +423,7 @@ def simhash_near_duplicates(
     )
 
 
-def near_dup_resolution(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
+def near_dup_resolution(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup PAIRS into per-document keep/drop decisions.
 
     Near-dup similarity is not transitive (A~B, B~C does not imply
@@ -473,7 +440,7 @@ def near_dup_resolution(
     """
     from batch_import_spark.operators.canonicalize import connected_components
 
-    cc = connected_components(pairs, src=id_a, dst=id_b)
+    cc = connected_components(pairs, src="id_a", dst="id_b")
     return cc.select(
         F.col("node_id").alias("doc_id"),
         F.col("component_id").alias("keeper"),

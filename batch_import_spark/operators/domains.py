@@ -21,7 +21,7 @@ Semantics (deterministic, replayed exactly by the DuckDB oracle):
   host labels (the sandbox has no public-suffix list; swap
   ``registrable_domain`` for a PSL-backed variant in production —
   the plumbing is identical);
-- per-domain cap — among NON-blocked documents, at most ``cap`` per
+- per-domain cap — among NON-blocked documents, at most ``DOMAIN_CAP`` per
   registrable domain are kept, first-come by ascending id (the
   deterministic stand-in for crawl order).
 
@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 # RE2-safe (no backrefs/lookaround): optional scheme, optional
 # userinfo, capture authority up to :port / path / query / fragment
 HOST_RE = r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?(?:[^/@?#]*@)?([^/:?#]+)"
+#: non-blocked documents kept per registrable domain, by ascending id
+DOMAIN_CAP = 20
 
 
 def host_of(url_col: Column) -> Column:
@@ -70,24 +72,17 @@ def registrable_domain(host_col: Column) -> Column:
     )
 
 
-def domain_filter(
-    docs: DataFrame,
-    blocklist: DataFrame,
-    cap: int | None = None,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    suffix_col: str = "suffix",
-) -> DataFrame:
+def domain_filter(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Keep/drop verdict per document by source domain.
 
-    ``blocklist``: one column (``suffix_col``) of host suffixes to
+    ``blocklist``: one column (``suffix``) of host suffixes to
     block — broadcast by contract (UT1-scale lists are a few MB).
     Output: (id, host, domain, blocked, keep, reason) where reason is
     ``blocked:<matched suffix>``, ``over_cap``, or ``''``.
     """
     d0 = docs.select(
-        F.col(id_col),
-        host_of(F.col(url_col)).alias("host"),
+        F.col("doc_id"),
+        host_of(F.col("url")).alias("host"),
     ).withColumns(
         {
             "domain": registrable_domain(F.col("host")),
@@ -95,40 +90,34 @@ def domain_filter(
         }
     )
     hits = (
-        d0.select(id_col, F.explode("_sfx").alias("_s"))
+        d0.select("doc_id", F.explode("_sfx").alias("_s"))
         .join(
-            F.broadcast(blocklist.select(F.col(suffix_col).alias("_s"))),
+            F.broadcast(blocklist.select(F.col("suffix").alias("_s"))),
             "_s",
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("_s").alias("_matched"))
     )
-    j = d0.drop("_sfx").join(hits, id_col, "left").withColumn(
+    j = d0.drop("_sfx").join(hits, "doc_id", "left").withColumn(
         "blocked", F.col("_matched").isNotNull()
     )
-    if cap is not None:
-        w = Window.partitionBy("domain").orderBy(id_col)
-        unblocked = (
-            j.where(~F.col("blocked"))
-            .withColumn("_rk", F.row_number().over(w))
-            .select(id_col, "_rk")
-        )
-        j = j.join(unblocked, id_col, "left")
-    else:
-        j = j.withColumn("_rk", F.lit(1))
-    # cap=0 must mean "keep nothing", not "unlimited" — guard on None
-    # explicitly instead of Python falsiness
-    eff_cap = 2**62 if cap is None else cap
+    w = Window.partitionBy("domain").orderBy("doc_id")
+    unblocked = (
+        j.where(~F.col("blocked"))
+        .withColumn("_rk", F.row_number().over(w))
+        .select("doc_id", "_rk")
+    )
+    j = j.join(unblocked, "doc_id", "left")
     return j.select(
-        id_col,
+        "doc_id",
         "host",
         "domain",
         "blocked",
-        (~F.col("blocked") & (F.col("_rk") <= F.lit(eff_cap))).alias(
+        (~F.col("blocked") & (F.col("_rk") <= F.lit(DOMAIN_CAP))).alias(
             "keep"
         ),
         F.when(F.col("blocked"), F.concat(F.lit("blocked:"), F.col("_matched")))
-        .when(F.col("_rk") > F.lit(eff_cap), F.lit("over_cap"))
+        .when(F.col("_rk") > F.lit(DOMAIN_CAP), F.lit("over_cap"))
         .otherwise(F.lit(""))
         .alias("reason"),
     )

@@ -122,12 +122,7 @@ def _hashed_gram_rows(
     )
 
 
-def dsir_lambda_map(
-    ff: DataFrame,
-    n_buckets: int,
-    target_flag: str = "_is_target",
-    count_col: str = "cnt",
-) -> dict[int, int]:
+def dsir_lambda_map(ff: DataFrame, n_buckets: int) -> dict[int, int]:
     """bucket → lam_fp = log p_target - log q_raw, the frozen DSIR
     importance model (n_buckets integers — shippable as a literal to
     a streaming screen or broadcast as a tiny table). Both corpora's
@@ -140,12 +135,12 @@ def dsir_lambda_map(
         ff.groupBy("bucket")
         .agg(
             F.sum(
-                F.when(F.col(target_flag), F.col(count_col)).otherwise(0)
+                F.when(F.col("_is_target"), F.col("cnt")).otherwise(0)
             )
             .cast("long")
             .alias("t"),
             F.sum(
-                F.when(~F.col(target_flag), F.col(count_col)).otherwise(0)
+                F.when(~F.col("_is_target"), F.col("cnt")).otherwise(0)
             )
             .cast("long")
             .alias("r"),
@@ -166,8 +161,6 @@ def dsir_lambda_map(
 def dsir_weights(
     docs: DataFrame,
     target_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Per-candidate-document importance weight: (id, n_grams,
@@ -187,13 +180,13 @@ def dsir_weights(
     # doc-keyed aggregate with the frozen 128-entry lambda table as a
     # literal array (the stream screen's shape). All-integer, exact.
     ex = _hashed_gram_rows(
-        tagged, id_col, text_col, n_buckets, carry_cols=("_is_target",)
+        tagged, "doc_id", "text", n_buckets, carry_cols=("_is_target",)
     ).localCheckpoint(eager=False)
     lam = dsir_lambda_map(ex.withColumn("cnt", F.lit(1)), n_buckets)
     lam_arr = F.lit([lam[b] for b in range(n_buckets)]).cast("array<bigint>")
     return (
         ex.where(~F.col("_is_target"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_grams"),
             F.sum(
@@ -209,8 +202,6 @@ def dsir_select(
     docs: DataFrame,
     target_pred: Column,
     k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Deterministic top-k selection by importance weight:
@@ -218,8 +209,8 @@ def dsir_select(
     is replaced by the rank cut — the deterministic variant — so both
     engines agree exactly; plug a seeded Gumbel column in front of
     the window for the stochastic flavor."""
-    w = dsir_weights(docs, target_pred, id_col, text_col, n_buckets)
-    win = Window.orderBy(F.col("weight_fp").desc(), F.col(id_col).asc())
+    w = dsir_weights(docs, target_pred, n_buckets)
+    win = Window.orderBy(F.col("weight_fp").desc(), F.col("doc_id").asc())
     return (
         w.withColumn("sel_rank", F.row_number().over(win).cast("int"))
         .where(F.col("sel_rank") <= k)

@@ -29,54 +29,17 @@ def tokenize(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), TOKENIZE_RE), lambda t: t != "")
 
 
-def build_fulltext_postings(
-    index_entries: DataFrame,
-    key_col: str = "key_value",
-    id_col: str = "node_id",
-    min_df: int | None = None,
-    max_df: int | None = None,
-) -> DataFrame:
-    """index entries → (index_name, key_prop, token, node_id) postings.
-
-    ``min_df`` / ``max_df`` bound each token's document frequency
-    (postings-list length per (index_name, key_prop, token)) — the
-    Lucene-style skew knob. At 100 TB the stopword tokens ARE the hot
-    shuffle keys of the lookup join: a token appearing in half the
-    corpus contributes a postings list that one reducer must join,
-    while discriminating almost nothing (its score contribution is
-    uniform). ``max_df`` prunes those lists at build time; ``min_df``
-    drops hapax noise. Implemented as a map-side-combinable count over
-    the already-deduped postings plus a filter ON the aggregated
-    grain — no second pass over the raw entries, no window function.
-    """
-    postings = index_entries.select(
+def build_fulltext_postings(index_entries: DataFrame) -> DataFrame:
+    """index entries → (index_name, key_prop, token, node_id) postings."""
+    return index_entries.select(
         "index_name",
         "key_prop",
-        F.explode(tokenize(key_col)).alias("token"),
-        F.col(id_col),
+        F.explode(tokenize("key_value")).alias("token"),
+        "node_id",
     ).distinct()
-    if min_df is None and max_df is None:
-        return postings
-    df_counts = postings.groupBy("index_name", "key_prop", "token").agg(
-        F.count(F.lit(1)).alias("_df")
-    )
-    keep = df_counts.where(
-        (F.lit(min_df is None) | (F.col("_df") >= F.lit(min_df or 0)))
-        & (F.lit(max_df is None) | (F.col("_df") <= F.lit(max_df or 0)))
-    ).drop("_df")
-    # the surviving-token dictionary is small (bounded by vocabulary,
-    # not corpus) → broadcast semi-join, no extra shuffle of postings
-    return postings.join(
-        F.broadcast(keep), ["index_name", "key_prop", "token"], "left_semi"
-    )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k most distinctive whitespace tokens per document.
 
     Weight = tf · ((N · 10^6) div df) — an integer-exact tf·idf
@@ -94,8 +57,8 @@ def tfidf_top_terms(
     # Filter — the array-lambda filter is CodegenFallback (interpreted
     # per element; round-7 finding). Same token multiset.
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
     ).where(F.col("token") != "")
     # materialize tf once: it feeds the document-frequency aggregation
     # AND the scored join's probe side — without this the whole
@@ -128,22 +91,19 @@ def tfidf_top_terms(
 def fulltext_lookup(
     queries: DataFrame,
     postings: DataFrame,
-    query_col: str = "query",
-    query_id_col: str = "query_id",
     top_k: int = 5,
 ) -> DataFrame:
     """Score candidates by matched-token count; rank per query.
 
     (query_id, node_id, n_matched, n_query_tokens, score, rank) —
     score = matched / query token count. The postings join shuffles on
-    token; at scale, stopword-heavy tokens are the skew keys — build
-    the postings with ``max_df`` (build_fulltext_postings) to prune
-    them, and AQE skew-join splits whatever remains.
+    token; at scale, stopword-heavy tokens are the skew keys, which AQE
+    skew-join splits.
     """
     q_tokens = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.size(tokenize(query_col)).alias("n_query_tokens"),
-        F.explode(tokenize(query_col)).alias("token"),
+        "query_id",
+        F.size(tokenize("query")).alias("n_query_tokens"),
+        F.explode(tokenize("query")).alias("token"),
     )
     matched = (
         q_tokens.join(postings, "token")

@@ -34,17 +34,14 @@ def fuzzy_join_ed1(
     right_key: str,
     left_id: str,
     right_id: str,
-    lt_only: bool = False,
 ) -> DataFrame:
     """All (left_id, right_id, left_key, right_key, distance) pairs
-    with levenshtein(left_key, right_key) ≤ 1, computed via a
-    deletion-neighborhood equi-join + exact verify (never a nested
-    loop). Self-join callers should filter ``left_id < right_id`` —
-    or pass ``lt_only=True`` to push that filter onto the CANDIDATE
-    set, before the verify: a self-join's candidates are symmetric
-    ((a,b) and (b,a) both appear) and include every (a,a), so the
-    filter halves the levenshtein/re-attach/distinct volume while
-    provably dropping only rows the caller would discard."""
+    with left_id < right_id and levenshtein(left_key, right_key) ≤ 1,
+    computed via a deletion-neighborhood equi-join + exact verify
+    (never a nested loop). The id filter runs on the CANDIDATE set,
+    before the verify: a self-join's candidates are symmetric ((a,b)
+    and (b,a) both appear) and include every (a,a), so the filter
+    halves the levenshtein/re-attach/distinct volume."""
     # round-7 shape:
     # - variants come from an exploded INDEX sequence with the string
     #   surgery as a codegen row expression (the array-lambda form is
@@ -93,9 +90,7 @@ def fuzzy_join_ed1(
     # (32.8M rows at sf1.0) while the post-verify distinct only
     # shuffles true ED<=1 pairs — and the levenshtein filter runs
     # inside the join's codegen stage either way.
-    cand = lv.join(rv, "_v").select("_lid", "_rid")
-    if lt_only:
-        cand = cand.where(F.col("_lid") < F.col("_rid"))
+    cand = lv.join(rv, "_v").select("_lid", "_rid").where(F.col("_lid") < F.col("_rid"))
     # distinct: duplicate (id, key) input rows must not multiply the
     # re-attach join (the old formulation collapsed them in the
     # variant distinct)

@@ -66,7 +66,7 @@ class ImportedRelationships:
     observation: Observation  # n_input / n_resolved / n_skipped
 
 
-def import_nodes(ref: ReferenceCsv, id_offset: int = 0) -> ImportedNodes:
+def import_nodes(ref: ReferenceCsv) -> ImportedNodes:
     df = ref.df
     id_fields = [h for h in ref.header if h.is_id]
     label_fields = [h for h in ref.header if h.is_label]
@@ -77,7 +77,7 @@ def import_nodes(ref: ReferenceCsv, id_offset: int = 0) -> ImportedNodes:
     else:
         # dense insertion-order id across files in sequence: the scan's
         # own row number (read_reference_csv)
-        df = df.withColumn("node_id", F.col("row_no") + F.lit(id_offset))
+        df = df.withColumn("node_id", F.col("row_no"))
 
     labels = (
         F.col(label_fields[0].col_name) if label_fields else F.lit(None).cast("array<string>")

@@ -26,18 +26,23 @@ from pyspark.sql.window import Window
 
 from batch_import_spark.session import checkpoint_rotate, persistent_rdd_ids, unpersist_ids
 
+#: PageRank's fixed-point unit: ranks are BIGINT multiples of 1/PR_SCALE
+PR_SCALE = 10**12
+#: kcore peeling rounds before it gives up
+_MAX_ITERATIONS = 50
+#: hash-colored sub-steps per louvain_refine sweep
+_COLORS = 4
 
-def undirected_edges(df: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+
+def undirected_edges(df: DataFrame) -> DataFrame:
     """Canonical undirected simple edge set: (u < v), self-loops
     dropped, duplicates collapsed."""
-    u = F.least(F.col(src), F.col(dst)).alias("u")
-    v = F.greatest(F.col(src), F.col(dst)).alias("v")
+    u = F.least(F.col("src"), F.col("dst")).alias("u")
+    v = F.greatest(F.col("src"), F.col("dst")).alias("v")
     return df.select(u, v).where(F.col("u") != F.col("v")).distinct()
 
 
-def triangle_counts(
-    df: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_counts(df: DataFrame) -> DataFrame:
     """Per-node triangle participation counts: (node, n_triangles),
     nodes in at least one triangle.
 
@@ -49,7 +54,7 @@ def triangle_counts(
     ids — no key is hotter than the max ORIENTED out-degree, which
     orientation bounds by ~√(2m).
     """
-    e = undirected_edges(df, src, dst)
+    e = undirected_edges(df)
     deg = (
         e.select(F.col("u").alias("n")).unionAll(e.select(F.col("v").alias("n")))
         .groupBy("n")
@@ -94,19 +99,16 @@ def triangle_counts(
 
 def pagerank(
     df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 6,
-    scale: int = 10**12,
     reset_nodes: list | None = None,
 ) -> DataFrame:
     """Integer-exact PageRank over a directed simple edge list.
 
     Returns (node, pagerank_scaled) where ``pagerank_scaled`` is the
-    rank carried in fixed-point BIGINT units of 1/``scale``:
+    rank carried in fixed-point BIGINT units of 1/``PR_SCALE``:
 
-        rank0(v)   = scale div N
-        rank_i(v)  = (15*scale) div (100*N)
+        rank0(v)   = PR_SCALE div N
+        rank_i(v)  = (15*PR_SCALE) div (100*N)
                      + Σ_{u→v} (85 * rank_{i-1}(u)) div (100 * outdeg(u))
 
     Every step is non-negative BIGINT arithmetic with truncating
@@ -130,8 +132,8 @@ def pagerank(
     """
     spark = df.sparkSession
     e = (
-        df.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col(src) != F.col(dst))
+        df.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
         .distinct()
     )
     nodes = (
@@ -149,8 +151,8 @@ def pagerank(
     outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ed, ed_ids = checkpoint_rotate(spark, e.join(outd, "src"), set())
 
-    init = scale // n
-    base = (15 * scale) // (100 * n)
+    init = PR_SCALE // n
+    base = (15 * PR_SCALE) // (100 * n)
     init_col = F.when(in_reset, F.lit(init)).otherwise(F.lit(0))
     base_col = F.when(in_reset, F.lit(base)).otherwise(F.lit(0))
     ranks = nodes.select("node", init_col.cast("long").alias("rank"))
@@ -175,13 +177,11 @@ def pagerank(
 def bfs_distances(
     df: DataFrame,
     sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_hops: int = 20,
-    directed: bool = False,
 ) -> DataFrame:
     """Minimum hop distance from any node in ``sources`` (one column,
-    ``node``) to every reachable node. Returns (node, dist int).
+    ``node``) to every node reachable along the directed edges.
+    Returns (node, dist int).
 
     Frontier BFS on DataFrames: each round joins ONLY the new frontier
     (nodes first reached last round) against the edge list, then
@@ -193,14 +193,7 @@ def bfs_distances(
     block-rotation discipline as connected_components.
     """
     spark = df.sparkSession
-    e = (
-        df.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col(src) != F.col(dst))
-        .distinct()
-    )
-    if not directed:
-        e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        e = e.distinct()
+    e = df.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     e, e_ids = checkpoint_rotate(spark, e, set())
 
     visited = sources.select("node").distinct().select(
@@ -234,13 +227,7 @@ def bfs_distances(
     return visited
 
 
-def kcore(
-    df: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-) -> DataFrame:
+def kcore(df: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core (the maximal subgraph where every node has
     degree ≥ k), by iterative peeling: drop nodes of degree < k,
     recompute, repeat to fixpoint. Returns (node, core_degree) —
@@ -253,13 +240,13 @@ def kcore(
     at most diameter-ish rounds on real graphs (the loop exits on the
     first round that removes nothing).
     """
-    e = undirected_edges(df, src, dst)
+    e = undirected_edges(df)
     # doubled edge list: degree(u) = row count with u first
     both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     spark = df.sparkSession
     cur, prev_ids = checkpoint_rotate(spark, both, set())
     n_prev = cur.count()
-    for _ in range(max_iterations):
+    for _ in range(_MAX_ITERATIONS):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         good = deg.where(F.col("d") >= k).select("u")
         nxt = cur.join(good, "u").join(
@@ -272,19 +259,14 @@ def kcore(
             break
         n_prev = n_now
     else:
-        raise RuntimeError(f"kcore: no convergence in {max_iterations} rounds")
+        raise RuntimeError(f"kcore: no convergence in {_MAX_ITERATIONS} rounds")
     out = cur.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
     return out
 
 
-def label_propagation(
-    df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 4,
-) -> DataFrame:
+def label_propagation(df: DataFrame, iterations: int = 4) -> DataFrame:
     """Deterministic synchronous label propagation (community
     detection). Returns (node, community) after a FIXED number of
     rounds: every node simultaneously adopts its neighbors' most
@@ -304,7 +286,7 @@ def label_propagation(
     row per node. Checkpoint-rotated like the other iterative ops.
     """
     spark = df.sparkSession
-    e = undirected_edges(df, src, dst)
+    e = undirected_edges(df)
     both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     both, e_ids = checkpoint_rotate(spark, both, set())
     labels = both.select(F.col("u").alias("node")).distinct().select(
@@ -331,14 +313,7 @@ def label_propagation(
     return labels.select("node", F.col("label").alias("community"))
 
 
-def pagerank_weighted(
-    df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iterations: int = 6,
-    scale: int = 10**12,
-) -> DataFrame:
+def pagerank_weighted(df: DataFrame, iterations: int = 6) -> DataFrame:
     """Integer-exact PageRank with BIGINT edge weights (e.g. triple
     occurrence counts from the KG aggregate): a node's outgoing mass
     splits proportionally to weight,
@@ -352,11 +327,11 @@ def pagerank_weighted(
     spark = df.sparkSession
     e = (
         df.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("long").alias("w"),
+            "src",
+            "dst",
+            F.col("w").cast("long").alias("w"),
         )
-        .where(F.col(src) != F.col(dst))
+        .where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
@@ -372,8 +347,8 @@ def pagerank_weighted(
     outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
     ed, ed_ids = checkpoint_rotate(spark, e.join(outw, "src"), set())
 
-    init = scale // n
-    base = (15 * scale) // (100 * n)
+    init = PR_SCALE // n
+    base = (15 * PR_SCALE) // (100 * n)
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     prev_ids: set = set()
     for _ in range(iterations):
@@ -391,14 +366,7 @@ def pagerank_weighted(
     return ranks.select("node", F.col("rank").alias("pagerank_scaled"))
 
 
-def modularity_scaled(
-    edges: DataFrame,
-    assign: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    community: str = "community",
-) -> DataFrame:
+def modularity_scaled(edges: DataFrame, assign: DataFrame) -> DataFrame:
     """Integer-exact modularity of a community assignment — makes a
     community output GRADEABLE, not just reproducible.
 
@@ -424,15 +392,15 @@ def modularity_scaled(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
-        .where(F.col(src) != F.col(dst))
+        .where(F.col("src") != F.col("dst"))
         .distinct()
     )
     b2 = e.select(F.col("u").alias("n")).unionAll(e.select(F.col("v").alias("n")))
     deg = b2.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-    a = assign.select(F.col(node).alias("n"), F.col(community).alias("c"))
+    a = assign.select(F.col("node").alias("n"), F.col("community").alias("c"))
     m_df = e.agg(F.count(F.lit(1)).alias("m"))
     intra = (
         e.join(a.select(F.col("n").alias("u"), F.col("c").alias("cu")), "u")
@@ -466,16 +434,7 @@ def modularity_scaled(
     )
 
 
-def louvain_refine(
-    df: DataFrame,
-    assign: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
-    community: str = "community",
-    sweeps: int = 1,
-    colors: int = 4,
-) -> DataFrame:
+def louvain_refine(df: DataFrame, assign: DataFrame, sweeps: int = 1) -> DataFrame:
     """One-level Louvain refinement (Blondel et al. 2008, phase-1
     local moves) of an existing community assignment — typically the
     ``label_propagation`` output — by synchronous greedy modularity-
@@ -491,9 +450,9 @@ def louvain_refine(
 
         gain = 2·m·(k_ub − k_ua′) − k_u·(K_b − (K_a − k_u))
 
-    an exact BIGINT, engine-reproducible. Each sweep runs ``colors``
+    an exact BIGINT, engine-reproducible. Each sweep runs ``_COLORS``
     hash-colored sub-steps: only nodes with
-    pmod(portable_hash60(node), colors) == sub-step may move, to the
+    pmod(portable_hash60(node), _COLORS) == sub-step may move, to the
     best strictly-positive gain (ties → smallest community id), and
     gains are recomputed between sub-steps. Fully-simultaneous moves
     oscillate (two nodes swap into each other's community, or a
@@ -503,7 +462,7 @@ def louvain_refine(
     standard distributed-Louvain compromise (cf. Halappanavar et al.,
     "Scalable static and dynamic community detection using Grappolo"):
     deterministic, engine-replayable (the color hash is the portable
-    md5-60bit), and near-sequential in behavior as ``colors`` grows.
+    md5-60bit), and near-sequential in behavior as ``_COLORS`` grows.
     Grade the result with ``modularity_scaled`` (the pytest pins
     refined >= baseline on the planted KG).
 
@@ -516,7 +475,7 @@ def louvain_refine(
     """
     from batch_import_spark.operators.sketches import portable_hash60
 
-    e = undirected_edges(df, src, dst)
+    e = undirected_edges(df)
     # loop invariants, materialized once: the doubled edge list and the
     # degree table are referenced in every colored sub-step (deg twice
     # per sub-step: the community-total join and the mover join), and m
@@ -535,11 +494,11 @@ def louvain_refine(
     )
     invariant_ids = persistent_rdd_ids(spark) - before
     m_val = int(e.count())
-    a = assign.select(F.col(node).alias("n"), F.col(community).alias("c"))
+    a = assign.select(F.col("node").alias("n"), F.col("community").alias("c"))
 
     prev_ids: set = set()
     for _ in range(sweeps):
-        for ci in range(colors):
+        for ci in range(_COLORS):
             # tot and kuc are each read twice inside one sub-step
             # (current-community attributes + candidate scoring):
             # lazy checkpoints make the second reference a block read
@@ -582,7 +541,7 @@ def louvain_refine(
             )
             cand = (
                 cur.where(
-                    F.pmod(portable_hash60(F.col("u")), F.lit(colors)) == ci
+                    F.pmod(portable_hash60(F.col("u")), F.lit(_COLORS)) == ci
                 )
                 .join(kuc, "u")
                 .where(F.col("vc") != F.col("cu"))
@@ -616,15 +575,10 @@ def louvain_refine(
             a, prev_ids = checkpoint_rotate(spark, a, prev_ids)
             unpersist_ids(spark, step_ids)
     unpersist_ids(spark, invariant_ids)
-    return a.select(F.col("n").alias(node), F.col("c").alias(community))
+    return a.select(F.col("n").alias("node"), F.col("c").alias("community"))
 
 
-def link_prediction_scores(
-    df: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_degree: int | None = None,
-) -> DataFrame:
+def link_prediction_scores(df: DataFrame) -> DataFrame:
     """KG completion candidates: score non-adjacent node pairs that
     share neighbors, by common-neighbor count and the resource-
     allocation index (Zhou/Lü/Zhang 2009) in integer fixed point:
@@ -633,17 +587,15 @@ def link_prediction_scores(
 
     BIGINT division only — engine-reproducible. Plan shape is the
     wedge join (two scans of the doubled edge list joined on the
-    center), the same shape as triangle counting; `max_degree` drops
-    hub centers before the join — the documented 100 TB guard, since
-    a degree-d hub emits d² wedge pairs while contributing only
-    10^6/d mass to each (negligible score, quadratic cost).
+    center), the same shape as triangle counting. A degree-d hub
+    center emits d² wedge pairs while contributing only 10^6/d mass to
+    each.
     Output: (u, v, n_common, ra_ppm) for non-adjacent u < v.
     """
-    e = undirected_edges(df, src, dst)
+    e = undirected_edges(df)
     b2 = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = b2.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    centers = deg if max_degree is None else deg.where(F.col("d") <= max_degree)
-    za = b2.join(centers.select("u", "d"), "u").select(
+    za = b2.join(deg, "u").select(
         F.col("u").alias("z"), F.col("v").alias("a"), "d"
     )
     zb = b2.select(F.col("u").alias("z"), F.col("v").alias("b"))

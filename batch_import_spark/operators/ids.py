@@ -35,9 +35,9 @@ from pyspark.sql import types as T
 from batch_import_spark.session import local_frame
 
 
-def stable_id(*cols: Column | str, seed: int = 0) -> Column:
+def stable_id(*cols: Column | str) -> Column:
     """Deterministic 64-bit ID from the canonical key columns."""
-    return F.xxhash64(F.lit(seed), *[F.col(c) if isinstance(c, str) else c for c in cols])
+    return F.xxhash64(F.lit(0), *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
 def number_runs(
@@ -107,24 +107,17 @@ def number_runs(
     return out.drop("_pid", "_pos", "_offset", "_group_offset"), runs
 
 
-def with_dense_id(
-    df: DataFrame,
-    order_cols: list[str],
-    id_col: str = "node_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def with_dense_id(df: DataFrame, order_cols: list[str], id_col: str = "node_id") -> DataFrame:
     """Dense 0-based IDs in ``order_cols`` order, scalably.
 
-    Plan shape: range shuffle → sort within partitions → eager
+    Plan shape: range shuffle (``spark.sql.shuffle.partitions`` ranges)
+    → sort within partitions → eager
     checkpoint, which pins the sampled range boundaries and the sorted
     order so the count job and the numbering read the same rows in the
     same places → ``number_runs`` with one run per partition. No stage
     ever holds more than one partition's rows.
     """
-    if num_partitions:
-        ranged = df.repartitionByRange(num_partitions, *order_cols)
-    else:
-        ranged = df.repartitionByRange(*order_cols)
+    ranged = df.repartitionByRange(*order_cols)
     # repartitionByRange samples with a per-execution seed (and AQE may
     # re-coalesce), so the range shuffle must run exactly once.
     ranged = ranged.sortWithinPartitions(*order_cols).localCheckpoint(eager=True)

@@ -25,7 +25,6 @@ def build_unique_alias_dict(
     alias_df: DataFrame,
     key_col: str = "key_value",
     id_col: str = "entity_id",
-    extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Collapse an alias table to unique-key entries.
 
@@ -36,12 +35,9 @@ def build_unique_alias_dict(
     ``min(id) = max(id)``, one aggregate (a ``count_distinct`` would
     plan a two-level aggregate with two shuffles).
     """
-    extra = extra_cols or []
-    agg = [F.min(id_col).alias(id_col), F.max(id_col).alias("_max_id")]
-    agg += [F.min(c).alias(c) for c in extra]
     return (
         alias_df.groupBy(key_col)
-        .agg(*agg)
+        .agg(F.min(id_col).alias(id_col), F.max(id_col).alias("_max_id"))
         .where(F.col(id_col) == F.col("_max_id"))
         .drop("_max_id")
     )

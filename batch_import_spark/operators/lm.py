@@ -115,43 +115,32 @@ def bigram_model(docs: DataFrame, text_col: str = "text") -> tuple[DataFrame, Da
     return uni, bi, int(vocab_size)
 
 
-def score_documents(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    uni: DataFrame | None = None,
-    bi: DataFrame | None = None,
-    vocab_size: int | None = None,
-) -> DataFrame:
+def score_documents(docs: DataFrame) -> DataFrame:
     """Score each document by its smoothed bigram transition
-    probabilities (trained on `docs` itself when no model is given —
-    the CCNet self-scoring setup).
+    probabilities, trained on `docs` itself (the CCNet self-scoring
+    setup).
 
     Output per doc: n_trans, avg_prob_ppm (BIGINT floor mean),
     min_prob_ppm (the rarest transition). Docs with < 2 tokens score
     n_trans = 0 with NULL probabilities (nothing to judge).
     """
-    if uni is None or bi is None or vocab_size is None:
-        uni, bi, vocab_size = bigram_model(docs, text_col)
+    uni, bi, vocab_size = bigram_model(docs, "text")
 
-    toks = _words(text_col)
+    toks = _words("text")
     pairs = _adjacent_pairs(toks)
-    trans = docs.select(F.col(id_col), F.explode_outer(pairs).alias("p")).select(
-        id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
+    trans = docs.select(F.col("doc_id"), F.explode_outer(pairs).alias("p")).select(
+        "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
     # BIGINT `div` keeps the probability exact (double division would
     # round once (c2+1)*10^6 passes 2^53); missing joins only happen
     # for the explode_outer NULL row (short doc) — real transitions
-    # always hit both tables when the model was trained on this corpus
+    # always hit both tables, the model being trained on this corpus
     scored = (
         trans.join(bi, ["w1", "w2"], "left")
         .join(uni.withColumnRenamed("w", "w1"), ["w1"], "left")
         .select(
-            id_col,
+            "doc_id",
             "w1",
-            # coalesce(c1, 0): with an EXTERNAL model an OOV context
-            # word has no unigram row — smoothed prob is PPM/(0+V),
-            # not NULL (NULL would deflate the average silently)
             F.expr(
                 f"CASE WHEN w1 IS NULL THEN NULL "
                 f"ELSE ((coalesce(c2, 0L) + 1L) * {PPM}L) "
@@ -159,7 +148,7 @@ def score_documents(
             ).alias("p_ppm"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("w1").cast("long").alias("n_trans"),
         F.expr(
             "CASE WHEN count(w1) > 0 THEN sum(p_ppm) div count(w1) END"

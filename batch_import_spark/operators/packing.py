@@ -44,8 +44,6 @@ def token_count(text_col: Column | str) -> Column:
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_len: int = 512,
     overlap: int = 64,
 ) -> DataFrame:
@@ -67,13 +65,13 @@ def chunk_documents(
     if overlap >= chunk_len:
         raise ValueError(f"overlap ({overlap}) must be < chunk_len ({chunk_len})")
     stride = chunk_len - overlap
-    n = F.length(F.col(text_col))
+    n = F.length(F.col("text"))
     starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(stride))).otherwise(
         F.array().cast("array<int>")
     )
     ex = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_t"),
+        "doc_id",
+        F.col("text").alias("_t"),
         F.explode(starts).alias("_s"),
     )
     return ex.select(

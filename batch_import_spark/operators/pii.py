@@ -65,16 +65,12 @@ def pii_columns(text_col: str = "text") -> tuple[list[Column], Column, Column]:
     return counts, total.alias("n_pii"), cur.alias("redacted")
 
 
-def redact_pii(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Per-doc PII counts by kind + fully redacted text.
 
     Output: id, n_email, n_ipv4, n_ssn, n_phone, n_pii, redacted.
     NULL text passes through as NULL with zero counts (count of NULL
     is 0, not NULL — a missing doc has no PII).
     """
-    counts, total, redacted = pii_columns(text_col)
-    return docs.select(F.col(id_col), *counts, total, redacted)
+    counts, total, redacted = pii_columns("text")
+    return docs.select(F.col("doc_id"), *counts, total, redacted)

@@ -6,8 +6,7 @@ bucketizes time into fixed-width bins, explodes each interval over
 the bins it covers, and equi-joins points to intervals on the bin —
 candidates are then re-filtered exactly. Cost: |points| +
 Σ(interval_span / bin) rows through ONE hash join, shuffle keyed on
-the bin (add interval keys to ``extra_keys`` to co-partition by
-tenant/user as well). Named in the task contract's custom-operator
+the bin. Named in the task contract's custom-operator
 examples (as-of join, range join); the same grid trick as the
 spatial index (operators/spatial.py), one dimension instead of two.
 
@@ -26,30 +25,24 @@ from pyspark.sql import functions as F
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
-    ts: str = "ts",
-    start: str = "start_ts",
-    end: str = "end_ts",
     bin_seconds: int = 3600,
-    extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Inner join of point rows to every interval containing them
-    (``start <= ts <= end``, inclusive both ends).
+    (``start_ts <= ts <= end_ts``, inclusive both ends).
 
     A point lives in exactly one bin and an interval appears at most
     once per bin, so the equi-join produces no duplicate pairs — no
     dedup pass needed.
     """
-    keys = list(extra_keys or [])
-
     def _bin(c: str):
         # NTZ timestamps can't cast straight to long; route via
         # TIMESTAMP (wall time preserved — sessions pin UTC)
         return F.floor(F.col(c).cast("timestamp").cast("long") / bin_seconds)
 
-    p = points.withColumn("_bin", _bin(ts))
-    i = intervals.withColumn("_bin", F.explode(F.sequence(_bin(start), _bin(end))))
+    p = points.withColumn("_bin", _bin("ts"))
+    i = intervals.withColumn("_bin", F.explode(F.sequence(_bin("start_ts"), _bin("end_ts"))))
     return (
-        p.join(i, ["_bin", *keys])
-        .where(F.col(ts).between(F.col(start), F.col(end)))
+        p.join(i, "_bin")
+        .where(F.col("ts").between(F.col("start_ts"), F.col("end_ts")))
         .drop("_bin")
     )

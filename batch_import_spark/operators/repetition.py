@@ -68,8 +68,6 @@ def _word_grams(toks: Column, n: int) -> Column:
 
 def repetition_screen(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     line_sep: str = "\n",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5,),
@@ -79,10 +77,10 @@ def repetition_screen(
     Documents with no words are dropped (nothing to screen), matching
     the convention of the other text operators.
     """
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     base = docs.select(
-        F.col(id_col),
-        F.col(text_col).alias("_text"),
+        F.col("doc_id"),
+        F.col("text").alias("_text"),
         toks.alias("_tk"),
         F.length(F.array_join(toks, " ")).cast("long").alias("_chars"),
     ).where(F.size("_tk") > 0)
@@ -92,7 +90,7 @@ def repetition_screen(
 
     # --- line metrics --------------------------------------------------------
     lines = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.filter(
                 F.split("_text", F.lit(line_sep), -1),
@@ -100,10 +98,10 @@ def repetition_screen(
             )
         ).alias("ln"),
     )
-    per_line = lines.groupBy(id_col, "ln").agg(
+    per_line = lines.groupBy("doc_id", "ln").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    line_stats = per_line.groupBy(id_col).agg(
+    line_stats = per_line.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_lines"),
         # repeats beyond the first occurrence of each distinct line
         (F.sum("c") - F.count(F.lit(1))).cast("long").alias("_n_dup"),
@@ -115,29 +113,29 @@ def repetition_screen(
     grams_union = None
     for n in top_ns:
         g = base.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(n).alias("n"),
             F.explode(_word_grams(F.col("_tk"), n)).alias("g"),
         )
         grams_union = g if grams_union is None else grams_union.unionAll(g)
-    gram_counts = grams_union.groupBy(id_col, "n", "g").agg(
+    gram_counts = grams_union.groupBy("doc_id", "n", "g").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
     # argmax by (count DESC, gram ASC) via struct-min — no window/sort
     best = (
-        gram_counts.groupBy(id_col, "n")
+        gram_counts.groupBy("doc_id", "n")
         .agg(
             F.min(
                 F.struct((-F.col("c")).alias("negc"), F.col("g").alias("g"))
             ).alias("b")
         )
         .select(
-            id_col,
+            "doc_id",
             "n",
             ((-F.col("b.negc")) * F.length("b.g")).cast("long").alias("mass"),
         )
     )
-    top_mass = best.groupBy(id_col).agg(
+    top_mass = best.groupBy("doc_id").agg(
         *[
             F.max(F.when(F.col("n") == n, F.col("mass"))).alias(f"_m{n}")
             for n in top_ns
@@ -148,16 +146,16 @@ def repetition_screen(
     dups_union = None
     for n in dup_ns:
         g = base.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(n).alias("n"),
             F.explode(_word_grams(F.col("_tk"), n)).alias("g"),
         )
         dups_union = g if dups_union is None else dups_union.unionAll(g)
     dup_counts = (
-        dups_union.groupBy(id_col, "n", "g")
+        dups_union.groupBy("doc_id", "n", "g")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .where(F.col("c") > 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             *[
                 F.sum(
@@ -169,15 +167,15 @@ def repetition_screen(
     )
 
     out = (
-        base.select(id_col, "_chars")
-        .join(line_stats, [id_col], "left")
-        .join(top_mass, [id_col], "left")
-        .join(dup_counts, [id_col], "left")
+        base.select("doc_id", "_chars")
+        .join(line_stats, ["doc_id"], "left")
+        .join(top_mass, ["doc_id"], "left")
+        .join(dup_counts, ["doc_id"], "left")
     )
     # BIGINT `div` throughout: double division would round once the
     # numerator passes 2^53 — the repo-wide exactness discipline
     sel = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_lines"),
         F.expr(f"(_n_dup * {PPM}L) div n_lines").alias("dup_line_ppm"),
         F.expr(

@@ -24,6 +24,9 @@ from pyspark.sql.window import Window
 from batch_import_spark.operators.sketches import portable_hash60
 
 _BUCKETS = 1_000_000  # hash-space quantization for rate thresholds
+#: fingerprints shared by more documents are left out of the
+#: split-leakage audit (read at call time)
+MAX_GROUP_SIZE = 1000
 
 
 def _keyed_hash(key_cols: list[str], seed: int) -> Column:
@@ -66,21 +69,14 @@ def mixture_sample(
     return df.where(_keyed_hash(key_cols, seed) % _BUCKETS < rate)
 
 
-def temperature_mixture(
-    df: DataFrame,
-    source_col: str,
-    token_budget: int,
-    temperature_num: int = 1,
-    temperature_den: int = 2,
-) -> DataFrame:
+def temperature_mixture(df: DataFrame, source_col: str, token_budget: int) -> DataFrame:
     """Temperature-scaled domain mixing weights (the Pile/Gopher/
     XLM-R sampling rule): source s gets sampling weight ∝ n_s^T with
-    T = temperature_num/temperature_den (default 1/2 — upweights
-    small curated domains relative to proportional sampling), and a
-    ``token_budget``-row allocation is split by those weights.
+    T = 1/2 (upweights small curated domains relative to proportional
+    sampling), and a ``token_budget``-row allocation is split by those
+    weights.
 
-    Exactness: n^(1/2) and n^(1/1) are the supported temperatures —
-    sqrt is correctly-rounded IEEE in every engine, so
+    Exactness: sqrt is correctly-rounded IEEE in every engine, so
     w_s = floor(sqrt(n_s) * 10^6) is reproducible; shares and
     allocations are then pure BIGINT arithmetic
     (share_ppm = w_s * 10^6 div Σw, alloc = budget * w_s div Σw,
@@ -91,12 +87,7 @@ def temperature_mixture(
     broadcast single-row total join. Output: (source, n_docs,
     w_scaled, share_ppm, alloc_docs, epochs_ppm).
     """
-    if (temperature_num, temperature_den) == (1, 2):
-        w = F.expr("CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT)")
-    elif (temperature_num, temperature_den) == (1, 1):
-        w = F.expr("n_docs * 1000000")
-    else:
-        raise ValueError("supported temperatures: 1/2, 1/1")
+    w = F.expr("CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000) AS BIGINT)")
     counts = (
         df.groupBy(F.col(source_col).alias("source"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -142,21 +133,14 @@ def stratified_sample_k(
     )
 
 
-def split_leakage_audit(
-    df: DataFrame,
-    fingerprint: Column,
-    id_col: str = "doc_id",
-    test_mod: int = 10,
-    test_rem: int = 0,
-    max_group_size: int | None = 1000,
-) -> DataFrame:
+def split_leakage_audit(df: DataFrame, fingerprint: Column) -> DataFrame:
     """Find evaluation-set contamination: pairs of fingerprint-equal
     documents that landed on OPPOSITE sides of the hash split — a doc
-    is test iff portable_hash60(id) % test_mod == test_rem (a test
+    is test iff portable_hash60(id) % 10 == 0 (a test
     doc whose duplicate is in train inflates eval scores).
 
     Equi-join on the fingerprint with a per-group size cap
-    (boilerplate fingerprints shared by >max_group_size docs are the
+    (boilerplate fingerprints shared by >MAX_GROUP_SIZE docs are the
     hot keys that would go quadratic; they belong to the dedup pass,
     not the audit — same guard discipline as operators/buckets.py).
     Output: (doc_a, doc_b, fp) with doc_a < doc_b, train/test mixed.
@@ -164,15 +148,14 @@ def split_leakage_audit(
     from batch_import_spark.operators.sketches import portable_hash60
 
     t = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         fingerprint.alias("fp"),
-        (F.pmod(portable_hash60(F.col(id_col)), F.lit(test_mod)) == test_rem).alias(
+        (F.pmod(portable_hash60(F.col("doc_id")), F.lit(10)) == 0).alias(
             "is_test"
         ),
     )
-    if max_group_size is not None:
-        sizes = t.groupBy("fp").agg(F.count(F.lit(1)).alias("_gsz"))
-        t = t.join(sizes.where(F.col("_gsz") <= max_group_size), "fp").drop("_gsz")
+    sizes = t.groupBy("fp").agg(F.count(F.lit(1)).alias("_gsz"))
+    t = t.join(sizes.where(F.col("_gsz") <= MAX_GROUP_SIZE), "fp").drop("_gsz")
     a = t.select(F.col("id").alias("doc_a"), "fp", F.col("is_test").alias("_ta"))
     b = t.select(F.col("id").alias("doc_b"), "fp", F.col("is_test").alias("_tb"))
     return (
@@ -277,12 +260,7 @@ def unimax_budget(
     )
 
 
-def curriculum_order(
-    df: DataFrame,
-    stage_col: Column,
-    id_col: str = "doc_id",
-    seed: int = 1,
-) -> DataFrame:
+def curriculum_order(df: DataFrame, stage_col: Column) -> DataFrame:
     """Deterministic curriculum ordering: a global training order
     that visits stages (easy → hard buckets, e.g. by length or
     quality score) in sequence while DECORRELATING within each stage
@@ -297,11 +275,11 @@ def curriculum_order(
     instead (rank within stage + stage offsets) to avoid the single
     ordered exchange; semantics identical."""
     h = portable_hash60(
-        F.concat(F.lit(str(seed) + ":"), F.col(id_col).cast("string"))
+        F.concat(F.lit("1:"), F.col("doc_id").cast("string"))
     )
-    w = Window.orderBy(stage_col.asc(), h.asc(), F.col(id_col).asc())
+    w = Window.orderBy(stage_col.asc(), h.asc(), F.col("doc_id").asc())
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         stage_col.cast("int").alias("stage"),
         F.row_number().over(w).cast("long").alias("curriculum_rank"),
     )

@@ -21,11 +21,11 @@ Determinism contract (both engines replay it exactly):
 Scale shape: assignment is a zero-shuffle codegen scan; the pairwise
 stage self-joins ON THE CELL KEY only, so cost is sum of cell
 sizes squared — n_cells is chosen ~sqrt(N) (paper uses ~100k
-clusters at web scale) to keep cells bounded, and ``max_cell``
+clusters at web scale) to keep cells bounded, and ``MAX_CELL``
 documents the guard: cells larger than it are skipped and counted
-rather than allowed to go quadratic (hot-bucket-cap discipline,
-default ON like dedup.py). The default cap keeps the worst-case
-per-cell pair volume (max_cell²/2 rows, all produced by the ONE task
+rather than allowed to go quadratic (hot-bucket-cap discipline, as
+in dedup.py). The cap keeps the worst-case
+per-cell pair volume (MAX_CELL²/2 rows, all produced by the ONE task
 that owns that cell's join key) at ~2e6 scalar rows — bounded CPU,
 bounded memory, nothing collected.
 
@@ -48,7 +48,7 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,11 +60,10 @@ from batch_import_spark.operators.similarity import (
 
 log = logging.getLogger(__name__)
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+#: cosine at or above which (rounded to 6 places) two vectors are duplicates
+THRESHOLD = 0.95
+#: cells with more members pass through un-deduped (read at call time)
+MAX_CELL = 2_000
 
 
 def _cell_pairs_arrow(small: DataFrame, threshold: float) -> DataFrame:
@@ -149,9 +148,7 @@ def _cell_pairs_arrow(small: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _greedy_keepers(
-    pairs: DataFrame, nodes: DataFrame, max_rounds: int | None = None
-) -> DataFrame:
+def _greedy_keepers(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Exact greedy keep-first verdict over a duplicate-pair graph.
 
     ``pairs``: (ia, ib) with ia < ib (similarity edges); ``nodes``:
@@ -179,13 +176,12 @@ def _greedy_keepers(
         "id", F.lit("K").alias("st")
     ).unionAll(targets.select("id", F.lit("U").alias("st")))
     status = status.localCheckpoint(eager=False)
-    if max_rounds is None:
-        # the dependence depth of an id-monotone chain can reach the
-        # undecided-node count (each round only advances one level),
-        # so a legitimate input must never trip the bound — derive it
-        # from the initial U-set size (the count scans the
-        # just-materialized pair checkpoint, one cheap job)
-        max_rounds = max(64, targets.count())
+    # the dependence depth of an id-monotone chain can reach the
+    # undecided-node count (each round only advances one level), so a
+    # legitimate input must never trip the bound — derive it from the
+    # initial U-set size (the count scans the just-materialized pair
+    # checkpoint, one cheap job)
+    max_rounds = max(64, targets.count())
 
     for _ in range(max_rounds):
         nbr = (
@@ -236,19 +232,13 @@ def _greedy_keepers(
     )
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    threshold: float = 0.95,
-    max_cell: int = 2_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def semantic_dedup(corpus: DataFrame, n_cells: int = 16) -> DataFrame:
     """Per-document semantic-dedup verdict.
 
     Output: (id, cell, keep boolean, dup_of nullable id) — ``dup_of``
-    is the lowest-id KEPT witness that evicted the row. Cells larger
-    than ``max_cell`` are passed through with keep=true (counted by
+    is the lowest-id KEPT witness that evicted the row; a duplicate has
+    cosine >= ``THRESHOLD``. Cells larger than ``MAX_CELL`` are passed
+    through with keep=true (counted by
     callers via the cell sizes; never quadratic).
     """
     # materialize the input projection BEFORE centroid seeding:
@@ -256,11 +246,11 @@ def semantic_dedup(
     # without this the (possibly expensive) upstream corpus plan runs
     # twice end-to-end
     base = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
     ).localCheckpoint(eager=False)
     centroids = ivf_seed_centroids(base, n_cells, "id", "v")
     # assignment + per-row norm in one Arrow kernel (bit-identical to
-    # the argmax-dot/_dot expression path, whose interpreted
+    # the argmax-dot/zip_with-dot expression path, whose interpreted
     # higher-order lambdas cost ~5 s at 20k rows — round 7); the norm
     # is computed once per ROW here, not once per pair, with the same
     # IEEE steps the oracle takes
@@ -274,13 +264,13 @@ def semantic_dedup(
     # and split small/big with a literal filter instead of rebuilding
     # a broadcast join in all four frames that derive from the split
     sizes = c.groupBy("cell").agg(F.count(F.lit(1)).alias("n_cell")).collect()
-    big_cells = sorted(r.cell for r in sizes if r.n_cell > max_cell)
+    big_cells = sorted(r.cell for r in sizes if r.n_cell > MAX_CELL)
     if big_cells:
         log.warning(
-            "semantic_dedup: %d cell(s) over max_cell=%d passed through "
+            "semantic_dedup: %d cell(s) over MAX_CELL=%d passed through "
             "un-deduped (largest %d members)",
             len(big_cells),
-            max_cell,
+            MAX_CELL,
             max(r.n_cell for r in sizes),
         )
         small = c.where(~F.col("cell").isin(big_cells))
@@ -288,31 +278,7 @@ def semantic_dedup(
     else:
         small, big = c, c.where(F.lit(False))
 
-    if threshold > 0:
-        pairs = _cell_pairs_arrow(small, threshold)
-    else:  # pragma: no cover - degenerate threshold, keep JVM path
-        a = small.select(
-            "cell",
-            F.col("id").alias("ia"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-        b = small.select(
-            "cell",
-            F.col("id").alias("ib"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-        cos = F.when(
-            F.col("na") * F.col("nb") > 0,
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        ).otherwise(F.lit(0.0))
-        pairs = (
-            a.join(b, "cell")
-            .where(F.col("ia") < F.col("ib"))
-            .where(F.round(cos, 6) >= threshold)
-            .select("cell", "ia", "ib")
-        )
+    pairs = _cell_pairs_arrow(small, THRESHOLD)
     # the cell key never feeds the verdict (cells partition the graph,
     # ids are globally unique) — the fixed point runs cell-oblivious
     dropped = _greedy_keepers(pairs, small.select("id"))
@@ -333,4 +299,4 @@ def semantic_dedup(
         F.lit(True).alias("keep"),
         F.lit(None).cast("long").alias("dup_of"),
     )
-    return verdict.unionAll(passthrough).withColumnsRenamed({"id": id_col})
+    return verdict.unionAll(passthrough).withColumnsRenamed({"id": "vec_id"})

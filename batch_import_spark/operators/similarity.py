@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from batch_import_spark.operators.buckets import cap_hot_buckets
 from batch_import_spark.session import fan_out, local_frame
 
 
@@ -140,14 +141,7 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors per query (brute force).
 
     ``queries(query_id, embedding)`` is broadcast; the corpus is
@@ -155,10 +149,10 @@ def cosine_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            "query_id", F.col("embedding").alias("q_vec")
         )
     )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
+    c = corpus.select("vec_id", F.col("embedding").alias("c_vec"))
     scored = c.crossJoin(q).select(
         "query_id",
         "vec_id",
@@ -170,7 +164,10 @@ def cosine_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _hyperplane(dim: int, table: int, plane: int, seed: int = 11) -> list[float]:
+_PLANE_SEED = 11
+
+
+def _hyperplane(dim: int, table: int, plane: int) -> list[float]:
     """Deterministic pseudo-random unit hyperplane.
 
     Components derive from a splitmix-style integer hash of
@@ -179,7 +176,7 @@ def _hyperplane(dim: int, table: int, plane: int, seed: int = 11) -> list[float]
     """
     comps = []
     for i in range(dim):
-        x = (seed * 0x9E3779B97F4A7C15 + table * 0xBF58476D1CE4E5B9 + plane * 0x94D049BB133111EB + i) & 0xFFFFFFFFFFFFFFFF
+        x = (_PLANE_SEED * 0x9E3779B97F4A7C15 + table * 0xBF58476D1CE4E5B9 + plane * 0x94D049BB133111EB + i) & 0xFFFFFFFFFFFFFFFF
         x ^= x >> 30
         x = (x * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
         x ^= x >> 27
@@ -226,17 +223,14 @@ def lsh_ann_topk(
     k: int = 10,
     num_tables: int = 4,
     num_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: union of exact re-ranked bucket collisions
     over ``num_tables`` independent hyperplane tables. Buckets hash
     RAW vectors (the sign test is scale-invariant); re-rank uses
     cosine = dot/(|q|·|c|)."""
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
+    c = corpus.select("vec_id", F.col("embedding").alias("c_vec"))
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        "query_id", F.col("embedding").alias("q_vec")
     )
     c_buckets = c.select(
         "vec_id",
@@ -337,9 +331,6 @@ def ivf_ann_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize the corpus into
     ``n_cells`` inverted lists, route each query to its ``n_probe``
@@ -359,14 +350,14 @@ def ivf_ann_topk(
     norm recomputation into every HOF lambda reference — a measured
     14× row-cost blowup.
     """
-    centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
+    centroids = ivf_seed_centroids(corpus, n_cells, "vec_id", "embedding")
     # corpus assignment via the Arrow kernel (bit-identical to the
     # argmax-dot expression path; the kernel's per-row norm is the same
     # sqrt(sequential sum of squares) l2_norm computes, so the
     # re-rank below reuses it instead of re-folding the corpus vector
     # twice per candidate pair)
     assigned = _assign_cells_arrow(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
         centroids,
     ).select(
         F.col("id").alias("vec_id"),
@@ -375,7 +366,7 @@ def ivf_ann_topk(
         F.col("nrm").alias("c_nrm"),
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        "query_id", F.col("embedding").alias("q_vec")
     )
     probes = (
         q.select(
@@ -763,9 +754,6 @@ def pq_encode(
     centroids: list[list[float]],
     book: list[list[list[int]]],
     m_sub: int = 8,
-    scale: int = PQ_SCALE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode vectors against FROZEN quantizers -> (vec_id, cell,
     codes). Row-local by construction (cell argmax + residual + code
@@ -773,7 +761,7 @@ def pq_encode(
     what makes the index incrementally maintainable: encode(A) UNION
     encode(B) == encode(A ∪ B) exactly, for any split."""
     return _pq_encode_arrow(
-        corpus, centroids, book, m_sub, scale, id_col, vec_col
+        corpus, centroids, book, m_sub, PQ_SCALE, "vec_id", "embedding"
     )
 
 
@@ -783,9 +771,6 @@ def ivf_pq_extend(
     centroids: list[list[float]],
     book: list[list[list[int]]],
     m_sub: int = 8,
-    scale: int = PQ_SCALE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Fold a landing vector batch into a standing IVF-PQ index
     WITHOUT re-quantizing the corpus — the similarity twin of
@@ -798,7 +783,7 @@ def ivf_pq_extend(
     is handled by periodic full rebuilds (the standard IVF practice),
     not by this fold."""
     return index.select("vec_id", "cell", "codes").unionByName(
-        pq_encode(batch, centroids, book, m_sub, scale, id_col, vec_col)
+        pq_encode(batch, centroids, book, m_sub)
     )
 
 
@@ -810,10 +795,6 @@ def ivf_pq_topk(
     m_sub: int = 8,
     k_codes: int = 16,
     k: int = 10,
-    scale: int = PQ_SCALE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF-PQ with residual quantization (Jégou et al. 2011, the
     100 TB ANN storage path): coarse IVF cells + per-subspace integer
@@ -839,15 +820,15 @@ def ivf_pq_topk(
     codes) — never the raw vectors, so the shuffle/broadcast payload
     drops by the same ~100x as the storage.
     """
-    centroids = ivf_seed_centroids(corpus, n_cells, id_col, vec_col)
+    centroids = ivf_seed_centroids(corpus, n_cells, "vec_id", "embedding")
     book = pq_codebook_from_corpus(
-        corpus, centroids, m_sub, k_codes, id_col, vec_col, scale,
+        corpus, centroids, m_sub, k_codes, "vec_id", "embedding", PQ_SCALE,
         skip=n_cells,
     )
     dim = len(centroids[0])
     ds = dim // m_sub
     zero = F.lit(0).cast("long")
-    rq_base = _pq_residuals(corpus, centroids, scale, id_col, vec_col)
+    rq_base = _pq_residuals(corpus, centroids, PQ_SCALE, "vec_id", "embedding")
     assigned = _pq_assign_codes_arrow(rq_base, book, m_sub)
     # Query side: queries are small by contract (the same broadcast
     # assumption every path in this module makes), so the classic ADC
@@ -860,10 +841,10 @@ def ivf_pq_topk(
     # bench scale; measured ~10 s -> ~3 s), and the scan side then
     # reduces to one array lookup per (candidate, subspace).
     spark = corpus.sparkSession
-    qcents = [[math.floor(x * scale) for x in cv] for cv in centroids]
+    qcents = [[math.floor(x * PQ_SCALE) for x in cv] for cv in centroids]
     probe_rows = []
     for r in queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("v")
+        "query_id", F.col("embedding").alias("v")
     ).collect():
         v = [float(x) for x in r.v]
         scores = []
@@ -872,7 +853,7 @@ def ivf_pq_topk(
             for a, b2 in zip(v, cv):
                 d += a * b2
             scores.append((-d, ci))
-        qv = [math.floor(x * scale) for x in v]
+        qv = [math.floor(x * PQ_SCALE) for x in v]
         for _, cell in sorted(scores)[:n_probe]:
             rqq = [qv[i] - qcents[cell][i] for i in range(dim)]
             qdist = [
@@ -918,9 +899,6 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     num_tables: int = 4,
     num_planes: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """(id_a, id_b, cosine ≥ threshold) via LSH-bucketed self-join.
 
@@ -930,13 +908,12 @@ def embedding_near_duplicates(
     full vectors are joined back *after* the (id_a, id_b) dedup for
     the cosine verify, so at dim=768+ the candidate shuffle volume is
     not multiplied by ``num_tables`` × vector payload (the same
-    count-join discipline as minhash_near_duplicates).
-    ``max_bucket_size`` is the degenerate-bucket guard
-    (operators.buckets), ON by default (10k): e.g. zero/constant
-    vectors all land in one bucket per table; over-cap buckets are
-    dropped lazily in-plan before the self-join. Pass ``None`` to opt
-    out; for counted/logged drops use cap_hot_buckets directly."""
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    count-join discipline as minhash_near_duplicates). Buckets are
+    capped by the degenerate-bucket guard
+    (operators.buckets.cap_hot_buckets): e.g. zero/constant vectors all
+    land in one bucket per table; over-cap buckets are dropped lazily
+    in-plan before the self-join."""
+    c = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     buckets = c.select(
         "id",
         F.explode(
@@ -951,10 +928,7 @@ def embedding_near_duplicates(
             )
         ).alias("tb"),
     )
-    if max_bucket_size is not None:
-        from batch_import_spark.operators.buckets import cap_hot_buckets
-
-        buckets, _ = cap_hot_buckets(buckets, ["tb"], max_bucket_size, eager_stats=False)
+    buckets = cap_hot_buckets(buckets, ["tb"])
     cand = (
         buckets.join(buckets.select("tb", F.col("id").alias("id_b")), "tb")
         .where(F.col("id") < F.col("id_b"))
@@ -970,15 +944,7 @@ def embedding_near_duplicates(
     )
 
 
-def hard_negatives(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Hard-negative mining for contrastive / retrieval training:
     per query, the exact top-k most-similar vectors whose LABEL
     differs from the query's — the negatives closest to the decision
@@ -993,15 +959,15 @@ def hard_negatives(
     the full scan."""
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.col(label_col).alias("q_label"),
+            "query_id",
+            F.col("embedding").alias("q_vec"),
+            F.col("label").alias("q_label"),
         )
     )
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("c_label"),
+        "vec_id",
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("c_label"),
     )
     scored = (
         c.crossJoin(q)

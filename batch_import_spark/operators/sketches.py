@@ -197,8 +197,9 @@ def _rep_expr(bucket: str, s: int) -> str:
     )
 
 
-def bucket_sql_duckdb(v: str, s: int = QUANTILE_SUB_BITS) -> str:
+def bucket_sql_duckdb(v: str) -> str:
     """DuckDB dialect twin of _bucket_expr, for oracles."""
+    s = QUANTILE_SUB_BITS
     e0 = f"CAST(FLOOR(LOG2(CAST({v} AS DOUBLE))) AS BIGINT)"
     e = (
         f"({e0} + CASE WHEN {v} >= (CAST(2 AS BIGINT) << CAST({e0} AS INT)) THEN 1 "
@@ -210,8 +211,9 @@ def bucket_sql_duckdb(v: str, s: int = QUANTILE_SUB_BITS) -> str:
     )
 
 
-def rep_sql_duckdb(bucket: str, s: int = QUANTILE_SUB_BITS) -> str:
+def rep_sql_duckdb(bucket: str) -> str:
     """DuckDB dialect twin of _rep_expr, for oracles."""
+    s = QUANTILE_SUB_BITS
     e = f"({bucket} >> {s})"
     m = f"({bucket} & {(1 << s) - 1})"
     return (
@@ -220,19 +222,14 @@ def rep_sql_duckdb(bucket: str, s: int = QUANTILE_SUB_BITS) -> str:
     )
 
 
-def quantile_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    sub_bits: int = QUANTILE_SUB_BITS,
-) -> DataFrame:
+def quantile_sketch(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """Build log-histogram quantile-sketch registers:
     (group_cols..., bucket long, cnt long). Values must be
     non-negative BIGINTs (use micro-units for money; raise ANSI-style
     on negatives via the caller's cast discipline)."""
     v = f"CAST({value_col} AS BIGINT)"
     return (
-        df.select(*group_cols, F.expr(_bucket_expr(v, sub_bits)).alias("bucket"))
+        df.select(*group_cols, F.expr(_bucket_expr(v, QUANTILE_SUB_BITS)).alias("bucket"))
         .groupBy(*group_cols, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -254,12 +251,11 @@ def quantile_sketch_query(
     sketch: DataFrame,
     group_cols: list[str],
     q_pcts: list[int] = (50, 90, 99),
-    sub_bits: int = QUANTILE_SUB_BITS,
 ) -> DataFrame:
     """Query quantiles from registers: (group_cols..., q_pct int,
     est long). ``est`` is the lower bound of the bucket holding the
     nearest-rank (ceil(q·n)) element — a deterministic value lower
-    bound with relative error ≤ 2^-sub_bits. The per-group window
+    bound with relative error ≤ 2^-QUANTILE_SUB_BITS. The per-group window
     runs over the bounded register set (≤ ~1k rows/group), never the
     raw data."""
     w = (
@@ -279,7 +275,7 @@ def quantile_sketch_query(
     )
     hit = qd.where(F.col("cum") * 100 >= F.col("q_pct") * F.col("n"))
     return hit.groupBy(*group_cols, "q_pct").agg(
-        F.min(F.expr(_rep_expr("bucket", sub_bits))).alias("est")
+        F.min(F.expr(_rep_expr("bucket", QUANTILE_SUB_BITS))).alias("est")
     )
 
 
@@ -441,14 +437,19 @@ def cms_estimate(
 
 # --- theta sketch (set operations) -------------------------------------------
 
+#: registers keep the hashes whose top THETA_FRAC_BITS bits are zero
+#: (read at call time)
+THETA_FRAC_BITS = 4
 
-def theta_sketch(df: DataFrame, key_col: str, frac_bits: int = 4) -> DataFrame:
+
+def theta_sketch(df: DataFrame, key_col: str) -> DataFrame:
     """Fixed-theta sketch: the distinct portable hashes whose top
-    ``frac_bits`` bits are zero (sampling rate 2^-frac_bits, i.e.
-    theta = 2^(60 - frac_bits)). Registers are exact BIGINTs — any
-    engine rebuilds the identical set — and the register table is a
-    ~2^-frac_bits uniform sample of the distinct keys, so
-    |distinct| ≈ n_registers << frac_bits.
+    ``THETA_FRAC_BITS`` bits are zero (sampling rate
+    2^-THETA_FRAC_BITS, i.e. theta = 2^(60 - THETA_FRAC_BITS)).
+    Registers are exact BIGINTs — any engine rebuilds the identical
+    set — and the register table is a ~2^-THETA_FRAC_BITS uniform
+    sample of the distinct keys, so
+    |distinct| ≈ n_registers << THETA_FRAC_BITS.
 
     Unlike KMV (k smallest) the kept-set is a FIXED hash region, so
     sketches of different tables compose by plain set algebra:
@@ -462,14 +463,12 @@ def theta_sketch(df: DataFrame, key_col: str, frac_bits: int = 4) -> DataFrame:
     h = portable_hash60(F.col(key_col))
     return (
         df.select(h.alias("h"))
-        .where(F.expr(f"shiftright(h, {60 - frac_bits})") == 0)
+        .where(F.expr(f"shiftright(h, {60 - THETA_FRAC_BITS})") == 0)
         .distinct()
     )
 
 
-def theta_set_ops(
-    a: DataFrame, b: DataFrame, frac_bits: int = 4
-) -> DataFrame:
+def theta_set_ops(a: DataFrame, b: DataFrame) -> DataFrame:
     """Estimate |A|, |B|, |A ∪ B|, |A ∩ B| from two theta sketches
     (single-row output; every column BIGINT-exact given the
     registers). Intersection-by-inclusion-exclusion would also work;
@@ -497,7 +496,7 @@ def theta_set_ops(
     ).collect()[0]
     na, nb, n_union, n_inter = row["na"], row["nb"], row["nu"], row["ni"]
     spark = a.sparkSession
-    scale = 1 << frac_bits
+    scale = 1 << THETA_FRAC_BITS
     return local_frame(
         spark,
         [

@@ -7,14 +7,14 @@ skew-join splitting handles sort-merge cases after the fact; this
 operator is the explicit, planner-independent fix for the classic
 big-skewed ⋈ small-ish shape:
 
-- LEFT (big, skewed) rows get a deterministic salt in [0, n_salts)
+- LEFT (big, skewed) rows get a deterministic salt in [0, N_SALTS)
   hashed from the whole row — NO rand(), so retries and re-runs
   produce identical placement;
 - RIGHT rows are replicated once per salt (explode of a literal
-  sequence — cost n_salts × |right|, which is why right should be the
+  sequence — cost N_SALTS × |right|, which is why right should be the
   smaller side);
 - the join key becomes (key, salt): the hot key's rows now land on
-  n_salts reducers instead of one.
+  N_SALTS reducers instead of one.
 
 Result set is IDENTICAL to the plain join (verified property-style in
 tests); only the physical distribution changes.
@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: reducers each hot left key is spread across
+N_SALTS = 8
 
 
 def _xxhashable(dt: T.DataType) -> bool:
@@ -39,16 +42,9 @@ def _xxhashable(dt: T.DataType) -> bool:
     return True
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``left`` and ``right`` on ``on`` with the left side's
-    hot keys spread across ``n_salts`` reducers. Supported ``how``:
-    inner and left (the shapes where the left side's skew matters).
+def salted_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """Inner equi-join of ``left`` and ``right`` on ``on`` with the left
+    side's hot keys spread across ``N_SALTS`` reducers.
 
     The salt is hashed from the left row's *hashable* columns (map-typed
     columns are skipped — xxhash64 can't hash them); the internal salt
@@ -56,10 +52,6 @@ def salted_join(
     either side. Rows identical in every hashable column land on the
     same salt — acceptable, since indistinguishable rows gain nothing
     from being split."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    if n_salts < 1:
-        raise ValueError(f"n_salts must be >= 1, got {n_salts}")
     hashable = [f.name for f in left.schema.fields if _xxhashable(f.dataType)]
     if not hashable:
         raise ValueError("salted_join: no hashable columns on the left side")
@@ -67,10 +59,10 @@ def salted_join(
     taken = set(left.columns) | set(right.columns)
     while salt_col in taken:
         salt_col += "_"
-    salt = F.pmod(F.xxhash64(F.struct(*hashable)), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(F.struct(*hashable)), F.lit(N_SALTS))
     l_salted = left.withColumn(salt_col, salt.cast("int"))
     r_salted = right.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        salt_col, F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)))
     )
-    out = l_salted.join(r_salted, [*on, salt_col], how)
+    out = l_salted.join(r_salted, [*on, salt_col])
     return out.drop(salt_col)

@@ -24,24 +24,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_spatial_index(
-    df: DataFrame,
-    id_col: str = "node_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    cells_per_degree: int = 10,
-) -> DataFrame:
+def build_spatial_index(df: DataFrame, cells_per_degree: int = 10) -> DataFrame:
     """(cell_lat, cell_lon, node_id, lat, lon) — one row per point.
 
     At rest, write this partitioned/bucketed by (cell_lat, cell_lon);
     the lookup join then maps to partition pruning.
     """
     return df.select(
-        F.floor(F.col(lat_col) * cells_per_degree).cast("long").alias("cell_lat"),
-        F.floor(F.col(lon_col) * cells_per_degree).cast("long").alias("cell_lon"),
-        F.col(id_col).alias("node_id"),
-        F.col(lat_col).cast("double").alias("lat"),
-        F.col(lon_col).cast("double").alias("lon"),
+        F.floor(F.col("lat") * cells_per_degree).cast("long").alias("cell_lat"),
+        F.floor(F.col("lon") * cells_per_degree).cast("long").alias("cell_lon"),
+        "node_id",
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
     )
 
 

@@ -103,9 +103,7 @@ class KgResult:
         return self._metrics
 
 
-def prepare_link_dict(
-    alias_dict: DataFrame, driver_threshold: int = DRIVER_CC_THRESHOLD
-) -> DataFrame:
+def prepare_link_dict(alias_dict: DataFrame) -> DataFrame:
     """alias table → link dictionary
     (surface, entity_id, canonical_surface, canonical_node_id).
 
@@ -119,10 +117,11 @@ def prepare_link_dict(
     (order-free, deterministic).
 
     Both paths compute that one rule over the same non-NULL pairs.
-    Driver path (at most ``driver_threshold`` rows): plain dict
-    operations on the fetched rows, and the dictionary comes back as a
-    ``session.local_frame`` LocalRelation, so its broadcast and the
-    ``nodes_from_dict`` groupBy run in the JVM with no Python worker.
+    Driver path (at most ``DRIVER_CC_THRESHOLD`` rows, read at call
+    time): plain dict operations on the fetched rows, and the
+    dictionary comes back as a ``session.local_frame`` LocalRelation,
+    so its broadcast and the ``nodes_from_dict`` groupBy run in the JVM
+    with no Python worker.
     Distributed path: the unique-key groupBy plus a per-entity window
     min.
     """
@@ -132,13 +131,13 @@ def prepare_link_dict(
 
     # one take decides the path AND fetches the data: T+1 rows either
     # prove the dict exceeds the driver threshold or are the dict whole
-    rows = pairs.take(driver_threshold + 1)
-    on_driver = len(rows) <= driver_threshold
+    rows = pairs.take(DRIVER_CC_THRESHOLD + 1)
+    on_driver = len(rows) <= DRIVER_CC_THRESHOLD
     LAST_DICT_STATS.clear()
     LAST_DICT_STATS.update(
         {
             "n_fetched": len(rows),
-            "driver_threshold": driver_threshold,
+            "driver_threshold": DRIVER_CC_THRESHOLD,
             "path": "driver" if on_driver else "distributed",
         }
     )

@@ -78,7 +78,8 @@ def _zorder_layout(spark, sf):
     )
 
 
-def _zorder_layout_sql(bits: int = 16) -> str:
+def _zorder_layout_sql() -> str:
+    bits = 16
     terms = []
     for b in range(bits):
         terms.append(f"(((x >> {b}) & 1) << {2 * b})")

@@ -257,7 +257,7 @@ def _fuzzy_names(spark, sf):
     neighborhoods (operators/fuzzy.py) — an equi-join plan; the DuckDB
     oracle is the quadratic cross join the operator avoids."""
     c = fan_out(spark.read.parquet(f"{sf}/customer.parquet")).select("c_custkey", "c_name")
-    out = fuzzy_join_ed1(c, c, "c_name", "c_name", "c_custkey", "c_custkey", lt_only=True)
+    out = fuzzy_join_ed1(c, c, "c_name", "c_name", "c_custkey", "c_custkey")
     return out.where(F.col("c_custkey_l") < F.col("c_custkey_r")).select(
         F.col("c_custkey_l").alias("custkey_a"),
         F.col("c_custkey_r").alias("custkey_b"),
@@ -313,7 +313,7 @@ def _entity_resolution(spark, sf):
         .where(F.col("c_custkey") <= 300)
         .select("c_custkey", "c_name")
     )
-    pairs = fuzzy_join_ed1(c, c, "c_name", "c_name", "c_custkey", "c_custkey", lt_only=True)
+    pairs = fuzzy_join_ed1(c, c, "c_name", "c_name", "c_custkey", "c_custkey")
     edges = pairs.where(F.col("c_custkey_l") < F.col("c_custkey_r")).select(
         F.col("c_custkey_l").alias("u"), F.col("c_custkey_r").alias("v")
     )

@@ -659,7 +659,7 @@ def _salted_join_counts(spark, sf):
             F.concat(F.lit("type:"), F.col("event_type")).alias("label"),
         )
     )
-    joined = salted_join(e, dim, ["event_type"], n_salts=8)
+    joined = salted_join(e, dim, ["event_type"])
     return joined.groupBy("label").agg(F.count(F.lit(1)).alias("n_events"))
 
 

@@ -208,7 +208,7 @@ def _bfs_hops(spark, sf):
     sources = edges.select(F.col("src").alias("node")).where(
         F.col("node") < 2
     ).distinct()
-    return bfs_distances(edges, sources, directed=True, max_hops=20)
+    return bfs_distances(edges, sources, max_hops=20)
 
 
 _BFS_SQL = """

@@ -359,7 +359,7 @@ def _kg_bfs_hops(spark, sf):
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     ).localCheckpoint()
     sources = local_frame(g.sparkSession, [("P0",)], "node string")
-    return bfs_distances(g, sources, directed=True, max_hops=10)
+    return bfs_distances(g, sources, max_hops=10)
 
 
 _KG_BFS_SQL = f"""
@@ -518,12 +518,13 @@ def _kg_communities_louvain(spark, sf):
     return louvain_refine(g, lp, sweeps=1)
 
 
-def _louvain_sql(n_colors: int = 4) -> str:
+def _louvain_sql() -> str:
     """DuckDB replay of louvain_refine's hash-colored sub-sweeps over
     the planted KG edge set: LP (4 rounds) seeds assign, then one
     chained CTE block per color class applies that class's strictly-
     positive best moves (gains recomputed between blocks), exactly
     the engine's arithmetic."""
+    n_colors = 4
     blocks, prev = [], "assign"
     for i in range(n_colors):
         blocks.append(f"""
@@ -713,7 +714,7 @@ def _stream_kg_windowed(spark, sf):
     # same planting as _planted_transcripts_full, applied to the stream
     t = _plant_from_docs(stream_docs)
     link_dict = prepare_link_dict(alias_dict_df(spark))
-    triples = streaming_triples(t, link_dict, window_duration="10 minutes")
+    triples = streaming_triples(t, link_dict)
     q = (
         triples.writeStream.outputMode("complete")
         .format("memory")

@@ -376,7 +376,7 @@ def _domain_filter(spark, sf):
         "doc_id", url.alias("url")
     )
     bl = local_frame(spark, [(s,) for s in _DOMAIN_BLOCKLIST], "suffix: string")
-    return domain_filter(d, bl, cap=20)
+    return domain_filter(d, bl)
 
 
 _DOMAIN_FILTER_SQL = """
@@ -744,7 +744,7 @@ def _lm_bigram_score(spark, sf):
     throughout — no log()/float transcendentals, so the score is
     bit-reproducible and the oracle replays it exactly."""
     d = fan_out(spark.read.parquet(f"{sf}/documents.parquet"))
-    return score_documents(d, "doc_id", "text")
+    return score_documents(d)
 
 
 _LM_SCORE_SQL = r"""
@@ -859,16 +859,16 @@ def _quote_containment(spark, sf):
     at-rest corpus document — the asymmetric screen that catches a
     short doc quoted inside a long one where Jaccard stays near 0."""
     d = fan_out(spark.read.parquet(f"{sf}/documents.parquet"))
-    # df cap 500: inert at the oracle scales (corpus ≤ 450 docs at
-    # sf0.01, so no n-gram can exceed it — results stay oracle-exact)
-    # but live at bench sf0.1+, where ubiquitous trigrams would
-    # otherwise quadratically inflate the candidate join
+    # the n-gram df cap (contamination.MAX_NGRAM_DF = 500) is inert at
+    # the oracle scales (corpus ≤ 450 docs at sf0.01, so no n-gram can
+    # exceed it — results stay oracle-exact) but live at bench sf0.1+,
+    # where ubiquitous trigrams would otherwise quadratically inflate
+    # the candidate join
     return containment_pairs(
         d.where(F.col("doc_id") % 10 == 0),
         d.where(F.col("doc_id") % 10 != 0),
         n=3,
         min_ppm=500_000,
-        max_ngram_df=500,
     )
 
 

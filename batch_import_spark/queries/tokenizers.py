@@ -515,13 +515,14 @@ def _bpe_train(spark, sf):
     )
 
 
-def _bpe_step_cte(n_merges: int = _BPE_N_MERGES, min_pair_count: int = 2) -> str:
+def _bpe_step_cte() -> str:
     """Recursive-CTE replay of BPE training over the word-frequency
     table. One reference to `step` per recursive term: pairs are
     exploded via parallel unnest, counted with a window SUM, and the
     argmax is a window MIN over {'negc': -cnt, l, r} structs (struct
     comparison = cnt DESC, l ASC, r ASC — Spark's exact tie-break);
     GROUP BY ALL collapses the pair rows back to one row per word."""
+    n_merges, min_pair_count = _BPE_N_MERGES, 2
     return rf"""
 wc AS (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS n

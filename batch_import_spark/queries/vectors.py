@@ -116,12 +116,13 @@ def _lsh_ann(spark, sf):
     )
 
 
-def _lsh_ann_oracle_sql(dim: int = 64, num_tables: int = 6, num_planes: int = 8) -> str:
+def _lsh_ann_oracle_sql() -> str:
     """Replicates the deterministic hyperplane LSH in DuckDB: the same
     plane constants (similarity.hyperplane) are inlined as double
     literals, buckets are recomputed per (table, vector), and the
     candidate top-k is exactly re-ranked — bit-for-bit the Spark plan's
     semantics, independently evaluated."""
+    dim, num_tables, num_planes = 64, 6, 8
     def bucket_expr(vcol: str, t: int) -> str:
         terms = []
         for p in range(num_planes):
@@ -180,13 +181,14 @@ def _ivf_ann(spark, sf):
     )
 
 
-def _ivf_ann_oracle_sql(n_cells: int = 16, n_probe: int = 4, k: int = 5) -> str:
+def _ivf_ann_oracle_sql() -> str:
     """Replicates the IVF path in DuckDB: same deterministic seed
     centroids (unit vectors of the n_cells lowest ids), same
     argmax-dot assignment with the same tie-break (max dot, then min
     cell — assignment on RAW vectors against unit centroids, the
     scale-invariant form the Spark operator uses), same n_probe
     routing, same exact re-rank via dot(q,c)/(|q|·|c|)."""
+    n_cells, n_probe, k = 16, 4, 5
     return f"""
 WITH c AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -379,21 +381,14 @@ def _ivf_pq(spark, sf):
     ).select("query_id", "vec_id", "rank", "adc_dist")
 
 
-def _ivf_pq_oracle_sql(
-    dim: int = 64,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m_sub: int = 8,
-    k_codes: int = 16,
-    k: int = 5,
-    scale: int = 1000,
-) -> str:
+def _ivf_pq_oracle_sql() -> str:
     """DuckDB replay of the full IVF-PQ path: same float centroid
     seeds + argmax-dot cells (the proven IVF oracle), then integer
     residuals (floor(x*scale) - floor(c*scale)), data-seeded codebook
     (residuals of the k_codes ids after the centroid seeds), argmin-L2
     codes with lowest-code tie-break, and BIGINT ADC — register-exact
     end to end."""
+    dim, n_cells, n_probe, m_sub, k_codes, k, scale = 64, 16, 4, 8, 16, 5, 1000
     ds = dim // m_sub
     return _pq_codes_base_sql(dim, n_cells, m_sub, k_codes, scale) + f""",
 probe AS MATERIALIZED (
@@ -513,17 +508,12 @@ def _stream_ann_incremental(spark, sf):
     )
 
 
-def _ivf_pq_incremental_sql(
-    dim: int = 64,
-    n_cells: int = 16,
-    m_sub: int = 8,
-    k_codes: int = 16,
-    scale: int = 1000,
-) -> str:
+def _ivf_pq_incremental_sql() -> str:
     """One full-corpus encode with quantizers trained on the standing
     split only (vec_id % 10 < 8) — equality with Spark's
     index(standing) + encode(landing) union is exactly the
     incremental-maintenance replay invariant."""
+    dim, n_cells, m_sub, k_codes, scale = 64, 16, 8, 16, 1000
     ds = dim // m_sub
     return f"""
 WITH c AS MATERIALIZED (
@@ -606,9 +596,7 @@ def _semantic_dedup(spark, sf):
     of cliques (diameter <= 2 — pinned by pytest), where greedy ==
     'keep the id with no smaller neighbor, dup_of = smallest
     level-1-keeper neighbor'."""
-    return semantic_dedup(
-        _planted_embed_corpus(spark, sf), n_cells=64, threshold=0.95
-    )
+    return semantic_dedup(_planted_embed_corpus(spark, sf), n_cells=64)
 
 
 _SEMDEDUP_SQL = """
@@ -754,13 +742,12 @@ def _embed_near_dups(spark, sf):
     return pairs.select("id_a", "id_b", F.round(F.col("cosine"), 4).alias("cos4"))
 
 
-def _embed_near_dups_oracle_sql(
-    dim: int = 64, num_tables: int = 4, num_planes: int = 10, threshold: float = 0.95
-) -> str:
+def _embed_near_dups_oracle_sql() -> str:
     """Replicates the planted corpus AND the LSH bucketing in DuckDB
     (same inline hyperplane constants as similarity.hyperplane), so
     the bucketed self-join's output is closed-form — recall losses,
     if any, match by construction."""
+    dim, num_tables, num_planes, threshold = 64, 4, 10, 0.95
     def bucket_expr(vcol: str, t: int) -> str:
         terms = []
         for p in range(num_planes):

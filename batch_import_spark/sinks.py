@@ -100,25 +100,21 @@ class GraphSink:
             return
         df.write.mode(mode).parquet(self._ident(table))
 
-    def overwrite_partitions(
-        self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ("bucket",)
-    ) -> None:
-        """Idempotently replace exactly the partitions present in ``df``
-        (the A6 checkpoint-unit re-run contract)."""
+    def overwrite_partitions(self, df: DataFrame, table: str) -> None:
+        """Idempotently replace exactly the ``bucket`` partitions present
+        in ``df`` (the A6 checkpoint-unit re-run contract)."""
         if self._use_iceberg():
             ident = self._ident(table)
             if self.spark.catalog.tableExists(ident):
                 df.writeTo(ident).overwritePartitions()
             else:
-                df.writeTo(ident).using("iceberg").partitionedBy(
-                    *[F.col(c) for c in partition_by]
-                ).create()
+                df.writeTo(ident).using("iceberg").partitionedBy(F.col("bucket")).create()
             return
         # Parquet twin: dynamic partition overwrite, scoped per-write
         # (NOT a session conf — that leaks into unrelated writes)
         df.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy(*partition_by).parquet(self._ident(table))
+        ).partitionBy("bucket").parquet(self._ident(table))
 
     # --- reads ----------------------------------------------------------
 

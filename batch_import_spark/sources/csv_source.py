@@ -87,7 +87,7 @@ class ReferenceCsv:
         return df.coalesce(self.files) if self.files else df
 
 
-def _read_first_line(path: str, encoding: str = "utf-8") -> str:
+def _read_first_line(path: str) -> str:
     """Driver-side header peek (the header is one tiny line).
 
     Handles .gz / .zip like Importer.java:248-250.
@@ -103,7 +103,7 @@ def _read_first_line(path: str, encoding: str = "utf-8") -> str:
     else:
         with open(path, "rb") as f:
             raw = f.readline()
-    return raw.decode(encoding).rstrip("\r\n")
+    return raw.decode("utf-8").rstrip("\r\n")
 
 
 def _split_header_line(line: str, delim: str, quotes: bool) -> list[str]:
@@ -164,15 +164,15 @@ def read_reference_csv(
     # the reference imports each file under its OWN header
     # (Importer.doImport per file); a list is only mergeable when the
     # headers agree — otherwise file 1's schema silently mislabels the
-    # rest, so fail fast and let the caller import per file (the
-    # id_offset parameter of import_nodes supports sequential ids).
+    # rest, so fail fast: dense row-number ids span one file list, so
+    # files under different headers are not one node import.
     for p, line in zip(paths[1:], first_lines[1:]):
         if _split_header_line(line, delim, quotes) != _split_header_line(
             first_lines[0], delim, quotes
         ):
             raise ValueError(
-                f"header of {p!r} differs from {paths[0]!r}; import these "
-                "files separately (per-file headers, Importer.doImport)"
+                f"header of {p!r} differs from {paths[0]!r}; every file of "
+                "one list must share its header (Importer.doImport)"
             )
 
     raw_schema = T.StructType(

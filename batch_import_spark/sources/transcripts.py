@@ -186,25 +186,9 @@ def generate_transcripts(
     return out
 
 
-def read_transcripts(
-    spark: SparkSession, path: str, format: str = "parquet"
-) -> DataFrame:
-    """Load a transcripts table: a Parquet/ORC dir, a JSONL dir/file,
-    or an Iceberg/catalog table name.
-
-    JSONL reads pin TRANSCRIPT_SCHEMA explicitly — schema inference
-    over 10^12 rows is a full extra pass AND can silently widen types
-    (an all-digit conv_id infers BIGINT); ORC/Parquet carry their own
-    schema. Column order is normalized to the contract.
-    """
+def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
+    """Load a transcripts table: a Parquet dir (a path with a ``/``) or
+    an Iceberg/catalog table name. Both carry their own schema."""
     if "/" not in path:
         return spark.table(path)
-    if format == "parquet":
-        return spark.read.parquet(path)
-    if format == "orc":
-        df = spark.read.orc(path)
-    elif format in ("json", "jsonl"):
-        df = spark.read.schema(TRANSCRIPT_SCHEMA).json(path)
-    else:
-        raise ValueError(f"unsupported transcripts format: {format!r}")
-    return df.select([f.name for f in TRANSCRIPT_SCHEMA.fields])
+    return spark.read.parquet(path)

@@ -33,9 +33,6 @@ def run_incremental_ann(
     centroids: list[list[float]],
     book: list[list[list[int]]],
     index: DataFrame | None = None,
-    m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame | None, int]:
     """Drain all available stream data through the incremental encode.
 
@@ -59,15 +56,9 @@ def run_incremental_ann(
         from batch_import_spark.operators.similarity import pq_encode
 
         if state["index"] is None:
-            merged = pq_encode(
-                batch_df, centroids, book, m_sub,
-                id_col=id_col, vec_col=vec_col,
-            )
+            merged = pq_encode(batch_df, centroids, book, 8)
         else:
-            merged = ivf_pq_extend(
-                state["index"], batch_df, centroids, book, m_sub,
-                id_col=id_col, vec_col=vec_col,
-            )
+            merged = ivf_pq_extend(state["index"], batch_df, centroids, book, 8)
         # eager checkpoint = the per-batch state commit; truncates
         # lineage so batch N+1 never re-encodes batch N (rotation
         # discipline shared with streaming/incremental.py)

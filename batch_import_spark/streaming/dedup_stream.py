@@ -28,15 +28,10 @@ def content_fingerprint(text_col: str = "text") -> Column:
     return F.md5(F.col(text_col))
 
 
-def streaming_exact_dedup(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """First occurrence of each ``key_cols`` combination within the
-    watermark horizon; later duplicates are dropped. Append-mode
-    compatible (emits each survivor once)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+def streaming_exact_dedup(stream: DataFrame, key_cols: list[str]) -> DataFrame:
+    """First occurrence of each ``key_cols`` combination within a
+    30-minute event-time (``ts``) watermark horizon; later duplicates
+    are dropped. Append-mode compatible (emits each survivor once)."""
+    return stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         key_cols
     )

@@ -31,7 +31,6 @@ def run_incremental_kg(
     transcript_stream: DataFrame,
     alias_dict: DataFrame,
     link_dict: DataFrame | None = None,
-    extraction: str = "pandas",
 ) -> tuple[DataFrame | None, int]:
     """Drain all available stream data through the incremental fold.
 
@@ -41,7 +40,6 @@ def run_incremental_kg(
     `stream_kg_incremental` oracle).
     """
     from batch_import_spark.pipeline.kg import (
-        extractor,
         merge_kg_edges,
         prepare_link_dict,
         run_kg_pipeline,
@@ -50,15 +48,12 @@ def run_incremental_kg(
 
     import shutil
 
-    extractor(extraction)  # an unknown name fails before the dictionary's jobs
     if link_dict is None:
         link_dict = prepare_link_dict(alias_dict)
     state: dict = {"edges": None, "ids": set(), "batches": 0}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        res = run_kg_pipeline(
-            batch_df, alias_dict, link_dict=link_dict, extraction=extraction
-        )
+        res = run_kg_pipeline(batch_df, alias_dict, link_dict=link_dict)
         prev = state["edges"]
         merged = res.edges if prev is None else merge_kg_edges(prev, res.edges)
         # eager checkpoint = the per-batch state commit; truncates

@@ -9,7 +9,7 @@ This module runs the SAME extract→link→canonicalize stages over a
   reused verbatim (stateless per micro-batch, so exactly the batch
   semantics apply per batch);
 - triple aggregation is windowed on event time with a watermark for
-  late turns (or a global running count for complete-mode sinks);
+  late turns;
 - the caller picks the sink: the ``stream_kg_windowed`` query drains a
   bounded replay into a memory sink. The batch graph tables (nodes,
   edges, resume checkpoint) have one writer, ``sinks.GraphSink``;
@@ -29,20 +29,14 @@ from batch_import_spark.pipeline.extract import extract_mentions_pdf
 from batch_import_spark.pipeline.kg import link_and_canonicalize
 
 
-def streaming_triples(
-    stream: DataFrame,
-    link_dict: DataFrame,
-    window_duration: str | None = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """transcript stream → canonical triple counts.
+def streaming_triples(stream: DataFrame, link_dict: DataFrame) -> DataFrame:
+    """transcript stream → canonical triple counts per 10-minute
+    event-time window.
 
-    ``stream`` must carry (conv_id, turn_idx, text, ts). With a
-    ``window_duration``, counts are event-time-windowed with a
-    watermark (append mode; late turns beyond the watermark are
-    dropped — state stays bounded by watermark horizon × vocabulary).
-    ``window_duration=None`` gives a global running aggregation for
-    complete-mode sinks (useful for bounded replays and tests).
+    ``stream`` must carry (conv_id, turn_idx, text, ts). The watermark
+    trails by 30 minutes: in append mode, late turns beyond it are
+    dropped and state stays bounded by watermark horizon × vocabulary;
+    a complete-mode sink (a bounded replay) keeps every window.
     """
     mentions = stream.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
         lambda batches: map(extract_mentions_pdf, batches),
@@ -50,14 +44,10 @@ def streaming_triples(
         "subj_surface string, pred string, obj_surface string",
     )
     resolved, _obs = link_and_canonicalize(mentions, link_dict)
-    if window_duration is None:
-        return resolved.groupBy("subj", "pred", "obj").agg(
-            F.count(F.lit(1)).alias("n_occurrences")
-        )
     return (
-        resolved.withWatermark("ts", watermark)
+        resolved.withWatermark("ts", "30 minutes")
         .groupBy(
-            F.window("ts", window_duration).alias("w"),
+            F.window("ts", "10 minutes").alias("w"),
             "subj",
             "pred",
             "obj",

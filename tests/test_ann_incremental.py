@@ -88,8 +88,10 @@ def test_streaming_fold_equals_batch(spark, tmp_path):
     all_ = _corpus(spark, n=60)
     standing = all_.where(F.col("vec_id") < 40)
     landing = all_.where(F.col("vec_id") >= 40)
-    cents, book = _quantizers(standing)
-    idx = pq_encode(standing, cents, book, m_sub=4)
+    # the stream fold encodes with 8 sub-quantizers
+    cents = ivf_seed_centroids(standing, 4)
+    book = pq_codebook_from_corpus(standing, cents, m_sub=8, k_codes=8, skip=4)
+    idx = pq_encode(standing, cents, book)
 
     d = str(tmp_path / "stream")
     landing.where(F.col("vec_id") % 2 == 0).write.parquet(d + "/b0")
@@ -99,11 +101,9 @@ def test_streaming_fold_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(d + "/*")
     )
-    final, n_batches = run_incremental_ann(
-        stream, cents, book, index=idx, m_sub=4
-    )
+    final, n_batches = run_incremental_ann(stream, cents, book, index=idx)
     assert n_batches >= 2
-    full = pq_encode(all_, cents, book, m_sub=4)
+    full = pq_encode(all_, cents, book)
     key = lambda r: (r.vec_id, r.cell, tuple(r.codes))
     assert sorted(map(key, final.collect())) == sorted(
         map(key, full.collect())

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from batch_import_spark.functions import bpe
 from batch_import_spark.functions.bpe import (
     _encode_word,
     apply_merges,
@@ -86,7 +87,7 @@ def test_train_early_stop_when_no_pair_reaches_min_count(spark):
     assert got == []  # every pair occurs once
 
 
-def test_driver_path_equals_distributed_path(spark):
+def test_driver_path_equals_distributed_path(spark, monkeypatch):
     """The threshold-gated driver trainer and the distributed loop
     must emit byte-identical merge tables (overlapping pair counts,
     greedy non-overlapping apply, cnt DESC / l / r tie-break)."""
@@ -97,10 +98,15 @@ def test_driver_path_equals_distributed_path(spark):
         "wider wider new new aaa",
     ]
     df = spark.createDataFrame([(t,) for t in corpus], "text: string")
-    via_driver = bpe_train(df, "text", n_merges=10, min_pair_count=2)
-    via_cluster = bpe_train(
-        df, "text", n_merges=10, min_pair_count=2, driver_vocab_threshold=0
+    driver_runs = []
+    train_driver = bpe._bpe_train_driver
+    monkeypatch.setattr(
+        bpe, "_bpe_train_driver", lambda *a: driver_runs.append(1) or train_driver(*a)
     )
+    via_driver = bpe_train(df, "text", n_merges=10, min_pair_count=2)
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_THRESHOLD", 0)
+    via_cluster = bpe_train(df, "text", n_merges=10, min_pair_count=2)
+    assert driver_runs == [1]
     assert via_driver == via_cluster and len(via_driver) == 10
 
 

@@ -60,18 +60,21 @@ def test_incremental_kg_keeps_only_the_final_state(spark, tmp_path):
     assert edges.agg(F.sum("n_occurrences")).first()[0] > 0
 
 
-def test_bpe_train_frees_its_checkpoints(spark):
-    from batch_import_spark.functions.bpe import bpe_train
+def test_bpe_train_frees_its_checkpoints(spark, monkeypatch):
+    from batch_import_spark.functions import bpe
 
     docs = spark.createDataFrame(
         [(f"lower newer wider {w} low{i % 5}",) for i, w in enumerate(["est", "er", "ing"] * 4)],
         "text string",
     )
-    for kw in ({}, {"driver_vocab_threshold": 0, "checkpoint_every": 2}):
+    for distributed in (False, True):
+        if distributed:
+            monkeypatch.setattr(bpe, "DRIVER_VOCAB_THRESHOLD", 0)
+            monkeypatch.setattr(bpe, "CHECKPOINT_EVERY", 2)
         before = persistent_rdd_ids(spark)
-        merges = bpe_train(docs, "text", n_merges=5, min_pair_count=2, **kw)
+        merges = bpe.bpe_train(docs, "text", n_merges=5, min_pair_count=2)
         assert merges
-        assert persistent_rdd_ids(spark) == before, kw
+        assert persistent_rdd_ids(spark) == before, distributed
 
 
 def test_louvain_refine_keeps_only_the_result(spark):

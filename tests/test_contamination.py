@@ -70,7 +70,8 @@ def test_containment_pairs_detects_quote(spark):
     assert (2, 10) not in out and (3, 10) not in out and (1, 11) not in out
 
 
-def test_containment_hot_ngram_cap(spark):
+def test_containment_hot_ngram_cap(spark, monkeypatch):
+    from batch_import_spark.operators import contamination
     from batch_import_spark.operators.contamination import containment_pairs
 
     # the same trigram appears in many right docs: with the cap at 2
@@ -80,7 +81,6 @@ def test_containment_hot_ngram_cap(spark):
         [(i, "common boiler plate") for i in range(10, 15)],
         "doc_id long, text string",
     )
-    capped = containment_pairs(docs, corpus, n=3, min_ppm=1, max_ngram_df=2)
-    assert capped.count() == 0
-    uncapped = containment_pairs(docs, corpus, n=3, min_ppm=1, max_ngram_df=None)
-    assert uncapped.count() == 5
+    assert containment_pairs(docs, corpus, n=3, min_ppm=1).count() == 5
+    monkeypatch.setattr(contamination, "MAX_NGRAM_DF", 2)
+    assert containment_pairs(docs, corpus, n=3, min_ppm=1).count() == 0

@@ -33,7 +33,7 @@ def test_cooccurrence_doc_guard_drops_degenerate(spark):
     docs = spark.createDataFrame(
         [(1, "a b"), (2, "a b"), (3, big)], "doc_id long, text string"
     )
-    out = cooccurrence_lift(docs, min_count=2, max_doc_terms=200).collect()
+    out = cooccurrence_lift(docs, min_count=2).collect()
     # the 300-term doc is excluded from pairs AND from N
     assert {(r["term_a"], r["term_b"]) for r in out} == {("a", "b")}
     row = out[0]

@@ -68,7 +68,7 @@ def test_chunks_agree_with_cdc_inventory(spark):
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     a = {
         (r.id, r.chunk_idx, r.chunk_len, r.chunk_md5)
-        for r in _chunks_with_text(d, "doc_id", "text", 8, 32).collect()
+        for r in _chunks_with_text(d).collect()
     }
     b = {
         (r.doc_id, r.chunk_idx, r.chunk_len, r.chunk_md5)

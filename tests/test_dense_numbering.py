@@ -159,8 +159,7 @@ def _parent_read_reference_csv(
     # the reference imports each file under its OWN header
     # (Importer.doImport per file); a list is only mergeable when the
     # headers agree — otherwise file 1's schema silently mislabels the
-    # rest, so fail fast and let the caller import per file (the
-    # id_offset parameter of import_nodes supports sequential ids).
+    # rest, so fail fast.
     for p, line in zip(paths[1:], first_lines[1:]):
         if _split_header_line(line, delim, quotes) != _split_header_line(
             first_lines[0], delim, quotes
@@ -388,13 +387,13 @@ def _assert_equals_parent(spark, node_files, rel_files, quotes, n_nodes):
     """Nodes and rels imported by the current code and by the parent
     formulation agree row for row."""
     ref = read_reference_csv(spark, node_files, quotes=quotes)
-    new = import_nodes(ref, id_offset=100)
+    new = import_nodes(ref)
     got = {r["name"]: (r["node_id"], r["file_seq"], r["line_no"]) for r in new.nodes.collect()}
-    old = import_nodes(_parent_read_reference_csv(spark, node_files, quotes=quotes), id_offset=100)
+    old = import_nodes(_parent_read_reference_csv(spark, node_files, quotes=quotes))
     want = {r["name"]: (r["node_id"], r["file_seq"], r["line_no"]) for r in old.nodes.collect()}
     assert len(got) == n_nodes
     assert got == want
-    assert sorted(v[0] for v in got.values()) == list(range(100, 100 + n_nodes))
+    assert sorted(v[0] for v in got.values()) == list(range(n_nodes))
 
     new_rels = import_relationships(read_reference_csv(spark, rel_files, quotes=quotes), new.index_entries)
     got_rels = {r["rid"]: (r["rel_id"], r["line_no"], r["src_id"], r["dst_id"]) for r in new_rels.edges.collect()}
@@ -507,7 +506,9 @@ def test_with_dense_id_equals_old_window_path(spark):
     df = spark.range(0, 5000, numPartitions=7).select(
         ((F.col("id") * 7919) % 5003).alias("k"), F.col("id").alias("v")
     )
-    new = {r["k"]: r["nid"] for r in with_dense_id(df, ["k"], id_col="nid", num_partitions=9).collect()}
+    with _conf(spark, spark_sql_shuffle_partitions="9",
+               spark_sql_adaptive_coalescePartitions_enabled="false"):
+        new = {r["k"]: r["nid"] for r in with_dense_id(df, ["k"], id_col="nid").collect()}
     old = {r["k"]: r["nid"] for r in _old_with_dense_id(df, ["k"], id_col="nid", num_partitions=9).collect()}
     assert new == old
     assert sorted(new.values()) == list(range(5000))

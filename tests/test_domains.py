@@ -55,8 +55,10 @@ def test_blocklist_suffix_match_and_cap(spark):
             (3, "https://sub.cdn.evil.org/a"),  # blocked via cdn.evil.org
             (4, "https://www.evil.org/a"),      # NOT blocked (only cdn sub)
             (5, "https://good.com/b"),
-            (6, "https://good.com/c"),          # over cap (cap=2 per domain)
-        ],
+            (6, "https://good.com/c"),
+        ]
+        # over the cap of 20 per domain: good.com's 21st doc
+        + [(i, f"https://good.com/{i}") for i in range(7, 25)],
         "doc_id: long, url: string",
     )
     bl = spark.createDataFrame(
@@ -64,7 +66,7 @@ def test_blocklist_suffix_match_and_cap(spark):
     )
     got = {
         r.doc_id: (r.blocked, r.keep, r.reason)
-        for r in domain_filter(docs, bl, cap=2).collect()
+        for r in domain_filter(docs, bl).collect()
     }
     assert got[0] == (False, True, "")
     assert got[1] == (True, False, "blocked:bad.com")
@@ -72,11 +74,13 @@ def test_blocklist_suffix_match_and_cap(spark):
     assert got[3] == (True, False, "blocked:cdn.evil.org")
     assert got[4] == (False, True, "")
     assert got[5] == (False, True, "")
-    # third good.com doc (ids 0, 5, 6 share the domain) exceeds cap=2
-    assert got[6] == (False, False, "over_cap")
+    # ids 0, 5, 6 and 7..24 share good.com: 24 is its 21st doc
+    assert got[23] == (False, True, "")
+    assert got[24] == (False, False, "over_cap")
 
 
 def test_no_cap_keeps_all_unblocked(spark):
+    # 10 docs of one domain, under the per-domain cap
     docs = spark.createDataFrame(
         [(i, f"https://many.com/{i}") for i in range(10)],
         "doc_id: long, url: string",

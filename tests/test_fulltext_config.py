@@ -33,29 +33,6 @@ def test_fulltext_candidate_generation(spark):
     assert by_q[11][0]["node_id"] == 2
 
 
-def test_fulltext_df_bounds_prune_postings(spark):
-    """min_df/max_df — the 100 TB skew knob: a stopword flooding every
-    document is pruned from the postings at build time (its postings
-    list is the hot join key and scores nothing), and hapax noise can
-    be dropped with min_df; mid-frequency tokens survive untouched."""
-    rows = [("idx", "text", f"the doc{i} common", i) for i in range(50)]
-    rows.append(("idx", "text", "the rareword common", 50))
-    entries = spark.createDataFrame(
-        rows, "index_name string, key_prop string, key_value string, node_id long"
-    )
-    full = build_fulltext_postings(entries)
-    capped = build_fulltext_postings(entries, max_df=40)
-    toks = {r["token"] for r in capped.select("token").distinct().collect()}
-    # 'the' and 'common' appear in all 51 docs → pruned; the rest stay
-    assert "the" not in toks and "common" not in toks
-    assert "rareword" in toks and "doc0" in toks
-    assert full.where(full.token == "the").count() == 51
-    # min_df drops singletons (each docN token + rareword), keeps shared
-    floor = build_fulltext_postings(entries, min_df=2)
-    ftoks = {r["token"] for r in floor.select("token").distinct().collect()}
-    assert ftoks == {"the", "common"}
-
-
 def test_tfidf_top_terms_hand_computed(spark):
     """N=3 docs: 'rare' (df=1) must outscore 'shared' (df=3) at equal
     tf; tf breaks the tie upward; ties at equal score order by token."""
@@ -96,7 +73,6 @@ def test_config_parses_reference_sample(spark):
     text = (Path(__file__).parent / "fixtures" / "reference_sample" / "batch.properties").read_text()
     cfg = load_config(
         text,
-        graph_db="target/graph.db",
         nodes_files="sample/nodes.csv,sample/nodes2.csv",
         rels_files="sample/rels.csv",
     )

@@ -68,10 +68,9 @@ def test_pagerank_sink_node_receives_no_out_mass(spark):
 def test_bfs_distances_undirected(spark):
     from batch_import_spark.operators.graph_stats import bfs_distances
 
-    # path 1-2-3-4-5, branch 3-6, island 9-10
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (3, 6), (9, 10)], "src long, dst long"
-    )
+    # path 1-2-3-4-5, branch 3-6, island 9-10, each edge both ways
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (3, 6), (9, 10)]
+    df = spark.createDataFrame(edges + [(b, a) for a, b in edges], "src long, dst long")
     srcs = spark.createDataFrame([(1,)], "node long")
     got = {r["node"]: r["dist"] for r in bfs_distances(df, srcs).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4, 6: 3}  # island unreachable
@@ -86,7 +85,7 @@ def test_bfs_distances_directed_multi_source(spark):
     srcs = spark.createDataFrame([(1,), (4,)], "node long")
     got = {
         r["node"]: r["dist"]
-        for r in bfs_distances(df, srcs, directed=True).collect()
+        for r in bfs_distances(df, srcs).collect()
     }
     # 4→3 beats 1→2→3; 2 only via 1
     assert got == {1: 0, 4: 0, 2: 1, 3: 1}

@@ -3,12 +3,14 @@
 The 100 TB dedup killer: boilerplate corpora put thousands of ids in
 one LSH band/block/bucket and the self-join's ``id_a < id_b`` pair
 explosion goes quadratic in that bucket. The cap drops such buckets
-whole, with the loss counted and logged (no silent caps).
+whole. Each operator test lowers the cap to 100 so the boilerplate
+bucket is over it.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.buckets import cap_hot_buckets
+from batch_import_spark.operators import buckets
 from batch_import_spark.operators.dedup import (
     minhash_near_duplicates,
     simhash_near_duplicates,
@@ -35,40 +37,43 @@ def _boilerplate_corpus(spark, n_dup=2000):
     return dup.unionByName(planted)
 
 
-def test_cap_hot_buckets_stats_and_filter(spark):
+@pytest.fixture
+def cap_100(monkeypatch):
+    monkeypatch.setattr(buckets, "MAX_BUCKET_SIZE", 100)
+
+
+def test_cap_hot_buckets_stats_and_filter(spark, monkeypatch):
     df = spark.range(100).select(
         (F.col("id") % 2).alias("bucket"),  # two buckets of 50
         F.col("id"),
     ).unionByName(
         spark.range(5).select((F.col("id") + 10).alias("bucket"), F.col("id"))
     )
-    out, stats = cap_hot_buckets(df, ["bucket"], max_bucket_size=10)
-    assert stats.n_buckets_dropped == 2
-    assert stats.n_rows_dropped == 100
-    assert stats.largest_dropped == 50
+    monkeypatch.setattr(buckets, "MAX_BUCKET_SIZE", 10)
+    out = buckets.cap_hot_buckets(df, ["bucket"])
+    # the drop count is the caller's: rows before minus rows after
+    assert df.count() - out.count() == 100
     assert out.count() == 5  # only the five singleton buckets survive
-    # no-op path: nothing over the cap → frame unchanged, zero stats
-    out2, stats2 = cap_hot_buckets(df, ["bucket"], max_bucket_size=1000)
-    assert stats2.n_buckets_dropped == 0 and out2.count() == 105
+    # nothing over the cap → frame unchanged
+    monkeypatch.setattr(buckets, "MAX_BUCKET_SIZE", 1000)
+    assert buckets.cap_hot_buckets(df, ["bucket"]).count() == 105
 
 
-def test_minhash_cap_bounds_pathological_corpus(spark):
+def test_minhash_cap_bounds_pathological_corpus(spark, cap_100):
     corpus = _boilerplate_corpus(spark)
-    pairs = minhash_near_duplicates(
-        corpus, num_hashes=16, num_bands=4, max_bucket_size=100
-    ).collect()
+    pairs = minhash_near_duplicates(corpus, num_hashes=16, num_bands=4).collect()
     # the 2000-doc boilerplate bucket is dropped (2M pairs never form);
     # the planted pair survives in its own small bucket
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(100000, 100001)}
 
 
-def test_simhash_cap_bounds_pathological_corpus(spark):
+def test_simhash_cap_bounds_pathological_corpus(spark, cap_100):
     corpus = _boilerplate_corpus(spark)
-    pairs = simhash_near_duplicates(corpus, max_hamming=3, max_bucket_size=100).collect()
+    pairs = simhash_near_duplicates(corpus, max_hamming=3).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(100000, 100001)}
 
 
-def test_embedding_cap_bounds_pathological_corpus(spark):
+def test_embedding_cap_bounds_pathological_corpus(spark, cap_100):
     # 1000 identical vectors → one bucket per table; a planted distinct
     # near-identical pair elsewhere in space
     dim = 8
@@ -80,9 +85,7 @@ def test_embedding_cap_bounds_pathological_corpus(spark):
     corpus = spark.createDataFrame(
         same + planted, "vec_id long, embedding array<double>"
     )
-    pairs = embedding_near_duplicates(
-        corpus, dim=dim, threshold=0.95, max_bucket_size=100
-    ).collect()
+    pairs = embedding_near_duplicates(corpus, dim=dim, threshold=0.95).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(100000, 100001)}
 
 

@@ -63,32 +63,3 @@ def test_generated_sorted_mode(spark, tmp_path):
     rels = import_relationships(read_reference_csv(spark, rels_path), nodes.index_entries)
     # sorted mode: target ≥ source (forward edges)
     assert rels.edges.where(F.col("dst_id") < F.col("src_id")).count() == 0
-
-
-def test_read_transcripts_jsonl_and_orc_round_trip(spark, tmp_path):
-    """Source-format breadth: the same transcripts land via JSONL
-    (schema pinned, no inference pass) and ORC, identical to the
-    parquet path. Timestamps round-trip via ISO strings in JSON."""
-    from batch_import_spark.sources.transcripts import (
-        generate_transcripts,
-        read_transcripts,
-    )
-
-    t = generate_transcripts(spark, n_convs=8, median_turns=5, hot_factor=2)
-    want = sorted(map(tuple, t.collect()))
-
-    jdir = str(tmp_path / "t_jsonl")
-    t.write.mode("overwrite").json(jdir)
-    got_j = read_transcripts(spark, jdir, format="jsonl")
-    assert sorted(map(tuple, got_j.collect())) == want
-    assert [f.name for f in got_j.schema.fields] == [f.name for f in t.schema.fields]
-
-    odir = str(tmp_path / "t_orc")
-    t.write.mode("overwrite").orc(odir)
-    got_o = read_transcripts(spark, odir, format="orc")
-    assert sorted(map(tuple, got_o.collect())) == want
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unsupported"):
-        read_transcripts(spark, jdir, format="avro")

@@ -238,7 +238,7 @@ def test_kg_edges_plan_reads_the_scan_without_a_shuffle(spark, fixture_data, tmp
     assert not [n for n in below if "Exchange" in n or "QueryStage" in n], below
 
 
-def test_link_dict_distributed_path_equals_driver_path(spark):
+def test_link_dict_distributed_path_equals_driver_path(spark, monkeypatch):
     """``prepare_link_dict``'s distributed path (unique-key groupBy +
     per-entity window min) equals the driver path row for row, on the
     builtin dictionary plus an ambiguous surface, a three-surface chain
@@ -247,6 +247,7 @@ def test_link_dict_distributed_path_equals_driver_path(spark):
     a NULL surface or entity id are dropped before the unique-key
     filter, so two surfaces with NULL ids are not linked (nor merged),
     and a NULL id next to a real one does not make a surface ambiguous."""
+    from batch_import_spark.pipeline import kg
     from batch_import_spark.pipeline.kg import LAST_DICT_STATS, prepare_link_dict
 
     extra = [
@@ -269,7 +270,8 @@ def test_link_dict_distributed_path_equals_driver_path(spark):
     driver = prepare_link_dict(aliases)
     assert LAST_DICT_STATS["path"] == "driver"
     driver_rows = sorted(tuple(r) for r in driver.select(cols).collect())
-    distributed = prepare_link_dict(aliases, driver_threshold=0)
+    monkeypatch.setattr(kg, "DRIVER_CC_THRESHOLD", 0)
+    distributed = prepare_link_dict(aliases)
     assert LAST_DICT_STATS["path"] == "distributed"
     assert sorted(tuple(r) for r in distributed.select(cols).collect()) == driver_rows
 
@@ -379,17 +381,13 @@ def test_pipeline_has_one_triple_grain_group_by():
 
 def test_unknown_extraction_fails_before_any_job(spark, fixture_data):
     """A misspelled kernel name raises instead of running the pandas
-    kernel, in the batch build and in the incremental fold alike."""
-    from batch_import_spark.streaming.incremental import run_incremental_kg
-
+    kernel."""
     alias = alias_dict_df(spark)
     sc = spark.sparkContext
     sc.setJobGroup("kg-extraction", "kg-extraction")
     try:
         with pytest.raises(ValueError, match="extraction must be one of"):
             run_kg_pipeline(fixture_data, alias, extraction="Expr")
-        with pytest.raises(ValueError, match="extraction must be one of"):
-            run_incremental_kg(fixture_data, alias, extraction="pandsa")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("kg-extraction") == []

@@ -7,7 +7,9 @@ entity ids: a driver union-find (``min_id_components``) on one path,
 ids on the other. After the unique-key filter every surface names one
 entity, so that component is one entity's surfaces and the canonical
 surface is a per-entity min. The old formulations are copied below
-word for word and compared with the current code on seeded random
+word for word, except that they no longer pass their node list to
+``min_id_components``: every node in it is also an endpoint of an edge
+they pass. They are compared with the current code on seeded random
 NULL-free alias tables, on both sides of the size gate.
 """
 
@@ -76,7 +78,7 @@ def _old_prepare_link_dict(
 
         first_by_ent: dict = {}
         canon = min_id_components(
-            ((first_by_ent.setdefault(e, s), s) for s, e in unique.items()), unique
+            (first_by_ent.setdefault(e, s), s) for s, e in unique.items()
         )
         out = [(s, unique[s], canon[s]) for s in sorted(unique)]
         df = local_frame(
@@ -155,12 +157,11 @@ def _old_driver_union_find(pairs_df: DataFrame) -> DataFrame:
     """``min_id_components`` over collected (node_id, key) pairs: nodes
     sharing a key are joined through the key's first node."""
     first_by_key: dict = {}
-    edges, nodes = [], []
+    edges = []
     for r in pairs_df.collect():
         node = r["node_id"]
-        nodes.append(node)
         edges.append((first_by_key.setdefault(r["k"], node), node))
-    comp = min_id_components(edges, nodes)
+    comp = min_id_components(edges)
     return local_frame(
         pairs_df.sparkSession, sorted(comp.items()), "node_id long, canonical_id long"
     )
@@ -222,11 +223,13 @@ def _rows(df: DataFrame) -> list[tuple]:
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 @pytest.mark.parametrize("threshold", [DRIVER_CC_THRESHOLD, 0])
-def test_per_entity_min_equals_old_components(spark, seed, threshold):
+def test_per_entity_min_equals_old_components(spark, monkeypatch, seed, threshold):
     aliases = _random_aliases(spark, seed)
     old = _old_prepare_link_dict(aliases, driver_threshold=threshold)
-    new = kg.prepare_link_dict(aliases, driver_threshold=threshold)
+    monkeypatch.setattr(kg, "DRIVER_CC_THRESHOLD", threshold)
+    new = kg.prepare_link_dict(aliases)
     assert kg.LAST_DICT_STATS["path"] == LAST_DICT_STATS["path"]
+    assert kg.LAST_DICT_STATS["path"] == ("driver" if threshold else "distributed")
     assert new.schema.simpleString() == old.schema.simpleString()
     got = _rows(new)
     assert got == _rows(old)
@@ -237,12 +240,14 @@ def test_per_entity_min_equals_old_components(spark, seed, threshold):
     assert len(ents) > 20
 
 
-def test_builtin_dictionary_equals_old_on_both_paths(spark):
+def test_builtin_dictionary_equals_old_on_both_paths(spark, monkeypatch):
     aliases = alias_dict_df(spark)
-    for threshold in (DRIVER_CC_THRESHOLD, 0):
-        assert _rows(kg.prepare_link_dict(aliases, driver_threshold=threshold)) == _rows(
+    for threshold, path in ((DRIVER_CC_THRESHOLD, "driver"), (0, "distributed")):
+        monkeypatch.setattr(kg, "DRIVER_CC_THRESHOLD", threshold)
+        assert _rows(kg.prepare_link_dict(aliases)) == _rows(
             _old_prepare_link_dict(aliases, driver_threshold=threshold)
         )
+        assert kg.LAST_DICT_STATS["path"] == path
 
 
 def test_driver_path_runs_no_spark_job(spark):
@@ -272,13 +277,13 @@ def test_unique_alias_dict_equals_count_distinct(spark, seed):
     rows += [("half_null", None, "a"), ("half_null", 5, "b"), ("all_null", None, "c"), ("all_null", None, "d")]
     rnd.shuffle(rows)
     aliases = local_frame(spark, rows, "key_value string, entity_id long, extra string")
-    new = build_unique_alias_dict(aliases, extra_cols=["extra"])
-    old = _old_build_unique_alias_dict(aliases, extra_cols=["extra"])
+    new = build_unique_alias_dict(aliases)
+    old = _old_build_unique_alias_dict(aliases)
     got = sorted(tuple(r) for r in new.collect())
     assert new.columns == old.columns
     assert got == sorted(tuple(r) for r in old.collect())
     keys = {r[0] for r in got}
-    assert ("half_null", 5, "a") in got and "all_null" not in keys
+    assert ("half_null", 5) in got and "all_null" not in keys
     assert 0 < len(keys) < len({r[0] for r in rows}) - 1  # some keys are ambiguous
     # one aggregate: a single shuffle, where count_distinct plans two
     new.collect()

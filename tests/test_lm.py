@@ -70,17 +70,3 @@ def test_blank_and_null_docs_do_not_abort(spark):
             None,
             None,
         )
-
-
-def test_external_model_oov_transitions(spark):
-    """Scoring docs2 with a model trained on docs1: OOV context words
-    get the floor probability PPM/(0+V), never NULL (the silent
-    average-deflation bug)."""
-    from batch_import_spark.operators.lm import PPM, bigram_model, score_documents
-
-    train = spark.createDataFrame([(0, "a b a b")], "doc_id: long, text: string")
-    uni, bi, v = bigram_model(train)  # vocab {a, b}, V=2
-    target = spark.createDataFrame([(1, "z q")], "doc_id: long, text: string")
-    r = score_documents(target, uni=uni, bi=bi, vocab_size=v).collect()[0]
-    # (z, q): c2 missing -> 1; c1 missing -> 0 -> (1*PPM) div (0+2)
-    assert (r.n_trans, r.avg_prob_ppm, r.min_prob_ppm) == (1, PPM // 2, PPM // 2)

@@ -221,7 +221,16 @@ def test_dense_ids_unique_and_dense_at_scale(spark):
     df = spark.range(0, 25_000).select(
         (F.col("id") * 7919 % 25_000).alias("k")
     )  # shuffled order keys
-    out = with_dense_id(df, ["k"], id_col="nid", num_partitions=16)
+    conf = {"spark.sql.shuffle.partitions": "16",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        out = with_dense_id(df, ["k"], id_col="nid")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     agg = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("nid").alias("d"),

@@ -1,21 +1,33 @@
 """Round-7 pin: connected_components' driver-side union-find fast path
-(edge sets <= driver_threshold) returns exactly the distributed
+(edge sets <= DRIVER_CC_THRESHOLD) returns exactly the distributed
 large/small-star loop's output."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from batch_import_spark.operators import canonicalize
 from batch_import_spark.operators.canonicalize import connected_components
 
 
 def _both(spark, edges):
+    """The driver path's and the distributed path's rows, asserting
+    which path each call took."""
     df = spark.createDataFrame(edges, "u long, v long")
-    fast = sorted(tuple(r) for r in connected_components(df).collect())
-    dist = sorted(
-        tuple(r) for r in connected_components(df, driver_threshold=0).collect()
-    )
-    return fast, dist
+    out, driver_calls = [], []
+    driver_cc = canonicalize._driver_cc_edges
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            canonicalize, "_driver_cc_edges",
+            lambda *a: driver_calls.append(1) or driver_cc(*a),
+        )
+        # -1: even an empty edge set takes the distributed loop
+        for threshold in (canonicalize.DRIVER_CC_THRESHOLD, -1):
+            mp.setattr(canonicalize, "DRIVER_CC_THRESHOLD", threshold)
+            out.append(sorted(tuple(r) for r in connected_components(df).collect()))
+            assert driver_calls == [1], threshold
+    return tuple(out)
 
 
 def test_matches_distributed_on_random_graphs(spark):

@@ -83,7 +83,7 @@ def test_chunks_with_text_matches_expression_path(spark):
 
     df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
     got = sorted(
-        _chunks_with_text(df, "doc_id", "text", 8, 32).collect(),
+        _chunks_with_text(df).collect(),
         key=lambda r: (r.id, r.chunk_idx),
     )
     # expression path + crossdoc's length>0 doc filter: doc 0 (NULL)

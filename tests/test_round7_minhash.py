@@ -7,7 +7,7 @@ repeated doc_ids (no (x, x) self-pairs)."""
 import pytest
 from pyspark.sql import functions as F
 
-from batch_import_spark.operators.buckets import cap_hot_buckets
+from batch_import_spark.operators import buckets
 from batch_import_spark.operators.dedup import (
     _shingles_from_tokens,
     lsh_bands,
@@ -37,7 +37,8 @@ def _join_formulation(df, num_hashes, num_bands, threshold, max_bucket_size):
         "id", F.explode(lsh_bands(F.col("sig"), num_bands)).alias("band")
     )
     if max_bucket_size is not None:
-        banded, _ = cap_hot_buckets(banded, ["band"], max_bucket_size, eager_stats=False)
+        hot = banded.groupBy("band").count().where(F.col("count") > max_bucket_size)
+        banded = banded.join(F.broadcast(hot.select("band")), ["band"], "left_anti")
     cand = (
         banded.join(banded.select(F.col("band"), F.col("id").alias("id_b")), "band")
         .where(F.col("id") < F.col("id_b"))
@@ -97,11 +98,10 @@ def test_pair_set_matches_join_formulation(corpus):
     assert len(new.collect()) > 0  # non-vacuous: planted clusters found
 
 
-def test_pair_set_matches_under_bucket_cap(corpus):
+def test_pair_set_matches_under_bucket_cap(corpus, monkeypatch):
     # cap 10 drops the 40-member hot cluster's bands in BOTH shapes
-    new = minhash_near_duplicates(
-        corpus, num_hashes=16, num_bands=8, threshold=0.8, max_bucket_size=10
-    )
+    monkeypatch.setattr(buckets, "MAX_BUCKET_SIZE", 10)
+    new = minhash_near_duplicates(corpus, num_hashes=16, num_bands=8, threshold=0.8)
     old = _join_formulation(corpus, 16, 8, 0.8, 10)
     new_rows = _collect(new)
     assert new_rows == _collect(old)
@@ -110,9 +110,8 @@ def test_pair_set_matches_under_bucket_cap(corpus):
 
 
 def test_pair_set_matches_without_cap(corpus):
-    new = minhash_near_duplicates(
-        corpus, num_hashes=16, num_bands=8, threshold=0.8, max_bucket_size=None
-    )
+    # the default cap is inert at this corpus size: no band reaches it
+    new = minhash_near_duplicates(corpus, num_hashes=16, num_bands=8, threshold=0.8)
     old = _join_formulation(corpus, 16, 8, 0.8, None)
     new_rows = _collect(new)
     assert new_rows == _collect(old)

@@ -10,6 +10,14 @@ import random
 from pyspark.sql import functions as F
 
 
+def _dot(a, b):
+    """The zip_with/aggregate dot product of the replaced expression
+    path."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
 def _corpus(spark, n=300, dim=16, seed=7):
     rng = random.Random(seed)
     rows = []
@@ -28,10 +36,7 @@ def _corpus(spark, n=300, dim=16, seed=7):
 
 
 def test_assignment_kernel_matches_expression_path(spark):
-    from batch_import_spark.operators.semdedup import (
-        _assign_cells_arrow,
-        _dot,
-    )
+    from batch_import_spark.operators.semdedup import _assign_cells_arrow
     from batch_import_spark.operators.similarity import ivf_seed_centroids
     from test_round7_pq import _nearest_cell
 
@@ -60,7 +65,6 @@ def test_pair_kernel_matches_expression_path(spark):
     from batch_import_spark.operators.semdedup import (
         _assign_cells_arrow,
         _cell_pairs_arrow,
-        _dot,
     )
     from batch_import_spark.operators.similarity import ivf_seed_centroids
     from test_round7_pq import _nearest_cell

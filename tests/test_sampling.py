@@ -51,11 +51,12 @@ def test_stratified_exact_k(spark, docs):
     assert stratified_sample_k(tiny, ["grp"], 7, ["doc_id"]).count() == 4
 
 
-def test_hash_split_and_leakage_audit(spark):
+def test_hash_split_and_leakage_audit(spark, monkeypatch):
     import hashlib
 
     from pyspark.sql import functions as F
 
+    from batch_import_spark.operators import sampling
     from batch_import_spark.operators.sampling import split_leakage_audit
 
     df = spark.createDataFrame(
@@ -86,6 +87,5 @@ def test_hash_split_and_leakage_audit(spark):
     again = split_leakage_audit(df.repartition(7), F.col("text")).collect()
     assert {(r.doc_a, r.doc_b) for r in again} == want
     # the hot-group cap drops everything when groups exceed it
-    assert (
-        split_leakage_audit(df, F.col("text"), max_group_size=2).count() == 0
-    )
+    monkeypatch.setattr(sampling, "MAX_GROUP_SIZE", 2)
+    assert split_leakage_audit(df, F.col("text")).count() == 0

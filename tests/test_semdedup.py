@@ -26,7 +26,7 @@ def test_keep_first_greedy_semantics(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {r.vec_id: (r.keep, r.dup_of) for r in
-           semantic_dedup(df, n_cells=2, threshold=0.95).collect()}
+           semantic_dedup(df, n_cells=2).collect()}
     assert got[0] == (True, None)
     assert got[7] == (False, 0)
     assert got[9] == (False, 0)
@@ -57,7 +57,7 @@ def test_chain_greedy_order(spark):
         "vec_id long, embedding array<double>",
     )
     got = {r.vec_id: (r.keep, r.dup_of) for r in
-           semantic_dedup(df, n_cells=1, threshold=0.95).collect()}
+           semantic_dedup(df, n_cells=1).collect()}
     assert got[1] == (True, None)
     assert got[2] == (False, 1)
     assert got[3] == (True, None)
@@ -80,7 +80,7 @@ def test_pathological_mass_duplicate_cell(spark):
         for i in range(2, 2001)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = semantic_dedup(df, n_cells=2, threshold=0.95).collect()
+    out = semantic_dedup(df, n_cells=2).collect()
     assert len(out) == 2001
     got = {r.vec_id: (r.keep, r.dup_of) for r in out}
     assert got[0] == (True, None)
@@ -113,7 +113,7 @@ def test_long_chain_converges_beyond_two_levels(spark):
         "vec_id long, embedding array<double>",
     )
     got = {r.vec_id: (r.keep, r.dup_of) for r in
-           semantic_dedup(df, n_cells=1, threshold=0.95).collect()}
+           semantic_dedup(df, n_cells=1).collect()}
     # greedy: 1 kept, 2 dropped(1), 3 kept (witness 2 was dropped),
     # 4 dropped(3), 5 kept
     assert got[1] == (True, None)

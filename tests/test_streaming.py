@@ -2,8 +2,8 @@
 
 Drives a real StreamingQuery (not just plan construction): transcripts
 written as parquet files become a file-source stream; the windowed
-triple counts must equal the batch pipeline's counts for the same
-data once the stream drains (availableNow trigger).
+triple counts, summed over windows, must equal the batch pipeline's
+counts for the same data once the stream drains (availableNow trigger).
 """
 
 import pytest
@@ -27,9 +27,9 @@ def test_stream_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(src)
     link_dict = prepare_link_dict(alias_dict_df(spark))
-    # unwindowed variant + complete mode: the bounded replay must
-    # converge to exactly the batch pipeline's totals
-    triples = streaming_triples(stream, link_dict, window_duration=None)
+    # complete mode keeps every window: summed over windows, the
+    # bounded replay must converge to exactly the batch pipeline's totals
+    triples = streaming_triples(stream, link_dict)
     q = (
         triples.writeStream.outputMode("complete")
         .format("memory")
@@ -40,7 +40,8 @@ def test_stream_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     got = spark.sql(
-        "select subj, pred, obj, n_occurrences as n from triples_stream"
+        "select subj, pred, obj, sum(n_occurrences) as n from triples_stream "
+        "group by subj, pred, obj"
     )
     batch = run_kg_pipeline(t, alias_dict_df(spark)).edges.select(
         "subj", "pred", "obj", F.col("n_occurrences").alias("n")
@@ -162,7 +163,7 @@ def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
     stream = spark.readStream.schema("k string, ts timestamp").option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    out = streaming_exact_dedup(stream, ["k"], watermark="10 minutes")
+    out = streaming_exact_dedup(stream, ["k"])
     q = (
         out.writeStream.outputMode("append")
         .format("memory")

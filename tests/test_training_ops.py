@@ -66,7 +66,7 @@ def test_exact_dedup_keeps_min_id(spark):
 
 def test_minhash_near_duplicates_finds_planted_pair(spark):
     pairs = minhash_near_duplicates(
-        _docs(spark), shingle_words=2, num_hashes=32, num_bands=16, threshold=0.5
+        _docs(spark), num_hashes=32, num_bands=16, threshold=0.5
     )
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got and (1, 3) in got  # exact dups always survive
@@ -101,9 +101,8 @@ def test_simhash_near_duplicates(spark):
 
 
 def test_ngram_jaccard_pairs(spark):
-    pairs = ngram_jaccard_pairs(
-        _docs(spark), ngram_chars=4, threshold=0.6, block_on=F.lit(0)
-    )
+    # docs 1-4 are 43-44 chars long: one 32-char length block
+    pairs = ngram_jaccard_pairs(_docs(spark), ngram_chars=4, threshold=0.6)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got and (1, 4) in got
 
@@ -291,7 +290,7 @@ def test_asof_join_string_tiebreak_and_name_clash(spark):
 
     right_clash = right.withColumnRenamed("tag", "lbl")
     with _pytest.raises(ValueError, match="both sides"):
-        asof_join(left, right_clash, by=["user"], ts="ts")
+        asof_join(left, right_clash, by=["user"], value_cols=["lbl"], right_order="lbl")
 
 
 # --- triple-set P/R -------------------------------------------------------------
@@ -353,19 +352,19 @@ def test_range_join_semantics(spark):
     )
     ivs = spark.createDataFrame(
         [
-            ("a", t(1), t(6), "I1"),    # spans 6 hourly bins; catches P1 (start==ts) & P2
+            ("a", t(1), t(6), "I1"),    # spans 6 hourly bins; catches P1 (start==ts), P2, P4
             ("a", t(4), t(5), "I2"),    # overlaps I1; catches P2 (end==ts)
-            ("b", t(0), t(2), "I3"),    # other key; catches P4 only
+            ("b", t(0), t(2), "I3"),    # catches P1 and P4
         ],
         "k string, start_ts timestamp, end_ts timestamp, i string",
     )
     got = {
         (r["p"], r["i"])
-        for r in range_join(
-            pts, ivs, bin_seconds=3600, extra_keys=["k"]
-        ).collect()
+        for r in range_join(pts, ivs.drop("k"), bin_seconds=3600).collect()
     }
-    assert got == {("P1", "I1"), ("P2", "I1"), ("P2", "I2"), ("P4", "I3")}
+    assert got == {
+        ("P1", "I1"), ("P2", "I1"), ("P2", "I2"), ("P4", "I1"), ("P1", "I3"), ("P4", "I3")
+    }
 
 
 # --- multimodal --------------------------------------------------------------
@@ -377,12 +376,6 @@ def test_multimodal_features_deterministic(spark):
     f2 = {r["media_id"]: (r["sha256"], tuple(r["feature"])) for r in extract_features(media.repartition(5)).collect()}
     assert f1 == f2
     assert all(len(v[1]) == 16 for v in f1.values())
-
-
-def test_multimodal_strict_raises(spark):
-    media = synthesize_media(spark, n=3)
-    with pytest.raises(Exception, match="NotImplementedError|no codec"):
-        extract_features(media, strict=True).collect()
 
 
 def _py_hll(values, groups=None):
@@ -514,11 +507,12 @@ def test_rolling_fingerprint_reference_and_extension(spark):
     assert ref("abc") == (ref("ab") * ROLL_B + ord("c")) % ROLL_P
 
 
-def test_theta_sketch_merge_and_estimates(spark):
+def test_theta_sketch_merge_and_estimates(spark, monkeypatch):
     """Theta registers: sketch(A ∪ B) == sketch(A) ∪ sketch(B)
     exactly (fixed theta ⇒ plain set algebra), estimates track the
-    true distinct counts within sampling error, and small frac_bits
-    keeps everything (exact mode)."""
+    true distinct counts within sampling error, and small
+    THETA_FRAC_BITS keeps everything (exact mode)."""
+    from batch_import_spark.operators import sketches
     from batch_import_spark.operators.sketches import theta_set_ops, theta_sketch
 
     a = spark.createDataFrame(
@@ -538,10 +532,11 @@ def test_theta_sketch_merge_and_estimates(spark):
     assert abs(r.est_union - 4500) < 4500 * 0.55
     assert r.regs_union == r.regs_a + r.regs_b - r.regs_inter
 
-    # frac_bits=0 keeps every distinct hash: estimates become exact
-    ea = theta_sketch(a, "user_id", frac_bits=0)
-    eb = theta_sketch(b, "user_id", frac_bits=0)
-    ex = theta_set_ops(ea, eb, frac_bits=0).collect()[0]
+    # THETA_FRAC_BITS=0 keeps every distinct hash: estimates become exact
+    monkeypatch.setattr(sketches, "THETA_FRAC_BITS", 0)
+    ea = theta_sketch(a, "user_id")
+    eb = theta_sketch(b, "user_id")
+    ex = theta_set_ops(ea, eb).collect()[0]
     assert (ex.est_a, ex.est_b, ex.est_union, ex.est_inter) == (
         3000, 3000, 4500, 1500,
     )

@@ -195,15 +195,21 @@ def test_viterbi_py_twin_matches_expr(spark):
         assert viterbi_segment_py(w, costs, 3, 16) == via_expr[w], w
 
 
-def test_segment_words_driver_equals_expr_path(spark):
-    from batch_import_spark.functions.unigram import segment_words
+def test_segment_words_driver_equals_expr_path(spark, monkeypatch):
+    from batch_import_spark.functions import unigram
 
     costs = {"h": 3, "e": 3, "l": 2, "o": 4, "he": 5, "ll": 3, "hell": 9}
     words = spark.createDataFrame(
         [("hello", 3), ("hell", 2), ("he", 1)], "word string, n long"
     )
-    a = sorted(map(tuple, segment_words(words, costs, 4, 16,
-                                        driver_threshold=100).collect()))
-    b = sorted(map(tuple, segment_words(words, costs, 4, 16,
-                                        driver_threshold=0).collect()))
+    driver_words = []
+    viterbi_py = unigram.viterbi_segment_py
+    monkeypatch.setattr(
+        unigram, "viterbi_segment_py", lambda w, *a: driver_words.append(w) or viterbi_py(w, *a)
+    )
+    a = sorted(map(tuple, unigram.segment_words(words, costs, 4, 16).collect()))
+    assert sorted(driver_words) == ["he", "hell", "hello"]
+    monkeypatch.setattr(unigram, "DRIVER_SEGMENT_THRESHOLD", 0)
+    b = sorted(map(tuple, unigram.segment_words(words, costs, 4, 16).collect()))
+    assert len(driver_words) == 3
     assert a == b and len(a) == 3
